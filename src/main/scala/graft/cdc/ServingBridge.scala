@@ -278,44 +278,36 @@ object ServingBridge {
     * rows closes the stored open episode exactly as a full rebuild
     * would; and window-1 changelog ids are append-stable under the HWM
     * resume contract (cdc_populate_resume), so the stored ep_ids never
-    * shift when window 2 arrives. A fold can only add rows — no emptied
-    * buckets, no sweep. */
+    * shift when window 2 arrives. Written through
+    * [[graft.ext.ServingLayout.rewrite]]; a fold only adds rows, so it
+    * never empties a bucket. */
   def episodesServingFold(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       newEpisodes: DataFrame,
       buckets: Int = 16): Unit = {
-    val stored = spark.read.schema(episodesSchema).parquet(path)
     val newE = newEpisodes
       .select(col("serve_key"), col("status_asof"), col("ep_id"),
         col("valid_from_s"))
       .localCheckpoint(true)
     val keys = newE.select(col("serve_key")).distinct()
-    // literal affected set (layout-bounded) → the touched-bucket read is
-    // STATICALLY partition-pruned: the fold reads only the buckets it
-    // rewrites, never the whole episode store
-    val affected = graft.ext.ServingLayout.affectedValues(
-      keys.select(keyBucket(col("serve_key"), buckets).as("bucket")))
-    val inBuckets = stored.where(graft.ext.ServingLayout.partitionIn(
-      col("bucket"), episodesSchema("bucket").dataType, affected))
-    val untouched = inBuckets.join(keys, Seq("serve_key"), "left_anti")
-      .select("serve_key", "status_asof", "ep_id", "valid_from_s", "valid_to_s")
-    val touched = inBuckets.join(keys, Seq("serve_key"), "left_semi")
-      .join(newE.select(col("ep_id").as("__e")),
-        col("ep_id") === col("__e"), "left_anti")
-      .select("serve_key", "status_asof", "ep_id", "valid_from_s")
-      .unionByName(newE)
-    val w = Window.partitionBy(col("serve_key")).orderBy(col("ep_id"))
-    val recomputed = touched
-      .withColumn("valid_to_s", lead(col("valid_from_s"), 1).over(w))
-    val replacement = untouched.unionByName(recomputed)
-      .withColumn("bucket", keyBucket(col("serve_key"), buckets))
-      .localCheckpoint(true) // barrier: bytes leave the path being overwritten
-    replacement.repartition(col("bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(path)
+    graft.ext.ServingLayout.rewrite(spark, path, episodesSchema, "bucket",
+      graft.ext.ServingLayout.affectedValues(
+        keys.select(keyBucket(col("serve_key"), buckets).as("bucket")))) {
+      inBuckets =>
+        val untouched = inBuckets.join(keys, Seq("serve_key"), "left_anti")
+          .select("serve_key", "status_asof", "ep_id", "valid_from_s", "valid_to_s")
+        val touched = inBuckets.join(keys, Seq("serve_key"), "left_semi")
+          .join(newE.select(col("ep_id").as("__e")),
+            col("ep_id") === col("__e"), "left_anti")
+          .select("serve_key", "status_asof", "ep_id", "valid_from_s")
+          .unionByName(newE)
+        val w = Window.partitionBy(col("serve_key")).orderBy(col("ep_id"))
+        untouched
+          .unionByName(touched
+            .withColumn("valid_to_s", lead(col("valid_from_s"), 1).over(w)))
+          .withColumn("bucket", keyBucket(col("serve_key"), buckets))
+    }
   }
 
   /** RETENTION on the serving store's episode table — the sink-retention

@@ -783,9 +783,8 @@ object Dedup {
     * deletes/forget (old only) and inserts (new only). No artifact
     * carries a scalar and no statistic is denormalized into the rows, so
     * replay-idempotence is free: a re-delivered batch anti-joins the same
-    * ids out and unions the same rows back. Dynamic partition overwrite
-    * behind a materialization barrier + the emptied-bucket sweep carry
-    * over from the sibling folds. */
+    * ids out and unions the same rows back. Each artifact is written
+    * through [[ServingLayout.rewrite]]. */
   def minhashServingFold(
       spark: org.apache.spark.sql.SparkSession,
       bandsPath: String,
@@ -809,56 +808,28 @@ object Dedup {
     val deltaIds = oldDocs.select(col(idCol).as("__did"))
       .union(newDocs.select(col(idCol).as("__did"))).distinct()
       .localCheckpoint(true)
-    // band layout: replace the affected buckets' content. The affected
-    // set collects to a literal (layout-bounded — the sweep's
-    // control-plane scalar, shared with the read) so the replacement
-    // read is STATICALLY partition-pruned: the fold reads only the
-    // buckets it rewrites, never the whole signature layout. `repack*`
-    // widens the set with crowded partitions so a compaction rides this
-    // one rewrite (the merged fold+compact form — an included unaffected
-    // bucket passes the anti-join untouched and lands as one file)
-    def foldBands(): Unit = {
-      val affectedP = (ServingLayout.affectedValues(
-        oldBands.select("pbucket").union(newBands.select("pbucket")))
-        ++ repackBands).distinct.sorted
-      val stored = spark.read.schema(bandsSchema).parquet(bandsPath)
-        .where(ServingLayout.partitionIn(
-          col("pbucket"), bandsSchema("pbucket").dataType, affectedP))
-      val replacement = stored
-        .join(deltaIds, col("id") === col("__did"), "left_anti")
-        .select("pbucket", "band", "sig", "id")
-        .unionByName(newBands.select("pbucket", "band", "sig", "id"))
-        .localCheckpoint(true) // barrier: bytes leave the path being overwritten
-      replacement.repartition(col("pbucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pbucket")
-        .parquet(bandsPath)
-      ServingLayout.sweepEmptied(spark, bandsPath, "pbucket", affectedP, replacement)
-    }
-    // fp registry: same fold on the fingerprint buckets
-    def foldFps(): Unit = {
-      val affectedF = (ServingLayout.affectedValues(
-        oldFps.select("fbucket").union(newFps.select("fbucket")))
-        ++ repackFps).distinct.sorted
-      val storedFps = spark.read.schema(fpsSchema).parquet(fpsPath)
-        .where(ServingLayout.partitionIn(
-          col("fbucket"), fpsSchema("fbucket").dataType, affectedF))
-      val replacementF = storedFps
-        .join(deltaIds, col("id") === col("__did"), "left_anti")
-        .select("fbucket", "sigfp", "id")
-        .unionByName(newFps.select("fbucket", "sigfp", "id"))
-        .localCheckpoint(true) // barrier: bytes leave the path being overwritten
-      replacementF.repartition(col("fbucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("fbucket")
-        .parquet(fpsPath)
-      ServingLayout.sweepEmptied(spark, fpsPath, "fbucket", affectedF, replacementF)
-    }
-    // disjoint paths, shared inputs all materialized above — independent
-    // job chains, overlapped (guide §2.6)
-    ServingLayout.inParallel(() => foldBands(), () => foldFps())
+    // each artifact rewrites the buckets its old and new rows live in;
+    // `repack*` widens the set with crowded partitions so a compaction
+    // rides this one rewrite (an included unaffected bucket passes the
+    // anti-join untouched and lands as one file). Disjoint paths over
+    // materialized inputs: independent job chains, overlapped (§2.6)
+    ServingLayout.inParallel(
+      () => ServingLayout.rewrite(spark, bandsPath, bandsSchema, "pbucket",
+        ServingLayout.affectedValues(
+          oldBands.select("pbucket").union(newBands.select("pbucket")))
+          ++ repackBands) {
+        _.join(deltaIds, col("id") === col("__did"), "left_anti")
+          .select("pbucket", "band", "sig", "id")
+          .unionByName(newBands.select("pbucket", "band", "sig", "id"))
+      },
+      () => ServingLayout.rewrite(spark, fpsPath, fpsSchema, "fbucket",
+        ServingLayout.affectedValues(
+          oldFps.select("fbucket").union(newFps.select("fbucket")))
+          ++ repackFps) {
+        _.join(deltaIds, col("id") === col("__did"), "left_anti")
+          .select("fbucket", "sigfp", "id")
+          .unionByName(newFps.select("fbucket", "sigfp", "id"))
+      })
   }
 
   /** The DEFAULT pair-listing entry point over a GENERATIONED layout
@@ -1654,56 +1625,39 @@ object Dedup {
     // included unaffected buckets pass the anti-joins untouched); the
     // two artifacts stay SEQUENTIAL here: value liveness derives from
     // the post-fold registry replacement
-    val affectedVB = (ServingLayout.affectedValues(
-      candVals.select(simhashValueBucket(col("simhash"), buckets)))
-      ++ repackDocs).distinct.sorted
-    val storedM = spark.read.schema(simhashDocsSchema).parquet(docsPath)
-      .where(ServingLayout.partitionIn(
-        col("vbucket"), simhashDocsSchema("vbucket").dataType, affectedVB))
-    val replacementM = storedM
-      .join(deltaIds, col("id") === col("__did"), "left_anti")
-      .select("vbucket", "simhash", "id")
-      .unionByName(newFps.select(
-        simhashValueBucket(col("simhash"), buckets).as("vbucket"),
-        col("simhash"), col("doc_id").as("id")))
-      .localCheckpoint(true) // barrier: bytes leave the path being overwritten
-    replacementM.repartition(col("vbucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("vbucket")
-      .parquet(docsPath)
-    ServingLayout.sweepEmptied(spark, docsPath, "vbucket", affectedVB, replacementM)
+    val replacementM = ServingLayout.rewrite(
+      spark, docsPath, simhashDocsSchema, "vbucket",
+      ServingLayout.affectedValues(
+        candVals.select(simhashValueBucket(col("simhash"), buckets)))
+        ++ repackDocs) {
+      _.join(deltaIds, col("id") === col("__did"), "left_anti")
+        .select("vbucket", "simhash", "id")
+        .unionByName(newFps.select(
+          simhashValueBucket(col("simhash"), buckets).as("vbucket"),
+          col("simhash"), col("doc_id").as("id")))
+    }
     // value-table fold: liveness from the POST-fold registry — derived
     // from the in-memory materialized replacement (what the write above
     // landed for exactly the affected buckets), not a read-back of
     // docsPath: on a strongly-consistent filesystem the two are
     // identical, but an eventually-consistent store could serve
     // pre-fold bytes to a read-after-write and resurrect dead values
-    val affectedSB = (ServingLayout.affectedValues(
-      simhashVbandsOf(candVals)
-        .select(simhashBandBucket(col("band"), col("bv"), buckets)))
-      ++ repackVrows).distinct.sorted
     val alive = replacementM
       .join(broadcast(candVals), Seq("simhash"), "left_semi")
       .select("simhash").distinct().localCheckpoint(true)
     val newVrows = simhashVbandsOf(alive)
       .select(col("band"), col("bv"), col("simhash"),
         simhashBandBucket(col("band"), col("bv"), buckets).as("sband"))
-    val storedV = spark.read.schema(simhashVrowsSchema).parquet(vrowsPath)
-      .where(ServingLayout.partitionIn(
-        col("sband"), simhashVrowsSchema("sband").dataType, affectedSB))
-    val replacementV = storedV
-      .join(candVals.select(col("simhash").as("__cv")),
-        col("simhash") === col("__cv"), "left_anti")
-      .select("sband", "band", "bv", "simhash")
-      .unionByName(newVrows.select("sband", "band", "bv", "simhash"))
-      .localCheckpoint(true) // barrier
-    replacementV.repartition(col("sband"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("sband")
-      .parquet(vrowsPath)
-    ServingLayout.sweepEmptied(spark, vrowsPath, "sband", affectedSB, replacementV)
+    ServingLayout.rewrite(spark, vrowsPath, simhashVrowsSchema, "sband",
+      ServingLayout.affectedValues(
+        simhashVbandsOf(candVals)
+          .select(simhashBandBucket(col("band"), col("bv"), buckets)))
+        ++ repackVrows) {
+      _.join(candVals.select(col("simhash").as("__cv")),
+          col("simhash") === col("__cv"), "left_anti")
+        .select("sband", "band", "bv", "simhash")
+        .unionByName(newVrows.select("sband", "band", "bv", "simhash"))
+    }
   }
 
   /** Verified near-dup pairs among the documents of a persisted SimHash
@@ -1911,27 +1865,18 @@ object Dedup {
       vecCol: String = "embedding",
       repack: Seq[Long] = Nil): Unit = {
     val newRows = embDupServingRows(newVecs, idCol, vecCol).localCheckpoint(true)
-    // `repack` widens the rewrite with crowded partitions so a compaction
-    // rides this one fold pass (the merged fold+compact form)
-    val affected = (ServingLayout.affectedValues(
-      embDupServingRows(oldVecs, idCol, vecCol).select("bucket")
-        .union(newRows.select("bucket"))) ++ repack).distinct.sorted
-    val stored = spark.read.schema(embLayoutSchema).parquet(path)
-      .where(ServingLayout.partitionIn(
-        col("bucket"), embLayoutSchema("bucket").dataType, affected))
     val deltaIds = oldVecs.select(col(idCol).as("__did"))
       .union(newVecs.select(col(idCol).as("__did"))).distinct()
-    val replacement = stored
-      .join(deltaIds, col("id") === col("__did"), "left_anti")
-      .select("bucket", "id", "v", "nrm")
-      .unionByName(newRows.select("bucket", "id", "v", "nrm"))
-      .localCheckpoint(true) // barrier: bytes leave the path being overwritten
-    replacement.repartition(col("bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(path)
-    ServingLayout.sweepEmptied(spark, path, "bucket", affected, replacement)
+    // `repack` widens the rewrite with crowded partitions so a compaction
+    // rides this one fold pass (the merged fold+compact form)
+    ServingLayout.rewrite(spark, path, embLayoutSchema, "bucket",
+      ServingLayout.affectedValues(
+        embDupServingRows(oldVecs, idCol, vecCol).select("bucket")
+          .union(newRows.select("bucket"))) ++ repack) {
+      _.join(deltaIds, col("id") === col("__did"), "left_anti")
+        .select("bucket", "id", "v", "nrm")
+        .unionByName(newRows.select("bucket", "id", "v", "nrm"))
+    }
   }
 
   /** Verified near-dup pairs among the layout's vectors — the read side
@@ -2221,45 +2166,21 @@ object Dedup {
     // `repack*` widens each artifact's rewrite with crowded partitions
     // (merged fold+compact); the two chains touch disjoint paths over
     // materialized inputs — independent job chains, overlapped (§2.6)
-    def foldTrows(): Unit = {
-      val affectedT = (ServingLayout.affectedValues(
-        oldT.select("tbucket").union(newT.select("tbucket")))
-        ++ repackTrows).distinct.sorted
-      val storedT = spark.read.schema(embTRowsSchema).parquet(trowsPath)
-        .where(ServingLayout.partitionIn(
-          col("tbucket"), embTRowsSchema("tbucket").dataType, affectedT))
-      val replT = storedT
-        .join(deltaIds, col("id") === col("__did"), "left_anti")
-        .select("tbucket", "id")
-        .unionByName(newT.select("tbucket", "id"))
-        .localCheckpoint(true) // barrier: bytes leave the path being overwritten
-      replT.repartition(col("tbucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("tbucket")
-        .parquet(trowsPath)
-      ServingLayout.sweepEmptied(spark, trowsPath, "tbucket", affectedT, replT)
-    }
-    def foldVecs(): Unit = {
-      val affectedV = (ServingLayout.affectedValues(
-        oldV.select("vbucket").union(newV.select("vbucket")))
-        ++ repackVecs).distinct.sorted
-      val storedV = spark.read.schema(embVecsSchema).parquet(vecsPath)
-        .where(ServingLayout.partitionIn(
-          col("vbucket"), embVecsSchema("vbucket").dataType, affectedV))
-      val replV = storedV
-        .join(deltaIds, col("id") === col("__did"), "left_anti")
-        .select("vbucket", "id", "v", "nrm")
-        .unionByName(newV.select("vbucket", "id", "v", "nrm"))
-        .localCheckpoint(true)
-      replV.repartition(col("vbucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("vbucket")
-        .parquet(vecsPath)
-      ServingLayout.sweepEmptied(spark, vecsPath, "vbucket", affectedV, replV)
-    }
-    ServingLayout.inParallel(() => foldTrows(), () => foldVecs())
+    ServingLayout.inParallel(
+      () => ServingLayout.rewrite(spark, trowsPath, embTRowsSchema, "tbucket",
+        ServingLayout.affectedValues(
+          oldT.select("tbucket").union(newT.select("tbucket"))) ++ repackTrows) {
+        _.join(deltaIds, col("id") === col("__did"), "left_anti")
+          .select("tbucket", "id")
+          .unionByName(newT.select("tbucket", "id"))
+      },
+      () => ServingLayout.rewrite(spark, vecsPath, embVecsSchema, "vbucket",
+        ServingLayout.affectedValues(
+          oldV.select("vbucket").union(newV.select("vbucket"))) ++ repackVecs) {
+        _.join(deltaIds, col("id") === col("__did"), "left_anti")
+          .select("vbucket", "id", "v", "nrm")
+          .unionByName(newV.select("vbucket", "id", "v", "nrm"))
+      })
   }
 
   /** [[embMultiPairsServing]] over already-RESOLVED artifact frames —

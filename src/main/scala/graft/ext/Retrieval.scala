@@ -155,8 +155,10 @@ object Retrieval {
 
   /** Explicit schema of the persisted postings layout (bucket is the
     * partition column) — for reads that must never depend on footer
-    * inference (the footer-less emptied-directory lesson), e.g.
-    * [[ServingLayout.compact]]. */
+    * inference (the footer-less emptied-directory lesson), and whose
+    * partition-column type drives [[ServingLayout.partitionIn]]'s static
+    * pruning. Pinned against [[bm25ServingArtifacts]]'s postings by
+    * RetrievalSpec. */
   private[graft] val postingsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("term",
       org.apache.spark.sql.types.StringType),
@@ -293,10 +295,9 @@ object Retrieval {
     * post-fold registry read back from disk, so every artifact of the
     * fold is replay-idempotent (a re-delivered batch lands on the
     * identical state; a carried n scalar would double-adjust on replayed
-    * inserts/deletes — the count-min sum-merge lesson). Dynamic
-    * partition overwrite + the emptied-bucket sweep + replay repair
-    * carry over from the IVF fold (RetrievalSpec pins all three,
-    * including replay WITH deletes and inserts). */
+    * inserts/deletes — the count-min sum-merge lesson). Both layouts are
+    * written through [[ServingLayout.rewrite]] (RetrievalSpec pins the
+    * sweep and replay, including replay WITH deletes and inserts). */
   def bm25ServingFold(
       spark: org.apache.spark.sql.SparkSession,
       postingsPath: String,
@@ -310,19 +311,6 @@ object Retrieval {
     val newPost = bm25Postings(newDocs)
       .withColumn("bucket", termBucket(col("term"), buckets))
       .localCheckpoint(true)
-    // literal affected set (layout-bounded — the sweep's control-plane
-    // scalar, shared with the read) → the replacement read below is
-    // STATICALLY partition-pruned: the fold reads only the buckets it
-    // rewrites, never the whole postings layout. `repack*` widens the
-    // set with [[ServingLayout.crowdedValues]]' crowded partitions so a
-    // compaction rides this one rewrite (fold+compact in one job chain —
-    // the r17 merged-repack form; an included unaffected bucket passes
-    // the anti-join untouched and lands as one file, which is compact's
-    // whole contract)
-    val affected = (ServingLayout.affectedValues(
-      bm25Postings(oldDocs)
-        .select(termBucket(col("term"), buckets).as("bucket"))
-        .union(newPost.select("bucket"))) ++ repackPostings).distinct.sorted
     // removal set = old ∪ new ids: equal for a revision, old-only for a
     // DELETE (empty newDocs), new-only (a no-op anti-join) for an INSERT —
     // one fold covers the whole lifecycle op matrix. Materialized once:
@@ -330,62 +318,42 @@ object Retrieval {
     val deltaIds = oldDocs.select(col("doc_id").as("__did"))
       .union(newDocs.select(col("doc_id").as("__did"))).distinct()
       .localCheckpoint(true)
-    def foldPostings(): Unit = {
-      val stored0 = spark.read.parquet(postingsPath)
-      val stored = stored0.where(ServingLayout.partitionIn(
-        col("bucket"), stored0.schema("bucket").dataType, affected))
-      // replacement content of the affected buckets, df RE-DERIVED within
-      // (bucket-local by the term→bucket purity above)
-      val replacement = stored
-        .join(deltaIds, col("doc_id") === col("__did"), "left_anti")
+    // `repack*` widens each rewrite with [[ServingLayout.crowdedValues]]'
+    // crowded partitions so a compaction rides this one rewrite (an
+    // included unaffected bucket passes the anti-join untouched and lands
+    // as one file, which is compact's whole contract)
+    def foldPostings(): Unit = ServingLayout.rewrite(
+      spark, postingsPath, postingsSchema, "bucket",
+      ServingLayout.affectedValues(
+        bm25Postings(oldDocs)
+          .select(termBucket(col("term"), buckets).as("bucket"))
+          .union(newPost.select("bucket"))) ++ repackPostings) {
+      // df RE-DERIVED within the affected buckets (bucket-local by the
+      // term→bucket purity above)
+      _.join(deltaIds, col("doc_id") === col("__did"), "left_anti")
         .select("bucket", "term", "doc_id", "tf")
         .unionByName(newPost.select("bucket", "term", "doc_id", "tf"))
-        .localCheckpoint(true) // barrier: bytes leave the path being overwritten
-      // the write reads only the materialized replacement blocks (the df
-      // join + the per-term count both plan over the checkpoint), so no
-      // second materialization pass is needed before it
-      val withDf = replacement
-        .join(replacement.groupBy("term").agg(count(lit(1)).as("df")), "term")
-        .select("bucket", "term", "doc_id", "tf", "df")
-      withDf.repartition(col("bucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(postingsPath)
-      // the inner df join preserves every replacement row (each term has
-      // count ≥ 1), so the replacement's bucket set IS the written set
-      ServingLayout.sweepEmptied(spark, postingsPath, "bucket", affected, replacement)
+        .withColumn("df", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("term")))
     }
     // the REGISTRY fold: the length table (one row per live doc, dl = 0
     // when no posting reaches it) is a dbucket-partitioned layout and the
     // delta ids' buckets are the only ones rewritten — deletes drop the
-    // row, inserts add one, a re-delivered batch lands on the identical
-    // per-bucket content (anti-join + union is replay-idempotent; a
-    // carried n scalar would adjust twice: the count-min sum-merge
-    // lesson). n/avgdl still derive WHOLLY from the registry — read back
-    // post-fold, a pure function of on-disk state.
+    // row, inserts add one. n/avgdl derive WHOLLY from the registry —
+    // read back post-fold, a pure function of on-disk state.
     def foldDocLen(): Unit = {
       val newDl = newDocs.select(col("doc_id"))
         .join(newPost.groupBy("doc_id").agg(sum("tf").as("__dl")), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("__dl"), lit(0L)).as("dl"),
           docBucket(col("doc_id"), buckets).as("dbucket"))
-      val affectedDl = (ServingLayout.affectedValues(
-        deltaIds.select(docBucket(col("__did"), buckets).as("dbucket")))
-        ++ repackDocLen).distinct.sorted
-      val storedDl = spark.read.schema(registrySchema).parquet(docLenPath)
-        .where(ServingLayout.partitionIn(
-          col("dbucket"), registrySchema("dbucket").dataType, affectedDl))
-      val dl2 = storedDl
-        .join(deltaIds, col("doc_id") === col("__did"), "left_anti")
-        .select("dbucket", "doc_id", "dl")
-        .unionByName(newDl.select("dbucket", "doc_id", "dl"))
-        .localCheckpoint(true) // barrier: bytes leave the path being overwritten
-      dl2.repartition(col("dbucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("dbucket")
-        .parquet(docLenPath)
-      ServingLayout.sweepEmptied(spark, docLenPath, "dbucket", affectedDl, dl2)
+      ServingLayout.rewrite(spark, docLenPath, registrySchema, "dbucket",
+        ServingLayout.affectedValues(
+          deltaIds.select(docBucket(col("__did"), buckets).as("dbucket")))
+          ++ repackDocLen) {
+        _.join(deltaIds, col("doc_id") === col("__did"), "left_anti")
+          .select("dbucket", "doc_id", "dl")
+          .unionByName(newDl.select("dbucket", "doc_id", "dl"))
+      }
       // reads docLenPath (final), writes statsPath — disjoint, no barrier
       statsFromDocLen(spark.read.schema(registrySchema).parquet(docLenPath))
         .write.mode("overwrite").parquet(statsPath)

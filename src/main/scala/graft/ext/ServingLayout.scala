@@ -1,60 +1,100 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
-/** The shared control-plane edge of the in-place partitioned-layout folds
-  * ([[Similarity.ivfServingFold]], [[Similarity.ivfPqServingFold]],
-  * [[Retrieval.bm25ServingFold]]). */
+/** The in-place partitioned serving layouts and their one write protocol.
+  *
+  * Every serving index that a changelog delta maintains in place — the
+  * MinHash bands and fps, the SimHash docs and value rows, the embedding
+  * single- and multi-table layouts, the IVF cells, the IVF-PQ codes, the
+  * BM25 postings and registry, and the SCD2 episode store — is a parquet
+  * directory partitioned by one integral column (a bucket or cell id, a
+  * model or layout constant, never data-sized). A fold derives the
+  * partition values its delta touches and hands them to [[rewrite]] with
+  * the replacement rule; [[rewrite]] owns everything else:
+  *
+  *   - '''Literal pruned read.''' The affected values reach the scan as a
+  *     STATIC partition filter ([[partitionIn]]) through the layout's
+  *     declared schema, so a fold reads only the partitions it rewrites
+  *     and never depends on footer inference (a fold that empties every
+  *     partition leaves a footer-less directory that the next read must
+  *     see as a readable empty layout).
+  *   - '''Barrier.''' The replacement is materialized with an eager
+  *     `localCheckpoint` before the write: its bytes leave the path being
+  *     overwritten, which is also what clears Spark's overwrite-a-read-path
+  *     guard.
+  *   - '''Dynamic overwrite.''' Only partitions present in the replacement
+  *     are replaced; `repartition(partCol)` lands each value in one task,
+  *     so a rewritten partition holds one file and untouched partitions
+  *     keep their bytes on disk.
+  *   - '''Observed sweep.''' Dynamic overwrite cannot delete a partition:
+  *     a value the replacement empties writes zero files and its stale
+  *     directory would survive. The barrier job observes the replacement's
+  *     partition values, and the affected values it lacks are deleted as
+  *     directories — no extra job, and the set is bounded by the layout's
+  *     partition-value cardinality (the cdc_query_dpp control-plane-scalar
+  *     justification).
+  *   - '''Replay determinism.''' A crash mid-write can leave a subset of
+  *     partitions replaced, but the rewrite is a pure function of (stored
+  *     partitions, delta): re-running it rewrites the same partitions with
+  *     the same content, so replay repairs a torn fold.
+  *   - '''Reader isolation.''' Dynamic overwrite deletes the replaced
+  *     files at commit, so a reader whose file index resolved before the
+  *     rewrite can hit missing files mid-scan. In-place rewrites assume a
+  *     single writer and fold-aware readers that re-resolve per query;
+  *     long-running readers pin a generation and take folds through
+  *     [[graft.streaming.StateStream.foldIsolatedGen]]'s graced flip,
+  *     paying a layout copy per fold for snapshot isolation. */
 object ServingLayout {
 
-  /** Sweep partitions a fold EMPTIED: dynamic partition overwrite cannot
-    * delete a partition (zero written rows leave the stale directory on
-    * disk, and its rows would silently survive the fold), so the emptied
-    * set is removed with explicit directory deletes. Both collects are
-    * bounded by the layout's partition-value cardinality (cells /
-    * buckets — a model or layout CONSTANT, never data-sized) after the
-    * distinct: the cdc_query_dpp control-plane-scalar justification. */
-  /** Partition-local small-file repack for the in-place serving layouts.
-    *
-    * The FOLDS themselves never fragment a partition — dynamic partition
-    * overwrite REPLACES each affected partition's content wholly, and the
-    * `repartition(col(partCol))` before the write lands every partition
-    * value in one task, so a folded partition holds one file. What does
-    * fragment a layout: multi-task partition writes (an AQE skew split of
-    * a hot cell, parallel range-sliced builders racing appends into the
-    * same layout, any external append-mode writer). This repack
-    * normalizes such a layout: every CROWDED partition (more than
-    * `maxFiles` data files) is rewritten through the folds' own primitive
-    * — read the crowded partitions (a static partition-pruned scan),
-    * materialize off-path (the overwrite-a-read-path barrier), dynamic-
-    * partition-overwrite them back — so content is bit-identical,
-    * untouched partitions keep their bytes on disk, and a torn rewrite
-    * replays to the same state (the folds' determinism contract; a
-    * re-run that finds nothing crowded is a no-op). Reader isolation is
-    * the fold's own trade: fold-aware readers re-resolve per query;
-    * long-running readers take compactions through
-    * [[graft.streaming.StateStream.foldIsolatedGen]] like any other
-    * fold. The crowded-partition listing is control-plane — bounded by
-    * the layout's partition-value cardinality (cells / buckets, model or
-    * layout constants). */
-  def compact(spark: SparkSession, path: String, partCol: String,
-      schema: StructType, maxFiles: Int = 1): Unit = {
-    val crowded = crowdedValues(spark, path, partCol, maxFiles)
-    if (crowded.isEmpty) return
-    // explicit layout schema, like every fold's registry read: the one
-    // read here must never depend on footer inference (the footer-less
-    // emptied-directory lesson), and the typed literal set below prunes
-    // statically against the DECLARED partition-column type
-    val repacked = spark.read.schema(schema).parquet(path)
-      .where(partitionIn(col(partCol), schema(partCol).dataType, crowded))
-      .repartition(col(partCol))
-      .localCheckpoint(true) // barrier: bytes leave the path being rewritten
-    repacked.write.mode("overwrite")
+  /** Rewrite the partitions `values` of the layout at `path` in place:
+    * read them through `schema`, replace their content with `replace`
+    * applied to that stored slice, and write the result back under the
+    * protocol above. Values the replacement leaves empty are swept; a
+    * value absent from `values` is never read or touched. Returns the
+    * materialized replacement, so a caller can derive further state from
+    * exactly what landed without reading the path back. */
+  private[graft] def rewrite(spark: SparkSession, path: String, schema: StructType,
+      partCol: String, values: Seq[Long])(
+      replace: DataFrame => DataFrame): DataFrame = {
+    val vs = values.distinct.sorted
+    val stored = spark.read.schema(schema).parquet(path)
+      .where(partitionIn(col(partCol), schema(partCol).dataType, vs))
+    val landed = new Observation()
+    val replacement = replace(stored)
+      .observe(landed, collect_set(col(partCol)).as("values"))
+      .localCheckpoint(true)
+    replacement.repartition(col(partCol))
+      .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol)
       .parquet(path)
+    val present = landed.get("values").asInstanceOf[Seq[Any]]
+      .map(integral(_, "rewrite")).toSet
+    val emptied = vs.filterNot(present)
+    if (emptied.nonEmpty) {
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      emptied.foreach(v =>
+        fs.delete(new org.apache.hadoop.fs.Path(root, s"$partCol=$v"), true))
+    }
+    replacement
+  }
+
+  /** Partition-local small-file repack. The folds themselves never
+    * fragment a partition (see the object doc); what does is a multi-task
+    * partition write — an AQE skew split of a hot cell, parallel
+    * range-sliced builders appending into one layout, any external
+    * append-mode writer. Every CROWDED partition (more than `maxFiles`
+    * data files) is rewritten unchanged through [[rewrite]], so content
+    * is bit-identical, uncrowded partitions keep their bytes, and a
+    * re-run that finds nothing crowded is a no-op. */
+  def compact(spark: SparkSession, path: String, partCol: String,
+      schema: StructType, maxFiles: Int = 1): Unit = {
+    val crowded = crowdedValues(spark, path, partCol, maxFiles)
+    if (crowded.nonEmpty) rewrite(spark, path, schema, partCol, crowded)(identity)
   }
 
   /** The compact trigger set: partition values of `path` holding more
@@ -87,47 +127,54 @@ object ServingLayout {
     * actions are sequential only because the driver calls them
     * sequentially — a serving fold's two artifacts are independent job
     * chains whose stage tails otherwise leave every core idle). Used by
-    * the multi-artifact folds and the fragmented-deploy fixtures; any
-    * failure propagates after all chains finish, so a half-parallel fold
-    * never half-reports success. */
+    * the multi-artifact folds and the fragmented-deploy fixtures. Every
+    * chain runs to its end and every failure is reported: the first is
+    * thrown with the others attached as suppressed, so a half-parallel
+    * fold never half-reports success and never hides a second cause. */
   private[graft] def inParallel(fs: (() => Unit)*): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val ts = fs.map(f => new Thread(() =>
       try f() catch { case t: Throwable => errs.add(t) }))
     ts.foreach(_.start())
     ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(t => if (t ne first) first.addSuppressed(t))
+      throw first
+    }
   }
 
-  /** Collect a fold's affected-partition frame to a LITERAL value set.
-    * Bounded by the layout's partition-value cardinality (cells /
-    * buckets — model or layout CONSTANTS, never data-sized): the
-    * control-plane scalar that serves the fold twice — as the STATIC
-    * partition filter on the replacement read (via [[partitionIn]]; a
-    * fold must never scan the layout it maintains — the semi-join form
-    * read every partition and filtered post-scan) and as the emptied-
-    * partition sweep set. The cdc_query_dpp literal-threshold
-    * justification, written once here for every fold. */
+  /** Collect a fold's affected-partition frame to the LITERAL value set
+    * [[rewrite]] prunes its read by and sweeps against. Bounded by the
+    * layout's partition-value cardinality (cells / buckets — model or
+    * layout CONSTANTS, never data-sized): the cdc_query_dpp
+    * literal-threshold justification. */
   private[graft] def affectedValues(affected: DataFrame): Seq[Long] =
-    affected.distinct().collect().map { r =>
-      require(!r.isNullAt(0),
-        "affectedValues: NULL partition value in a fold's affected set — " +
-          "the layout or the fold input is malformed (partition keys are " +
-          "derived, never nullable)")
-      r.get(0) match {
-        // ONLY the integral boxes: a boxed Double/Float/BigDecimal must
-        // hit the rejection below, never silently truncate through a
-        // generic Number.longValue (1.5 → 1L would mis-prune the fold)
-        case n: java.lang.Long => n.longValue()
-        case n: java.lang.Integer => n.longValue()
-        case n: java.lang.Short => n.longValue()
-        case n: java.lang.Byte => n.longValue()
-        case other => throw new IllegalArgumentException(
-          s"affectedValues: non-integral partition value '$other' " +
-            s"(${other.getClass.getName}) — serving-layout partition " +
-            "columns are integral by contract")
-      }
-    }.toSeq.sorted
+    affected.distinct().collect().map(r => integral(r.get(0), "affectedValues"))
+      .toSeq.sorted
+
+  /** One partition value as a Long. Serving-layout partition keys are
+    * derived, never nullable, and integral by contract; directory-name
+    * inference may type them IntegerType, so both boxes normalize here. */
+  private def integral(v: Any, caller: String): Long = {
+    require(v != null,
+      s"$caller: NULL partition value in a fold's affected set — " +
+        "the layout or the fold input is malformed (partition keys are " +
+        "derived, never nullable)")
+    v match {
+      // ONLY the integral boxes: a boxed Double/Float/BigDecimal must
+      // hit the rejection below, never silently truncate through a
+      // generic Number.longValue (1.5 → 1L would mis-prune the fold)
+      case n: java.lang.Long => n.longValue()
+      case n: java.lang.Integer => n.longValue()
+      case n: java.lang.Short => n.longValue()
+      case n: java.lang.Byte => n.longValue()
+      case other => throw new IllegalArgumentException(
+        s"$caller: non-integral partition value '$other' " +
+          s"(${other.getClass.getName}) — serving-layout partition " +
+          "columns are integral by contract")
+    }
+  }
 
   /** `partCol IN (values)` typed to the layout's partition-column type
     * (directory-name inference yields IntegerType for small values; a
@@ -145,18 +192,4 @@ object ServingLayout {
           "partition ATTRIBUTE and silently lose the static pruning this " +
           "helper exists to guarantee")
     }
-
-  private[graft] def sweepEmptied(
-      spark: SparkSession, path: String, partCol: String,
-      affected: Seq[Long], written: DataFrame): Unit = {
-    val present = written.select(partCol).distinct().collect()
-      .map(_.get(0).toString.toLong).toSet
-    val emptied = affected.filterNot(present)
-    if (emptied.nonEmpty) {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      emptied.foreach(v =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"$partCol=$v"), true))
-    }
-  }
 }

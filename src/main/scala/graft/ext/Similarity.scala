@@ -363,23 +363,12 @@ object Similarity {
     }
   }
 
-  /** The persisted side of an IVF deployment: every vector of `emb`
-    * assigned to its nearest centroid. Output (cell, neighbor_id, cv, cn).
-    * Because the centroids are an ARGUMENT, this is also the incremental
-    * fold: run it over a new-vector batch at the FROZEN stored centroids
-    * and append — history is never re-assigned (the missing member of the
-    * incremental family alongside [[hllApplyBatch]] and
-    * [[graft.ext.Cluster.applyPairsBatch]]). */
-  /** Explicit schema of the persisted cell layout (cell is the partition
-    * column) — for reads that must never depend on footer inference
-    * (the footer-less emptied-directory lesson), e.g.
-    * [[ServingLayout.compact]]. */
   /** Explicit schema of the persisted CODE layout ([[ivfPqEncode]]'s
     * rows): the compact/fold reads must never depend on footer inference
     * (the footer-less emptied-directory lesson), and the declared
     * partition-column type drives [[ServingLayout.partitionIn]]'s static
     * pruning. Pinned against [[ivfPqEncode]]'s analyzed schema by
-    * SimilaritySpec. */
+    * PqSpec. */
   private[graft] val codesSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("neighbor_id",
       org.apache.spark.sql.types.LongType),
@@ -390,6 +379,12 @@ object Similarity {
     org.apache.spark.sql.types.StructField("ccell",
       org.apache.spark.sql.types.LongType)))
 
+  /** Explicit schema of the persisted cell layout ([[ivfIndex]]'s rows;
+    * cell is the partition column): the compact/fold reads must never
+    * depend on footer inference (the footer-less emptied-directory
+    * lesson), and the declared partition-column type drives
+    * [[ServingLayout.partitionIn]]'s static pruning. Pinned against
+    * [[ivfIndex]]'s analyzed schema by IvfRecallSpec. */
   private[graft] val cellsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("neighbor_id",
       org.apache.spark.sql.types.LongType),
@@ -401,6 +396,13 @@ object Similarity {
     org.apache.spark.sql.types.StructField("cell",
       org.apache.spark.sql.types.LongType)))
 
+  /** The persisted side of an IVF deployment: every vector of `emb`
+    * assigned to its nearest centroid. Output (cell, neighbor_id, cv, cn).
+    * Because the centroids are an ARGUMENT, this is also the incremental
+    * fold: run it over a new-vector batch at the FROZEN stored centroids
+    * and append — history is never re-assigned (the missing member of the
+    * incremental family alongside [[hllApplyBatch]] and
+    * [[graft.ext.Cluster.applyPairsBatch]]). */
   def ivfIndex(
       emb: DataFrame,
       cents: DataFrame,
@@ -421,42 +423,10 @@ object Similarity {
     * deterministic, so this equals what the index stores — no
     * neighbor_id scan of the index is ever needed); affected = old cells
     * ∪ new cells, and the replacement content for those cells is
-    * (stored rows minus delta ids) ∪ the new assignments.
-    *
-    * The READ is delta-sized too: the affected-cell set collects to a
-    * literal (model-bounded — the same control-plane scalar the sweep
-    * rides) and reaches the replacement scan as a STATIC partition
-    * filter, so the fold never scans the layout it maintains. (The
-    * earlier semi-join-on-affected form had no selective literal in the
-    * dim subtree, got no DPP, and read every partition post-filter.)
-    *
-    * The write is Spark's dynamic partition overwrite (only partitions
-    * present in the frame are replaced). Two deliberate pieces around
-    * its edges:
-    *   - the replacement is eagerly materialized (`localCheckpoint`)
-    *     BEFORE the write — the bytes leave the path being overwritten,
-    *     which is also what clears the overwrite-a-read-path guard;
-    *   - dynamic overwrite cannot DELETE a partition: a cell emptied by
-    *     the fold writes zero files and its stale directory would
-    *     survive. The emptied set is MODEL-bounded (≤ numCentroids
-    *     cells, a parameter-table cardinality, never data-sized), so it
-    *     is swept with explicit directory deletes — the control-plane
-    *     scalar justification of cdc_query_dpp's threshold.
-    *
-    * A crash mid-write can leave a subset of affected partitions
-    * replaced, but the fold is DETERMINISTIC in (stored state, delta):
-    * re-running it rewrites the same partitions with identical content,
-    * so replay repairs a torn fold (pinned by SimilaritySpec).
-    *
-    * READER ISOLATION — the trade between the two maintenance regimes:
-    * dynamic overwrite DELETES the replaced partition files at commit,
-    * so a reader whose file index resolved BEFORE an in-place fold can
-    * hit missing files mid-scan. In-place folds therefore assume
-    * single-writer + fold-aware readers (re-resolve per query — every
-    * graded read here does); a deployment with long-running concurrent
-    * readers pins a GENERATION instead and takes folds through
-    * [[graft.streaming.StateStream.publishState]]'s graced flip — paying
-    * a layout copy per fold for snapshot isolation. */
+    * (stored rows minus delta ids) ∪ the new assignments. The emptied
+    * set is MODEL-bounded (≤ numCentroids cells). The write, sweep,
+    * replay and reader-isolation contract is [[ServingLayout.rewrite]]'s
+    * (replay pinned by IvfRecallSpec). */
   def ivfServingFold(
       spark: SparkSession,
       cellsPath: String,
@@ -467,37 +437,23 @@ object Similarity {
       vecCol: String = "embedding",
       repack: Seq[Long] = Nil): Unit = {
     val newAssign = ivfIndex(newVecs, cents, idCol, vecCol).localCheckpoint(true)
-    // the affected-cell set collects to a literal (model-bounded — the
-    // sweep's control-plane scalar, now shared with the read) so the
-    // replacement read below is STATICALLY partition-pruned: a fold
-    // reads only the cells it rewrites, never the whole layout (the
-    // earlier semi-join form scanned every cell and filtered post-scan).
-    // `repack` widens the set with [[ServingLayout.crowdedValues]]'
-    // crowded cells so a compaction rides this one rewrite (merged
-    // fold+compact — an included unaffected cell passes the anti-join
-    // untouched and lands as one file)
-    val affected = (ServingLayout.affectedValues(
-      ivfIndex(oldVecs, cents, idCol, vecCol).select("cell")
-        .union(newAssign.select("cell"))) ++ repack).distinct.sorted
-    val stored0 = spark.read.parquet(cellsPath)
-    val stored = stored0.where(ServingLayout.partitionIn(
-      col("cell"), stored0.schema("cell").dataType, affected))
     // removal set = old ∪ new ids: equal for a revision, old-only for a
     // DELETE (empty newVecs), new-only (a no-op anti-join) for an INSERT —
     // one fold covers the whole lifecycle op matrix
     val deltaIds = oldVecs.select(col(idCol).as("__did"))
       .union(newVecs.select(col(idCol).as("__did"))).distinct()
-    val replacement = stored
-      .join(deltaIds, col("neighbor_id") === col("__did"), "left_anti")
-      .unionByName(newAssign)
-      .select("cell", "neighbor_id", "cv", "cn")
-      .localCheckpoint(true) // materialization barrier: bytes leave the path
-    replacement.repartition(col("cell"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell")
-      .parquet(cellsPath)
-    ServingLayout.sweepEmptied(spark, cellsPath, "cell", affected, replacement)
+    // `repack` widens the set with [[ServingLayout.crowdedValues]]'
+    // crowded cells so a compaction rides this one rewrite (merged
+    // fold+compact — an included unaffected cell passes the anti-join
+    // untouched and lands as one file)
+    ServingLayout.rewrite(spark, cellsPath, cellsSchema, "cell",
+      ServingLayout.affectedValues(
+        ivfIndex(oldVecs, cents, idCol, vecCol).select("cell")
+          .union(newAssign.select("cell"))) ++ repack) {
+      _.join(deltaIds, col("neighbor_id") === col("__did"), "left_anti")
+        .select("cell", "neighbor_id", "cv", "cn")
+        .unionByName(newAssign.select("cell", "neighbor_id", "cv", "cn"))
+    }
   }
 
   /** Probe-side IVF search over a built index: queries assign to their
@@ -858,11 +814,9 @@ object Similarity {
   /** IN-PLACE partial maintenance of the coarse-cell-PARTITIONED code
     * index — [[ivfServingFold]]'s mechanics on the COMPRESSED artifact:
     * encoding is per-vector at the frozen (cents, cb) model, so a delta
-    * rewrites only the coarse cells its old/new vectors assign to; the
-    * generalized removal set (old ∪ new ids) covers
-    * revise/delete/insert, emptied cells are swept, and the fold is
-    * deterministic → replay-repairable. Same reader-isolation contract
-    * as [[ivfServingFold]]. */
+    * rewrites only the coarse cells its old/new vectors assign to, and
+    * the generalized removal set (old ∪ new ids) covers
+    * revise/delete/insert. Written through [[ServingLayout.rewrite]]. */
   def ivfPqServingFold(
       spark: SparkSession,
       codesPath: String,
@@ -876,30 +830,19 @@ object Similarity {
       repack: Seq[Long] = Nil): Unit = {
     val newEnc = ivfPqEncode(newVecs, cents, cb, subspaces, idCol, vecCol)
       .localCheckpoint(true)
-    // literal affected set → statically pruned replacement read (the
-    // ivfServingFold contract: a fold never scans the layout it
-    // maintains). `repack` widens the set with crowded cells so a
-    // compaction rides this one rewrite (merged fold+compact)
-    val affected = (ServingLayout.affectedValues(
-      ivfPqEncode(oldVecs, cents, cb, subspaces, idCol, vecCol)
-        .select("ccell")
-        .union(newEnc.select("ccell"))) ++ repack).distinct.sorted
-    val stored = spark.read.schema(codesSchema).parquet(codesPath)
-      .where(ServingLayout.partitionIn(
-        col("ccell"), codesSchema("ccell").dataType, affected))
     val deltaIds = oldVecs.select(col(idCol).as("__did"))
       .union(newVecs.select(col(idCol).as("__did"))).distinct()
-    val replacement = stored
-      .join(deltaIds, col("neighbor_id") === col("__did"), "left_anti")
-      .select("ccell", "neighbor_id", "m", "cell")
-      .unionByName(newEnc.select("ccell", "neighbor_id", "m", "cell"))
-      .localCheckpoint(true) // barrier: bytes leave the path
-    replacement.repartition(col("ccell"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ccell")
-      .parquet(codesPath)
-    ServingLayout.sweepEmptied(spark, codesPath, "ccell", affected, replacement)
+    // `repack` widens the set with crowded cells so a compaction rides
+    // this one rewrite (merged fold+compact)
+    ServingLayout.rewrite(spark, codesPath, codesSchema, "ccell",
+      ServingLayout.affectedValues(
+        ivfPqEncode(oldVecs, cents, cb, subspaces, idCol, vecCol)
+          .select("ccell")
+          .union(newEnc.select("ccell"))) ++ repack) {
+      _.join(deltaIds, col("neighbor_id") === col("__did"), "left_anti")
+        .select("ccell", "neighbor_id", "m", "cell")
+        .unionByName(newEnc.select("ccell", "neighbor_id", "m", "cell"))
+    }
   }
 
   /** ADC search over a prebuilt code index at the frozen model. */

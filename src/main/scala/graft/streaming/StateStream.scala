@@ -175,8 +175,8 @@ object StateStream {
     * deployment regime for LONG-RUNNING concurrent readers, where an
     * in-place fold's dynamic partition overwrite would delete files
     * under a pinned parquet file index
-    * ([[graft.ext.Similarity.ivfServingFold]]'s documented
-    * reader-isolation trade): the next generation stages as a byte COPY
+    * ([[graft.ext.ServingLayout]]'s documented reader-isolation
+    * trade): the next generation stages as a byte COPY
     * of the current one, `fold` runs its in-place partial rewrite
     * against the stage, and the stamp+rename flips the folded layout
     * visible atomically. A reader that resolved the previous generation

@@ -208,6 +208,36 @@ class IvfRecallSpec extends AnyFunSuite with SparkFixture {
       .select($"cell".cast("long"), $"neighbor_id").as[(Long, Long)].collect().toSet
     assert(afterOps == Set((0L, 1L), (0L, 3L), (2L, 4L)),
       s"delete then insert must land on the expected state, got $afterOps")
+
+    // deleting EVERY vector leaves a footer-less layout; the next insert
+    // fold must read it through the declared schema, not infer one
+    Similarity.ivfServingFold(s, cellsDir, Seq(
+      (1L, Seq(10f, 1f, 0f, 0f)), (3L, Seq(9f, 0f, 0f, 0f)),
+      (4L, Seq(0f, 0f, 4f, 1f))).toDF("vec_id", "embedding"), none, cents)
+    assert(Seq(0L, 1L, 2L).forall(c => cellFiles(c).isEmpty),
+      "deleting every vector must sweep every cell")
+    Similarity.ivfServingFold(s, cellsDir, none,
+      Seq((5L, Seq(0f, 2f, 0f, 0f))).toDF("vec_id", "embedding"), cents)
+    val afterEmpty = s.read.parquet(cellsDir)
+      .select($"cell".cast("long"), $"neighbor_id").as[(Long, Long)].collect().toSet
+    assert(afterEmpty == Set((1L, 5L)),
+      s"an insert after emptying the layout must land on the expected state, got $afterEmpty")
+  }
+
+  test("the declared cellsSchema pins ivfIndex's analyzed schema " +
+      "(compact/fold reads must never depend on footer inference)") {
+    val s = spark
+    import s.implicits._
+    val cents = Seq((0L, Seq(1f, 0f), 1.0)).toDF("cid", "centv", "centn")
+    // element nullability as a parquet read of embeddings yields it
+    val idx = Similarity.ivfIndex(Seq((1L, Seq(1f, 2f))).toDF("vec_id", "embedding")
+      .select($"vec_id", $"embedding".cast("array<float>").as("embedding")), cents)
+      .schema
+    assert(
+      idx.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq ==
+        Similarity.cellsSchema.fields.map(f => (f.name, f.dataType))
+          .sortBy(_._1).toSeq,
+      s"cellsSchema drifted from ivfIndex: $idx vs ${Similarity.cellsSchema}")
   }
 
   test("partition-local repack: crowded partitions rewrite to one file with " +

@@ -252,6 +252,32 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
     assert(emptyStats.length == 1 &&
       emptyStats(0).getLong(0) == 0L && emptyStats(0).getLong(1) == 0L,
       "an emptied corpus must publish (n = 0, avgdl = 0), not NULLs")
+
+    // the emptied layouts are footer-less; the next insert fold must read
+    // them through the declared schemas and land on scratch
+    val ins3 = Seq((20L, "alpha beta gamma"), (21L, "beta delta")).toDF("doc_id", "text")
+    Retrieval.bm25ServingFold(s,
+      base.resolve("postings").toString, base.resolve("doclen").toString,
+      base.resolve("stats").toString, ins3.where(lit(false)), ins3, buckets = B)
+    val (ps3, dls3, sts3) = Retrieval.bm25ServingArtifacts(ins3, buckets = B)
+    assert(postingsSet(s.read.parquet(base.resolve("postings").toString)) ==
+      postingsSet(ps3), "insert after emptying: postings must equal scratch")
+    assert(dlSet(s.read.parquet(base.resolve("doclen").toString)) == dlSet(dls3),
+      "insert after emptying: the registry must equal scratch")
+    assert(s.read.parquet(base.resolve("stats").toString)
+        .as[(Long, Long)].collect().toSet == sts3.as[(Long, Long)].collect().toSet,
+      "insert after emptying: (n, avgdl) must equal scratch")
+  }
+
+  test("the declared postingsSchema pins bm25ServingArtifacts' postings " +
+      "(compact/fold reads must never depend on footer inference)") {
+    val (postings, _, _) = Retrieval.bm25ServingArtifacts(corpus())
+    assert(
+      postings.schema.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq ==
+        Retrieval.postingsSchema.fields.map(f => (f.name, f.dataType))
+          .sortBy(_._1).toSeq,
+      s"postingsSchema drifted from bm25ServingArtifacts: ${postings.schema} " +
+        s"vs ${Retrieval.postingsSchema}")
   }
 
   test("postings/registry compaction: crowded buckets repack to one file " +

@@ -67,4 +67,114 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
       ServingLayout.partitionIn(col("b"), stored.schema("b").dataType, Seq.empty))
     assert(none.count() == 0L)
   }
+
+  test("rewrite reads only the given partitions, sweeps what the replacement " +
+      "empties, leaves untouched partitions' bytes, replays identically, and " +
+      "runs no job beyond the barrier and the write") {
+    val s = spark
+    import s.implicits._
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val path = graft.TempDirs.create("graft_slayout_rw").resolve("t").toString
+    (0L until 40L).map(i => (i, i % 4)).toDF("id", "b")
+      .repartition(col("b")).write.partitionBy("b").parquet(path)
+    // the layout's declared schema, typed as directory inference types it
+    val schema = s.read.parquet(path).schema
+    assert(schema("b").dataType == org.apache.spark.sql.types.IntegerType)
+    def files(b: Int): Map[String, Long] = {
+      val d = Paths.get(path, s"b=$b")
+      if (!Files.exists(d)) Map.empty
+      else Files.list(d).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => p.getFileName.toString -> Files.getLastModifiedTime(p).toMillis)
+        .toMap
+    }
+    def content(): Set[(Long, Long)] =
+      s.read.schema(schema).parquet(path)
+        .select($"id", $"b".cast("long")).as[(Long, Long)].collect().toSet
+    val untouched = Seq(0, 2).map(b => b -> files(b)).toMap
+    val expected = content().filter(_._2 != 3L)
+
+    // every barrier plan's scans, and every job's SQL execution, while a
+    // rewrite runs under its own job group
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val jl = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.sql.execution.root.id")))
+    }
+    s.listenerManager.register(qel)
+    s.sparkContext.addSparkListener(jl)
+    def rewriteOnce(group: String): Unit = {
+      s.sparkContext.setJobGroup(group, group)
+      // a data-column predicate (one on `b` would prune the scan itself):
+      // every row of partition 3 has id % 4 == 3, so the replacement
+      // empties it and keeps partition 1 whole
+      try ServingLayout.rewrite(s, path, schema, "b", Seq(3L, 1L, 3L))(
+        _.where(col("id") % 4 =!= 3))
+      finally s.sparkContext.clearJobGroup()
+    }
+    try {
+      rewriteOnce("rw1")
+      // listener events arrive in order: once a later marker job is seen,
+      // every job of the rewrite has been seen too
+      s.sparkContext.setJobGroup("rw-marker", "rw-marker")
+      try s.range(1).collect() finally s.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.asScala.exists(_._1 == "rw-marker") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      val rwJobs = jobs.asScala.toSeq.filter(_._1 == "rw1")
+      assert(rwJobs.nonEmpty && rwJobs.forall(_._2 != null),
+        s"every job of a rewrite belongs to a SQL execution: $rwJobs")
+      assert(rwJobs.map(_._2).distinct.length == 2,
+        "a rewrite runs exactly two executions — the barrier (which also " +
+          s"observes the sweep set) and the write: $rwJobs")
+      val scans = plans.asScala.toSeq.flatMap(scansOf)
+        .filter(_.relation.location.rootPaths.exists(_.toString.endsWith("/t")))
+      assert(scans.nonEmpty, "the barrier's stored-slice scan must be seen")
+      scans.foreach { f =>
+        val read = f.metrics.get("numPartitions").map(_.value)
+        assert(read.contains(2L),
+          s"the rewrite must read only partitions 1 and 3 of 4, read $read")
+      }
+    } finally {
+      s.listenerManager.unregister(qel)
+      s.sparkContext.removeSparkListener(jl)
+    }
+    assert(files(3).isEmpty, "the partition the replacement emptied must be swept")
+    assert(files(1).nonEmpty)
+    assert(untouched.forall { case (b, fs) => files(b) == fs },
+      "partitions outside the value set must keep their file names and mtimes")
+    assert(content() == expected)
+    // replay: the same rewrite over the rewritten layout lands on the same state
+    rewriteOnce("rw2")
+    assert(content() == expected, "a replayed rewrite must land on identical content")
+    assert(files(3).isEmpty)
+    // an empty value set (a no-op delta) reads nothing, observes an empty
+    // set, and leaves every partition as it was
+    val before = (0 to 3).map(files)
+    ServingLayout.rewrite(s, path, schema, "b", Nil)(identity)
+    assert((0 to 3).map(files) == before && content() == expected)
+  }
+
+  test("inParallel runs every chain and reports every failure") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger()
+    val e = intercept[IllegalStateException] {
+      ServingLayout.inParallel(
+        () => throw new IllegalStateException("chain a"),
+        () => { ran.incrementAndGet(); () },
+        () => throw new IllegalStateException("chain b"))
+    }
+    assert(ran.get == 1, "a failing chain must not stop its siblings")
+    assert(e.getSuppressed.length == 1, s"one cause thrown, one suppressed: $e")
+    assert((e.getMessage +: e.getSuppressed.map(_.getMessage)).toSet ==
+      Set("chain a", "chain b"))
+  }
 }
