@@ -163,15 +163,7 @@ object Bench {
       }
     }
 
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Verify.{jsonString => q}
 
     val ok = results.collect { case (k, Right(v)) => k -> v }
     val errs = results.collect { case (k, Left(m)) => k -> m }

@@ -125,12 +125,11 @@ object OptProbe {
         time("build embdup layout (untimed in bench)") {
           graft.ext.Dedup.embDupWriteServingLayout(dupd, vecs)
         }
-        sinkTime("pairs listing (Quiesced)",
-          graft.ext.Dedup.embDupPairsServingQuiesced(s, vecs))
-        sinkTime("pairs listing again (warm)",
-          graft.ext.Dedup.embDupPairsServingQuiesced(s, vecs))
-        sinkTime("pairs listing + orderBy",
-          graft.ext.Dedup.embDupPairsServingQuiesced(s, vecs).orderBy("id_a", "id_b"))
+        def listing = graft.ext.Dedup.embDupPairsFrom(
+          graft.ext.Dedup.embDupVecs.read(s, vecs))
+        sinkTime("pairs listing (raw path)", listing)
+        sinkTime("pairs listing again (warm)", listing)
+        sinkTime("pairs listing + orderBy", listing.orderBy("id_a", "id_b"))
         val ids = dupd.where(col("vec_id") % 100 === 50).select(col("vec_id"))
         val oldV = dupd.join(ids, Seq("vec_id"), "left_semi")
           .select(col("vec_id"), col("embedding"))
@@ -147,10 +146,11 @@ object OptProbe {
         time("build multiband layout (untimed in bench)") {
           graft.ext.Dedup.embMultiWriteServingLayout(nd, trows, vecs)
         }
-        sinkTime("multiband pairs listing",
-          graft.ext.Dedup.embMultiPairsServingQuiesced(s, trows, vecs))
-        sinkTime("multiband pairs listing again",
-          graft.ext.Dedup.embMultiPairsServingQuiesced(s, trows, vecs))
+        def listing = graft.ext.Dedup.embMultiPairsFrom(
+          graft.ext.Dedup.embMultiTRows.read(s, trows),
+          graft.ext.Dedup.embMultiVecs.read(s, vecs))
+        sinkTime("multiband pairs listing", listing)
+        sinkTime("multiband pairs listing again", listing)
       case "triangles" =>
         // ext_triangles decomposed: projection (distinct, group cap,
         // per-group quadratic join, edge distinct) vs the counting
@@ -224,8 +224,7 @@ object OptProbe {
         // the DECLARED layout schema (band is INT32 — a hand-rolled
         // all-Long schema inserted a join-key cast absent from the real
         // stage and made the A/B/C comparison non-apples-to-apples)
-        val storedV = s.read.schema(graft.ext.Dedup.simhashVrowsSchema)
-          .parquet(tmp.resolve("vrows").toString)
+        val storedV = graft.ext.Dedup.simhashVrows.read(s, tmp.resolve("vrows").toString)
         def partsRead(df: DataFrame, label: String): Unit = {
           df.collect()
           def scans(p: org.apache.spark.sql.execution.SparkPlan)

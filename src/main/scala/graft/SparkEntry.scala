@@ -224,10 +224,9 @@ object SparkEntry {
     TempDirs.memoized("graft_ivf_serving", s"$dir/embeddings.parquet") { tmp =>
       val cents = s.read.parquet(ivfDeployState(s, dir).resolve("centroids").toString)
       cents.write.mode("overwrite").parquet(tmp.resolve("centroids").toString)
-      s.read.parquet(ivfDeployState(s, dir).resolve("cells").toString)
-        .repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite")
-        .parquet(tmp.resolve("cells").toString)
+      Similarity.ivfCells.write(
+        s.read.parquet(ivfDeployState(s, dir).resolve("cells").toString),
+        tmp.resolve("cells").toString)
     }
 
   /** The DEPLOYED BM25 index (whole-corpus postings + doc registry) —
@@ -248,14 +247,10 @@ object SparkEntry {
   private def bm25ServingState(s: SparkSession, dir: String): java.nio.file.Path =
     TempDirs.memoized("graft_bm25_servingr2", s"$dir/documents.parquet") { tmp =>
       val (post, dl, stats) = Retrieval.bm25ServingArtifacts(corpus(s, dir))
-      post.repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(tmp.resolve("postings").toString)
+      Retrieval.bm25PostingsLayout.write(post, tmp.resolve("postings").toString)
       // the registry is itself a bucket-partitioned layout (folded per
       // affected bucket, never rewritten whole)
-      dl.repartition(col("dbucket"))
-        .write.partitionBy("dbucket").mode("overwrite")
-        .parquet(tmp.resolve("doclen").toString)
+      Retrieval.bm25DocLen.write(dl, tmp.resolve("doclen").toString)
       stats.write.mode("overwrite").parquet(tmp.resolve("stats").toString)
     }
 
@@ -266,11 +261,10 @@ object SparkEntry {
     TempDirs.memoized("graft_serving_layout", s"$dir/orders.parquet") { tmp =>
       val cl = ChangelogBuilder.withIds(
         ChangelogBuilder.build(feed(s, dir), ordersCfg), ordersCfg)
-      graft.cdc.ServingBridge.timedEpisodes(cl, "o_orderkey", "o_orderstatus")
-        .withColumn("bucket", graft.cdc.ServingBridge.keyBucket(col("serve_key")))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(tmp.resolve("episodes").toString)
+      graft.cdc.ServingBridge.episodeStore.write(
+        graft.cdc.ServingBridge.timedEpisodes(cl, "o_orderkey", "o_orderstatus")
+          .withColumn("bucket", graft.cdc.ServingBridge.keyBucket(col("serve_key"))),
+        tmp.resolve("episodes").toString)
     }
 
   /** The deployed episode store at the MID-feed high-water mark: window-1
@@ -286,11 +280,10 @@ object SparkEntry {
         ChangelogBuilder.build(
           feed(s, dir).where(col("commit_time") <= lit(mid)), ordersCfg),
         ordersCfg)
-      graft.cdc.ServingBridge.timedEpisodes(cl1, "o_orderkey", "o_orderstatus")
-        .withColumn("bucket", graft.cdc.ServingBridge.keyBucket(col("serve_key")))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(tmp.resolve("episodes").toString)
+      graft.cdc.ServingBridge.episodeStore.write(
+        graft.cdc.ServingBridge.timedEpisodes(cl1, "o_orderkey", "o_orderstatus")
+          .withColumn("bucket", graft.cdc.ServingBridge.keyBucket(col("serve_key"))),
+        tmp.resolve("episodes").toString)
     }
 
   /** Window-2 (commit > ResumeMid) o_orderstatus changelog rows in
@@ -317,10 +310,8 @@ object SparkEntry {
       val (cents0, cb0) = Similarity.ivfPqModel(e)
       cents0.write.mode("overwrite").parquet(tmp.resolve("cents").toString)
       cb0.write.mode("overwrite").parquet(tmp.resolve("cb").toString)
-      Similarity.ivfPqEncode(e, cents0, cb0)
-        .repartition(col("ccell"))
-        .write.partitionBy("ccell").mode("overwrite")
-        .parquet(tmp.resolve("codes").toString)
+      Similarity.pqCodes.write(Similarity.ivfPqEncode(e, cents0, cb0),
+        tmp.resolve("codes").toString)
     }
 
   /** Deploy `rows` into a partitioned layout FRAGMENTED (≥2 files in
@@ -334,9 +325,9 @@ object SparkEntry {
     * content is identical either way, and content identity is all the
     * repack contract grades. */
   private def deployFragmented(rows: DataFrame, path: String,
-      partCol: String, splitCol: org.apache.spark.sql.Column): Unit =
-    rows.repartition(64, col(partCol), pmod(splitCol, lit(2L)))
-      .write.partitionBy(partCol).mode("append").parquet(path)
+      artifact: graft.ext.ServingLayout.Artifact): Unit =
+    rows.repartition(64, col(artifact.partCol), pmod(col(artifact.idCol), lit(2L)))
+      .write.partitionBy(artifact.partCol).mode("append").parquet(path)
 
   /** A corpus's LSH dedup index in its SERVING layout under `tmp`:
     * `bands/` + `fps/` ([[Dedup.writeServingLayout]]). */
@@ -436,8 +427,7 @@ object SparkEntry {
         s, tmp.resolve("layout").toString) { stage =>
         val p = java.nio.file.Paths.get(stage.toUri.getPath)
         val st = embMultiServingState(s, dir)
-        TempDirs.copyInto(st.resolve("trows"), p.resolve("trows"))
-        TempDirs.copyInto(st.resolve("vecs"), p.resolve("vecs"))
+        copyState(st, p, "trows", "vecs")
       }
     }
 
@@ -460,10 +450,7 @@ object SparkEntry {
   private def embMultiServing2State(s: SparkSession, dir: String): java.nio.file.Path =
     TempDirs.memoized("graft_edm_srv2",
       Seq(s"$dir/embeddings.parquet", s"$dir/documents.parquet")) { tmp =>
-      TempDirs.copyInto(embMultiServingState(s, dir).resolve("trows"),
-        tmp.resolve("trows"))
-      TempDirs.copyInto(embMultiServingState(s, dir).resolve("vecs"),
-        tmp.resolve("vecs"))
+      copyState(embMultiServingState(s, dir), tmp, "trows", "vecs")
       val e = embeddings(s, dir)
       val d1 = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
       val old1 = e.join(d1, e("vec_id") === d1("doc_id"))
@@ -535,13 +522,6 @@ object SparkEntry {
     val insVecs = e.join(ins, e("vec_id") === ins("doc_id") - ChangeFeed.DocsInsertOffset)
       .select(ins("doc_id").as("vec_id"), e("embedding"))
     (oldVecs2, updVecs.unionByName(insVecs))
-  }
-
-  /** Copy the two SimHash serving artifacts into `base`. */
-  private def copySimhashState(
-      state: java.nio.file.Path, base: java.nio.file.Path): Unit = {
-    TempDirs.copyInto(state.resolve("vrows"), base.resolve("vrows"))
-    TempDirs.copyInto(state.resolve("docs"), base.resolve("docs"))
   }
 
   private val docsCfg = graft.cdc.CdcTableConfig("documents", Seq("doc_id"))
@@ -635,22 +615,12 @@ object SparkEntry {
       .orderBy("query_id", "rnk")
   }
 
-  /** Copy the three BM25 serving artifacts into `base` — the graded fold
-    * rows MUTATE them, so each invocation works on its own copy. */
-  private def copyBm25State(
-      state: java.nio.file.Path, base: java.nio.file.Path): Unit = {
-    TempDirs.copyInto(state.resolve("postings"), base.resolve("postings"))
-    TempDirs.copyInto(state.resolve("doclen"), base.resolve("doclen"))
-    TempDirs.copyInto(state.resolve("stats"), base.resolve("stats"))
-  }
-
-  /** Copy the two LSH serving artifacts into `base` — the graded fold
-    * rows MUTATE them, so each invocation works on its own copy. */
-  private def copyMinhashState(
-      state: java.nio.file.Path, base: java.nio.file.Path): Unit = {
-    TempDirs.copyInto(state.resolve("bands"), base.resolve("bands"))
-    TempDirs.copyInto(state.resolve("fps"), base.resolve("fps"))
-  }
+  /** Copy the serving artifacts named `artifacts` from `state` into
+    * `base` — the graded fold rows MUTATE them, so each invocation works
+    * on its own copy. */
+  private def copyState(state: java.nio.file.Path, base: java.nio.file.Path,
+      artifacts: String*): Unit =
+    artifacts.foreach(a => TempDirs.copyInto(state.resolve(a), base.resolve(a)))
 
   /** The corpus view with a (doc_id, text) revision delta applied. */
   private def postDeltaCorpus(c: DataFrame, delta: DataFrame): DataFrame =
@@ -834,10 +804,8 @@ object SparkEntry {
       val (cents0, cb0) = Similarity.ivfPqModel(hist)
       cents0.write.mode("overwrite").parquet(tmp.resolve("cents").toString)
       cb0.write.mode("overwrite").parquet(tmp.resolve("cb").toString)
-      Similarity.ivfPqEncode(hist, cents0, cb0)
-        .repartition(col("ccell"))
-        .write.partitionBy("ccell").mode("overwrite")
-        .parquet(tmp.resolve("codes").toString)
+      Similarity.pqCodes.write(Similarity.ivfPqEncode(hist, cents0, cb0),
+        tmp.resolve("codes").toString)
     }
 
   /** The POST-era-1 compressed SERVING layout: [[ivfPqServingState]]'s
@@ -907,7 +875,7 @@ object SparkEntry {
   private def bm25ServingState2(s: SparkSession, dir: String): java.nio.file.Path =
     TempDirs.memoized("graft_bm25_serving2r2", s"$dir/documents.parquet") { tmp =>
       val state = bm25ServingState(s, dir)
-      copyBm25State(state, tmp)
+      copyState(state, tmp, "postings", "doclen", "stats")
       val delta1 = docsChangelogDelta(s, dir)
       bm25ServingFoldAt(s, dir, tmp,
         corpus(s, dir).join(delta1.select("doc_id"), Seq("doc_id"), "left_semi"),
@@ -1664,7 +1632,7 @@ object SparkEntry {
       val c = corpus(s, dir)
       val state = bm25ServingState(s, dir)
       val base = TempDirs.create("graft_bm25srvf")
-      copyBm25State(state, base)
+      copyState(state, base, "postings", "doclen", "stats")
       val delta = docsChangelogDelta(s, dir)
       val oldDocs = c.join(delta.select("doc_id"), Seq("doc_id"), "left_semi")
       Retrieval.bm25ServingFold(s,
@@ -1691,7 +1659,7 @@ object SparkEntry {
       val c = corpus(s, dir)
       val state = bm25ServingState(s, dir)
       val base = TempDirs.create("graft_bm25srvfst")
-      copyBm25State(state, base)
+      copyState(state, base, "postings", "doclen", "stats")
       val feedDir = docsDeltaFeed(s, dir).resolve("delta").toString
       graft.streaming.StateStream.foldAvailableNow(
         s, feedDir, base.resolve("ckpt").toString) { batch =>
@@ -1751,7 +1719,7 @@ object SparkEntry {
       val c = corpus(s, dir)
       val state = bm25ServingState(s, dir)
       val base = TempDirs.create("graft_bm25srvlc")
-      copyBm25State(state, base)
+      copyState(state, base, "postings", "doclen", "stats")
       // era 1: revisions
       val delta1 = docsChangelogDelta(s, dir)
       bm25ServingFoldAt(s, dir, base,
@@ -1788,7 +1756,7 @@ object SparkEntry {
       val cellsPath = base.resolve("cells").toString
       val cells0 = s.read.parquet(state.resolve("cells").toString)
         .localCheckpoint(true)
-      deployFragmented(cells0, cellsPath, "cell", col("neighbor_id"))
+      deployFragmented(cells0, cellsPath, Similarity.ivfCells)
       val cents = s.read.parquet(state.resolve("centroids").toString)
         .localCheckpoint(true)
       // era 1: revisions fold in place (affected cells rewrite to 1 file);
@@ -1800,7 +1768,7 @@ object SparkEntry {
         .select(e("vec_id"), e("embedding"))
       Similarity.ivfServingFold(s, cellsPath, old1,
         old1.select(col("vec_id"), reverse(col("embedding")).as("embedding")), cents,
-        repack = graft.ext.ServingLayout.crowdedValues(s, cellsPath, "cell"))
+        repack = graft.ext.ServingLayout.crowdedValues(s, cellsPath, Similarity.ivfCells))
       // era 2: the full lifecycle folds onto the compacted layout (d1 is
       // already materialized — no second changelog build)
       annServingLifecycleFoldAt(s, dir, cellsPath, cents,
@@ -1851,9 +1819,8 @@ object SparkEntry {
       val layout = base.resolve("layout").toString
       // generation 1: the deployed hist index in its serving layout
       graft.streaming.StateStream.publishState(s, layout) { stage =>
-        s.read.parquet(inc.resolve("cells").toString)
-          .repartition(col("cell")).write.partitionBy("cell")
-          .parquet(stage.toString)
+        Similarity.ivfCells.write(
+          s.read.parquet(inc.resolve("cells").toString), stage.toString)
       }
       val cents = s.read.parquet(inc.resolve("centroids").toString)
         .localCheckpoint(true)
@@ -1873,8 +1840,7 @@ object SparkEntry {
       val cents2 = Similarity.ivfCentroids(vecs)
       val index2 = Similarity.ivfIndex(vecs, cents2)
       graft.streaming.StateStream.publishState(s, layout) { stage =>
-        index2.repartition(col("cell")).write.partitionBy("cell")
-          .parquet(stage.toString)
+        Similarity.ivfCells.write(index2, stage.toString)
       }
       Similarity.ivfSearch(graft.streaming.StateStream.readState(s, layout),
         e.where(col("vec_id") % 100 === 0), cents2, k = 3)
@@ -1901,9 +1867,8 @@ object SparkEntry {
       val base = TempDirs.create("graft_annsrvgr")
       val layout = base.resolve("layout").toString
       graft.streaming.StateStream.publishState(s, layout) { stage =>
-        s.read.parquet(st.resolve("cells").toString)
-          .repartition(col("cell")).write.partitionBy("cell")
-          .parquet(stage.toString)
+        Similarity.ivfCells.write(
+          s.read.parquet(st.resolve("cells").toString), stage.toString)
       }
       val cents = s.read.parquet(st.resolve("centroids").toString)
         .localCheckpoint(true)
@@ -1939,9 +1904,8 @@ object SparkEntry {
       val base = TempDirs.create("graft_ivfrace")
       val layout = base.resolve("layout").toString
       graft.streaming.StateStream.publishState(s, layout) { stage =>
-        s.read.parquet(st.resolve("cells").toString)
-          .repartition(col("cell")).write.partitionBy("cell")
-          .parquet(stage.toString)
+        Similarity.ivfCells.write(
+          s.read.parquet(st.resolve("cells").toString), stage.toString)
       }
       val cents = s.read.parquet(st.resolve("centroids").toString)
         .localCheckpoint(true)
@@ -2005,7 +1969,8 @@ object SparkEntry {
       val base = TempDirs.create("graft_bm25srvgr")
       val layout = base.resolve("layout").toString
       graft.streaming.StateStream.publishState(s, layout) { stage =>
-        copyBm25State(state, java.nio.file.Paths.get(stage.toUri.getPath))
+        copyState(state, java.nio.file.Paths.get(stage.toUri.getPath),
+          "postings", "doclen", "stats")
       }
       val gen1 = graft.streaming.StateStream.statePath(s, layout)
       // the long-running reader resolves the gen-1 artifact SET here
@@ -2041,7 +2006,8 @@ object SparkEntry {
       val base = TempDirs.create("graft_bm25srvrace")
       val layout = base.resolve("layout").toString
       graft.streaming.StateStream.publishState(s, layout) { stage =>
-        copyBm25State(state, java.nio.file.Paths.get(stage.toUri.getPath))
+        copyState(state, java.nio.file.Paths.get(stage.toUri.getPath),
+          "postings", "doclen", "stats")
       }
       // the long-running searcher constructs its read from the pinned
       // DEFAULT entry point HERE — generation 1 resolves at construction
@@ -2067,7 +2033,7 @@ object SparkEntry {
       val c = corpus(s, dir)
       val state = bm25ServingState(s, dir)
       val base = TempDirs.create("graft_bm25srvfgt")
-      copyBm25State(state, base)
+      copyState(state, base, "postings", "doclen", "stats")
       val subject = c.where(col("doc_id") % 9 === 4)
       bm25ServingFoldAt(s, dir, base, subject, subject.where(lit(false)))
       Retrieval.bm25TopKServing(
@@ -2102,19 +2068,20 @@ object SparkEntry {
       graft.ext.ServingLayout.inParallel(
         () => deployFragmented(
           s.read.parquet(state.resolve("postings").toString).localCheckpoint(true),
-          postingsPath, "bucket", col("doc_id")),
+          postingsPath, Retrieval.bm25PostingsLayout),
         () => deployFragmented(
           s.read.parquet(state.resolve("doclen").toString).localCheckpoint(true),
-          doclenPath, "dbucket", col("doc_id")),
+          doclenPath, Retrieval.bm25DocLen),
         () => TempDirs.copyInto(state.resolve("stats"), base.resolve("stats")))
       // era 1 folds in place; the crowded buckets ride the same rewrite
       val delta1 = docsChangelogDelta(s, dir)
       bm25ServingFoldAt(s, dir, base,
         c.join(delta1.select("doc_id"), Seq("doc_id"), "left_semi"), delta1,
         repackPostings =
-          graft.ext.ServingLayout.crowdedValues(s, postingsPath, "bucket"),
+          graft.ext.ServingLayout.crowdedValues(s, postingsPath,
+            Retrieval.bm25PostingsLayout),
         repackDocLen =
-          graft.ext.ServingLayout.crowdedValues(s, doclenPath, "dbucket"))
+          graft.ext.ServingLayout.crowdedValues(s, doclenPath, Retrieval.bm25DocLen))
       // era 2: the lifecycle folds onto the compacted layout (delta1 is
       // already materialized — one changelog build per row)
       val (upserts, ins, del) = lifecycleDeltaSets(s, dir)
@@ -2140,7 +2107,7 @@ object SparkEntry {
       // is the streamed era-2 lifecycle fold over it
       val state = bm25ServingState2(s, dir)
       val base = TempDirs.create("graft_bm25srvlcst")
-      copyBm25State(state, base)
+      copyState(state, base, "postings", "doclen", "stats")
       // the post-era-1 view is batch-invariant — derive it ONCE outside
       // the micro-batch loop (each batch used to re-run the changelog
       // build through the helper)
@@ -2455,13 +2422,13 @@ object SparkEntry {
     "ext_cdc_minhash_serving_fold" -> ((s, dir) => {
       val c = corpus(s, dir)
       val base = TempDirs.create("graft_mhsrvf")
-      copyMinhashState(minhashServingState(s, dir), base)
+      copyState(minhashServingState(s, dir), base, "bands", "fps")
       val delta = docsChangelogDelta(s, dir)
       val oldDocs = c.join(delta.select("doc_id"), Seq("doc_id"), "left_semi")
       Dedup.minhashServingFold(s, base.resolve("bands").toString,
         base.resolve("fps").toString, oldDocs, delta)
-      Dedup.minhashPairsServingQuiesced(s, base.resolve("bands").toString,
-        base.resolve("fps").toString, postDeltaCorpus(c, delta))
+      Dedup.minhashPairsFrom(Dedup.minhashBands.read(s, s"$base/bands"),
+        Dedup.minhashFps.read(s, s"$base/fps"), postDeltaCorpus(c, delta))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2474,7 +2441,7 @@ object SparkEntry {
     "ext_cdc_minhash_serving_fold_stream" -> ((s, dir) => {
       val c = corpus(s, dir)
       val base = TempDirs.create("graft_mhsrvfst")
-      copyMinhashState(minhashServingState(s, dir), base)
+      copyState(minhashServingState(s, dir), base, "bands", "fps")
       graft.streaming.StateStream.foldAvailableNow(
         s, docsDeltaFeed(s, dir).resolve("delta").toString,
         base.resolve("ckpt").toString) { batch =>
@@ -2486,8 +2453,8 @@ object SparkEntry {
           base.resolve("fps").toString, oldDocs, b)
       }
       val delta = docsChangelogDelta(s, dir)
-      Dedup.minhashPairsServingQuiesced(s, base.resolve("bands").toString,
-        base.resolve("fps").toString, postDeltaCorpus(c, delta))
+      Dedup.minhashPairsFrom(Dedup.minhashBands.read(s, s"$base/bands"),
+        Dedup.minhashFps.read(s, s"$base/fps"), postDeltaCorpus(c, delta))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2502,7 +2469,7 @@ object SparkEntry {
     "ext_cdc_minhash_serving_probe" -> ((s, dir) => {
       val store = corpus(s, dir)
       val base = TempDirs.create("graft_mhsrvpb")
-      copyMinhashState(minhashServingHistState(s, dir), base)
+      copyState(minhashServingHistState(s, dir), base, "bands", "fps")
       val delta = docsChangelogDelta(s, dir)
       val hist = s.read.parquet(s"$dir/documents.parquet")
       val oldDocs = hist.join(delta.select("doc_id"), Seq("doc_id"), "left_semi")
@@ -2525,12 +2492,12 @@ object SparkEntry {
     "ext_minhash_serving_forget" -> ((s, dir) => {
       val store = corpus(s, dir)
       val base = TempDirs.create("graft_mhsrvfgt")
-      copyMinhashState(minhashServingState(s, dir), base)
+      copyState(minhashServingState(s, dir), base, "bands", "fps")
       val subject = store.where(col("doc_id") % 7 === 3)
       Dedup.minhashServingFold(s, base.resolve("bands").toString,
         base.resolve("fps").toString, subject, subject.where(lit(false)))
-      Dedup.minhashPairsServingQuiesced(s, base.resolve("bands").toString,
-        base.resolve("fps").toString, store.where(col("doc_id") % 7 =!= 3))
+      Dedup.minhashPairsFrom(Dedup.minhashBands.read(s, s"$base/bands"),
+        Dedup.minhashFps.read(s, s"$base/fps"), store.where(col("doc_id") % 7 =!= 3))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2545,7 +2512,7 @@ object SparkEntry {
     "ext_cdc_minhash_serving_lifecycle" -> ((s, dir) => {
       val c = corpus(s, dir)
       val base = TempDirs.create("graft_mhsrvlc")
-      copyMinhashState(minhashServingState(s, dir), base)
+      copyState(minhashServingState(s, dir), base, "bands", "fps")
       // era 1: revisions
       val delta1 = docsChangelogDelta(s, dir)
       Dedup.minhashServingFold(s, base.resolve("bands").toString,
@@ -2556,8 +2523,8 @@ object SparkEntry {
       val sets = lifecycleDeltaSets(s, dir)
       val post1 = postDeltaCorpus(c, delta1)
       minhashServingLifecycleFoldAt(s, dir, base, sets, post1)
-      Dedup.minhashPairsServingQuiesced(s, base.resolve("bands").toString,
-        base.resolve("fps").toString,
+      Dedup.minhashPairsFrom(Dedup.minhashBands.read(s, s"$base/bands"),
+        Dedup.minhashFps.read(s, s"$base/fps"),
         postLifecycleCorpus(post1, sets))
         .orderBy("id_a", "id_b")
     }),
@@ -2568,7 +2535,7 @@ object SparkEntry {
     // extracted delta sets fold in place. Same post-lifecycle oracle
     "ext_cdc_minhash_serving_lifecycle_stream" -> ((s, dir) => {
       val base = TempDirs.create("graft_mhsrvlcst")
-      copyMinhashState(minhashServing2State(s, dir), base)
+      copyState(minhashServing2State(s, dir), base, "bands", "fps")
       // batch-invariant post-era-1 view — built once outside the loop
       val post1 = postDeltaCorpus(corpus(s, dir), docsChangelogDelta(s, dir))
       graft.streaming.StateStream.foldAvailableNow(
@@ -2577,8 +2544,8 @@ object SparkEntry {
         minhashServingLifecycleFoldAt(s, dir, base,
           lifecycleDeltaSetsFrom(w, s, dir), post1)
       }
-      Dedup.minhashPairsServingQuiesced(s, base.resolve("bands").toString,
-        base.resolve("fps").toString,
+      Dedup.minhashPairsFrom(Dedup.minhashBands.read(s, s"$base/bands"),
+        Dedup.minhashFps.read(s, s"$base/fps"),
         postLifecycleCorpus(post1, lifecycleDeltaSets(s, dir)))
         .orderBy("id_a", "id_b")
     }),
@@ -2600,7 +2567,8 @@ object SparkEntry {
       val base = TempDirs.create("graft_mhsrvgr")
       val layout = base.resolve("layout").toString
       graft.streaming.StateStream.publishState(s, layout) { stage =>
-        copyMinhashState(state, java.nio.file.Paths.get(stage.toUri.getPath))
+        copyState(state, java.nio.file.Paths.get(stage.toUri.getPath),
+          "bands", "fps")
       }
       val gen1 = graft.streaming.StateStream.statePath(s, layout)
       // the long-running reader resolves the gen-1 artifact SET here
@@ -2634,8 +2602,8 @@ object SparkEntry {
       val base = TempDirs.create("graft_mhsrvrace")
       val layout = base.resolve("layout").toString
       graft.streaming.StateStream.publishState(s, layout) { stage =>
-        copyMinhashState(minhashServingHistState(s, dir),
-          java.nio.file.Paths.get(stage.toUri.getPath))
+        copyState(minhashServingHistState(s, dir),
+          java.nio.file.Paths.get(stage.toUri.getPath), "bands", "fps")
       }
       // the probe resolves generation 1 HERE (before the fold flips)
       val gen1 = graft.streaming.StateStream.statePath(s, layout)
@@ -2692,13 +2660,13 @@ object SparkEntry {
     "ext_cdc_simhash_serving_fold" -> ((s, dir) => {
       val c = corpus(s, dir)
       val base = TempDirs.create("graft_shsrvf")
-      copySimhashState(simhashServingState(s, dir), base)
+      copyState(simhashServingState(s, dir), base, "vrows", "docs")
       val delta = docsChangelogDelta(s, dir)
       val oldDocs = c.join(delta.select("doc_id"), Seq("doc_id"), "left_semi")
       Dedup.simhashServingFold(s, base.resolve("vrows").toString,
         base.resolve("docs").toString, oldDocs, delta)
-      Dedup.simhashPairsServingQuiesced(s, base.resolve("vrows").toString,
-        base.resolve("docs").toString)
+      Dedup.simhashPairsFrom(Dedup.simhashVrows.read(s, s"$base/vrows"),
+        Dedup.simhashDocs.read(s, s"$base/docs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2709,7 +2677,7 @@ object SparkEntry {
     "ext_cdc_simhash_serving_fold_stream" -> ((s, dir) => {
       val c = corpus(s, dir)
       val base = TempDirs.create("graft_shsrvfst")
-      copySimhashState(simhashServingState(s, dir), base)
+      copyState(simhashServingState(s, dir), base, "vrows", "docs")
       graft.streaming.StateStream.foldAvailableNow(
         s, docsDeltaFeed(s, dir).resolve("delta").toString,
         base.resolve("ckpt").toString) { batch =>
@@ -2718,8 +2686,8 @@ object SparkEntry {
         Dedup.simhashServingFold(s, base.resolve("vrows").toString,
           base.resolve("docs").toString, oldDocs, b)
       }
-      Dedup.simhashPairsServingQuiesced(s, base.resolve("vrows").toString,
-        base.resolve("docs").toString)
+      Dedup.simhashPairsFrom(Dedup.simhashVrows.read(s, s"$base/vrows"),
+        Dedup.simhashDocs.read(s, s"$base/docs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2735,7 +2703,7 @@ object SparkEntry {
     "ext_cdc_simhash_serving_lifecycle" -> ((s, dir) => {
       val c = corpus(s, dir)
       val base = TempDirs.create("graft_shsrvlc")
-      copySimhashState(simhashServingState(s, dir), base)
+      copyState(simhashServingState(s, dir), base, "vrows", "docs")
       // era 1: revisions
       val delta1 = docsChangelogDelta(s, dir)
       Dedup.simhashServingFold(s, base.resolve("vrows").toString,
@@ -2745,8 +2713,8 @@ object SparkEntry {
       // (delta1 is already materialized — one changelog build per row)
       simhashServingLifecycleFoldAt(s, dir, base, lifecycleDeltaSets(s, dir),
         postDeltaCorpus(c, delta1))
-      Dedup.simhashPairsServingQuiesced(s, base.resolve("vrows").toString,
-        base.resolve("docs").toString)
+      Dedup.simhashPairsFrom(Dedup.simhashVrows.read(s, s"$base/vrows"),
+        Dedup.simhashDocs.read(s, s"$base/docs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2757,7 +2725,7 @@ object SparkEntry {
     // liveness always re-derives from the CURRENT registry. Same oracle
     "ext_cdc_simhash_serving_lifecycle_stream" -> ((s, dir) => {
       val base = TempDirs.create("graft_shsrvlcst")
-      copySimhashState(simhashServing2State(s, dir), base)
+      copyState(simhashServing2State(s, dir), base, "vrows", "docs")
       // batch-invariant post-era-1 view — built once outside the loop
       val post1 = postDeltaCorpus(corpus(s, dir), docsChangelogDelta(s, dir))
       graft.streaming.StateStream.foldAvailableNow(
@@ -2766,8 +2734,8 @@ object SparkEntry {
         simhashServingLifecycleFoldAt(s, dir, base,
           lifecycleDeltaSetsFrom(w, s, dir), post1)
       }
-      Dedup.simhashPairsServingQuiesced(s, base.resolve("vrows").toString,
-        base.resolve("docs").toString)
+      Dedup.simhashPairsFrom(Dedup.simhashVrows.read(s, s"$base/vrows"),
+        Dedup.simhashDocs.read(s, s"$base/docs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2782,8 +2750,7 @@ object SparkEntry {
       val store = corpus(s, dir)
       val base = TempDirs.create("graft_shsrvpb")
       val st = simhashServingHistState(s, dir)
-      TempDirs.copyInto(st.resolve("vrows"), base.resolve("vrows"))
-      TempDirs.copyInto(st.resolve("docs"), base.resolve("docs"))
+      copyState(st, base, "vrows", "docs")
       val delta = docsChangelogDelta(s, dir)
       val hist = s.read.parquet(s"$dir/documents.parquet")
       val oldDocs = hist.join(delta.select("doc_id"), Seq("doc_id"), "left_semi")
@@ -2804,12 +2771,12 @@ object SparkEntry {
     "ext_simhash_serving_forget" -> ((s, dir) => {
       val store = corpus(s, dir)
       val base = TempDirs.create("graft_shsrvfgt")
-      copySimhashState(simhashServingState(s, dir), base)
+      copyState(simhashServingState(s, dir), base, "vrows", "docs")
       val subject = store.where(col("doc_id") % 7 === 3)
       Dedup.simhashServingFold(s, base.resolve("vrows").toString,
         base.resolve("docs").toString, subject, subject.where(lit(false)))
-      Dedup.simhashPairsServingQuiesced(s, base.resolve("vrows").toString,
-        base.resolve("docs").toString)
+      Dedup.simhashPairsFrom(Dedup.simhashVrows.read(s, s"$base/vrows"),
+        Dedup.simhashDocs.read(s, s"$base/docs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -2831,7 +2798,8 @@ object SparkEntry {
       val base = TempDirs.create("graft_shsrvgr")
       val layout = base.resolve("layout").toString
       graft.streaming.StateStream.publishState(s, layout) { stage =>
-        copySimhashState(state, java.nio.file.Paths.get(stage.toUri.getPath))
+        copyState(state, java.nio.file.Paths.get(stage.toUri.getPath),
+          "vrows", "docs")
       }
       val gen1 = graft.streaming.StateStream.statePath(s, layout)
       // the long-running reader resolves the gen-1 artifact SET here
@@ -2864,24 +2832,20 @@ object SparkEntry {
       val layout = base.resolve("layout").toString
       graft.streaming.StateStream.publishState(s, layout) { stage =>
         val p = stage.toUri.getPath
-        val b0 = s.read.schema(Dedup.bandsSchema)
-          .parquet(state.resolve("bands").toString).localCheckpoint(true)
-        deployFragmented(b0, s"$p/bands", "pbucket", col("id"))
-        val f0 = s.read.schema(Dedup.fpsSchema)
-          .parquet(state.resolve("fps").toString).localCheckpoint(true)
-        deployFragmented(f0, s"$p/fps", "fbucket", col("id"))
+        val b0 = Dedup.minhashBands.read(s, s"$state/bands").localCheckpoint(true)
+        deployFragmented(b0, s"$p/bands", Dedup.minhashBands)
+        val f0 = Dedup.minhashFps.read(s, s"$state/fps").localCheckpoint(true)
+        deployFragmented(f0, s"$p/fps", Dedup.minhashFps)
       }
       // the reader resolves the fragmented gen-1 artifact SET here
       val gen1 = graft.streaming.StateStream.statePath(s, layout)
       graft.streaming.StateStream.foldIsolatedGen(s, layout) { gen =>
-        graft.ext.ServingLayout.compact(s, s"$gen/bands", "pbucket",
-          Dedup.bandsSchema)
-        graft.ext.ServingLayout.compact(s, s"$gen/fps", "fbucket",
-          Dedup.fpsSchema)
+        graft.ext.ServingLayout.compact(s, s"$gen/bands", Dedup.minhashBands)
+        graft.ext.ServingLayout.compact(s, s"$gen/fps", Dedup.minhashFps)
       }
       // EXECUTED AFTER THE FLIP: graced fragmented bytes vs repacked files
-      val pre = Dedup.minhashPairsServingQuiesced(s, s"$gen1/bands",
-        s"$gen1/fps", c)
+      val pre = Dedup.minhashPairsFrom(Dedup.minhashBands.read(s, s"$gen1/bands"),
+        Dedup.minhashFps.read(s, s"$gen1/fps"), c)
       val post = Dedup.minhashPairsServing(s, layout, c)
       def tag(df: DataFrame, p: String) =
         df.select(lit(p).as("phase"), col("id_a"), col("id_b"),
@@ -2907,8 +2871,8 @@ object SparkEntry {
       val base = TempDirs.create("graft_shsrvrace")
       val layout = base.resolve("layout").toString
       graft.streaming.StateStream.publishState(s, layout) { stage =>
-        copySimhashState(simhashServingHistState(s, dir),
-          java.nio.file.Paths.get(stage.toUri.getPath))
+        copyState(simhashServingHistState(s, dir),
+          java.nio.file.Paths.get(stage.toUri.getPath), "vrows", "docs")
       }
       // the probe resolves generation 1 HERE (before the fold flips)
       val gen1 = graft.streaming.StateStream.statePath(s, layout)
@@ -2958,25 +2922,26 @@ object SparkEntry {
       graft.ext.ServingLayout.inParallel(
         () => deployFragmented(
           s.read.parquet(state.resolve("bands").toString).localCheckpoint(true),
-          bandsPath, "pbucket", col("id")),
+          bandsPath, Dedup.minhashBands),
         () => deployFragmented(
           s.read.parquet(state.resolve("fps").toString).localCheckpoint(true),
-          fpsPath, "fbucket", col("id")))
+          fpsPath, Dedup.minhashFps))
       // era 1 folds in place; the crowded buckets ride the same rewrite
       // (the merged fold+compact form — content-identical)
       val delta1 = docsChangelogDelta(s, dir)
       Dedup.minhashServingFold(s, bandsPath, fpsPath,
         c.join(delta1.select("doc_id"), Seq("doc_id"), "left_semi"), delta1,
         repackBands =
-          graft.ext.ServingLayout.crowdedValues(s, bandsPath, "pbucket"),
+          graft.ext.ServingLayout.crowdedValues(s, bandsPath, Dedup.minhashBands),
         repackFps =
-          graft.ext.ServingLayout.crowdedValues(s, fpsPath, "fbucket"))
+          graft.ext.ServingLayout.crowdedValues(s, fpsPath, Dedup.minhashFps))
       // era 2: the lifecycle folds onto the compacted layout (delta1 is
       // already materialized — one changelog build per row)
       val sets = lifecycleDeltaSets(s, dir)
       val post1 = postDeltaCorpus(c, delta1)
       minhashServingLifecycleFoldAt(s, dir, base, sets, post1)
-      Dedup.minhashPairsServingQuiesced(s, bandsPath, fpsPath,
+      Dedup.minhashPairsFrom(Dedup.minhashBands.read(s, bandsPath),
+        Dedup.minhashFps.read(s, fpsPath),
         postLifecycleCorpus(post1, sets))
         .orderBy("id_a", "id_b")
     }),
@@ -2997,20 +2962,21 @@ object SparkEntry {
       graft.ext.ServingLayout.inParallel(
         () => deployFragmented(
           s.read.parquet(state.resolve("vrows").toString).localCheckpoint(true),
-          vrowsPath, "sband", col("simhash")),
+          vrowsPath, Dedup.simhashVrows),
         () => deployFragmented(
           s.read.parquet(state.resolve("docs").toString).localCheckpoint(true),
-          docsPath, "vbucket", col("id")))
+          docsPath, Dedup.simhashDocs))
       // the crowded buckets ride the era-1 fold's own rewrite (the merged
       // fold+compact form — content-identical to compact → fold)
       val delta = docsChangelogDelta(s, dir)
       val oldDocs = c.join(delta.select("doc_id"), Seq("doc_id"), "left_semi")
       Dedup.simhashServingFold(s, vrowsPath, docsPath, oldDocs, delta,
         repackVrows =
-          graft.ext.ServingLayout.crowdedValues(s, vrowsPath, "sband"),
+          graft.ext.ServingLayout.crowdedValues(s, vrowsPath, Dedup.simhashVrows),
         repackDocs =
-          graft.ext.ServingLayout.crowdedValues(s, docsPath, "vbucket"))
-      Dedup.simhashPairsServingQuiesced(s, vrowsPath, docsPath)
+          graft.ext.ServingLayout.crowdedValues(s, docsPath, Dedup.simhashDocs))
+      Dedup.simhashPairsFrom(Dedup.simhashVrows.read(s, vrowsPath),
+        Dedup.simhashDocs.read(s, docsPath))
         .orderBy("id_a", "id_b")
     }),
 
@@ -3710,8 +3676,8 @@ object SparkEntry {
     // fold → COMPACT → fold on the COMPRESSED code layout: the
     // fragmented codes take the era-1 fold at the frozen model, the
     // repack rewrites the still-crowded coarse cells (declared
-    // codesSchema — the repack must never depend on any copy's
-    // footers), and the era-2 lifecycle folds onto the
+    // Similarity.pqCodes schema — the repack must never depend on any
+    // copy's footers), and the era-2 lifecycle folds onto the
     // compacted layout — graded ≡ the never-compacted lifecycle oracle
     "ext_ivfpq_serving_compact" -> ((s, dir) => {
       val e = embeddings(s, dir)
@@ -3720,7 +3686,7 @@ object SparkEntry {
       val codesPath = base.resolve("codes").toString
       val c0 = s.read.parquet(st.resolve("codes").toString)
         .localCheckpoint(true)
-      deployFragmented(c0, codesPath, "ccell", col("neighbor_id"))
+      deployFragmented(c0, codesPath, Similarity.pqCodes)
       val cents = s.read.parquet(st.resolve("cents").toString)
         .localCheckpoint(true)
       val cb = s.read.parquet(st.resolve("cb").toString).localCheckpoint(true)
@@ -3732,7 +3698,7 @@ object SparkEntry {
       Similarity.ivfPqServingFold(s, codesPath, old1,
         old1.select(col("vec_id"), reverse(col("embedding")).as("embedding")),
         cents, cb,
-        repack = graft.ext.ServingLayout.crowdedValues(s, codesPath, "ccell"))
+        repack = graft.ext.ServingLayout.crowdedValues(s, codesPath, Similarity.pqCodes))
       // era 2: the lifecycle folds onto the compacted layout (d1 reused;
       // the crowded ccells rode the era-1 fold's own rewrite — the
       // merged fold+compact form, content-identical)
@@ -3809,8 +3775,8 @@ object SparkEntry {
     "ext_embdup_multiband" -> ((s, dir) => {
       // default-API dogfood: the listing resolves the CURRENT generation
       // of a layout root (embMultiPairsServing), like its grace-read
-      // sibling — the raw-path Quiesced read stays the single-writer
-      // opt-in of the fold rows that own their copied state
+      // sibling — the raw-path read stays the single-writer opt-in of
+      // the fold rows that own their copied state
       val layout = embMultiServingGenState(s, dir).resolve("layout").toString
       Dedup.embMultiPairsServing(s, layout)
         .orderBy("id_a", "id_b")
@@ -3825,15 +3791,13 @@ object SparkEntry {
     // STRUCTURE (cap → audit), cross-engine like ext_ivf_cell_audit
     "ext_embdup_bucket_audit" -> ((s, dir) => {
       val st = embDupServingState(s, dir)
-      Dedup.embDupBucketAudit(s.read.schema(Dedup.embLayoutSchema)
-          .parquet(st.resolve("vecs").toString))
+      Dedup.embDupBucketAudit(Dedup.embDupVecs.read(s, s"$st/vecs"))
         .orderBy("bucket")
     }),
 
     "ext_embdup_multiband_bucket_audit" -> ((s, dir) => {
       val st = embMultiServingState(s, dir)
-      Dedup.embMultiBucketAudit(s.read.schema(Dedup.embTRowsSchema)
-          .parquet(st.resolve("trows").toString))
+      Dedup.embMultiBucketAudit(Dedup.embMultiTRows.read(s, s"$st/trows"))
         .orderBy("tbucket")
     }),
 
@@ -3861,15 +3825,14 @@ object SparkEntry {
       val e = embeddings(s, dir)
       val st = embMultiServingState(s, dir)
       val base = TempDirs.create("graft_edmsrvf")
-      TempDirs.copyInto(st.resolve("trows"), base.resolve("trows"))
-      TempDirs.copyInto(st.resolve("vecs"), base.resolve("vecs"))
+      copyState(st, base, "trows", "vecs")
       val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
       val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
       Dedup.embMultiServingFold(s, base.resolve("trows").toString,
         base.resolve("vecs").toString, oldVecs, embDupReembed(e, deltaIds))
-      Dedup.embMultiPairsServingQuiesced(s, base.resolve("trows").toString,
-        base.resolve("vecs").toString)
+      Dedup.embMultiPairsFrom(Dedup.embMultiTRows.read(s, s"$base/trows"),
+        Dedup.embMultiVecs.read(s, s"$base/vecs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -3881,8 +3844,7 @@ object SparkEntry {
       val e = embeddings(s, dir)
       val st = embMultiServingState(s, dir)
       val base = TempDirs.create("graft_edmsrvfst")
-      TempDirs.copyInto(st.resolve("trows"), base.resolve("trows"))
-      TempDirs.copyInto(st.resolve("vecs"), base.resolve("vecs"))
+      copyState(st, base, "trows", "vecs")
       graft.streaming.StateStream.foldAvailableNow(
         s, docsDeltaFeed(s, dir).resolve("delta").toString,
         base.resolve("ckpt").toString) { batch =>
@@ -3892,8 +3854,8 @@ object SparkEntry {
         Dedup.embMultiServingFold(s, base.resolve("trows").toString,
           base.resolve("vecs").toString, oldVecs, embDupReembed(e, ids))
       }
-      Dedup.embMultiPairsServingQuiesced(s, base.resolve("trows").toString,
-        base.resolve("vecs").toString)
+      Dedup.embMultiPairsFrom(Dedup.embMultiTRows.read(s, s"$base/trows"),
+        Dedup.embMultiVecs.read(s, s"$base/vecs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -3910,8 +3872,7 @@ object SparkEntry {
       graft.streaming.StateStream.publishState(s, layout) { stage =>
         val p = java.nio.file.Paths.get(stage.toUri.getPath)
         val st = embMultiServingHistState(s, dir)
-        TempDirs.copyInto(st.resolve("trows"), p.resolve("trows"))
-        TempDirs.copyInto(st.resolve("vecs"), p.resolve("vecs"))
+        copyState(st, p, "trows", "vecs")
       }
       // the probe resolves generation 1 HERE (before the fold flips)
       val gen1 = graft.streaming.StateStream.statePath(s, layout)
@@ -3951,8 +3912,7 @@ object SparkEntry {
       val e = embeddings(s, dir)
       val st = embMultiServingState(s, dir)
       val base = TempDirs.create("graft_edmlc")
-      TempDirs.copyInto(st.resolve("trows"), base.resolve("trows"))
-      TempDirs.copyInto(st.resolve("vecs"), base.resolve("vecs"))
+      copyState(st, base, "trows", "vecs")
       val trowsPath = base.resolve("trows").toString
       val vecsPath = base.resolve("vecs").toString
       // era 1: revisions
@@ -3965,7 +3925,8 @@ object SparkEntry {
       // already materialized — one changelog build per row)
       val (o2, n2) = embDupLifecycleVecSets(s, dir, lifecycleDeltaSets(s, dir), d1)
       Dedup.embMultiServingFold(s, trowsPath, vecsPath, o2, n2)
-      Dedup.embMultiPairsServingQuiesced(s, trowsPath, vecsPath)
+      Dedup.embMultiPairsFrom(Dedup.embMultiTRows.read(s, trowsPath),
+        Dedup.embMultiVecs.read(s, vecsPath))
         .orderBy("id_a", "id_b")
     }),
 
@@ -3976,8 +3937,7 @@ object SparkEntry {
     "ext_cdc_embdup_multiband_lifecycle_stream" -> ((s, dir) => {
       val base = TempDirs.create("graft_edmlcst")
       val st = embMultiServing2State(s, dir)
-      TempDirs.copyInto(st.resolve("trows"), base.resolve("trows"))
-      TempDirs.copyInto(st.resolve("vecs"), base.resolve("vecs"))
+      copyState(st, base, "trows", "vecs")
       // batch-invariant era-1 ids — built once outside the loop
       val d1 = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
         .localCheckpoint(true)
@@ -3989,8 +3949,8 @@ object SparkEntry {
         Dedup.embMultiServingFold(s, base.resolve("trows").toString,
           base.resolve("vecs").toString, o, n)
       }
-      Dedup.embMultiPairsServingQuiesced(s, base.resolve("trows").toString,
-        base.resolve("vecs").toString)
+      Dedup.embMultiPairsFrom(Dedup.embMultiTRows.read(s, s"$base/trows"),
+        Dedup.embMultiVecs.read(s, s"$base/vecs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -4002,13 +3962,12 @@ object SparkEntry {
       val all = EmbFeed.withNearDups(embeddings(s, dir))
       val st = embMultiServingState(s, dir)
       val base = TempDirs.create("graft_edmfgt")
-      TempDirs.copyInto(st.resolve("trows"), base.resolve("trows"))
-      TempDirs.copyInto(st.resolve("vecs"), base.resolve("vecs"))
+      copyState(st, base, "trows", "vecs")
       val subject = all.where(col("vec_id") % 7 === 3)
       Dedup.embMultiServingFold(s, base.resolve("trows").toString,
         base.resolve("vecs").toString, subject, subject.where(lit(false)))
-      Dedup.embMultiPairsServingQuiesced(s, base.resolve("trows").toString,
-        base.resolve("vecs").toString)
+      Dedup.embMultiPairsFrom(Dedup.embMultiTRows.read(s, s"$base/trows"),
+        Dedup.embMultiVecs.read(s, s"$base/vecs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -4026,8 +3985,7 @@ object SparkEntry {
       val layout = base.resolve("layout").toString
       graft.streaming.StateStream.publishState(s, layout) { stage =>
         val p = java.nio.file.Paths.get(stage.toUri.getPath)
-        TempDirs.copyInto(st.resolve("trows"), p.resolve("trows"))
-        TempDirs.copyInto(st.resolve("vecs"), p.resolve("vecs"))
+        copyState(st, p, "trows", "vecs")
       }
       // the long-running reader resolves generation 1 through the
       // DEFAULT entry point HERE
@@ -4056,13 +4014,11 @@ object SparkEntry {
       // independent artifact deploys — overlapped job chains (guide §2.6)
       graft.ext.ServingLayout.inParallel(
         () => deployFragmented(
-          s.read.schema(Dedup.embTRowsSchema)
-            .parquet(st.resolve("trows").toString).localCheckpoint(true),
-          trowsPath, "tbucket", col("id")),
+          Dedup.embMultiTRows.read(s, s"$st/trows").localCheckpoint(true),
+          trowsPath, Dedup.embMultiTRows),
         () => deployFragmented(
-          s.read.schema(Dedup.embVecsSchema)
-            .parquet(st.resolve("vecs").toString).localCheckpoint(true),
-          vecsPath, "vbucket", col("id")))
+          Dedup.embMultiVecs.read(s, s"$st/vecs").localCheckpoint(true),
+          vecsPath, Dedup.embMultiVecs))
       val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
       val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
@@ -4071,10 +4027,11 @@ object SparkEntry {
       Dedup.embMultiServingFold(s, trowsPath, vecsPath, oldVecs,
         embDupReembed(e, deltaIds),
         repackTrows =
-          graft.ext.ServingLayout.crowdedValues(s, trowsPath, "tbucket"),
+          graft.ext.ServingLayout.crowdedValues(s, trowsPath, Dedup.embMultiTRows),
         repackVecs =
-          graft.ext.ServingLayout.crowdedValues(s, vecsPath, "vbucket"))
-      Dedup.embMultiPairsServingQuiesced(s, trowsPath, vecsPath)
+          graft.ext.ServingLayout.crowdedValues(s, vecsPath, Dedup.embMultiVecs))
+      Dedup.embMultiPairsFrom(Dedup.embMultiTRows.read(s, trowsPath),
+        Dedup.embMultiVecs.read(s, vecsPath))
         .orderBy("id_a", "id_b")
     }),
 
@@ -4098,7 +4055,7 @@ object SparkEntry {
         .select(e("vec_id"), e("embedding"))
       Dedup.embDupServingFold(s, base.resolve("vecs").toString, oldVecs,
         embDupReembed(e, deltaIds))
-      Dedup.embDupPairsServingQuiesced(s, base.resolve("vecs").toString)
+      Dedup.embDupPairsFrom(Dedup.embDupVecs.read(s, s"$base/vecs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -4118,7 +4075,7 @@ object SparkEntry {
         Dedup.embDupServingFold(s, base.resolve("vecs").toString, oldVecs,
           embDupReembed(e, ids))
       }
-      Dedup.embDupPairsServingQuiesced(s, base.resolve("vecs").toString)
+      Dedup.embDupPairsFrom(Dedup.embDupVecs.read(s, s"$base/vecs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -4135,7 +4092,7 @@ object SparkEntry {
       val subject = all.where(col("vec_id") % 7 === 3)
       Dedup.embDupServingFold(s, base.resolve("vecs").toString,
         subject, subject.where(lit(false)))
-      Dedup.embDupPairsServingQuiesced(s, base.resolve("vecs").toString)
+      Dedup.embDupPairsFrom(Dedup.embDupVecs.read(s, s"$base/vecs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -4166,7 +4123,7 @@ object SparkEntry {
       val (oldVecs2, newVecs) =
         embDupLifecycleVecSets(s, dir, lifecycleDeltaSets(s, dir), d1)
       Dedup.embDupServingFold(s, base.resolve("vecs").toString, oldVecs2, newVecs)
-      Dedup.embDupPairsServingQuiesced(s, base.resolve("vecs").toString)
+      Dedup.embDupPairsFrom(Dedup.embDupVecs.read(s, s"$base/vecs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -4189,7 +4146,7 @@ object SparkEntry {
           lifecycleDeltaSetsFrom(w, s, dir), d1)
         Dedup.embDupServingFold(s, base.resolve("vecs").toString, o, n)
       }
-      Dedup.embDupPairsServingQuiesced(s, base.resolve("vecs").toString)
+      Dedup.embDupPairsFrom(Dedup.embDupVecs.read(s, s"$base/vecs"))
         .orderBy("id_a", "id_b")
     }),
 
@@ -4272,19 +4229,19 @@ object SparkEntry {
       val v0 = s.read
         .parquet(embDupServingState(s, dir).resolve("vecs").toString)
         .localCheckpoint(true)
-      deployFragmented(v0, vecsPath, "bucket", col("id"))
+      deployFragmented(v0, vecsPath, Dedup.embDupVecs)
       // era 1 folds in place; the crowded buckets ride the same rewrite
       // (the merged fold+compact form — content-identical)
       val d1 = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
       val old1 = e.join(d1, e("vec_id") === d1("doc_id"))
         .select(e("vec_id"), e("embedding"))
       Dedup.embDupServingFold(s, vecsPath, old1, embDupReembed(e, d1),
-        repack = graft.ext.ServingLayout.crowdedValues(s, vecsPath, "bucket"))
+        repack = graft.ext.ServingLayout.crowdedValues(s, vecsPath, Dedup.embDupVecs))
       // era 2: the lifecycle folds onto the compacted layout (d1 is
       // already materialized — one changelog build per row)
       val (o2, n2) = embDupLifecycleVecSets(s, dir, lifecycleDeltaSets(s, dir), d1)
       Dedup.embDupServingFold(s, vecsPath, o2, n2)
-      Dedup.embDupPairsServingQuiesced(s, vecsPath)
+      Dedup.embDupPairsFrom(Dedup.embDupVecs.read(s, vecsPath))
         .orderBy("id_a", "id_b")
     }),
 
@@ -4647,7 +4604,7 @@ object SparkEntry {
     // COMPACT → fold on the serving episode store — the last member of
     // the compaction matrix (every partitioned layout family now runs
     // through the shared repack in a graded row): the fragmented store
-    // repacks (declared episodesSchema), then the window-2
+    // repacks (declared ServingBridge.episodeStore), then the window-2
     // fold composes on the compacted buckets — graded ≡ the one-shot
     // fold's serving join verbatim
     "ext_cdc_serving_compact" -> ((s, dir) => {
@@ -4656,9 +4613,9 @@ object SparkEntry {
       val epsPath = base.resolve("episodes").toString
       val e0 = s.read.parquet(state.resolve("episodes").toString)
         .localCheckpoint(true)
-      deployFragmented(e0, epsPath, "bucket", col("ep_id"))
-      graft.ext.ServingLayout.compact(s, epsPath, "bucket",
-        graft.cdc.ServingBridge.episodesSchema)
+      deployFragmented(e0, epsPath, graft.cdc.ServingBridge.episodeStore)
+      graft.ext.ServingLayout.compact(s, epsPath,
+        graft.cdc.ServingBridge.episodeStore)
       graft.cdc.ServingBridge.episodesServingFold(s, epsPath,
         servingWindow2Episodes(s, dir))
       val eps = s.read.parquet(epsPath).drop("bucket")

@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** CDC → SERVING bridge: the feature-store shape that turns the EAV
   * changelog (reference: usp_cdc_populate_changelog.sql:261-396's output
@@ -134,30 +135,17 @@ object ServingBridge {
       broadcastLimit: Long = BroadcastEpisodeLimit): DataFrame = {
     val gen = graft.streaming.StateStream.statePath(spark, layoutRoot)
     enrichAsOf(requests,
-      spark.read.schema(episodesSchema).parquet(s"$gen/episodes")
-        .drop("bucket"),
+      episodeStore.read(spark, s"$gen/episodes").drop("bucket"),
       broadcastLimit)
   }
 
-  /** Explicit schema of the persisted episode store ([[timedEpisodes]]'s
-    * rows + the `bucket` partition key): fold/compact reads must never
-    * depend on footer inference, and the declared partition-column type
-    * drives [[graft.ext.ServingLayout.partitionIn]]'s static pruning.
-    * Pinned against [[timedEpisodes]]'s analyzed schema by
-    * ServingBridgeSpec. */
-  private[graft] val episodesSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("serve_key",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("status_asof",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ep_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("valid_from_s",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("valid_to_s",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("bucket",
-      org.apache.spark.sql.types.LongType)))
+  /** The persisted episode store ([[timedEpisodes]]'s rows + the
+    * [[keyBucket]] partition key). Pinned against [[timedEpisodes]]'s
+    * analyzed schema by ServingBridgeSpec. */
+  private[graft] val episodeStore = graft.ext.ServingLayout.Artifact(
+    StructType.fromDDL("serve_key BIGINT, status_asof STRING, ep_id BIGINT, " +
+      "valid_from_s BIGINT, valid_to_s BIGINT, bucket BIGINT"),
+    "bucket", "ep_id")
 
   /** POINT-READ enrichment over the PERSISTED, key-bucket-PARTITIONED
     * episode store (the serving-store member of the pruned-layout family
@@ -291,7 +279,7 @@ object ServingBridge {
         col("valid_from_s"))
       .localCheckpoint(true)
     val keys = newE.select(col("serve_key")).distinct()
-    graft.ext.ServingLayout.rewrite(spark, path, episodesSchema, "bucket",
+    graft.ext.ServingLayout.rewrite(spark, path, episodeStore,
       graft.ext.ServingLayout.affectedValues(
         keys.select(keyBucket(col("serve_key"), buckets).as("bucket")))) {
       inBuckets =>

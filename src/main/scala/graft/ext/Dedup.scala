@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Deduplication operators for large-scale corpus curation (SURVEY §2.13 E1).
   *
@@ -594,26 +595,13 @@ object Dedup {
     if (rowBytes > 0 && rows <= limitBytes / rowBytes) broadcast(dim)
     else shuffledDim.hint("merge")
 
-  /** Explicit schemas of the two persisted artifacts: a fold that empties
-    * every partition leaves a footer-less directory, and the next read
-    * must see a readable empty state, never a schema-inference crash (the
-    * BM25 registry lesson). */
-  private[graft] val bandsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("sig",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("pbucket",
-      org.apache.spark.sql.types.LongType)))
-  private[graft] val fpsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("sigfp",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("fbucket",
-      org.apache.spark.sql.types.LongType)))
+  /** The two persisted MinHash artifacts: band rows by band bucket and
+    * the fingerprint registry by fp bucket. */
+  private[graft] val minhashBands = ServingLayout.Artifact(
+    StructType.fromDDL("band INT, sig STRING, id BIGINT, pbucket BIGINT"),
+    "pbucket", "id")
+  private[graft] val minhashFps = ServingLayout.Artifact(
+    StructType.fromDDL("sigfp STRING, id BIGINT, fbucket BIGINT"), "fbucket", "id")
 
   /** The serving artifact ROWS of a document set — (band rows, fp rows),
     * both tagged with their partition keys. Build-time over the corpus,
@@ -711,10 +699,8 @@ object Dedup {
     // broadcast is GATED on the batch's band-row count (the checkpointed
     // twin makes the count a cheap control-plane action); above the gate
     // the probe shuffles with the merge hint instead — driver bounded
-    val stored = spark.read.schema(bandsSchema).parquet(bandsPath)
-      .where(ServingLayout.partitionIn(
-        col("pbucket"), bandsSchema("pbucket").dataType,
-        ServingLayout.affectedValues(bb.select("pbucket"))))
+    val stored = minhashBands.readIn(spark, bandsPath,
+      ServingLayout.affectedValues(bb.select("pbucket")))
     val bandDim0 = bb.select("pbucket", "band", "sig").distinct()
     val bandDim = gatedDim(bandDim0, bandDim0,
       bb.count(), MinhashBandRowBytes, broadcastBytes)
@@ -732,10 +718,8 @@ object Dedup {
     // exact route: identical FULL signatures pair regardless of bucket
     // heat — batch fingerprints probe the partitioned registry (pruned)
     // and self-join for within-batch exact pairs
-    val storedFps = spark.read.schema(fpsSchema).parquet(fpsPath)
-      .where(ServingLayout.partitionIn(
-        col("fbucket"), fpsSchema("fbucket").dataType,
-        ServingLayout.affectedValues(bf.select("fbucket"))))
+    val storedFps = minhashFps.readIn(spark, fpsPath,
+      ServingLayout.affectedValues(bf.select("fbucket")))
     val fpDim = gatedDim(
       bf.select(col("fbucket"), col("sigfp"), col("id").as("__bid")),
       bf.select(col("fbucket"), col("sigfp"), col("id").as("__bid")),
@@ -756,8 +740,7 @@ object Dedup {
 
   /** Write a document set's LSH dedup index in its SERVING layout: band
     * rows partitioned by band bucket beside the fingerprint registry
-    * partitioned by fp bucket — the repartition-on-partition-key before
-    * partitionBy is the one-task-per-directory sink-append lesson. */
+    * partitioned by fp bucket. */
   def writeServingLayout(
       docs: DataFrame,
       bandsPath: String,
@@ -766,10 +749,8 @@ object Dedup {
       idCol: String = "doc_id",
       buckets: Int = ServingBuckets): Unit = {
     val (bandRows, fpRows) = minhashServingRows(docs, textCol, idCol, buckets)
-    bandRows.repartition(col("pbucket"))
-      .write.partitionBy("pbucket").mode("overwrite").parquet(bandsPath)
-    fpRows.repartition(col("fbucket"))
-      .write.partitionBy("fbucket").mode("overwrite").parquet(fpsPath)
+    minhashBands.write(bandRows, bandsPath)
+    minhashFps.write(fpRows, fpsPath)
   }
 
   /** IN-PLACE partial maintenance of the partitioned LSH layout (the
@@ -778,13 +759,9 @@ object Dedup {
     * band/fp buckets its OLD and NEW signatures live in. Old rows are
     * located by RE-SIGNING the delta docs' pre-delta text (signatures are
     * deterministic in content, so the re-derived rows equal the stored
-    * ones exactly) — never by scanning the index for ids. The removal set
-    * is old ∪ new ids, so one primitive covers revisions (both sides),
-    * deletes/forget (old only) and inserts (new only). No artifact
+    * ones exactly) — never by scanning the index for ids. No artifact
     * carries a scalar and no statistic is denormalized into the rows, so
-    * replay-idempotence is free: a re-delivered batch anti-joins the same
-    * ids out and unions the same rows back. Each artifact is written
-    * through [[ServingLayout.rewrite]]. */
+    * each artifact folds by [[ServingLayout.Artifact.replaceIds]] alone. */
   def minhashServingFold(
       spark: org.apache.spark.sql.SparkSession,
       bandsPath: String,
@@ -805,8 +782,7 @@ object Dedup {
       .localCheckpoint(true)
     val (oldBands, oldFps) = minhashServingRowsFromSigs(oldSigs, buckets)
     val (newBands, newFps) = minhashServingRowsFromSigs(newSigs, buckets)
-    val deltaIds = oldDocs.select(col(idCol).as("__did"))
-      .union(newDocs.select(col(idCol).as("__did"))).distinct()
+    val deltaIds = ServingLayout.deltaIds(oldDocs, newDocs, idCol)
       .localCheckpoint(true)
     // each artifact rewrites the buckets its old and new rows live in;
     // `repack*` widens the set with crowded partitions so a compaction
@@ -814,22 +790,14 @@ object Dedup {
     // anti-join untouched and lands as one file). Disjoint paths over
     // materialized inputs: independent job chains, overlapped (§2.6)
     ServingLayout.inParallel(
-      () => ServingLayout.rewrite(spark, bandsPath, bandsSchema, "pbucket",
+      () => ServingLayout.rewrite(spark, bandsPath, minhashBands,
         ServingLayout.affectedValues(
           oldBands.select("pbucket").union(newBands.select("pbucket")))
-          ++ repackBands) {
-        _.join(deltaIds, col("id") === col("__did"), "left_anti")
-          .select("pbucket", "band", "sig", "id")
-          .unionByName(newBands.select("pbucket", "band", "sig", "id"))
-      },
-      () => ServingLayout.rewrite(spark, fpsPath, fpsSchema, "fbucket",
+          ++ repackBands)(minhashBands.replaceIds(deltaIds, newBands)),
+      () => ServingLayout.rewrite(spark, fpsPath, minhashFps,
         ServingLayout.affectedValues(
           oldFps.select("fbucket").union(newFps.select("fbucket")))
-          ++ repackFps) {
-        _.join(deltaIds, col("id") === col("__did"), "left_anti")
-          .select("fbucket", "sigfp", "id")
-          .unionByName(newFps.select("fbucket", "sigfp", "id"))
-      })
+          ++ repackFps)(minhashFps.replaceIds(deltaIds, newFps)))
   }
 
   /** The DEFAULT pair-listing entry point over a GENERATIONED layout
@@ -838,10 +806,7 @@ object Dedup {
     * `bands/` + `fps/` per generation): resolves the CURRENT generation
     * once and reads its artifact SET — a reader can never observe a torn
     * (bands, fps) mix under a concurrent fold, because the generation
-    * flip is atomic and superseded generations grace-retire. Raw
-    * artifact paths are the explicit opt-in
-    * ([[minhashPairsServingQuiesced]]) for single-writer, fold-quiesced
-    * maintenance loops. */
+    * flip is atomic and superseded generations grace-retire. */
   def minhashPairsServing(
       spark: org.apache.spark.sql.SparkSession,
       layoutRoot: String,
@@ -851,45 +816,22 @@ object Dedup {
       num: Int = 3, den: Int = 5,
       maxBucket: Long = DefaultMaxBucket): DataFrame = {
     val gen = graft.streaming.StateStream.statePath(spark, layoutRoot)
-    minhashPairsServingQuiesced(spark, s"$gen/bands", s"$gen/fps",
-      store, textCol, idCol, num, den, maxBucket)
+    minhashPairsFrom(minhashBands.read(spark, s"$gen/bands"),
+      minhashFps.read(spark, s"$gen/fps"), store, textCol, idCol, num, den,
+      maxBucket)
   }
 
   /** Verified near-dup pairs among the documents of a persisted SERVING
-    * layout — [[pairsFromIndex]] with the exact route read from the fp
-    * REGISTRY instead of pivoted out of the index rows (the stored
-    * fingerprints are the same reconstruction, kept current by
-    * [[minhashServingFold]]). The read side of every in-place maintenance
-    * row: fold ∘ this must equal the scratch recompute over the post-fold
-    * corpus.
-    *
-    * CONCURRENCY — the QUIESCED opt-in: [[minhashServingFold]] writes the
-    * two artifacts NON-atomically (concurrent independent chains) — a
-    * raw-path read racing a fold can see a folded fingerprint registry
-    * beside stale band rows. This entry is for single-writer, fold-quiesced loops
-    * only (the in-place maintenance rows, which own their copied state);
-    * anything concurrent with maintenance uses the generation-resolving
-    * default [[minhashPairsServing]] (the
-    * ext_minhash_serving_grace_read / probe_race contract). */
-  def minhashPairsServingQuiesced(
-      spark: org.apache.spark.sql.SparkSession,
-      bandsPath: String,
-      fpsPath: String,
-      store: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      num: Int = 3, den: Int = 5,
-      maxBucket: Long = DefaultMaxBucket): DataFrame =
-    minhashPairsFrom(
-      spark.read.schema(bandsSchema).parquet(bandsPath),
-      spark.read.schema(fpsSchema).parquet(fpsPath),
-      store, textCol, idCol, num, den, maxBucket)
-
-  /** [[minhashPairsServing]] over already-RESOLVED artifact frames — the
-    * pinned-generation reader's entry point: a long-running reader
-    * resolves both artifacts of one generation (parquet file indexes
-    * built), maintenance flips the pointer, and the pinned read still
-    * answers from the consistent pre-fold set on graced bytes. */
+    * layout's resolved artifact frames — [[pairsFromIndex]] with the
+    * exact route read from the fp REGISTRY instead of pivoted out of the
+    * index rows (the stored fingerprints are the same reconstruction,
+    * kept current by [[minhashServingFold]]). The read side of every
+    * in-place maintenance row: fold ∘ this must equal the scratch
+    * recompute over the post-fold corpus. The pinned-generation reader's
+    * entry point too: a long-running reader resolves both artifacts of
+    * one generation (parquet file indexes built), maintenance flips the
+    * pointer, and the pinned read still answers from the consistent
+    * pre-fold set on graced bytes. */
   def minhashPairsFrom(
       index: DataFrame,
       fps: DataFrame,
@@ -1388,22 +1330,14 @@ object Dedup {
     .select(col("simhash"), posexplode(array((0 until SimHashBands).map(b =>
       shiftright(col("simhash"), b * 8).bitwiseAND(lit(255L))): _*)).as(Seq("band", "bv")))
 
-  private[graft] val simhashVrowsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("bv",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("simhash",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("sband",
-      org.apache.spark.sql.types.LongType)))
-  private[graft] val simhashDocsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("simhash",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("vbucket",
-      org.apache.spark.sql.types.LongType)))
+  /** The two persisted SimHash artifacts: value band rows by band bucket
+    * (a row's id is its value) and the membership registry by value
+    * bucket. */
+  private[graft] val simhashVrows = ServingLayout.Artifact(
+    StructType.fromDDL("band INT, bv BIGINT, simhash BIGINT, sband BIGINT"),
+    "sband", "simhash")
+  private[graft] val simhashDocs = ServingLayout.Artifact(
+    StructType.fromDDL("simhash BIGINT, id BIGINT, vbucket BIGINT"), "vbucket", "id")
 
   /** The serving artifact rows of a document set — (value band rows over
     * its DISTINCT fingerprint values, membership rows). Un-materialized
@@ -1431,10 +1365,8 @@ object Dedup {
       idCol: String = "doc_id",
       buckets: Int = ServingBuckets): Unit = {
     val (vrows, members) = simhashServingRows(docs, textCol, idCol, buckets)
-    vrows.repartition(col("sband"))
-      .write.partitionBy("sband").mode("overwrite").parquet(vrowsPath)
-    members.repartition(col("vbucket"))
-      .write.partitionBy("vbucket").mode("overwrite").parquet(docsPath)
+    simhashVrows.write(vrows, vrowsPath)
+    simhashDocs.write(members, docsPath)
   }
 
   /** The pruned ingest probe's CANDIDATE stage over the persisted
@@ -1484,10 +1416,8 @@ object Dedup {
       .select(col("band"), col("bv"), col("simhash"),
         simhashBandBucket(col("band"), col("bv"), buckets).as("sband"))
       .localCheckpoint(true) // distinct-value-sized, 4 consumers below
-    val storedV = spark.read.schema(simhashVrowsSchema).parquet(vrowsPath)
-      .where(ServingLayout.partitionIn(
-        col("sband"), simhashVrowsSchema("sband").dataType,
-        ServingLayout.affectedValues(vb.select("sband"))))
+    val storedV = simhashVrows.readIn(spark, vrowsPath,
+      ServingLayout.affectedValues(vb.select("sband")))
     val dim = vb.select("sband", "band", "bv").distinct()
     val vbandDim = gatedDim(dim, dim, vb.count(), SimhashBandRowBytes,
       broadcastBytes)
@@ -1541,9 +1471,7 @@ object Dedup {
       .withColumn("vbucket", simhashValueBucket(col("simhash"), buckets))
       .localCheckpoint(true)
     val candBuckets = ServingLayout.affectedValues(candVals.select("vbucket"))
-    val storedM = spark.read.schema(simhashDocsSchema).parquet(docsPath)
-      .where(ServingLayout.partitionIn(
-        col("vbucket"), simhashDocsSchema("vbucket").dataType, candBuckets))
+    val storedM = simhashDocs.readIn(spark, docsPath, candBuckets)
     // candVals is PAIR-derived (it grows with the batch's pair fan-out,
     // not the batch) — the one dim side here that genuinely needs the
     // gate; candVals is already checkpointed, so the count is cheap
@@ -1615,8 +1543,7 @@ object Dedup {
       repackDocs: Seq[Long] = Nil): Unit = {
     val oldFps = simhash(oldDocs, textCol, idCol).localCheckpoint(true)
     val newFps = simhash(newDocs, textCol, idCol).localCheckpoint(true)
-    val deltaIds = oldFps.select(col("doc_id").as("__did"))
-      .union(newFps.select(col("doc_id").as("__did"))).distinct()
+    val deltaIds = ServingLayout.deltaIds(oldFps, newFps, "doc_id")
       .localCheckpoint(true)
     val candVals = oldFps.select("simhash").union(newFps.select("simhash"))
       .distinct().localCheckpoint(true)
@@ -1625,17 +1552,12 @@ object Dedup {
     // included unaffected buckets pass the anti-joins untouched); the
     // two artifacts stay SEQUENTIAL here: value liveness derives from
     // the post-fold registry replacement
-    val replacementM = ServingLayout.rewrite(
-      spark, docsPath, simhashDocsSchema, "vbucket",
+    val replacementM = ServingLayout.rewrite(spark, docsPath, simhashDocs,
       ServingLayout.affectedValues(
         candVals.select(simhashValueBucket(col("simhash"), buckets)))
-        ++ repackDocs) {
-      _.join(deltaIds, col("id") === col("__did"), "left_anti")
-        .select("vbucket", "simhash", "id")
-        .unionByName(newFps.select(
+        ++ repackDocs)(simhashDocs.replaceIds(deltaIds, newFps.select(
           simhashValueBucket(col("simhash"), buckets).as("vbucket"),
-          col("simhash"), col("doc_id").as("id")))
-    }
+          col("simhash"), col("doc_id").as("id"))))
     // value-table fold: liveness from the POST-fold registry — derived
     // from the in-memory materialized replacement (what the write above
     // landed for exactly the affected buckets), not a read-back of
@@ -1648,7 +1570,7 @@ object Dedup {
     val newVrows = simhashVbandsOf(alive)
       .select(col("band"), col("bv"), col("simhash"),
         simhashBandBucket(col("band"), col("bv"), buckets).as("sband"))
-    ServingLayout.rewrite(spark, vrowsPath, simhashVrowsSchema, "sband",
+    ServingLayout.rewrite(spark, vrowsPath, simhashVrows,
       ServingLayout.affectedValues(
         simhashVbandsOf(candVals)
           .select(simhashBandBucket(col("band"), col("bv"), buckets)))
@@ -1660,54 +1582,31 @@ object Dedup {
     }
   }
 
-  /** Verified near-dup pairs among the documents of a persisted SimHash
-    * serving layout — [[simhashNearDupPairs]] read from the two
-    * artifacts (value-granularity candidates from the value table,
-    * expansion + equal-value route from the membership registry). The
-    * read side of the maintenance rows: fold ∘ this must equal the
-    * scratch chain over the post-fold corpus.
-    *
-    * CONCURRENCY — the QUIESCED opt-in: [[simhashServingFold]] writes the
-    * two artifacts NON-atomically (registry, then value table) — and the
-    * liveness coupling (a value's band rows exist iff ≥ 1 member remains)
-    * makes a torn read semantically worse than staleness: live values
-    * with no members expand to nothing, stale values pair spuriously.
-    * This entry is for single-writer, fold-quiesced loops only (the
-    * in-place maintenance rows, which own their copied state); anything
-    * concurrent with maintenance uses the generation-resolving default
-    * [[simhashPairsServing]] (the ext_simhash_serving_grace_read /
-    * probe_race contract). */
-  def simhashPairsServingQuiesced(
-      spark: org.apache.spark.sql.SparkSession,
-      vrowsPath: String,
-      docsPath: String,
-      maxBucket: Long = DefaultMaxBucket): DataFrame =
-    simhashPairsFrom(
-      spark.read.schema(simhashVrowsSchema).parquet(vrowsPath),
-      spark.read.schema(simhashDocsSchema).parquet(docsPath),
-      maxBucket)
-
   /** The DEFAULT pair-listing entry point over a GENERATIONED layout
     * root (holding `vrows/` + `docs/` per generation): resolves the
     * CURRENT generation once and reads its artifact SET — the family
     * where this matters most (the liveness coupling makes a torn pair
-    * wrong in both directions). Raw artifact paths are the explicit
-    * opt-in ([[simhashPairsServingQuiesced]]) for single-writer,
-    * fold-quiesced maintenance loops. */
+    * wrong in both directions). */
   def simhashPairsServing(
       spark: org.apache.spark.sql.SparkSession,
       layoutRoot: String,
       maxBucket: Long = DefaultMaxBucket): DataFrame = {
     val gen = graft.streaming.StateStream.statePath(spark, layoutRoot)
-    simhashPairsServingQuiesced(spark, s"$gen/vrows", s"$gen/docs", maxBucket)
+    simhashPairsFrom(simhashVrows.read(spark, s"$gen/vrows"),
+      simhashDocs.read(spark, s"$gen/docs"), maxBucket)
   }
 
-  /** [[simhashPairsServing]] over already-RESOLVED artifact frames — the
-    * pinned-generation reader's entry point (the [[minhashPairsFrom]]
-    * twin): a long-running reader resolves BOTH artifacts of one
-    * generation together, maintenance flips the pointer, and the pinned
-    * read still answers the cross-artifact-CONSISTENT pre-fold pair set
-    * on graced bytes. Consistency matters more here than for any
+  /** Verified near-dup pairs among the documents of a SimHash serving
+    * layout's resolved artifact frames — [[simhashNearDupPairs]] read
+    * from the two artifacts (value-granularity candidates from the value
+    * table, expansion + equal-value route from the membership registry).
+    * The read side of the maintenance rows: fold ∘ this must equal the
+    * scratch chain over the post-fold corpus. Also the pinned-generation
+    * reader's entry point (the [[minhashPairsFrom]] twin): a long-running
+    * reader resolves BOTH artifacts of one generation together,
+    * maintenance flips the pointer, and the pinned read still answers
+    * the cross-artifact-CONSISTENT pre-fold pair set on graced bytes.
+    * Consistency matters more here than for any
     * sibling: the liveness coupling (a value's band rows exist iff ≥ 1
     * member remains) makes a TORN pair semantically wrong in both
     * directions — live values beside a folded registry expand to
@@ -1777,16 +1676,10 @@ object Dedup {
   // constant, so the control-plane collects stay bounded.
   // -------------------------------------------------------------------
 
-  private[graft] val embLayoutSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("v",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType)),
-    org.apache.spark.sql.types.StructField("nrm",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("bucket",
-      org.apache.spark.sql.types.LongType)))
+  /** The persisted single-table vector layout, by hyperplane bucket. */
+  private[graft] val embDupVecs = ServingLayout.Artifact(
+    StructType.fromDDL("id BIGINT, v ARRAY<FLOAT>, nrm DOUBLE, bucket BIGINT"),
+    "bucket", "id")
 
   /** The serving rows of a vector set — norm precomputed so probe-time
     * verification is pure arithmetic over stored rows. Un-materialized
@@ -1805,8 +1698,7 @@ object Dedup {
       path: String,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit =
-    embDupServingRows(emb, idCol, vecCol).repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
+    embDupVecs.write(embDupServingRows(emb, idCol, vecCol), path)
 
   /** The PRUNED ingest probe: the arriving batch's own bucket
     * assignments broadcast against the bucket-partitioned layout
@@ -1828,10 +1720,8 @@ object Dedup {
     // a model constant — the affectedValues control-plane scalar), so
     // pruning no longer needs un-checkpointed batch lineage for DPP
     val b = embDupServingRows(batch, idCol, vecCol).localCheckpoint(true)
-    val stored = spark.read.schema(embLayoutSchema).parquet(path)
-      .where(ServingLayout.partitionIn(
-        col("bucket"), embLayoutSchema("bucket").dataType,
-        ServingLayout.affectedValues(b.select("bucket"))))
+    val stored = embDupVecs.readIn(spark, path,
+      ServingLayout.affectedValues(b.select("bucket")))
     val probed = stored
       .join(broadcast(b.select("bucket").distinct()), Seq("bucket"))
       // a batch that REVISES an already-stored id must verify against the
@@ -1852,10 +1742,10 @@ object Dedup {
       .distinct()
   }
 
-  /** IN-PLACE partial maintenance — per-vector pure rows, so the
-    * generalized old ∪ new removal set + bucket-confined anti-join +
-    * union is the whole fold (old buckets from re-bucketing the
-    * pre-delta vectors at the frozen planes — never an index scan). */
+  /** IN-PLACE partial maintenance — per-vector pure rows, so
+    * [[ServingLayout.Artifact.replaceIds]] over the affected buckets is
+    * the whole fold (old buckets from re-bucketing the pre-delta vectors
+    * at the frozen planes — never an index scan). */
   def embDupServingFold(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -1865,56 +1755,32 @@ object Dedup {
       vecCol: String = "embedding",
       repack: Seq[Long] = Nil): Unit = {
     val newRows = embDupServingRows(newVecs, idCol, vecCol).localCheckpoint(true)
-    val deltaIds = oldVecs.select(col(idCol).as("__did"))
-      .union(newVecs.select(col(idCol).as("__did"))).distinct()
     // `repack` widens the rewrite with crowded partitions so a compaction
     // rides this one fold pass (the merged fold+compact form)
-    ServingLayout.rewrite(spark, path, embLayoutSchema, "bucket",
+    ServingLayout.rewrite(spark, path, embDupVecs,
       ServingLayout.affectedValues(
         embDupServingRows(oldVecs, idCol, vecCol).select("bucket")
-          .union(newRows.select("bucket"))) ++ repack) {
-      _.join(deltaIds, col("id") === col("__did"), "left_anti")
-        .select("bucket", "id", "v", "nrm")
-        .unionByName(newRows.select("bucket", "id", "v", "nrm"))
-    }
+          .union(newRows.select("bucket"))) ++ repack)(
+      embDupVecs.replaceIds(
+        ServingLayout.deltaIds(oldVecs, newVecs, idCol), newRows))
   }
-
-  /** Verified near-dup pairs among the layout's vectors — the read side
-    * of the maintenance rows ([[nearDuplicatesByEmbedding]] over stored
-    * rows: bucket self-join + exact cosine).
-    *
-    * CONCURRENCY — the QUIESCED opt-in: the vector layout is a single
-    * artifact, but [[embDupServingFold]]'s dynamic partition overwrite
-    * rewrites the affected buckets non-atomically — a raw-path read
-    * racing a fold can see half the delta applied. This entry is for
-    * single-writer, fold-quiesced loops only; anything concurrent with
-    * maintenance uses the generation-resolving default
-    * [[embDupPairsServing]] (the ext_embdup_serving_grace_read /
-    * probe_race contract). */
-  def embDupPairsServingQuiesced(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      threshold: Double = 0.9,
-      maxBucket: Long = DefaultMaxBucket): DataFrame =
-    embDupPairsFrom(spark.read.schema(embLayoutSchema).parquet(path),
-      threshold, maxBucket)
 
   /** The DEFAULT pair-listing entry point over a GENERATIONED layout
     * root (each generation directory IS the vecs artifact): resolves the
     * CURRENT generation once — a reader never observes a half-folded
-    * bucket set under a concurrent fold. Raw artifact paths are the
-    * explicit opt-in ([[embDupPairsServingQuiesced]]) for single-writer,
-    * fold-quiesced maintenance loops. */
+    * bucket set under a concurrent fold. */
   def embDupPairsServing(
       spark: org.apache.spark.sql.SparkSession,
       layoutRoot: String,
       threshold: Double = 0.9,
       maxBucket: Long = DefaultMaxBucket): DataFrame =
-    embDupPairsServingQuiesced(spark,
-      graft.streaming.StateStream.statePath(spark, layoutRoot), threshold,
+    embDupPairsFrom(embDupVecs.read(spark,
+      graft.streaming.StateStream.statePath(spark, layoutRoot)), threshold,
       maxBucket)
 
-  /** [[embDupPairsServing]] over an already-RESOLVED layout frame — the
+  /** Verified near-dup pairs among a resolved vector layout frame — the
+    * read side of the maintenance rows ([[nearDuplicatesByEmbedding]]
+    * over stored rows: bucket self-join + exact cosine), and the
     * pinned-generation reader's entry point (the [[minhashPairsFrom]]
     * twin): a long-running reader resolves one generation's rows,
     * maintenance flips the pointer, and the pinned read still answers
@@ -2001,21 +1867,13 @@ object Dedup {
     * fold/probe control-plane collects stay bounded. */
   val EmbRegistryBuckets = 64
 
-  private[graft] val embTRowsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("tbucket",
-      org.apache.spark.sql.types.LongType)))
-  private[graft] val embVecsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("v",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType)),
-    org.apache.spark.sql.types.StructField("nrm",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("vbucket",
-      org.apache.spark.sql.types.LongType)))
+  /** The two persisted multi-table artifacts: band rows by (table,
+    * bucket) key and the vector registry by id bucket. */
+  private[graft] val embMultiTRows = ServingLayout.Artifact(
+    StructType.fromDDL("id BIGINT, tbucket BIGINT"), "tbucket", "id")
+  private[graft] val embMultiVecs = ServingLayout.Artifact(
+    StructType.fromDDL("id BIGINT, v ARRAY<FLOAT>, nrm DOUBLE, vbucket BIGINT"),
+    "vbucket", "id")
 
   /** Approximate broadcast row width of the candidate-id dim (two
     * longs) — see [[ProbeBroadcastBytes]]. */
@@ -2052,10 +1910,8 @@ object Dedup {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
     val (trows, vecs) = embMultiServingRows(emb, idCol, vecCol)
-    trows.repartition(col("tbucket"))
-      .write.partitionBy("tbucket").mode("overwrite").parquet(trowsPath)
-    vecs.repartition(col("vbucket"))
-      .write.partitionBy("vbucket").mode("overwrite").parquet(vecsPath)
+    embMultiTRows.write(trows, trowsPath)
+    embMultiVecs.write(vecs, vecsPath)
   }
 
   /** The PRUNED multi-table ingest probe: the batch's own (table, bucket)
@@ -2084,9 +1940,7 @@ object Dedup {
       .withColumn("vbucket", pmod(col("id"), lit(EmbRegistryBuckets.toLong)))
       .localCheckpoint(true)
     val candBuckets = ServingLayout.affectedValues(candIds.select("vbucket"))
-    val storedV = spark.read.schema(embVecsSchema).parquet(vecsPath)
-      .where(ServingLayout.partitionIn(
-        col("vbucket"), embVecsSchema("vbucket").dataType, candBuckets))
+    val storedV = embMultiVecs.readIn(spark, vecsPath, candBuckets)
     // candIds is PAIR-derived — gated like the simhash candidate values
     val idDim0 = candIds.select("vbucket", "id")
     val idDim = gatedDim(idDim0, idDim0, candIds.count(),
@@ -2123,10 +1977,8 @@ object Dedup {
     // STATIC partition pruning from the checkpointed batch's tbucket
     // literal set (≤ EmbTables·2^EmbPlanesPerTable, a model constant) —
     // one bucketing pass feeds the dim and the scan filter
-    val storedT = spark.read.schema(embTRowsSchema).parquet(trowsPath)
-      .where(ServingLayout.partitionIn(
-        col("tbucket"), embTRowsSchema("tbucket").dataType,
-        ServingLayout.affectedValues(bt.select("tbucket"))))
+    val storedT = embMultiTRows.readIn(spark, trowsPath,
+      ServingLayout.affectedValues(bt.select("tbucket")))
     val probedT = storedT
       .join(broadcast(bt.select("tbucket").distinct()), Seq("tbucket"))
     val others = probedT.select(col("tbucket"), col("id").as("id_b"))
@@ -2140,12 +1992,10 @@ object Dedup {
   }
 
   /** IN-PLACE partial maintenance of BOTH multi-table artifacts —
-    * per-vector-pure rows in each, so the generalized old ∪ new removal
-    * set + partition-confined anti-join + union is the whole fold (old
-    * band rows from re-bucketing the pre-delta vectors at the frozen
-    * planes — never an index scan; registry buckets are id-derived).
-    * Replay-idempotent: no carried scalars, every artifact a pure
-    * function of (state rows, batch rows). */
+    * per-vector-pure rows in each, so [[ServingLayout.Artifact.replaceIds]]
+    * over the affected partitions is the whole fold (old band rows from
+    * re-bucketing the pre-delta vectors at the frozen planes — never an
+    * index scan; registry buckets are id-derived). */
   def embMultiServingFold(
       spark: org.apache.spark.sql.SparkSession,
       trowsPath: String,
@@ -2160,27 +2010,20 @@ object Dedup {
     val newT = newT0.localCheckpoint(true)
     val newV = newV0.localCheckpoint(true)
     val (oldT, oldV) = embMultiServingRows(oldVecs, idCol, vecCol)
-    val deltaIds = oldVecs.select(col(idCol).as("__did"))
-      .union(newVecs.select(col(idCol).as("__did"))).distinct()
+    val deltaIds = ServingLayout.deltaIds(oldVecs, newVecs, idCol)
       .localCheckpoint(true)
     // `repack*` widens each artifact's rewrite with crowded partitions
     // (merged fold+compact); the two chains touch disjoint paths over
     // materialized inputs — independent job chains, overlapped (§2.6)
     ServingLayout.inParallel(
-      () => ServingLayout.rewrite(spark, trowsPath, embTRowsSchema, "tbucket",
+      () => ServingLayout.rewrite(spark, trowsPath, embMultiTRows,
         ServingLayout.affectedValues(
-          oldT.select("tbucket").union(newT.select("tbucket"))) ++ repackTrows) {
-        _.join(deltaIds, col("id") === col("__did"), "left_anti")
-          .select("tbucket", "id")
-          .unionByName(newT.select("tbucket", "id"))
-      },
-      () => ServingLayout.rewrite(spark, vecsPath, embVecsSchema, "vbucket",
+          oldT.select("tbucket").union(newT.select("tbucket"))) ++ repackTrows)(
+        embMultiTRows.replaceIds(deltaIds, newT)),
+      () => ServingLayout.rewrite(spark, vecsPath, embMultiVecs,
         ServingLayout.affectedValues(
-          oldV.select("vbucket").union(newV.select("vbucket"))) ++ repackVecs) {
-        _.join(deltaIds, col("id") === col("__did"), "left_anti")
-          .select("vbucket", "id", "v", "nrm")
-          .unionByName(newV.select("vbucket", "id", "v", "nrm"))
-      })
+          oldV.select("vbucket").union(newV.select("vbucket"))) ++ repackVecs)(
+        embMultiVecs.replaceIds(deltaIds, newV)))
   }
 
   /** [[embMultiPairsServing]] over already-RESOLVED artifact frames —
@@ -2247,21 +2090,6 @@ object Dedup {
         when(col("n_ids") <= maxBucket, lit("joined"))
           .otherwise(lit("skipped")).as("action"))
 
-  /** Verified near-dup pairs of the multi-table layout — the QUIESCED
-    * raw-path read (single-writer maintenance loops only; the
-    * [[embDupPairsServingQuiesced]] concurrency contract — here the two
-    * artifacts also fold non-atomically). */
-  def embMultiPairsServingQuiesced(
-      spark: org.apache.spark.sql.SparkSession,
-      trowsPath: String,
-      vecsPath: String,
-      threshold: Double = 0.9,
-      maxBucket: Long = DefaultMaxBucket): DataFrame =
-    embMultiPairsFrom(
-      spark.read.schema(embTRowsSchema).parquet(trowsPath),
-      spark.read.schema(embVecsSchema).parquet(vecsPath),
-      threshold, maxBucket)
-
   /** The DEFAULT pair-listing entry point over a GENERATIONED layout
     * root (holding `trows/` + `vecs/` per generation) — resolves the
     * CURRENT generation once; the [[minhashPairsServing]] convention. */
@@ -2271,8 +2099,8 @@ object Dedup {
       threshold: Double = 0.9,
       maxBucket: Long = DefaultMaxBucket): DataFrame = {
     val gen = graft.streaming.StateStream.statePath(spark, layoutRoot)
-    embMultiPairsServingQuiesced(spark, s"$gen/trows", s"$gen/vecs", threshold,
-      maxBucket)
+    embMultiPairsFrom(embMultiTRows.read(spark, s"$gen/trows"),
+      embMultiVecs.read(spark, s"$gen/vecs"), threshold, maxBucket)
   }
 
   /** E1d — embedding-cosine near-duplicate pairs, LSH-bucketed: candidates

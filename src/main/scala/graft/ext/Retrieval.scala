@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ext.TextOps.intDiv
 import graft.functions.WordShingles
@@ -140,36 +141,15 @@ object Retrieval {
   def docBucket(docId: Column, buckets: Int = 16): Column =
     pmod(docId, lit(buckets.toLong))
 
-  /** Explicit schema of the persisted registry layout (dbucket is the
-    * partition column): a fold that empties EVERY bucket leaves a
-    * footer-less directory, and the post-fold stats read must see the
-    * empty registry as a readable (n = 0) state, never a schema-inference
-    * crash. */
-  private[graft] val registrySchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("dl",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("dbucket",
-      org.apache.spark.sql.types.LongType)))
+  /** The persisted doc registry (the length table) by [[docBucket]]. */
+  private[graft] val bm25DocLen = ServingLayout.Artifact(
+    StructType.fromDDL("doc_id BIGINT, dl BIGINT, dbucket BIGINT"), "dbucket", "doc_id")
 
-  /** Explicit schema of the persisted postings layout (bucket is the
-    * partition column) — for reads that must never depend on footer
-    * inference (the footer-less emptied-directory lesson), and whose
-    * partition-column type drives [[ServingLayout.partitionIn]]'s static
-    * pruning. Pinned against [[bm25ServingArtifacts]]'s postings by
-    * RetrievalSpec. */
-  private[graft] val postingsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("term",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("tf",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("df",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("bucket",
-      org.apache.spark.sql.types.LongType)))
+  /** The persisted postings by [[termBucket]]. Pinned against
+    * [[bm25ServingArtifacts]]'s postings by RetrievalSpec. */
+  private[graft] val bm25PostingsLayout = ServingLayout.Artifact(
+    StructType.fromDDL("term STRING, doc_id BIGINT, tf BIGINT, df BIGINT, bucket BIGINT"),
+    "bucket", "doc_id")
 
   /** The SERVING artifact set of the BM25 index — what a production
     * deployment persists so a query never derives statistics from a full
@@ -269,8 +249,8 @@ object Retrieval {
       k: Int = 5, buckets: Int = 16): DataFrame = {
     val gen = graft.streaming.StateStream.statePath(spark, layoutRoot)
     bm25TopKServing(
-      spark.read.schema(postingsSchema).parquet(s"$gen/postings"),
-      spark.read.schema(registrySchema).parquet(s"$gen/doclen"),
+      bm25PostingsLayout.read(spark, s"$gen/postings"),
+      bm25DocLen.read(spark, s"$gen/doclen"),
       spark.read.schema(statsSchema).parquet(s"$gen/stats"),
       queries, k, buckets)
   }
@@ -311,28 +291,24 @@ object Retrieval {
     val newPost = bm25Postings(newDocs)
       .withColumn("bucket", termBucket(col("term"), buckets))
       .localCheckpoint(true)
-    // removal set = old ∪ new ids: equal for a revision, old-only for a
-    // DELETE (empty newDocs), new-only (a no-op anti-join) for an INSERT —
-    // one fold covers the whole lifecycle op matrix. Materialized once:
-    // both artifact chains below consume it (and run concurrently)
-    val deltaIds = oldDocs.select(col("doc_id").as("__did"))
-      .union(newDocs.select(col("doc_id").as("__did"))).distinct()
+    // materialized once: both artifact chains below consume it (and run
+    // concurrently)
+    val deltaIds = ServingLayout.deltaIds(oldDocs, newDocs, "doc_id")
       .localCheckpoint(true)
     // `repack*` widens each rewrite with [[ServingLayout.crowdedValues]]'
     // crowded partitions so a compaction rides this one rewrite (an
     // included unaffected bucket passes the anti-join untouched and lands
     // as one file, which is compact's whole contract)
     def foldPostings(): Unit = ServingLayout.rewrite(
-      spark, postingsPath, postingsSchema, "bucket",
+      spark, postingsPath, bm25PostingsLayout,
       ServingLayout.affectedValues(
         bm25Postings(oldDocs)
           .select(termBucket(col("term"), buckets).as("bucket"))
-          .union(newPost.select("bucket"))) ++ repackPostings) {
+          .union(newPost.select("bucket"))) ++ repackPostings) { stored =>
       // df RE-DERIVED within the affected buckets (bucket-local by the
-      // term→bucket purity above)
-      _.join(deltaIds, col("doc_id") === col("__did"), "left_anti")
-        .select("bucket", "term", "doc_id", "tf")
-        .unionByName(newPost.select("bucket", "term", "doc_id", "tf"))
+      // term→bucket purity above); the new rows' df is a placeholder
+      bm25PostingsLayout.replaceIds(deltaIds,
+        newPost.withColumn("df", lit(null).cast("long")))(stored)
         .withColumn("df", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy("term")))
     }
@@ -346,16 +322,12 @@ object Retrieval {
         .join(newPost.groupBy("doc_id").agg(sum("tf").as("__dl")), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("__dl"), lit(0L)).as("dl"),
           docBucket(col("doc_id"), buckets).as("dbucket"))
-      ServingLayout.rewrite(spark, docLenPath, registrySchema, "dbucket",
-        ServingLayout.affectedValues(
-          deltaIds.select(docBucket(col("__did"), buckets).as("dbucket")))
-          ++ repackDocLen) {
-        _.join(deltaIds, col("doc_id") === col("__did"), "left_anti")
-          .select("dbucket", "doc_id", "dl")
-          .unionByName(newDl.select("dbucket", "doc_id", "dl"))
-      }
+      ServingLayout.rewrite(spark, docLenPath, bm25DocLen,
+        ServingLayout.affectedValues(deltaIds.toDF("doc_id")
+          .select(docBucket(col("doc_id"), buckets).as("dbucket")))
+          ++ repackDocLen)(bm25DocLen.replaceIds(deltaIds, newDl))
       // reads docLenPath (final), writes statsPath — disjoint, no barrier
-      statsFromDocLen(spark.read.schema(registrySchema).parquet(docLenPath))
+      statsFromDocLen(bm25DocLen.read(spark, docLenPath))
         .write.mode("overwrite").parquet(statsPath)
     }
     // the two artifacts touch disjoint paths and share only materialized

@@ -11,12 +11,17 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   * single- and multi-table layouts, the IVF cells, the IVF-PQ codes, the
   * BM25 postings and registry, and the SCD2 episode store — is a parquet
   * directory partitioned by one integral column (a bucket or cell id, a
-  * model or layout constant, never data-sized). A fold derives the
-  * partition values its delta touches and hands them to [[rewrite]] with
-  * the replacement rule; [[rewrite]] owns everything else:
+  * model or layout constant, never data-sized). Each is declared ONCE as
+  * an [[Artifact]]: its schema (partition column last), its partition
+  * column and its row id. The artifact owns the build write, the
+  * declared-schema read and the pruned read, so no call site restates a
+  * shape. A fold derives the partition values its delta touches and
+  * hands them to [[rewrite]] with the replacement rule — for per-row-pure
+  * layouts [[Artifact.replaceIds]] — and [[rewrite]] owns everything
+  * else:
   *
   *   - '''Literal pruned read.''' The affected values reach the scan as a
-  *     STATIC partition filter ([[partitionIn]]) through the layout's
+  *     STATIC partition filter ([[Artifact.readIn]]) through the layout's
   *     declared schema, so a fold reads only the partitions it rewrites
   *     and never depends on footer inference (a fold that empties every
   *     partition leaves a footer-less directory that the next read must
@@ -42,28 +47,78 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   *     the same content, so replay repairs a torn fold.
   *   - '''Reader isolation.''' Dynamic overwrite deletes the replaced
   *     files at commit, so a reader whose file index resolved before the
-  *     rewrite can hit missing files mid-scan. In-place rewrites assume a
-  *     single writer and fold-aware readers that re-resolve per query;
-  *     long-running readers pin a generation and take folds through
+  *     rewrite can hit missing files mid-scan, and a multi-artifact fold
+  *     writes its artifacts one after another (or concurrently), so a
+  *     reader between them sees a torn set. A raw-path read
+  *     ([[Artifact.read]]) is therefore for single-writer, fold-quiesced
+  *     loops only; anything concurrent with maintenance pins a generation
+  *     and takes folds through
   *     [[graft.streaming.StateStream.foldIsolatedGen]]'s graced flip,
-  *     paying a layout copy per fold for snapshot isolation. */
+  *     paying a layout copy per fold for snapshot isolation (the
+  *     `*PairsServing` and `*Pinned` entries resolve the generation). */
 object ServingLayout {
 
-  /** Rewrite the partitions `values` of the layout at `path` in place:
-    * read them through `schema`, replace their content with `replace`
-    * applied to that stored slice, and write the result back under the
-    * protocol above. Values the replacement leaves empty are swept; a
-    * value absent from `values` is never read or touched. Returns the
-    * materialized replacement, so a caller can derive further state from
-    * exactly what landed without reading the path back. */
-  private[graft] def rewrite(spark: SparkSession, path: String, schema: StructType,
-      partCol: String, values: Seq[Long])(
+  /** One stored partitioned serving layout: `schema` is its declared
+    * shape with the partition column `partCol` last, and `idCol` names
+    * the stored row's id, the key a delta's removal set matches. */
+  final case class Artifact(schema: StructType, partCol: String, idCol: String) {
+
+    /** The whole layout at `path` through the declared schema — never
+      * footer inference. RAW-PATH contract: the read resolves `path`
+      * as it stands, so it is for single-writer, fold-quiesced loops
+      * only (the object doc's reader isolation); a reader concurrent
+      * with maintenance resolves a pinned generation first. */
+    def read(spark: SparkSession, path: String): DataFrame =
+      spark.read.schema(schema).parquet(path)
+
+    /** The partitions `values` only: [[read]] under a STATIC partition
+      * filter, so the scan lists and reads nothing else. */
+    def readIn(spark: SparkSession, path: String, values: Seq[Long]): DataFrame =
+      read(spark, path).where(
+        partitionIn(col(partCol), schema(partCol).dataType, values))
+
+    /** The build write: `repartition(partCol)` before `partitionBy` lands
+      * each partition value in one task, so every directory holds one
+      * file (the sink-append lesson), then the layout at `path` is
+      * overwritten whole. */
+    def write(rows: DataFrame, path: String): Unit =
+      rows.repartition(col(partCol))
+        .write.partitionBy(partCol).mode("overwrite").parquet(path)
+
+    /** The id-keyed replace rule of a per-row-pure layout, for
+      * [[rewrite]]: the stored slice minus every row whose id is in
+      * `deltaIds` ([[ServingLayout.deltaIds]]), plus the `fresh` rows.
+      * The removal set is old ∪ new ids, so one rule covers a revision
+      * (both sides), a delete or forget (old only) and an insert (new
+      * only), and a replayed delta removes and re-adds the same rows. */
+    private[graft] def replaceIds(deltaIds: DataFrame, fresh: DataFrame)(
+        stored: DataFrame): DataFrame =
+      stored.join(deltaIds, col(idCol) === col("__did"), "left_anti")
+        .select(schema.fieldNames.map(col): _*)
+        .unionByName(fresh)
+  }
+
+  /** A delta's removal set for [[Artifact.replaceIds]]: the ids `idCol`
+    * of the old and the new rows, distinct. */
+  private[graft] def deltaIds(old: DataFrame, fresh: DataFrame,
+      idCol: String): DataFrame =
+    old.select(col(idCol).as("__did"))
+      .union(fresh.select(col(idCol).as("__did"))).distinct()
+
+  /** Rewrite the partitions `values` of `artifact` at `path` in place:
+    * read them, replace their content with `replace` applied to that
+    * stored slice, and write the result back under the protocol above.
+    * Values the replacement leaves empty are swept; a value absent from
+    * `values` is never read or touched. Returns the materialized
+    * replacement, so a caller can derive further state from exactly what
+    * landed without reading the path back. */
+  private[graft] def rewrite(spark: SparkSession, path: String,
+      artifact: Artifact, values: Seq[Long])(
       replace: DataFrame => DataFrame): DataFrame = {
+    val partCol = artifact.partCol
     val vs = values.distinct.sorted
-    val stored = spark.read.schema(schema).parquet(path)
-      .where(partitionIn(col(partCol), schema(partCol).dataType, vs))
     val landed = new Observation()
-    val replacement = replace(stored)
+    val replacement = replace(artifact.readIn(spark, path, vs))
       .observe(landed, collect_set(col(partCol)).as("values"))
       .localCheckpoint(true)
     replacement.repartition(col(partCol))
@@ -91,10 +146,10 @@ object ServingLayout {
     * data files) is rewritten unchanged through [[rewrite]], so content
     * is bit-identical, uncrowded partitions keep their bytes, and a
     * re-run that finds nothing crowded is a no-op. */
-  def compact(spark: SparkSession, path: String, partCol: String,
-      schema: StructType, maxFiles: Int = 1): Unit = {
-    val crowded = crowdedValues(spark, path, partCol, maxFiles)
-    if (crowded.nonEmpty) rewrite(spark, path, schema, partCol, crowded)(identity)
+  def compact(spark: SparkSession, path: String, artifact: Artifact,
+      maxFiles: Int = 1): Unit = {
+    val crowded = crowdedValues(spark, path, artifact, maxFiles)
+    if (crowded.nonEmpty) rewrite(spark, path, artifact, crowded)(identity)
   }
 
   /** The compact trigger set: partition values of `path` holding more
@@ -106,8 +161,9 @@ object ServingLayout {
     * either way, because a fold's dynamic overwrite rewrites each
     * included partition to one file). Control-plane: the listing is
     * bounded by the layout's partition-value cardinality. */
-  def crowdedValues(spark: SparkSession, path: String, partCol: String,
+  def crowdedValues(spark: SparkSession, path: String, artifact: Artifact,
       maxFiles: Int = 1): Seq[Long] = {
+    val partCol = artifact.partCol
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Nil
@@ -180,11 +236,15 @@ object ServingLayout {
     * (directory-name inference yields IntegerType for small values; a
     * mistyped literal set would cast the partition ATTRIBUTE and risk
     * losing static pruning). Empty set → `false` (a no-op fold reads
-    * nothing). */
+    * nothing). On an IntegerType column a value outside the Int range
+    * cannot name a directory, so it is dropped rather than narrowed —
+    * `toInt` would wrap it onto another partition. */
   private[graft] def partitionIn(c: Column, dt: DataType, vs: Seq[Long]): Column =
     if (vs.isEmpty) lit(false)
     else dt match {
-      case IntegerType => c.isin(vs.map(_.toInt): _*)
+      case IntegerType =>
+        val ints = vs.filter(_.isValidInt)
+        if (ints.isEmpty) lit(false) else c.isin(ints.map(_.toInt): _*)
       case LongType => c.isin(vs: _*)
       case other => throw new IllegalArgumentException(
         s"partitionIn: unsupported partition-column type $other — add an " +

@@ -5,6 +5,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.FloatVectorDot.floatVectorDot
 import graft.functions.TopKByScore.topKByScore
@@ -363,38 +364,17 @@ object Similarity {
     }
   }
 
-  /** Explicit schema of the persisted CODE layout ([[ivfPqEncode]]'s
-    * rows): the compact/fold reads must never depend on footer inference
-    * (the footer-less emptied-directory lesson), and the declared
-    * partition-column type drives [[ServingLayout.partitionIn]]'s static
-    * pruning. Pinned against [[ivfPqEncode]]'s analyzed schema by
-    * PqSpec. */
-  private[graft] val codesSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("neighbor_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("m",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("cell",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("ccell",
-      org.apache.spark.sql.types.LongType)))
+  /** The persisted CODE layout ([[ivfPqEncode]]'s rows) by coarse cell.
+    * Pinned against [[ivfPqEncode]]'s analyzed schema by PqSpec. */
+  private[graft] val pqCodes = ServingLayout.Artifact(
+    StructType.fromDDL("neighbor_id BIGINT, m INT, cell BIGINT, ccell BIGINT"),
+    "ccell", "neighbor_id")
 
-  /** Explicit schema of the persisted cell layout ([[ivfIndex]]'s rows;
-    * cell is the partition column): the compact/fold reads must never
-    * depend on footer inference (the footer-less emptied-directory
-    * lesson), and the declared partition-column type drives
-    * [[ServingLayout.partitionIn]]'s static pruning. Pinned against
-    * [[ivfIndex]]'s analyzed schema by IvfRecallSpec. */
-  private[graft] val cellsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("neighbor_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("cv",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType)),
-    org.apache.spark.sql.types.StructField("cn",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("cell",
-      org.apache.spark.sql.types.LongType)))
+  /** The persisted cell layout ([[ivfIndex]]'s rows) by cell. Pinned
+    * against [[ivfIndex]]'s analyzed schema by IvfRecallSpec. */
+  private[graft] val ivfCells = ServingLayout.Artifact(
+    StructType.fromDDL("neighbor_id BIGINT, cv ARRAY<FLOAT>, cn DOUBLE, cell BIGINT"),
+    "cell", "neighbor_id")
 
   /** The persisted side of an IVF deployment: every vector of `emb`
     * assigned to its nearest centroid. Output (cell, neighbor_id, cv, cn).
@@ -423,10 +403,10 @@ object Similarity {
     * deterministic, so this equals what the index stores — no
     * neighbor_id scan of the index is ever needed); affected = old cells
     * ∪ new cells, and the replacement content for those cells is
-    * (stored rows minus delta ids) ∪ the new assignments. The emptied
-    * set is MODEL-bounded (≤ numCentroids cells). The write, sweep,
-    * replay and reader-isolation contract is [[ServingLayout.rewrite]]'s
-    * (replay pinned by IvfRecallSpec). */
+    * [[ServingLayout.Artifact.replaceIds]] over the new assignments. The
+    * emptied set is MODEL-bounded (≤ numCentroids cells). The write,
+    * sweep, replay and reader-isolation contract is
+    * [[ServingLayout.rewrite]]'s (replay pinned by IvfRecallSpec). */
   def ivfServingFold(
       spark: SparkSession,
       cellsPath: String,
@@ -437,23 +417,16 @@ object Similarity {
       vecCol: String = "embedding",
       repack: Seq[Long] = Nil): Unit = {
     val newAssign = ivfIndex(newVecs, cents, idCol, vecCol).localCheckpoint(true)
-    // removal set = old ∪ new ids: equal for a revision, old-only for a
-    // DELETE (empty newVecs), new-only (a no-op anti-join) for an INSERT —
-    // one fold covers the whole lifecycle op matrix
-    val deltaIds = oldVecs.select(col(idCol).as("__did"))
-      .union(newVecs.select(col(idCol).as("__did"))).distinct()
     // `repack` widens the set with [[ServingLayout.crowdedValues]]'
     // crowded cells so a compaction rides this one rewrite (merged
     // fold+compact — an included unaffected cell passes the anti-join
     // untouched and lands as one file)
-    ServingLayout.rewrite(spark, cellsPath, cellsSchema, "cell",
+    ServingLayout.rewrite(spark, cellsPath, ivfCells,
       ServingLayout.affectedValues(
         ivfIndex(oldVecs, cents, idCol, vecCol).select("cell")
-          .union(newAssign.select("cell"))) ++ repack) {
-      _.join(deltaIds, col("neighbor_id") === col("__did"), "left_anti")
-        .select("cell", "neighbor_id", "cv", "cn")
-        .unionByName(newAssign.select("cell", "neighbor_id", "cv", "cn"))
-    }
+          .union(newAssign.select("cell"))) ++ repack)(
+      ivfCells.replaceIds(
+        ServingLayout.deltaIds(oldVecs, newVecs, idCol), newAssign))
   }
 
   /** Probe-side IVF search over a built index: queries assign to their
@@ -496,7 +469,7 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame =
     ivfSearch(
-      spark.read.schema(cellsSchema).parquet(
+      ivfCells.read(spark,
         graft.streaming.StateStream.statePath(spark, layoutRoot)),
       queries, cents, k, probes, idCol, vecCol)
 
@@ -815,8 +788,7 @@ object Similarity {
     * index — [[ivfServingFold]]'s mechanics on the COMPRESSED artifact:
     * encoding is per-vector at the frozen (cents, cb) model, so a delta
     * rewrites only the coarse cells its old/new vectors assign to, and
-    * the generalized removal set (old ∪ new ids) covers
-    * revise/delete/insert. Written through [[ServingLayout.rewrite]]. */
+    * [[ServingLayout.Artifact.replaceIds]] covers revise/delete/insert. */
   def ivfPqServingFold(
       spark: SparkSession,
       codesPath: String,
@@ -830,19 +802,15 @@ object Similarity {
       repack: Seq[Long] = Nil): Unit = {
     val newEnc = ivfPqEncode(newVecs, cents, cb, subspaces, idCol, vecCol)
       .localCheckpoint(true)
-    val deltaIds = oldVecs.select(col(idCol).as("__did"))
-      .union(newVecs.select(col(idCol).as("__did"))).distinct()
     // `repack` widens the set with crowded cells so a compaction rides
     // this one rewrite (merged fold+compact)
-    ServingLayout.rewrite(spark, codesPath, codesSchema, "ccell",
+    ServingLayout.rewrite(spark, codesPath, pqCodes,
       ServingLayout.affectedValues(
         ivfPqEncode(oldVecs, cents, cb, subspaces, idCol, vecCol)
           .select("ccell")
-          .union(newEnc.select("ccell"))) ++ repack) {
-      _.join(deltaIds, col("neighbor_id") === col("__did"), "left_anti")
-        .select("ccell", "neighbor_id", "m", "cell")
-        .unionByName(newEnc.select("ccell", "neighbor_id", "m", "cell"))
-    }
+          .union(newEnc.select("ccell"))) ++ repack)(
+      pqCodes.replaceIds(
+        ServingLayout.deltaIds(oldVecs, newVecs, idCol), newEnc))
   }
 
   /** ADC search over a prebuilt code index at the frozen model. */

@@ -6,22 +6,35 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Static guard on the serving layouts' one write protocol: a dynamic
+/** Static guards on the serving layouts' one write protocol: a dynamic
   * partition overwrite outside [[graft.ext.ServingLayout]] would be a new
   * copy of the read → replace → barrier → overwrite → sweep skeleton,
-  * free to drift from it (a footer-inferred read, a missing sweep). */
+  * free to drift from it (a footer-inferred read, a missing sweep), and a
+  * hand-built removal set a new copy of the id-keyed replace rule. */
 class WriteProtocolSpec extends AnyFunSuite {
 
-  test("only ServingLayout sets partitionOverwriteMode in src/main/scala") {
+  /** Main sources (relative to src/main/scala) whose text holds `token`. */
+  private def mainSourcesWith(token: String): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: $root")
-    val users = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-      .filter(p => new String(Files.readAllBytes(p), "UTF-8")
-        .contains("partitionOverwriteMode"))
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(token))
       .map(p => root.relativize(p).toString.replace('\\', '/'))
       .toSeq.sorted
+  }
+
+  test("only ServingLayout sets partitionOverwriteMode in src/main/scala") {
+    val users = mainSourcesWith("partitionOverwriteMode")
     assert(users == Seq("graft/ext/ServingLayout.scala"),
       s"dynamic partition overwrite must go through ServingLayout.rewrite: $users")
+  }
+
+  test("only ServingLayout builds the old ∪ new id removal set") {
+    // `__did` is the removal set's column: a fold restating the
+    // anti-join + union rule instead of calling Artifact.replaceIds
+    val users = mainSourcesWith("__did")
+    assert(users == Seq("graft/ext/ServingLayout.scala"),
+      s"the id-keyed replace rule must go through ServingLayout: $users")
   }
 }

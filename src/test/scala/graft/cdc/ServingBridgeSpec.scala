@@ -62,10 +62,10 @@ class ServingBridgeSpec extends AnyFunSuite with SparkFixture {
       .withColumn("bucket", ServingBridge.keyBucket(col("serve_key")))
     assert(
       eps.schema.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq ==
-        ServingBridge.episodesSchema.fields.map(f => (f.name, f.dataType))
+        ServingBridge.episodeStore.schema.fields.map(f => (f.name, f.dataType))
           .sortBy(_._1).toSeq,
       s"episodesSchema drifted from timedEpisodes: ${eps.schema} vs " +
-        s"${ServingBridge.episodesSchema}")
+        s"${ServingBridge.episodeStore.schema}")
   }
 
   test("over-limit episode tables degrade to a shuffled serve_key equi-join " +

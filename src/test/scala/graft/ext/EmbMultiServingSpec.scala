@@ -29,9 +29,9 @@ class EmbMultiServingSpec extends AnyFunSuite with graft.SparkFixture {
     def rows(df: DataFrame, cols: Seq[String]) =
       df.select(cols.map(c => col(c).cast("string")): _*)
         .collect().map(_.toSeq.map(String.valueOf)).toSet
-    (rows(spark.read.schema(Dedup.embTRowsSchema).parquet(trowsPath),
+    (rows(Dedup.embMultiTRows.read(spark, trowsPath),
         Seq("tbucket", "id")),
-      rows(spark.read.schema(Dedup.embVecsSchema).parquet(vecsPath),
+      rows(Dedup.embMultiVecs.read(spark, vecsPath),
         Seq("vbucket", "id", "nrm")))
   }
 

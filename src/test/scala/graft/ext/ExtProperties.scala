@@ -565,8 +565,8 @@ object ExtProperties extends Properties("ext") with SparkFixture {
         df.select(col("vbucket").cast("long").cast("string"), col("id").cast("string"),
             col("v").cast("string"), col("nrm").cast("string"))
           .collect().map(_.toSeq).toSet
-      trows(s.read.schema(Dedup.embTRowsSchema).parquet(trowsPath)) == trows(wantT) &&
-        vrows(s.read.schema(Dedup.embVecsSchema).parquet(vecsPath)) == vrows(wantV)
+      trows(Dedup.embMultiTRows.read(s, trowsPath)) == trows(wantT) &&
+        vrows(Dedup.embMultiVecs.read(s, vecsPath)) == vrows(wantV)
     }
 
   property("in-place simhash serving fold over a random revise/delete/insert delta " +

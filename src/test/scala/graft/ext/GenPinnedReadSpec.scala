@@ -11,10 +11,10 @@ import graft.streaming.StateStream
   * GENERATIONED layout root, resolves the current generation ONCE, and a
   * fold flipping a new generation through foldIsolatedGen neither
   * changes what an already-constructed read answers (graced bytes) nor
-  * leaks a torn artifact mix into a fresh read. The raw-path
-  * `*PairsServingQuiesced` variants are the explicit single-writer
-  * opt-in — this spec is what makes the contract structural rather than
-  * scaladoc (r14 What's-missing #4).
+  * leaks a torn artifact mix into a fresh read. A raw-path read
+  * (`*PairsFrom` over `ServingLayout.Artifact.read`) is the explicit
+  * single-writer opt-in — this spec is what makes the contract
+  * structural rather than scaladoc (r14 What's-missing #4).
   */
 class GenPinnedReadSpec extends AnyFunSuite with graft.SparkFixture {
 

@@ -235,9 +235,9 @@ class IvfRecallSpec extends AnyFunSuite with SparkFixture {
       .schema
     assert(
       idx.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq ==
-        Similarity.cellsSchema.fields.map(f => (f.name, f.dataType))
+        Similarity.ivfCells.schema.fields.map(f => (f.name, f.dataType))
           .sortBy(_._1).toSeq,
-      s"cellsSchema drifted from ivfIndex: $idx vs ${Similarity.cellsSchema}")
+      s"cellsSchema drifted from ivfIndex: $idx vs ${Similarity.ivfCells.schema}")
   }
 
   test("partition-local repack: crowded partitions rewrite to one file with " +
@@ -274,14 +274,15 @@ class IvfRecallSpec extends AnyFunSuite with SparkFixture {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("cell",
         org.apache.spark.sql.types.LongType)))
-    ServingLayout.compact(s, layout, "cell", layoutSchema)
+    val layoutArtifact = ServingLayout.Artifact(layoutSchema, "cell", "neighbor_id")
+    ServingLayout.compact(s, layout, layoutArtifact)
     assert(files(0L).size == 1, "the crowded cell must repack to one file")
     assert(content() == before, "the repack must be content-identical")
     assert(files(1L) == cell1Before,
       "an uncrowded cell is outside the repack; its bytes must not move")
     // replay: nothing is crowded anymore — the repack must not touch disk
     val afterOnce = files(0L)
-    ServingLayout.compact(s, layout, "cell", layoutSchema)
+    ServingLayout.compact(s, layout, layoutArtifact)
     assert(files(0L) == afterOnce && files(1L) == cell1Before,
       "a replayed compaction over a clean layout must be a no-op")
   }

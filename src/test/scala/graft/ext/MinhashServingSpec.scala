@@ -183,13 +183,13 @@ class MinhashServingSpec extends AnyFunSuite with graft.SparkFixture {
     }
     val before = rows()
     assert(fileCounts().values.exists(_ > 1), "construction must fragment a bucket")
-    ServingLayout.compact(s, bandsPath, "pbucket", Dedup.bandsSchema)
+    ServingLayout.compact(s, bandsPath, Dedup.minhashBands)
     assert(rows() == before, "the repack must be content-identical")
     assert(fileCounts().values.forall(_ == 1), "every crowded bucket repacks to 1 file")
     val mtimes = Files.list(Paths.get(bandsPath)).toArray
       .map(_.asInstanceOf[java.nio.file.Path])
       .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
-    ServingLayout.compact(s, bandsPath, "pbucket", Dedup.bandsSchema) // replay over a clean layout
+    ServingLayout.compact(s, bandsPath, Dedup.minhashBands) // replay over a clean layout
     val mtimes2 = Files.list(Paths.get(bandsPath)).toArray
       .map(_.asInstanceOf[java.nio.file.Path])
       .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap

@@ -64,9 +64,9 @@ class PqSpec extends AnyFunSuite with SparkFixture {
     val enc = Similarity.ivfPqEncode(df, cents, cb).schema
     assert(
       enc.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq ==
-        Similarity.codesSchema.fields.map(f => (f.name, f.dataType))
+        Similarity.pqCodes.schema.fields.map(f => (f.name, f.dataType))
           .sortBy(_._1).toSeq,
-      s"codesSchema drifted from ivfPqEncode: $enc vs ${Similarity.codesSchema}")
+      s"codesSchema drifted from ivfPqEncode: $enc vs ${Similarity.pqCodes.schema}")
   }
 
   test("codebook-only refresh: refit at frozen coarse cells equals the model " +

@@ -274,10 +274,10 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
     val (postings, _, _) = Retrieval.bm25ServingArtifacts(corpus())
     assert(
       postings.schema.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq ==
-        Retrieval.postingsSchema.fields.map(f => (f.name, f.dataType))
+        Retrieval.bm25PostingsLayout.schema.fields.map(f => (f.name, f.dataType))
           .sortBy(_._1).toSeq,
       s"postingsSchema drifted from bm25ServingArtifacts: ${postings.schema} " +
-        s"vs ${Retrieval.postingsSchema}")
+        s"vs ${Retrieval.bm25PostingsLayout.schema}")
   }
 
   test("postings/registry compaction: crowded buckets repack to one file " +
@@ -327,8 +327,8 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
       s.read.parquet(doclenPath).select($"doc_id", $"dl")
         .as[(Long, Long)].collect().toSet
     val (pBefore, dlBefore) = (postingsSet(), dlSet())
-    ServingLayout.compact(s, postingsPath, "bucket", Retrieval.postingsSchema)
-    ServingLayout.compact(s, doclenPath, "dbucket", Retrieval.registrySchema)
+    ServingLayout.compact(s, postingsPath, Retrieval.bm25PostingsLayout)
+    ServingLayout.compact(s, doclenPath, Retrieval.bm25DocLen)
     assert(dataFiles(postingsPath).values.forall(_ == 1),
       "every crowded postings bucket repacks to 1 file")
     assert(dataFiles(doclenPath).values.forall(_ == 1),
@@ -390,10 +390,8 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
     // the reader resolves the fragmented gen-1 artifact SET here
     val pinned = Retrieval.bm25TopKServingPinned(s, root, queries, buckets = B)
     graft.streaming.StateStream.foldIsolatedGen(s, root) { gen =>
-      ServingLayout.compact(s, s"$gen/postings", "bucket",
-        Retrieval.postingsSchema)
-      ServingLayout.compact(s, s"$gen/doclen", "dbucket",
-        Retrieval.registrySchema)
+      ServingLayout.compact(s, s"$gen/postings", Retrieval.bm25PostingsLayout)
+      ServingLayout.compact(s, s"$gen/doclen", Retrieval.bm25DocLen)
     }
     // EXECUTED AFTER THE FLIP: graced fragmented bytes
     val preRows = rows(pinned)

@@ -68,6 +68,59 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
     assert(none.count() == 0L)
   }
 
+  test("partitionIn drops values outside the Int range of an INFERRED-" +
+      "IntegerType partition column instead of wrapping them onto another " +
+      "partition") {
+    val s = spark
+    import s.implicits._
+    val path = graft.TempDirs.create("graft_slayout_wrap").resolve("t").toString
+    (0L until 40L).map(i => (i, i % 4)).toDF("id", "b")
+      .repartition(col("b")).write.partitionBy("b").parquet(path)
+    val stored = s.read.parquet(path) // b infers as IntegerType
+    val dt = stored.schema("b").dataType
+    assert(dt == org.apache.spark.sql.types.IntegerType)
+    // 2^32 narrows to 0 and 2^32 + 3 to 3: neither names a directory
+    assert(stored.where(ServingLayout.partitionIn(col("b"), dt, Seq(1L << 32)))
+      .collect().isEmpty)
+    val mixed = stored.where(
+      ServingLayout.partitionIn(col("b"), dt, Seq(1L, (1L << 32) + 3L)))
+      .select($"b").as[Int].collect()
+    assert(mixed.length == 10 && mixed.forall(_ == 1), mixed.toSeq)
+  }
+
+  test("every declared serving artifact equals its family's row derivation " +
+      "(field names and types in order, partition column last)") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "a quick brown fox jumps over a lazy cat")).toDF("doc_id", "text")
+    // element nullability as a parquet read of embeddings yields it
+    val emb = Seq((1L, Seq(1f, 0f, 2f)), (2L, Seq(0f, 1f, 1f)))
+      .toDF("vec_id", "embedding")
+      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+    val (bands, fps) = Dedup.minhashServingRows(docs)
+    val (vrows, members) = Dedup.simhashServingRows(docs)
+    val (trows, vecs) = Dedup.embMultiServingRows(emb)
+    val cases = Seq(
+      "minhash bands" -> (Dedup.minhashBands, bands),
+      "minhash fps" -> (Dedup.minhashFps, fps),
+      "simhash vrows" -> (Dedup.simhashVrows, vrows),
+      "simhash docs" -> (Dedup.simhashDocs, members),
+      "embDup vecs" -> (Dedup.embDupVecs, Dedup.embDupServingRows(emb)),
+      "embMulti trows" -> (Dedup.embMultiTRows, trows),
+      "embMulti vecs" -> (Dedup.embMultiVecs, vecs),
+      "bm25 doclen" -> (Retrieval.bm25DocLen, Retrieval.bm25ServingArtifacts(docs)._2))
+    cases.foreach { case (name, (artifact, rows)) =>
+      def shape(t: org.apache.spark.sql.types.StructType) =
+        t.fields.map(f => (f.name, f.dataType)).toSeq
+      assert(shape(artifact.schema) == shape(rows.schema),
+        s"$name: declared ${artifact.schema} drifted from ${rows.schema}")
+      assert(artifact.schema.fieldNames.last == artifact.partCol,
+        s"$name: the partition column must be declared last")
+      assert(artifact.schema.fieldNames.contains(artifact.idCol), name)
+    }
+  }
+
   test("rewrite reads only the given partitions, sweeps what the replacement " +
       "empties, leaves untouched partitions' bytes, replays identically, and " +
       "runs no job beyond the barrier and the write") {
@@ -81,6 +134,7 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
     // the layout's declared schema, typed as directory inference types it
     val schema = s.read.parquet(path).schema
     assert(schema("b").dataType == org.apache.spark.sql.types.IntegerType)
+    val layout = ServingLayout.Artifact(schema, "b", "id")
     def files(b: Int): Map[String, Long] = {
       val d = Paths.get(path, s"b=$b")
       if (!Files.exists(d)) Map.empty
@@ -117,7 +171,7 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
       // a data-column predicate (one on `b` would prune the scan itself):
       // every row of partition 3 has id % 4 == 3, so the replacement
       // empties it and keeps partition 1 whole
-      try ServingLayout.rewrite(s, path, schema, "b", Seq(3L, 1L, 3L))(
+      try ServingLayout.rewrite(s, path, layout, Seq(3L, 1L, 3L))(
         _.where(col("id") % 4 =!= 3))
       finally s.sparkContext.clearJobGroup()
     }
@@ -160,7 +214,7 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
     // an empty value set (a no-op delta) reads nothing, observes an empty
     // set, and leaves every partition as it was
     val before = (0 to 3).map(files)
-    ServingLayout.rewrite(s, path, schema, "b", Nil)(identity)
+    ServingLayout.rewrite(s, path, layout, Nil)(identity)
     assert((0 to 3).map(files) == before && content() == expected)
   }
 
