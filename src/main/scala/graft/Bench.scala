@@ -11,17 +11,6 @@ import org.apache.spark.sql.SparkSession
   * makes the run exit nonzero.
   */
 object Bench {
-  private def newSession(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Drop every block the previous query left in the driver/executor block
     * manager: cached tables AND the MEMORY_AND_DISK blocks behind dropped
     * localCheckpoint frames (ContextCleaner only reclaims those after a
@@ -37,7 +26,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var spark = newSession(cpus)
+    var spark = Verify.localSession(cpus, "WARN")
 
     // Untimed warmup: JVM/codegen spin-up plus a first touch of EVERY
     // fixture file, so neither the first query nor whichever query first
@@ -119,7 +108,7 @@ object Bench {
         // coordinator RPC ref — reset it or every stateful streaming query
         // after the first recycle fails with RpcEndpointNotFoundException
         org.apache.spark.sql.graftbridge.StateStoreBridge.reset()
-        spark = newSession(cpus)
+        spark = Verify.localSession(cpus, "WARN")
       }
       // stop at the first failing pass — a deterministic failure shouldn't
       // pay its latency `passes` times

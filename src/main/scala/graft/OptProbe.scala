@@ -26,14 +26,7 @@ object OptProbe {
     val target = args.headOption.getOrElse("dedup_weights")
     val passes = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Verify.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "WARN")
 
     for (p <- 1 to passes) {
       println(s"[optprobe] === $target pass $p ===")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit over the graded queries: per query, the counts that
   * matter at 100 TB — parquet scans (scan reuse), Window operators
   * (single-partition funnels show up here), and shuffles. Run with an
@@ -13,13 +11,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val verbose = args.contains("-v")
     val only = args.filterNot(_ == "-v").toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Verify.localSession("4", "ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       // the populate roundtrips execute full sink writes just to build

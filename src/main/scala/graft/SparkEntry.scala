@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cdc.{CdcCatalog, CdcTableConfig, CdcTableEntry, ChangeFeed, ChangelogBuilder,
-  Compact, PopulateChangelog, QueryData}
+  Compact, QueryData, StagedAppend}
 import graft.ext.{Dedup, DocFeed, EmbFeed, MultiModal, Retrieval, Similarity, TextOps}
 import graft.oracle.{ExtOracle, OrdersCdcOracle}
 
@@ -30,13 +30,13 @@ object SparkEntry {
     val sink = TempDirs.create(prefix)
       .resolve("orders_changelog").toString
     val f = feedFn(s, dir)
-    PopulateChangelog.run(s, f, cfg, sink,
+    StagedAppend.run(s, f, cfg, sink,
       Some(java.sql.Timestamp.valueOf(graft.oracle.OrdersCdcOracle.ResumeMid)))
     // compactBetween: rewrite the sink into a fresh published version MID-
     // STREAM — the second populate must find the HWM and id offset through
     // the version pointer and append to the repacked copy
     if (compactBetween) Compact.compactSink(s, sink)
-    PopulateChangelog.run(s, f, cfg, sink,
+    StagedAppend.run(s, f, cfg, sink,
       Some(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")))
     if (compact) {
       val stats = Compact.compactSink(s, sink)
@@ -78,9 +78,9 @@ object SparkEntry {
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       val toDate = Some(java.sql.Timestamp.valueOf("1995-01-03 00:00:00"))
-      val fo = Future(PopulateChangelog.run(s, feed(s, dir), ordersCfg,
+      val fo = Future(StagedAppend.run(s, feed(s, dir), ordersCfg,
         tmp.resolve("orders_changelog").toString, toDate))
-      val fl = Future(PopulateChangelog.run(s,
+      val fl = Future(StagedAppend.run(s,
         ChangeFeed.fromLineitem(s.read.parquet(s"$dir/lineitem.parquet"),
           materializeDedup = true), lineitemCfg,
         tmp.resolve("lineitem_changelog").toString, toDate))
@@ -137,7 +137,7 @@ object SparkEntry {
     * cdc_populate_roundtrip and friends, which never memoize. */
   private def fullFeedSink(s: SparkSession, dir: String): java.nio.file.Path =
     TempDirs.memoized("graft_full_sink", s"$dir/orders.parquet") { tmp =>
-      PopulateChangelog.run(s, feed(s, dir), ordersCfg,
+      StagedAppend.run(s, feed(s, dir), ordersCfg,
         tmp.resolve("orders_changelog").toString,
         Some(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")))
       ()
@@ -148,7 +148,7 @@ object SparkEntry {
     * read-only DPP row (direct read). */
   private def retentionFullSink(s: SparkSession, dir: String): java.nio.file.Path =
     TempDirs.memoized("graft_retfull_sink", s"$dir/orders.parquet") { tmp =>
-      PopulateChangelog.run(s, ChangeFeed.fromOrdersRetention(orders(s, dir)),
+      StagedAppend.run(s, ChangeFeed.fromOrdersRetention(orders(s, dir)),
         ordersCfg, tmp.resolve("orders_changelog").toString,
         Some(java.sql.Timestamp.valueOf("1999-01-01 00:00:00")))
       ()
@@ -160,7 +160,7 @@ object SparkEntry {
     * because the race mutates the sink. */
   private def preRaceMidSink(s: SparkSession, dir: String): java.nio.file.Path =
     TempDirs.memoized("graft_prerace_mid", s"$dir/orders.parquet") { tmp =>
-      PopulateChangelog.run(s, feed(s, dir), ordersCfg,
+      StagedAppend.run(s, feed(s, dir), ordersCfg,
         tmp.resolve("orders_changelog").toString,
         Some(java.sql.Timestamp.valueOf(graft.oracle.OrdersCdcOracle.ResumeMid)))
       ()
@@ -1127,7 +1127,7 @@ object SparkEntry {
       // the populate is the FIXTURE here (the graded subject is the
       // catalog-resolved windowed read) — memoized, read in place
       val sink = TempDirs.memoized("graft_qd_sink", s"$dir/orders.parquet") { tmp =>
-        PopulateChangelog.run(s, feed(s, dir), ordersCfg,
+        StagedAppend.run(s, feed(s, dir), ordersCfg,
           tmp.resolve("orders_changelog").toString,
           Some(java.sql.Timestamp.valueOf("1995-01-03 00:00:00")))
         ()
@@ -1194,7 +1194,7 @@ object SparkEntry {
     "cdc_populate_roundtrip" -> ((s, dir) => {
       val sink = TempDirs.create("graft_rt")
         .resolve("orders_changelog").toString
-      PopulateChangelog.run(s, feed(s, dir), ordersCfg, sink,
+      StagedAppend.run(s, feed(s, dir), ordersCfg, sink,
         Some(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")))
       graft.cdc.SinkLayout.read(s, sink)
         .select(changelogCols.map(col): _*).orderBy("changelog_id")
@@ -1452,7 +1452,7 @@ object SparkEntry {
       // the multi-day batch-1 populate (the expensive partitioned write)
       // is memoized + copied per invocation — the row prices the race
       val pre = TempDirs.memoized("graft_prerace_ret", s"$dir/orders.parquet") { tmp =>
-        PopulateChangelog.run(s, f, ordersCfg,
+        StagedAppend.run(s, f, ordersCfg,
           tmp.resolve("orders_changelog").toString,
           Some(java.sql.Timestamp.valueOf(graft.oracle.OrdersCdcOracle.RetentionStateMid)))
         ()
@@ -4976,7 +4976,7 @@ object SparkEntry {
     // vs the same changelog oracle
     "cdc_populate_clustered" -> ((s, dir) => {
       val sink = TempDirs.create("graft_pc").resolve("orders_changelog").toString
-      PopulateChangelog.run(s, feed(s, dir), ordersCfg, sink,
+      StagedAppend.run(s, feed(s, dir), ordersCfg, sink,
         Some(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")),
         clusterByKey = true, clusterPartitions = Some(4))
       graft.cdc.SinkLayout.read(s, sink)
@@ -4989,7 +4989,7 @@ object SparkEntry {
     // whose bound is 23:59:59.999999, proving the day is included
     "cdc_query_data_fullday" -> ((s, dir) => {
       val sink = TempDirs.create("graft_qf").resolve("orders_changelog").toString
-      PopulateChangelog.run(s, feed(s, dir), ordersCfg, sink,
+      StagedAppend.run(s, feed(s, dir), ordersCfg, sink,
         Some(java.sql.Timestamp.valueOf("1995-01-03 00:00:00")))
       val cat = new CdcCatalog
       cat.register(CdcTableEntry(ordersCfg, dir, sink))

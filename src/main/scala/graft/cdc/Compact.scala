@@ -1,7 +1,6 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 final case class CompactStats(filesBefore: Long, filesAfter: Long, bytesBefore: Long)
@@ -34,89 +33,21 @@ object Compact {
 
   val DefaultTargetBytes: Long = 128L << 20
 
-  private def dataFiles(spark: SparkSession, dir: Path): Seq[(Path, Long)] = {
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Nil
-    val it = fs.listFiles(dir, true)
-    val out = Seq.newBuilder[(Path, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".") && name.endsWith(".parquet"))
-        out += ((f.getPath, f.getLen))
-    }
-    out.result()
-  }
-
   /** Re-pack the sink at `path` into ~`targetBytes` files, preserving rows
     * exactly, and publish the repacked copy as the sink's new current
-    * version (see [[SinkLayout]]). Returns before/after file counts for
-    * observability. A crash at ANY step leaves the current resolve — and
-    * therefore every reader and the next populate — untouched: the repack
-    * stages in an underscore dir Spark's listing ignores, the marker alone
-    * (no data dir yet) is ignored by the resolver, and only the final
-    * stage→data rename flips visibility; a re-run cleans the leftovers and
-    * re-stages. */
+    * version through [[SinkLayout.swapVersion]] (crash- and reader-safe).
+    * Returns before/after file counts for observability. */
   def compactSink(
       spark: SparkSession,
       path: String,
-      targetBytes: Long = DefaultTargetBytes): CompactStats =
-    // the whole read→repack→publish cycle holds the sink's writer lock: a
-    // batch publish renaming files into the live dir mid-repack would
-    // otherwise split its batch across the version flip (the renamed
-    // prefix repacked into v<N+1>, the tail stranded in the retiring dir)
-    SinkLayout.writerLock(path).synchronized {
-      compactLocked(spark, path, targetBytes)
+      targetBytes: Long = DefaultTargetBytes): CompactStats = {
+    val (before, nextDir) = SinkLayout.swapVersion(spark, path) { (live, liveFiles) =>
+      val n = math.max(1L, (liveFiles.map(_.getLen).sum + targetBytes - 1) / targetBytes).toInt
+      (live
+        .repartitionByRange(n, col("commit_date"), col("changelog_id"))
+        .sortWithinPartitions(col("commit_date"), col("changelog_id")), liveFiles)
     }
-
-  private def compactLocked(
-      spark: SparkSession,
-      path: String,
-      targetBytes: Long): CompactStats = {
-    val fs = SinkLayout.fs(spark, path)
-    val cur = SinkLayout.currentVersion(fs, path)
-    val next = cur.getOrElse(0) + 1
-    val stage = new Path(SinkLayout.stageDir(path, next))
-    val nextDir = new Path(SinkLayout.versionDir(path, next))
-    // a failed earlier attempt's leftovers go FIRST — in the flat case
-    // they live under the live root and would otherwise inflate the
-    // before-stats (and therefore the repack's target file count)
-    fs.delete(stage, true)
-    fs.delete(nextDir, true)
-
-    val liveDir = new Path(SinkLayout.dataDir(spark, path))
-    val before = dataFiles(spark, liveDir)
-    val bytes = before.map(_._2).sum
-    val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-
-    // repack into the UNDERSCORE staging dir: invisible to every reader
-    // (Spark listing skips _-prefixed paths) even when it sits inside a
-    // flat sink's live root. Days already expired by Retention are not
-    // carried into the new version — in-flight readers keep the superseded
-    // version (the grace copy) for one more cycle, same as any repack.
-    val live0 = spark.read.parquet(liveDir.toString)
-    val live = Retention.activeCutoff(fs, path) match {
-      case Some(c) if live0.columns.contains("commit_date") =>
-        live0.where(col("commit_date") >= lit(c.toString))
-      case _ => live0
-    }
-    live
-      .repartitionByRange(n, col("commit_date"), col("changelog_id"))
-      .sortWithinPartitions(col("commit_date"), col("changelog_id"))
-      .write.partitionBy("commit_date").parquet(stage.toString)
-
-    // migrating a FLAT sink: record which root entries the repack just
-    // consumed, so retire() later sweeps exactly those (provenance, not
-    // pattern-matching — written BEFORE publish; a crash here leaves a
-    // manifest for an unpublished version, overwritten by the re-run)
-    if (cur.isEmpty) SinkLayout.recordFlatMigration(fs, path, next)
-
-    // the publish point: marker + stage→data_v<N> rename flips every
-    // subsequent resolve to the repacked copy; the old current stays on
-    // disk for one more cycle (in-flight readers' grace), older versions
-    // retire
-    SinkLayout.publish(fs, path, next)
-    SinkLayout.retire(fs, path, next)
-    CompactStats(before.size.toLong, dataFiles(spark, nextDir).size.toLong, bytes)
+    val after = SinkLayout.parquetFiles(SinkLayout.fs(spark, path), nextDir)
+    CompactStats(before.size.toLong, after.size.toLong, before.map(_.getLen).sum)
   }
 }

@@ -1,7 +1,6 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 final case class ForgetStats(rowsBefore: Long, rowsDropped: Long)
@@ -26,36 +25,28 @@ final case class ForgetStats(rowsBefore: Long, rowsDropped: Long)
   * broadcasts (a deletion request batch is small by nature) into a
   * LEFT ANTI join, and the rewrite re-partitions by `commit_date` so each
   * date directory is written by the tasks owning its data (the
-  * partitioned-append pattern — never one task per date).
+  * partitioned-append pattern — never one task per date). The before and
+  * kept row counts are observed on that one write — no extra count job.
   */
 object Forget {
 
+  /** Remove every row of `forgetSet`'s keys from the visible sink and
+    * publish the rest as the new version. Days the retention cutoff already
+    * hides are neither counted nor carried forward. */
   def forgetKeys(
       spark: SparkSession,
       path: String,
       keyCols: Seq[String],
-      forgetSet: DataFrame): ForgetStats =
-    SinkLayout.writerLock(path).synchronized {
-      val fs = SinkLayout.fs(spark, path)
-      val cur = SinkLayout.currentVersion(fs, path)
-      val next = cur.getOrElse(0) + 1
-      val stage = new Path(SinkLayout.stageDir(path, next))
-      val nextDir = new Path(SinkLayout.versionDir(path, next))
-      // leftovers of a crashed earlier attempt go first
-      fs.delete(stage, true)
-      fs.delete(nextDir, true)
-
-      val live = spark.read.parquet(SinkLayout.dataDir(spark, path))
-      val before = live.count()
-      val kept = live.join(broadcast(forgetSet.select(keyCols.map(col): _*).distinct()),
-        keyCols, "left_anti")
-      kept
-        .repartition(col("commit_date"))
-        .write.partitionBy("commit_date").parquet(stage.toString)
-      if (cur.isEmpty) SinkLayout.recordFlatMigration(fs, path, next)
-      SinkLayout.publish(fs, path, next)
-      SinkLayout.retire(fs, path, next)
-      val after = spark.read.parquet(SinkLayout.dataDir(spark, path)).count()
-      ForgetStats(before, before - after)
+      forgetSet: DataFrame): ForgetStats = {
+    val before = Observation()
+    val kept = Observation()
+    SinkLayout.swapVersion(spark, path) { (live, _) =>
+      (live.observe(before, count(lit(1)).as("n"))
+        .join(broadcast(forgetSet.select(keyCols.map(col): _*).distinct()), keyCols, "left_anti")
+        .observe(kept, count(lit(1)).as("n"))
+        .repartition(col("commit_date")), ())
     }
+    val n = before.get("n").asInstanceOf[Long]
+    ForgetStats(n, n - kept.get("n").asInstanceOf[Long])
+  }
 }

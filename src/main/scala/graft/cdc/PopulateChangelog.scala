@@ -1,20 +1,16 @@
 package graft.cdc
 
-import java.sql.Timestamp
-
-import scala.util.{Failure, Success, Try}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 final case class PopulateResult(rowsInserted: Long, message: String)
 
-/** Batch orchestration ≙ usp_cdc_populate_changelog (the whole procedure).
-  *
-  * One invocation = one micro-batch: read checkpoint from the sink, window
-  * the feed, run ChangelogBuilder, sort + assign ids, append. The audit
-  * columns (created_dt/created_by, DDL defaults :151-152,:172-173) are
-  * stamped at write time.
+/** The populate's data plane ≙ usp_cdc_populate_changelog's INSERT …
+  * ORDER BY (:390-394): ChangelogBuilder, sort + assign ids, stamp the
+  * audit columns (created_dt/created_by, DDL defaults :151-152,:172-173),
+  * partitioned write. The procedure's control plane — checkpoint window, id offset,
+  * the one-transaction commit — is [[StagedAppend]], the only caller; this
+  * object never writes into a live sink.
   *
   * Scale notes (SURVEY §7.5.8): the sink is partitioned by
   * `commit_date = date(commit_time)` so usp_cdc_query_data's time-range scan
@@ -33,39 +29,33 @@ object PopulateChangelog {
     * through a single window partition. */
   val AutoDistributeBytes: Long = 2L << 30
 
-  /** Id-path chooser: forced, or the optimizer's size estimate exceeds the
-    * threshold. `optimizedPlan.stats` is a plan-time UPPER bound — without
-    * CBO a Filter passes its child's sizeInBytes through, so a small
-    * windowed batch over a huge source still reads as huge and
-    * auto-distributes. That errs in the SAFE direction (the distributed
-    * path costs one extra pass; the single-window path risks one task
-    * sorting an unbounded batch), and needs no extra Spark job. */
-  private[cdc] def shouldDistribute(batch: DataFrame, forced: Boolean, thresholdBytes: Long): Boolean =
-    forced || batch.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(thresholdBytes)
+  /** Id-path chooser: the optimizer's size estimate exceeds the threshold.
+    * `optimizedPlan.stats` is a plan-time UPPER bound — without CBO a
+    * Filter passes its child's sizeInBytes through, so a small windowed
+    * batch over a huge source still reads as huge and auto-distributes.
+    * That errs in the SAFE direction (the distributed path costs one extra
+    * pass; the single-window path risks one task sorting an unbounded
+    * batch), and needs no extra Spark job. */
+  private[cdc] def shouldDistribute(batch: DataFrame, thresholdBytes: Long): Boolean =
+    batch.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(thresholdBytes)
 
-  /** Build + id-assign + stamp + append one batch of feed rows; returns the
-    * appended row count. Shared by the batch orchestrator and the streaming
-    * foreachBatch sink. The row count rides on the write itself via
-    * `observe` — no re-evaluation and, critically, no O(history) rescan of
-    * the sink (the reference re-counts the whole changelog, :397-399).
-    *
-    * @param distributedIds force the distributed id path; when false the
-    *        path still auto-upgrades above `autoDistributeBytes`
-    */
-  def stampAndAppend(
+  /** Build + id-assign + stamp + write one batch of feed rows into
+    * `stageDir` (a journal stage, never the live sink); returns the written
+    * row count. The row count rides on the write itself via `observe` — no
+    * re-evaluation and, critically, no O(history) rescan of the sink (the
+    * reference re-counts the whole changelog, :397-399). */
+  private[cdc] def stampAndAppend(
       spark: SparkSession,
       batch: DataFrame,
       cfg: CdcTableConfig,
-      changelogPath: String,
+      stageDir: String,
       offset: Long,
-      distributedIds: Boolean = false,
-      clusterByKey: Boolean = false,
-      clusterPartitions: Option[Int] = None,
-      autoDistributeBytes: Long = AutoDistributeBytes): Long = {
+      clusterByKey: Boolean,
+      clusterPartitions: Option[Int]): Long = {
     val obs = org.apache.spark.sql.Observation()
     val changelog = ChangelogBuilder.build(batch, cfg)
     val withIds =
-      if (shouldDistribute(batch, distributedIds, autoDistributeBytes))
+      if (shouldDistribute(batch, AutoDistributeBytes))
         ChangelogBuilder.withIdsDistributed(changelog, cfg, offset)
       else ChangelogBuilder.withIds(changelog, cfg, offset)
     val stamped = withIds
@@ -108,55 +98,7 @@ object PopulateChangelog {
     arranged.write
       .mode(SaveMode.Append)
       .partitionBy("commit_date")
-      // append into the CURRENT version dir (sink root until the first
-      // compaction) — the same copy sinkState read the HWM/offset from
-      .parquet(SinkLayout.dataDir(spark, changelogPath))
+      .parquet(stageDir)
     obs.get("n").asInstanceOf[Long]
-  }
-
-  def run(
-      spark: SparkSession,
-      feed: DataFrame,
-      cfg0: CdcTableConfig,
-      changelogPath: String,
-      toDate: Option[Timestamp] = None,
-      distributedIds: Boolean = false,
-      clusterByKey: Boolean = false,
-      clusterPartitions: Option[Int] = None,
-      autoDistributeBytes: Long = AutoDistributeBytes): PopulateResult = {
-
-    // ≙ RTRIM(LTRIM(@tableName/@tablePK)) (:77-80) — P5 param normalization
-    val cfg = cfg0.copy(
-      tableName = cfg0.tableName.trim,
-      keyCols = cfg0.keyCols.map(_.trim))
-
-    // ONE sink snapshot drives both the window HWM and the id offset — they
-    // can never disagree, and the sink is aggregated once per batch.
-    val sink = Checkpoint.sinkState(spark, changelogPath)
-    val window = Checkpoint.computeWindow(feed, sink, toDate, cfg.compatMode)
-    val offset = sink.map(_._2).getOrElse(0L)
-    // The builder references the windowed feed from four sub-trees (before/
-    // after/delete/insert); caching evaluates the window scan once
-    // (SURVEY §7.5.8) instead of four times.
-    val windowed = Checkpoint.applyWindow(feed, window).cache()
-
-    val result = Try(stampAndAppend(spark, windowed, cfg, changelogPath, offset,
-      distributedIds, clusterByKey, clusterPartitions, autoDistributeBytes))
-    windowed.unpersist()
-
-    result match {
-      case Success(n) =>
-        PopulateResult(n, s"$n ${cfg.tableName} changes were inserted to the ${cfg.tableName}_changelog.")
-      case Failure(e: CdcValidationException) => throw e
-      case Failure(e) if cfg.compatMode =>
-        // ≙ the reference's CATCH block soft success (:401-409). Swallowing a
-        // failed WRITE as "no changes" masks data loss, so it is compatMode-
-        // only; default mode rethrows. Unlike the reference (a known pain
-        // point, :235-239) the cause is logged.
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"populate ${cfg.tableName} failed", e)
-        PopulateResult(0, s"No ${cfg.tableName} changes were detected between the date ranges provided!")
-      case Failure(e) => throw e
-    }
   }
 }

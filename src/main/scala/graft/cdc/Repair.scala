@@ -16,16 +16,23 @@ import org.apache.spark.sql.functions._
   * DETERMINISTIC total sort led by commit_time
   * (ChangelogBuilder.sortColumns ≙ the reference's insert ORDER BY,
   * usp_cdc_populate_changelog.sql:390-394), so a day's rows form an
-  * id-CONTIGUOUS block whose offset is exactly the count of sink rows on
-  * earlier days — recoverable from the surviving partitions. And the
-  * changelog transform is transaction-local (pairing groups share one
-  * commit_time; sentinels are row-local), so building from the
-  * day-windowed feed equals restricting the full build to the day.
+  * id-CONTIGUOUS block whose offset is the highest id on earlier days —
+  * recoverable from the surviving partitions, and unchanged by maintenance
+  * that never reassigns ids (compaction, retention). And the changelog
+  * transform is transaction-local (pairing groups share one commit_time;
+  * sentinels are row-local), so building from the day-windowed feed equals
+  * restricting the full build to the day.
+  *
+  * The offset rule's limits: with a retention cutoff active and no visible
+  * row before the day, the expired days may have held the offset — the
+  * repair refuses; and a forget that removed the highest-id row(s) before
+  * the day makes the surviving max too low — not detectable from the sink.
   *
   * Scale shape: the repair reads the feed pruned to ONE day (the window
-  * predicate pushes to the scan like every windowed populate), counts the
-  * surviving prefix with a partition-pruned aggregate, and appends through
-  * the same stamp path as populate — never rewrites healthy partitions.
+  * predicate pushes to the scan like every windowed populate), takes the
+  * surviving prefix's max id with a partition-pruned aggregate, and commits
+  * through the populate's journal ([[StagedAppend.stageAndPublish]]) —
+  * never rewrites healthy partitions.
   */
 object Repair {
 
@@ -56,19 +63,27 @@ object Repair {
       sinkPath: String,
       day: LocalDate,
       originalHwm: Option[java.sql.Timestamp] = None): Long = {
+    StagedAppend.repair(spark, sinkPath)
     val fs = SinkLayout.fs(spark, sinkPath)
     val partDir = new Path(SinkLayout.dataDir(spark, sinkPath), s"commit_date=$day")
     require(!fs.exists(partDir),
       s"partition commit_date=$day still exists — drop it before repairing")
     // ONE sink aggregate yields both control-plane scalars: the id offset
-    // (surviving rows on EARLIER days — the filter prunes partitions) and
-    // the surviving HWM (like populate's own sink snapshot, so the two
-    // can never disagree)
+    // (the max id on EARLIER days — the filter prunes partitions) and the
+    // surviving HWM (like populate's own sink snapshot, so the two can
+    // never disagree)
+    val dayLit = lit(java.sql.Date.valueOf(day))
     val snap = SinkLayout.read(spark, sinkPath).agg(
-      count(when(col("commit_date") < lit(java.sql.Date.valueOf(day)), lit(1)))
-        .as("__offset"),
+      max(when(col("commit_date") < dayLit, col("changelog_id"))).as("__offset"),
       max(col("commit_time")).as("__hwm")).head()
-    val offset = snap.getLong(0)
+    val offset =
+      if (!snap.isNullAt(0)) snap.getLong(0)
+      else {
+        val cutoff = Retention.activeCutoff(fs, sinkPath)
+        require(cutoff.isEmpty, s"no row before commit_date=$day is visible " +
+          s"under the retention cutoff ${cutoff.get} — the expired days' ids are unknown")
+        0L
+      }
     val hwm = originalHwm.getOrElse {
       val surviving = snap.getTimestamp(1)
       require(surviving != null &&
@@ -79,10 +94,9 @@ object Repair {
       surviving
     }
     val windowed = feed
-      .where(to_date(col("commit_time")) === lit(java.sql.Date.valueOf(day)) &&
-        col("commit_time") <= lit(hwm))
+      .where(to_date(col("commit_time")) === dayLit && col("commit_time") <= lit(hwm))
       .cache()
-    try PopulateChangelog.stampAndAppend(spark, windowed, cfg, sinkPath, offset)
+    try StagedAppend.stageAndPublish(spark, windowed, cfg, sinkPath, offset)
     finally windowed.unpersist()
   }
 }

@@ -1,6 +1,5 @@
 package graft.cdc
 
-import java.nio.charset.StandardCharsets
 import java.time.LocalDate
 
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -52,24 +51,13 @@ object Retention {
   def activeCutoff(fs: FileSystem, root: String): Option[LocalDate] = {
     val p = cutoffPath(root)
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(LocalDate.parse(
-        scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim))
-      finally in.close()
-    }
+    else Some(LocalDate.parse(SinkLayout.readLines(fs, p).mkString.trim))
   }
 
   /** [[activeCutoff]] resolving the filesystem from the session (the
     * public entry point for callers outside the cdc package). */
   def activeCutoff(spark: SparkSession, root: String): Option[LocalDate] =
     activeCutoff(SinkLayout.fs(spark, root), root)
-
-  private def writeCutoff(fs: FileSystem, root: String, d: LocalDate): Unit = {
-    val out = fs.create(cutoffPath(root), true)
-    try out.write(d.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
 
   /** Expire all `commit_date` partitions strictly before `cutoff`'s day.
     * Returns the NEWLY expired partition dates (gone from the logical table
@@ -93,7 +81,8 @@ object Retention {
     prev.foreach(p => parts.filter(_._2.isBefore(p))
       .foreach { case (dir, _) => fs.delete(dir, true) })
     // phase 1: the visibility flip for everything expired as of THIS call
-    if (prev.forall(eff.isAfter)) writeCutoff(fs, path, eff)
+    if (prev.forall(eff.isAfter))
+      SinkLayout.writeLines(fs, cutoffPath(path), Seq(eff.toString))
     parts.collect {
       case (_, d) if d.isBefore(eff) && prev.forall(!d.isBefore(_)) => d
     }.sorted

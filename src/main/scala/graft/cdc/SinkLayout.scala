@@ -1,7 +1,10 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Versioned sink layout — the reader-safe indirection under compaction.
   *
@@ -78,7 +81,7 @@ object SinkLayout {
   def currentVersion(spark: SparkSession, root: String): Option[Int] =
     currentVersion(fs(spark, root), root)
 
-  private[cdc] def versionDir(root: String, n: Int): String = s"$root/data_v$n"
+  private def versionDir(root: String, n: Int): String = s"$root/data_v$n"
 
   /** The directory reads plan against and appends land in: the current
     * version dir, or the sink root itself for a flat sink. */
@@ -91,7 +94,7 @@ object SinkLayout {
     * sink's root is invisible to every reader — a bare `data_v<n>` dir
     * there would instead join the root's partition discovery and throw
     * "conflicting directory structures". */
-  private[cdc] def stageDir(root: String, n: Int): String = s"$root/_stage_v$n"
+  private def stageDir(root: String, n: Int): String = s"$root/_stage_v$n"
 
   /** Publish a fully-staged version `n`: create the `_vn.ok` marker FIRST
     * (idempotent — a marker alone, with no data dir, is ignored by
@@ -101,7 +104,7 @@ object SinkLayout {
     * re-run re-stages version n from scratch. (Directory rename is atomic
     * on local/HDFS filesystems; an object-store deployment needs a
     * manifest committer here, like any non-transactional parquet table.) */
-  private[cdc] def publish(fs: FileSystem, root: String, n: Int): Unit = {
+  private def publish(fs: FileSystem, root: String, n: Int): Unit = {
     val marker = new Path(root, s"_v$n.ok")
     if (!fs.exists(marker)) fs.create(marker, false).close()
     require(fs.rename(new Path(stageDir(root, n)), new Path(versionDir(root, n))),
@@ -111,12 +114,12 @@ object SinkLayout {
   private val FlatDataRe = "commit_date=.*".r
   private val ManifestRe = "_flat_v(\\d+)\\.manifest".r
 
-  private[cdc] def manifestPath(root: String, n: Int): Path =
+  private def manifestPath(root: String, n: Int): Path =
     new Path(root, s"_flat_v$n.manifest")
 
   /** Root-level entries that constitute a FLAT sink's data plane — exactly
     * what `spark.read.parquet(root)` consumes and the repack migrates. */
-  private def isFlatData(st: org.apache.hadoop.fs.FileStatus): Boolean =
+  private def isFlatData(st: FileStatus): Boolean =
     st.getPath.getName match {
       case FlatDataRe() => true
       case "_SUCCESS" => true
@@ -130,19 +133,9 @@ object SinkLayout {
     * component parks at the sink root AFTER migration is never touched.
     * Written before publish: a crash leaves a manifest for an unpublished
     * version, which the re-run simply overwrites. */
-  private[cdc] def recordFlatMigration(fs: FileSystem, root: String, n: Int): Unit = {
-    val entries = fs.listStatus(new Path(root)).toSeq.filter(isFlatData)
-      .map(_.getPath.getName).sorted
-    val out = fs.create(manifestPath(root, n), true)
-    try out.write(entries.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readManifest(fs: FileSystem, p: Path): Seq[String] = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
-    finally in.close()
-  }
+  private def recordFlatMigration(fs: FileSystem, root: String, n: Int): Unit =
+    writeLines(fs, manifestPath(root, n),
+      fs.listStatus(new Path(root)).toSeq.filter(isFlatData).map(_.getPath.getName).sorted)
 
   /** Drop superseded versions older than `current - 1`: the previous
     * version is RETAINED as the in-flight readers' grace copy. The
@@ -152,7 +145,7 @@ object SinkLayout {
     * auxiliary state other components keep at the sink root (e.g. the
     * streaming populate's `_applied_batches` exactly-once markers) AND any
     * foreign file parked there after migration survive every compaction. */
-  private[cdc] def retire(fs: FileSystem, root: String, current: Int): Unit = {
+  private def retire(fs: FileSystem, root: String, current: Int): Unit = {
     val rootPath = new Path(root)
     fs.listStatus(rootPath).toSeq.foreach { st =>
       val name = st.getPath.getName
@@ -163,7 +156,7 @@ object SinkLayout {
         case ManifestRe(n) if n.toInt < current =>
           // the flat layout this manifest migrated is now past grace:
           // sweep exactly the recorded entries, then the manifest itself
-          readManifest(fs, st.getPath)
+          readLines(fs, st.getPath)
             .foreach(e => fs.delete(new Path(rootPath, e), true))
           fs.delete(st.getPath, false)
         case _ => ()
@@ -176,13 +169,78 @@ object SinkLayout {
     * PARTITION filter, so expired days vanish from the logical table the
     * moment the marker advances — their directories (still on disk for one
     * grace cycle, [[Retention]]) are partition-pruned, never listed into. */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val df = spark.read.parquet(dataDir(spark, root))
+  def read(spark: SparkSession, root: String): DataFrame =
+    readDir(spark, root, dataDir(spark, root))
+
+  private def readDir(spark: SparkSession, root: String, dir: String): DataFrame = {
+    val df = spark.read.parquet(dir)
     Retention.activeCutoff(fs(spark, root), root) match {
       case Some(c) if df.columns.contains("commit_date") =>
-        df.where(org.apache.spark.sql.functions.col("commit_date") >=
-          org.apache.spark.sql.functions.lit(c.toString))
+        df.where(col("commit_date") >= lit(c.toString))
       case _ => df
     }
+  }
+
+  /** The one versioned swap behind every full-sink rewrite (compaction,
+    * subject deletion). The whole cycle holds the writer lock: a batch
+    * publish renaming files into the live dir mid-rewrite would otherwise
+    * split its batch across the version flip. In it: sweep a crashed
+    * attempt's leftovers, read the live version through the retention
+    * cutoff (expired days are not carried forward — the superseded version
+    * is the grace copy), write `arrange`'s frame partitioned by
+    * `commit_date` into the underscore stage, record the flat migration
+    * when there is one, then [[publish]] and [[retire]]. A crash at any
+    * step leaves the current resolve untouched; a re-run stages afresh.
+    * `arrange` gets the live frame and its data files (listed after the
+    * leftover sweep) and returns the frame to write plus a value handed
+    * back with the new version's dir. */
+  private[cdc] def swapVersion[A](spark: SparkSession, root: String)(
+      arrange: (DataFrame, Seq[FileStatus]) => (DataFrame, A)): (A, Path) =
+    writerLock(root).synchronized {
+      val hfs = fs(spark, root)
+      val cur = currentVersion(hfs, root)
+      val next = cur.getOrElse(0) + 1
+      val stage = new Path(stageDir(root, next))
+      val nextDir = new Path(versionDir(root, next))
+      // in the flat case the leftovers live under the live root: they go
+      // before the live files are listed
+      hfs.delete(stage, true)
+      hfs.delete(nextDir, true)
+      val liveDir = cur.map(versionDir(root, _)).getOrElse(root)
+      val (out, a) = arrange(readDir(spark, root, liveDir),
+        parquetFiles(hfs, new Path(liveDir)))
+      out.write.partitionBy("commit_date").parquet(stage.toString)
+      if (cur.isEmpty) recordFlatMigration(hfs, root, next)
+      publish(hfs, root, next)
+      retire(hfs, root, next)
+      (a, nextDir)
+    }
+
+  /** Every parquet data file under `dir`, recursively, skipping `_`/`.`-
+    * prefixed entries at every level (what Spark's listing skips: stages,
+    * markers, checksums). */
+  private[cdc] def parquetFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if (name.startsWith("_") || name.startsWith(".")) Nil
+      else if (st.isDirectory) parquetFiles(fs, st.getPath)
+      else if (name.endsWith(".parquet")) Seq(st)
+      else Nil
+    }
+
+  /** The sink's small control files (journal and migration manifests, the
+    * retention cutoff): UTF-8 lines, written whole with overwrite. */
+  private[cdc] def writeLines(fs: FileSystem, p: Path, lines: Seq[String]): Unit = {
+    val out = fs.create(p, true)
+    try out.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** The non-empty lines of a file written by [[writeLines]]. */
+  private[cdc] def readLines(fs: FileSystem, p: Path): Seq[String] = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
+    finally in.close()
   }
 }

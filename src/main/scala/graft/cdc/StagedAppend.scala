@@ -2,41 +2,49 @@ package graft.cdc
 
 import java.sql.Timestamp
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import scala.util.{Failure, Success, Try}
 
-/** Crash-safe batch populate: the exactly-once upgrade of
-  * [[PopulateChangelog.run]] for the failure mode a plain parquet append
-  * cannot survive — a populate that dies DURING the commit, leaving a
-  * subset of its files visible. The reference never faces this (one SQL
-  * Server transaction, usp_cdc_populate_changelog.sql:246-253 commits
-  * atomically); a 1000-executor Spark job appending hundreds of partition
-  * files has no such transaction, so the append is journaled instead:
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The batch populate ≙ usp_cdc_populate_changelog (the whole procedure),
+  * and the one way rows reach a changelog sink.
+  *
+  * One invocation = one micro-batch: read the checkpoint from the sink,
+  * window the feed, build + id-assign + stamp the batch
+  * ([[PopulateChangelog.stampAndAppend]]) and commit it through a journal.
+  * The reference commits each populate as one SQL Server transaction
+  * (usp_cdc_populate_changelog.sql:246-253), so a batch lands whole or not
+  * at all; a 1000-executor Spark job appending hundreds of partition files
+  * has no such transaction, so the append is journaled instead:
   *
   *  1. the batch is written to an UNDERSCORE staging dir inside the sink
-  *     root (`_stage_batch_<key>` — invisible to Spark listings, like
+  *     root (`_stage_batch_<offset>` — invisible to Spark listings, like
   *     compaction's `_stage_v<N>`),
-  *  2. a MANIFEST of (staged file → destination path) is finalized — one
-  *     atomic rename — before any file moves,
-  *  3. staged files are renamed into their `commit_date=` partitions,
+  *  2. a MANIFEST of every destination path is finalized — one atomic
+  *     rename — before any file moves,
+  *  3. staged files are renamed into their `commit_date=` partitions, then
+  *     the writer's marker file (if it has one) is created,
   *  4. the manifest is deleted (the commit point), then the stage dir.
   *
   * [[repair]] makes any crash point recoverable from the journal alone:
   * a stage WITH a manifest may have published a partial batch — every
   * destination listed in it is deleted (returning the sink byte-identical
-  * to the pre-batch state) and the stage is dropped; a stage WITHOUT a
-  * manifest either never published a file or fully committed through
-  * step 4's first half — the destinations are correct in both cases and
-  * only the leftover dir is swept. Re-running the populate after repair
-  * recomputes the SAME window from the restored HWM and re-assigns the
-  * SAME ids from the restored offset, so recovery is deterministic, not
-  * just at-least-once (graded end-to-end by `cdc_populate_crash_resume`).
+  * to the pre-batch state, marker included) and the stage is dropped; a
+  * stage WITHOUT a manifest either never published a file or fully
+  * committed through step 4's first half — the destinations are correct in
+  * both cases and only the leftover dir is swept. Every writer — this
+  * populate, the streaming micro-batch (`StreamingPopulate.appendBatch`)
+  * and the partition backfill ([[Repair.repairDay]]) — runs [[repair]]
+  * before its sink snapshot and commits through [[stageAndPublish]], so a
+  * torn write always repairs by replay: the re-run recomputes the SAME
+  * window from the restored HWM and re-assigns the SAME ids from the
+  * restored offset (graded end-to-end by `cdc_populate_crash_resume`).
   *
   * Scale notes: the journal adds O(files-per-batch) driver-side renames —
-  * metadata work, no data rewrite — and the staging write is the same
-  * partitioned shuffle the direct append runs. Single-writer discipline
-  * (populate/compaction/retention from one owner) is assumed, as
-  * everywhere in this sink layout.
+  * metadata work, no data rewrite — and the staging write is the batch's one
+  * partitioned shuffle. Single-writer discipline (populate/compaction/
+  * retention from one owner) is assumed, as everywhere in this sink layout.
   */
 object StagedAppend {
 
@@ -48,90 +56,129 @@ object StagedAppend {
     * it to simulate a driver crash mid-commit. */
   type PublishHook = Int => Unit
 
-  /** Run one populate batch with journaled publication. Self-heals first:
-    * any stage left by a crashed predecessor is rolled back before the
-    * window is computed, so the HWM/offset snapshot never sees torn state. */
+  /** Run one populate batch. Self-heals first: any stage left by a crashed
+    * predecessor is rolled back before the window is computed, so the
+    * HWM/offset snapshot never sees torn state.
+    *
+    * @param clusterByKey range-cluster each date partition's files on the
+    *        key (see [[PopulateChangelog.stampAndAppend]])
+    * @param clusterPartitions pins the clustered write's file count
+    */
   def run(
       spark: SparkSession,
-      feed: org.apache.spark.sql.DataFrame,
+      feed: DataFrame,
       cfg0: CdcTableConfig,
       changelogPath: String,
       toDate: Option[Timestamp] = None,
-      distributedIds: Boolean = false,
+      clusterByKey: Boolean = false,
+      clusterPartitions: Option[Int] = None,
       publishHook: PublishHook = _ => (),
       prePublishHook: () => Unit = () => ()): PopulateResult = {
 
     repair(spark, changelogPath)
 
+    // ≙ RTRIM(LTRIM(@tableName/@tablePK)) (:77-80) — P5 param normalization
     val cfg = cfg0.copy(
       tableName = cfg0.tableName.trim,
       keyCols = cfg0.keyCols.map(_.trim))
+    // ONE sink snapshot drives both the window HWM and the id offset — they
+    // can never disagree, and the sink is aggregated once per batch.
     val sink = Checkpoint.sinkState(spark, changelogPath)
     val window = Checkpoint.computeWindow(feed, sink, toDate, cfg.compatMode)
     val offset = sink.map(_._2).getOrElse(0L)
+    // The builder references the windowed feed from four sub-trees (before/
+    // after/delete/insert); caching evaluates the window scan once
+    // (SURVEY §7.5.8) instead of four times.
     val windowed = Checkpoint.applyWindow(feed, window).cache()
-    try {
-      // a deterministic batch key: the same (window, offset) re-run after a
-      // repair stages under the same name — and the stage is re-created
-      // from scratch either way
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"${window.fromTime}|${window.toTime}|$offset".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      val hfs = SinkLayout.fs(spark, changelogPath)
-      val stageRoot = new Path(changelogPath, s"$StagePrefix$key")
-      if (hfs.exists(stageRoot)) hfs.delete(stageRoot, true)
+    val result = Try(stageAndPublish(spark, windowed, cfg, changelogPath, offset,
+      clusterByKey = clusterByKey, clusterPartitions = clusterPartitions,
+      publishHook = publishHook, prePublishHook = prePublishHook))
+    windowed.unpersist()
 
-      // stage the batch: same build→ids→stamp→partitioned-write as the
-      // direct path, landing in the stage dir (dataDir of a pointer-less
-      // dir = the dir itself)
-      val n = PopulateChangelog.stampAndAppend(
-        spark, windowed, cfg, stageRoot.toString, offset, distributedIds)
-
-      // test/graded seam: the window between staging and publication —
-      // where a concurrent compaction would swap the version pointer
-      prePublishHook()
-      // dataDir resolves INSIDE the writer lock: a compaction that
-      // publishes data_v<N+1> before we get here is fine (it repacked
-      // exactly the already-published rows — the underscore stage is
-      // invisible to it — and the publish targets the NEW current dir);
-      // one flipping DURING the rename loop is excluded by the lock
-      SinkLayout.writerLock(changelogPath).synchronized {
-        publish(hfs, stageRoot,
-          new Path(SinkLayout.dataDir(spark, changelogPath)), publishHook)
-      }
-      PopulateResult(n,
-        s"$n ${cfg.tableName} changes were inserted to the ${cfg.tableName}_changelog.")
-    } finally windowed.unpersist()
+    result match {
+      case Success(n) =>
+        PopulateResult(n, s"$n ${cfg.tableName} changes were inserted to the ${cfg.tableName}_changelog.")
+      case Failure(e: CdcValidationException) => throw e
+      case Failure(e) if cfg.compatMode =>
+        // ≙ the reference's CATCH block soft success (:401-409). Swallowing a
+        // failed WRITE as "no changes" masks data loss, so it is compatMode-
+        // only; default mode rethrows. Unlike the reference (a known pain
+        // point, :235-239) the cause is logged, and the torn batch is rolled
+        // back so "no changes" holds for the sink too.
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"populate ${cfg.tableName} failed", e)
+        repair(spark, changelogPath)
+        PopulateResult(0, s"No ${cfg.tableName} changes were detected between the date ranges provided!")
+      case Failure(e) => throw e
+    }
   }
 
-  /** Steps 2–4: manifest, rename, commit. */
+  /** Stage a prepared batch (ids continue from `offset`) and publish it
+    * through the journal; returns the row count. The caller runs [[repair]]
+    * before taking its offset snapshot. `marker`, a sink-root-relative
+    * path, is the batch's last journal destination: it is rolled back with
+    * the rows, so its presence means the whole batch committed. */
+  private[graft] def stageAndPublish(
+      spark: SparkSession,
+      batch: DataFrame,
+      cfg: CdcTableConfig,
+      changelogPath: String,
+      offset: Long,
+      marker: Option[String] = None,
+      clusterByKey: Boolean = false,
+      clusterPartitions: Option[Int] = None,
+      publishHook: PublishHook = _ => (),
+      prePublishHook: () => Unit = () => ()): Long = {
+    val fs = SinkLayout.fs(spark, changelogPath)
+    // keyed by the offset: a replay after repair stages under the same name,
+    // and the stage is re-created from scratch either way
+    val stageRoot = new Path(changelogPath, s"$StagePrefix$offset")
+    fs.delete(stageRoot, true)
+    val n = PopulateChangelog.stampAndAppend(spark, batch, cfg, stageRoot.toString,
+      offset, clusterByKey, clusterPartitions)
+
+    // test/graded seam: the window between staging and publication —
+    // where a concurrent compaction would swap the version pointer
+    prePublishHook()
+    // dataDir resolves INSIDE the writer lock: a compaction that
+    // publishes data_v<N+1> before we get here is fine (it repacked
+    // exactly the already-published rows — the underscore stage is
+    // invisible to it — and the publish targets the NEW current dir);
+    // one flipping DURING the rename loop is excluded by the lock
+    SinkLayout.writerLock(changelogPath).synchronized {
+      publish(fs, stageRoot, new Path(SinkLayout.dataDir(spark, changelogPath)),
+        marker.map(new Path(changelogPath, _)), publishHook)
+    }
+    n
+  }
+
+  /** Steps 2–4: manifest, renames + marker, commit. */
   private def publish(fs: FileSystem, stageRoot0: Path, dataDir: Path,
-      hook: PublishHook): Unit = {
+      marker: Option[Path], hook: PublishHook): Unit = {
     // listStatus returns FS-qualified paths (file:/…, hdfs://…); qualify
     // the roots the same way or the relative-path strip silently fails
     val stageRoot = fs.makeQualified(stageRoot0)
-    val staged = listParquet(fs, stageRoot)
-    val moves = staged.map { p =>
+    val moves = SinkLayout.parquetFiles(fs, stageRoot).map { st =>
       // stage-relative path (commit_date=<d>/part-*.parquet) → same
       // relative path under the current data dir; part-file names carry
       // the writing job's UUID, so destinations never collide
-      val rel = fs.makeQualified(p).toString.stripPrefix(stageRoot.toString).stripPrefix("/")
-      require(!rel.contains(":"), s"unstrippable staged path $p under $stageRoot")
-      (p, new Path(dataDir, rel))
+      val rel = fs.makeQualified(st.getPath).toString.stripPrefix(stageRoot.toString).stripPrefix("/")
+      require(!rel.contains(":"), s"unstrippable staged path ${st.getPath} under $stageRoot")
+      (st.getPath, new Path(dataDir, rel))
     }
     // finalize the manifest atomically BEFORE the first rename
+    val manifest = new Path(stageRoot, ManifestName)
     val tmp = new Path(stageRoot, ManifestName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(moves.map { case (s, d) => s"$s\t$d" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.rename(tmp, new Path(stageRoot, ManifestName))
+    SinkLayout.writeLines(fs, tmp, (moves.map(_._2) ++ marker).map(_.toString))
+    fs.rename(tmp, manifest)
 
     moves.zipWithIndex.foreach { case ((src, dst), i) =>
       fs.mkdirs(dst.getParent)
       require(fs.rename(src, dst), s"publish rename failed: $src -> $dst")
       hook(i + 1)
     }
-    fs.delete(new Path(stageRoot, ManifestName), false) // the commit point
+    marker.foreach(m => fs.create(m, true).close())
+    fs.delete(manifest, false) // the commit point
     fs.delete(stageRoot, true)
   }
 
@@ -145,32 +192,17 @@ object StagedAppend {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(StagePrefix))
     stages.foreach { st =>
       val manifest = new Path(st.getPath, ManifestName)
-      if (fs.exists(manifest)) {
-        // a partial publish may have landed any prefix of these — delete
-        // every destination that exists, restoring the pre-batch sink
-        val in = fs.open(manifest)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        lines.filter(_.nonEmpty).foreach { line =>
-          val dst = new Path(line.split('\t')(1))
-          if (fs.exists(dst)) fs.delete(dst, false)
-        }
-      }
+      // a partial publish may have landed any prefix of these — delete
+      // every destination that exists, restoring the pre-batch sink. The
+      // destination is a line's last tab-separated field (older manifests
+      // also name the staged source).
+      if (fs.exists(manifest))
+        SinkLayout.readLines(fs, manifest).map(line => new Path(line.split('\t').last))
+          .foreach(dst => if (fs.exists(dst)) fs.delete(dst, false))
       // no manifest: either nothing was published or the batch fully
       // committed — the destinations are correct either way
       fs.delete(st.getPath, true)
     }
     stages.size
-  }
-
-  private def listParquet(fs: FileSystem, dir: Path): Seq[Path] = {
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq.flatMap { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("_") || name.startsWith(".")) Nil
-      else if (st.isDirectory) listParquet(fs, st.getPath)
-      else Seq(st.getPath)
-    }
   }
 }

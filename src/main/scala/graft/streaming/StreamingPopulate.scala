@@ -1,10 +1,11 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.cdc.{CdcTableConfig, Checkpoint, PopulateChangelog}
+import graft.cdc.{CdcTableConfig, Checkpoint, StagedAppend}
 
 /** Structured-Streaming populate mode (SURVEY §2.11, §7.2-6).
   *
@@ -15,8 +16,8 @@ import graft.cdc.{CdcTableConfig, Checkpoint, PopulateChangelog}
   * `Trigger.AvailableNow` drains what exists and stops (≙ one procedure
   * invocation), the stream's `checkpointLocation` replaces the LSN-window
   * bookkeeping (exactly-once file discovery), and each micro-batch runs the
-  * same build→ids→append as the batch path, with the id offset continuing
-  * from the sink snapshot.
+  * same build→ids→journaled append as the batch path, with the id offset
+  * continuing from the sink snapshot.
   *
   * At scale this is the preferred ingestion mode: micro-batches bound the
   * id-assignment sort (SURVEY §7.5.4), file discovery is incremental
@@ -46,7 +47,6 @@ object StreamingPopulate {
       changelogPath: String,
       checkpointLocation: String,
       maxFilesPerTrigger: Option[Int] = None,
-      distributedIds: Boolean = false,
       postSnapshotHook: Long => Unit = _ => ()): Long = {
 
     val appended = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -65,7 +65,7 @@ object StreamingPopulate {
     val query = feed.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         appended.addAndGet(
-          appendBatch(batch, cfg, changelogPath, distributedIds, Some(s"${ckptKey}_$batchId"),
+          appendBatch(batch, cfg, changelogPath, Some(s"${ckptKey}_$batchId"),
             () => postSnapshotHook(batchId)))
         ()
       }
@@ -122,42 +122,39 @@ object StreamingPopulate {
       Some(dec.decode(java.nio.ByteBuffer.wrap(bytes)).toString)
     } catch { case _: java.nio.charset.CharacterCodingException => None }
 
-  /** One micro-batch: continue ids from the sink's max, then append via the
-    * shared batch path. Micro-batches within a query run sequentially, so
-    * the one-snapshot-per-batch id contract holds like the batch mode.
+  /** One micro-batch: continue ids from the sink's max, then commit via
+    * the populate's journal ([[StagedAppend.stageAndPublish]]).
+    * Micro-batches within a query run sequentially, so the
+    * one-snapshot-per-batch id contract holds like the batch mode.
     *
-    * Parquet append is not transactional with the stream's offset commit:
-    * a crash between the append and the checkpoint commit replays the
-    * batch. A marker file per applied (checkpoint, batch) — written AFTER
-    * the append, checked before — makes the common replay a no-op. This
-    * NARROWS the duplicate window to a crash between append and marker
-    * write; closing it entirely needs a transactional table format.
+    * The parquet append is not transactional with the stream's offset
+    * commit: a crash between the two replays the batch. A marker per
+    * applied (checkpoint, batch) is checked first and committed as the
+    * journal's last destination, so it exists exactly when the whole batch
+    * does — a torn batch rolls back rows and marker together (the leading
+    * [[StagedAppend.repair]]) and the replay applies it exactly once.
     */
   def appendBatch(
       batch: DataFrame,
       cfg: CdcTableConfig,
       changelogPath: String,
-      distributedIds: Boolean = false,
       batchKey: Option[String] = None,
       postSnapshotHook: () => Unit = () => ()): Long = {
-    if (batch.isEmpty) return 0L
     val spark = batch.sparkSession
-    val marker = batchKey.map { id =>
-      new org.apache.hadoop.fs.Path(changelogPath, s"_applied_batches/$id")
-    }
-    val fs = marker.map(_.getFileSystem(spark.sparkContext.hadoopConfiguration))
-    if (marker.exists(m => fs.get.exists(m))) return 0L // replayed batch: already applied
+    StagedAppend.repair(spark, changelogPath)
+    if (batch.isEmpty) return 0L
+    val marker = batchKey.map(id => s"_applied_batches/$id")
+    val applied = marker.map(new Path(changelogPath, _))
+      .exists(p => p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+    if (applied) return 0L // replayed batch: already applied
     val offset = Checkpoint.sinkState(spark, changelogPath).map(_._2).getOrElse(0L)
     postSnapshotHook() // race injection: maintenance lands between snapshot and append
     val cached = batch.cache()
-    try {
-      // the data dir resolves INSIDE stampAndAppend, after the hook — a
-      // compaction that flipped the version pointer since the snapshot is
-      // honored (the append lands in the repacked copy; the snapshot's
-      // HWM/offset stay valid because compaction preserves logical rows)
-      val n = PopulateChangelog.stampAndAppend(spark, cached, cfg, changelogPath, offset, distributedIds)
-      marker.foreach(m => fs.get.create(m, true).close())
-      n
-    } finally cached.unpersist()
+    // the data dir resolves at publish, after the hook — a compaction that
+    // flipped the version pointer since the snapshot is honored (the batch
+    // lands in the repacked copy; the snapshot's HWM/offset stay valid
+    // because compaction preserves logical rows)
+    try StagedAppend.stageAndPublish(spark, cached, cfg, changelogPath, offset, marker)
+    finally cached.unpersist()
   }
 }

@@ -6,11 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Static guards on the serving layouts' one write protocol: a dynamic
-  * partition overwrite outside [[graft.ext.ServingLayout]] would be a new
-  * copy of the read → replace → barrier → overwrite → sweep skeleton,
+/** Static guards on the one-write-protocol rules. Serving layouts: a
+  * dynamic partition overwrite outside [[graft.ext.ServingLayout]] would be
+  * a new copy of the read → replace → barrier → overwrite → sweep skeleton,
   * free to drift from it (a footer-inferred read, a missing sweep), and a
-  * hand-built removal set a new copy of the id-keyed replace rule. */
+  * hand-built removal set a new copy of the id-keyed replace rule.
+  * Changelog sinks: rows are appended only through the StagedAppend
+  * journal, and full rewrites only through SinkLayout's version swap. */
 class WriteProtocolSpec extends AnyFunSuite {
 
   /** Main sources (relative to src/main/scala) whose text holds `token`. */
@@ -36,5 +38,19 @@ class WriteProtocolSpec extends AnyFunSuite {
     val users = mainSourcesWith("__did")
     assert(users == Seq("graft/ext/ServingLayout.scala"),
       s"the id-keyed replace rule must go through ServingLayout: $users")
+  }
+
+  test("only the journal stages changelog rows") {
+    // a stampAndAppend caller outside StagedAppend would be a sink append
+    // that bypasses the manifest, so a crash could not be rolled back
+    val users = mainSourcesWith("stampAndAppend(")
+    assert(users == Seq("graft/cdc/PopulateChangelog.scala", "graft/cdc/StagedAppend.scala"),
+      s"changelog rows must reach the sink through StagedAppend: $users")
+  }
+
+  test("only SinkLayout runs the versioned swap") {
+    val users = mainSourcesWith("recordFlatMigration(")
+    assert(users == Seq("graft/cdc/SinkLayout.scala"),
+      s"full-sink rewrites must go through SinkLayout.swapVersion: $users")
   }
 }

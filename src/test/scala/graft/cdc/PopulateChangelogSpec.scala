@@ -29,7 +29,7 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     val path = Files.createTempDirectory("graft_e2e").resolve("orders_changelog").toString
 
     // batch 1: everything committed on day 1
-    val r1 = PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 23:00:00")))
+    val r1 = StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 23:00:00")))
     assert(r1.rowsInserted == 2, "insert sentinel + one update pair")
     assert(r1.message == "2 orders changes were inserted to the orders_changelog.")
     val after1 = spark.read.parquet(path)
@@ -37,7 +37,7 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     assert(after1.agg(max("changelog_id")).head().getLong(0) == 2L)
 
     // batch 2: resume — only day-2 changes, ids continue from the sink
-    val r2 = PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
+    val r2 = StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
     assert(r2.rowsInserted == 2, "delete sentinel + one update pair")
     val after2 = spark.read.parquet(path)
     assert(after2.count() == 4)
@@ -49,7 +49,7 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     assert(day2Ids == Set(3L, 4L))
 
     // batch 3: window already caught up -> zero rows, not an error
-    val r3 = PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
+    val r3 = StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
     assert(r3.rowsInserted == 0)
 
     // sink is partitioned by commit_date (the QueryData pruning contract)
@@ -61,17 +61,12 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     assert(after2.where(col("created_dt").isNull || col("created_by").isNull).count() == 0)
   }
 
-  test("distributedIds path writes the same rows as the window path") {
-    val base = Files.createTempDirectory("graft_e2e_dist")
-    val p1 = base.resolve("w").toString
-    val p2 = base.resolve("d").toString
-    PopulateChangelog.run(spark, fullFeed, cfg, p1, Some(ts("1995-01-03 00:00:00")))
-    PopulateChangelog.run(spark, fullFeed, cfg, p2, Some(ts("1995-01-03 00:00:00")),
-      distributedIds = true)
+  test("the distributed id path writes the same rows as the window path") {
+    val changelog = ChangelogBuilder.build(fullFeed, cfg)
     val cols = Seq("changelog_id", "commit_time", "table_name", "k",
       "column_name", "old_value", "new_value")
-    val a = spark.read.parquet(p1).select(cols.map(col): _*).collect().toSet
-    val b = spark.read.parquet(p2).select(cols.map(col): _*).collect().toSet
+    val a = ChangelogBuilder.withIds(changelog, cfg).select(cols.map(col): _*).collect().toSet
+    val b = ChangelogBuilder.withIdsDistributed(changelog, cfg).select(cols.map(col): _*).collect().toSet
     assert(a == b)
   }
 
@@ -79,29 +74,25 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     // chooser: plan-size estimate vs threshold, no job run
     val feed = ChangeFeed.fromOrders(
       spark.read.parquet("/root/testdata/sf0.001/orders.parquet"))
-    assert(PopulateChangelog.shouldDistribute(feed, forced = false, thresholdBytes = 1L))
-    assert(!PopulateChangelog.shouldDistribute(feed, forced = false, thresholdBytes = Long.MaxValue))
-    assert(PopulateChangelog.shouldDistribute(feed, forced = true, thresholdBytes = Long.MaxValue))
+    assert(PopulateChangelog.shouldDistribute(feed, thresholdBytes = 1L))
+    assert(!PopulateChangelog.shouldDistribute(feed, thresholdBytes = Long.MaxValue))
 
-    // end-to-end: a populate whose batch trips the threshold must produce
-    // EXACTLY the window path's rows (the id-parity contract), while never
-    // funnelling through a single-partition Window
-    val base = Files.createTempDirectory("graft_e2e_auto")
+    // a batch that trips the threshold must get EXACTLY the window path's
+    // rows (the id-parity contract)
     val ocfg = CdcTableConfig("orders", Seq("o_orderkey"))
-    val w = base.resolve("w").toString
-    val d = base.resolve("d").toString
-    PopulateChangelog.run(spark, feed, ocfg, w)
-    PopulateChangelog.run(spark, feed, ocfg, d, autoDistributeBytes = 1L)
+    val changelog = ChangelogBuilder.build(feed, ocfg)
     val cols = Seq("changelog_id", "commit_time", "table_name", "o_orderkey",
       "column_name", "old_value", "new_value")
-    val a = spark.read.parquet(w).select(cols.map(col): _*).collect().map(_.toSeq).toSet
-    val b = spark.read.parquet(d).select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    val a = ChangelogBuilder.withIds(changelog, ocfg)
+      .select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    val b = ChangelogBuilder.withIdsDistributed(changelog, ocfg)
+      .select(cols.map(col): _*).collect().map(_.toSeq).toSet
     assert(a == b)
   }
 
   test("queryData over a populated sink: day-granularity bounds + freshness warning") {
     val path = Files.createTempDirectory("graft_e2e_qd").resolve("orders_changelog").toString
-    PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-03 00:00:00")))
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-03 00:00:00")))
 
     val catalog = new CdcCatalog
     catalog.register(CdcTableEntry(cfg, feedPath = "unused", changelogPath = path))
@@ -144,19 +135,19 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     // a feed whose configured key column doesn't exist -> failure inside the append
     val badCfg = CdcTableConfig("orders", Seq("no_such_col"))
     intercept[IllegalArgumentException] {
-      PopulateChangelog.run(spark, fullFeed, badCfg, base.resolve("a").toString,
+      StagedAppend.run(spark, fullFeed, badCfg, base.resolve("a").toString,
         Some(ts("1995-01-03 00:00:00")))
     }
     // the reference's CATCH block reports soft success (:401-409) — compat only
-    val r = PopulateChangelog.run(spark, fullFeed, badCfg.copy(compatMode = true),
+    val r = StagedAppend.run(spark, fullFeed, badCfg.copy(compatMode = true),
       base.resolve("b").toString, Some(ts("1995-01-03 00:00:00")))
     assert(r.rowsInserted == 0)
     assert(r.message == "No orders changes were detected between the date ranges provided!")
     // validation errors are NEVER soft-caught, even in compat mode (:217-229)
-    PopulateChangelog.run(spark, fullFeed, cfg.copy(compatMode = true),
+    StagedAppend.run(spark, fullFeed, cfg.copy(compatMode = true),
       base.resolve("c").toString, Some(ts("1995-01-03 00:00:00")))
     intercept[CdcValidationException] {
-      PopulateChangelog.run(spark, fullFeed, cfg.copy(compatMode = true),
+      StagedAppend.run(spark, fullFeed, cfg.copy(compatMode = true),
         base.resolve("c").toString, Some(ts("1994-01-01 00:00:00")))
     }
   }
@@ -170,8 +161,8 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
 
     val plain = base.resolve("plain").toString
     val clustered = base.resolve("clustered").toString
-    PopulateChangelog.run(spark, feed, ocfg, plain)
-    PopulateChangelog.run(spark, feed, ocfg, clustered, clusterByKey = true,
+    StagedAppend.run(spark, feed, ocfg, plain)
+    StagedAppend.run(spark, feed, ocfg, clustered, clusterByKey = true,
       clusterPartitions = Some(4))
 
     val a = spark.read.parquet(plain).drop("created_dt").collect().map(_.toSeq).toSet
@@ -210,7 +201,7 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     val path = Files.createTempDirectory("graft_evo").resolve("orders_changelog").toString
 
     // batch 1: (k, v) feed, one update pair on v
-    PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 23:00:00")))
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 23:00:00")))
 
     // batch 2: the source grew a column v2 (ordinal 2); day-2 update
     // changes only v2 (mask bit 2)
@@ -218,7 +209,7 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
       (4L, 0L, 3, 4L, ts("1995-01-02 09:00:00"), "c", "w0", "z0"),
       (4L, 0L, 4, 4L, ts("1995-01-02 09:00:00"), "c", "w1", "z1"))
       .toDF("start_lsn", "seqval", "operation", "update_mask", "commit_time", "k", "v", "v2")
-    PopulateChangelog.run(spark, wide, cfg, path, Some(ts("1995-01-02 23:00:00")))
+    StagedAppend.run(spark, wide, cfg, path, Some(ts("1995-01-02 23:00:00")))
 
     val sink = spark.read.parquet(path)
     // sink schema is batch-invariant: same columns after the wide batch
@@ -239,8 +230,8 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     val path = Files.createTempDirectory("graft_e2e_cp").resolve("orders_changelog").toString
     // both batches land rows in the 1995-01-01 partition (the second also
     // opens 1995-01-02) — the shared date accumulates one file per append
-    PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 08:30:00")))
-    PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 08:30:00")))
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
     val before = SinkLayout.read(spark, path).collect().map(_.toString).sorted.toSeq
     val stats = Compact.compactSink(spark, path)
     assert(stats.filesBefore > stats.filesAfter,
@@ -255,8 +246,8 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
 
   test("a reader planned before compaction survives the swap (grace version)") {
     val path = Files.createTempDirectory("graft_e2e_rs").resolve("orders_changelog").toString
-    PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 08:30:00")))
-    PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 08:30:00")))
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
     // plan (and partially bind) a read against the CURRENT resolve...
     val planned = SinkLayout.read(spark, path)
     val expected = planned.count()
@@ -283,8 +274,8 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
 
   test("compaction preserves foreign root state and shrugs off crash leftovers") {
     val path = Files.createTempDirectory("graft_e2e_cl").resolve("orders_changelog").toString
-    PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 08:30:00")))
-    PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 08:30:00")))
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
     val expected = SinkLayout.read(spark, path).count()
     val root = new java.io.File(path)
     // auxiliary state other components keep at the sink root (the
@@ -316,9 +307,9 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
 
   test("populate resumes correctly onto a compacted sink (HWM + ids through the pointer)") {
     val path = Files.createTempDirectory("graft_e2e_rc").resolve("orders_changelog").toString
-    PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 08:30:00")))
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 08:30:00")))
     Compact.compactSink(spark, path)
-    val r2 = PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
+    val r2 = StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
     assert(r2.rowsInserted > 0, "the resumed batch must see the pre-compaction HWM, not restart")
     val sink = SinkLayout.read(spark, path)
     // ids continue seamlessly across the rewrite: dense 1..N
@@ -334,14 +325,14 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     val base = Files.createTempDirectory("graft_e2e_compat")
 
     val dflt = base.resolve("dflt").toString
-    PopulateChangelog.run(spark, minuteFeed, cfg, dflt, Some(ts("1995-01-01 00:00:20")))
-    PopulateChangelog.run(spark, minuteFeed, cfg, dflt, Some(ts("1995-01-03 00:00:00")))
+    StagedAppend.run(spark, minuteFeed, cfg, dflt, Some(ts("1995-01-01 00:00:20")))
+    StagedAppend.run(spark, minuteFeed, cfg, dflt, Some(ts("1995-01-03 00:00:00")))
     assert(spark.read.parquet(dflt).count() == 3, "lossless resume catches the 00:00:40 insert")
 
     val compat = base.resolve("compat").toString
     val ccfg = cfg.copy(compatMode = true)
-    PopulateChangelog.run(spark, minuteFeed, ccfg, compat, Some(ts("1995-01-01 00:00:20")))
-    PopulateChangelog.run(spark, minuteFeed, ccfg, compat, Some(ts("1995-01-03 00:00:00")))
+    StagedAppend.run(spark, minuteFeed, ccfg, compat, Some(ts("1995-01-01 00:00:20")))
+    StagedAppend.run(spark, minuteFeed, ccfg, compat, Some(ts("1995-01-03 00:00:00")))
     assert(spark.read.parquet(compat).count() == 2,
       "the +1min skip (:203) permanently drops the same-minute insert")
   }
@@ -351,7 +342,7 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     import s.implicits._
     val path = Files.createTempDirectory("graft_forget_spec")
       .resolve("orders_changelog").toString
-    PopulateChangelog.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
     val before = graft.cdc.SinkLayout.read(spark, path)
       .select("changelog_id", "k").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -370,5 +361,27 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     val st2 = graft.cdc.Forget.forgetKeys(spark, path, Seq("k"), Seq("a").toDF("k"))
     assert(st2 == graft.cdc.ForgetStats(2L, 0L))
     assert(graft.cdc.SinkLayout.read(spark, path).count() == 2)
+  }
+
+  test("forget honors the retention cutoff: expired days are neither counted nor carried") {
+    val s = spark
+    import s.implicits._
+    val path = Files.createTempDirectory("graft_forget_cutoff")
+      .resolve("orders_changelog").toString
+    // three days, two changelog rows each (insert sentinel + update pair)
+    val feed = feedKV((1 to 3).flatMap { d =>
+      Seq(
+        (d * 10L, 0L, 2, 3L, s"1995-01-0$d 08:00:00", s"a$d", "x"),
+        (d * 10 + 1L, 0L, 3, 2L, s"1995-01-0$d 09:00:00", s"b$d", s"v$d"),
+        (d * 10 + 1L, 0L, 4, 2L, s"1995-01-0$d 09:00:00", s"b$d", s"w$d"))
+    })
+    StagedAppend.run(spark, feed, cfg, path, Some(ts("1996-01-01 00:00:00")))
+    Retention.expire(spark, path, java.time.LocalDate.parse("1995-01-02"))
+    // a1's only row sits on the expired day 1
+    val st = graft.cdc.Forget.forgetKeys(spark, path, Seq("k"), Seq("a1").toDF("k"))
+    assert(st == graft.cdc.ForgetStats(4L, 0L))
+    val dirs = new java.io.File(SinkLayout.dataDir(spark, path)).list().toSet
+    assert(!dirs.contains("commit_date=1995-01-01"), s"expired day carried forward: $dirs")
+    assert(dirs.contains("commit_date=1995-01-02") && dirs.contains("commit_date=1995-01-03"))
   }
 }

@@ -30,7 +30,7 @@ class RepairSpec extends AnyFunSuite with SparkFixture {
   test("drop + repairDay reproduces the lost partition byte-for-byte, mid-history") {
     val base = java.nio.file.Files.createTempDirectory("graft_repair_spec")
     val sink = base.resolve("log").toString
-    PopulateChangelog.run(spark, feedDf, cfg, sink, Some(ts("1996-01-01 00:00:00")))
+    StagedAppend.run(spark, feedDf, cfg, sink, Some(ts("1996-01-01 00:00:00")))
     val healthy = SinkLayout.read(spark, sink).select(cols.map(col): _*).collect().toSet
     // note the mtimes of the OTHER days' files — repair must not touch them
     val dataDir = new java.io.File(SinkLayout.dataDir(spark, sink))
@@ -54,7 +54,7 @@ class RepairSpec extends AnyFunSuite with SparkFixture {
   test("repairDay refuses a still-live partition (no double ids)") {
     val base = java.nio.file.Files.createTempDirectory("graft_repair_live")
     val sink = base.resolve("log").toString
-    PopulateChangelog.run(spark, feedDf, cfg, sink, Some(ts("1996-01-01 00:00:00")))
+    StagedAppend.run(spark, feedDf, cfg, sink, Some(ts("1996-01-01 00:00:00")))
     val e = intercept[IllegalArgumentException] {
       Repair.repairDay(spark, feedDf, cfg, sink, LocalDate.parse("1995-01-02"))
     }
@@ -67,7 +67,7 @@ class RepairSpec extends AnyFunSuite with SparkFixture {
     val sink = base.resolve("log").toString
     // populate stopped MID-day-3: the 08:00 insert is in, the 09:00 pair is not
     val hwm = ts("1995-01-03 08:30:00")
-    PopulateChangelog.run(spark, feedDf, cfg, sink, Some(hwm))
+    StagedAppend.run(spark, feedDf, cfg, sink, Some(hwm))
     val healthy = SinkLayout.read(spark, sink).select(cols.map(col): _*).collect().toSet
     val day = LocalDate.parse("1995-01-03")
     assert(Repair.dropDayPartition(spark, sink, day))
@@ -82,5 +82,34 @@ class RepairSpec extends AnyFunSuite with SparkFixture {
     val repaired = SinkLayout.read(spark, sink).select(cols.map(col): _*).collect().toSet
     assert(repaired == healthy,
       "newest-day repair at the recorded HWM must restore rows AND ids exactly")
+  }
+
+  test("after retention the offset is the visible max id on earlier days, not their count") {
+    val base = java.nio.file.Files.createTempDirectory("graft_repair_ret")
+    val sink = base.resolve("log").toString
+    StagedAppend.run(spark, feedDf, cfg, sink, Some(ts("1996-01-01 00:00:00")))
+    val hwm = Checkpoint.sinkState(spark, sink).get._1
+    Retention.expire(spark, sink, LocalDate.parse("1995-01-02"))
+    val healthy = SinkLayout.read(spark, sink).select(cols.map(col): _*).collect().toSet
+    assert(healthy.map(_.getLong(0)) == Set(3L, 4L, 5L, 6L))
+    // day 3 is the newest: its window end needs the recorded HWM
+    val day = LocalDate.parse("1995-01-03")
+    assert(Repair.dropDayPartition(spark, sink, day))
+    Repair.repairDay(spark, feedDf, cfg, sink, day, originalHwm = Some(hwm))
+    val repaired = SinkLayout.read(spark, sink).select(cols.map(col): _*).collect().toSet
+    assert(repaired == healthy, "day 3 must get ids 5 and 6 back, not day 2's 3 and 4")
+  }
+
+  test("repairDay refuses when the retention cutoff hides every earlier row") {
+    val base = java.nio.file.Files.createTempDirectory("graft_repair_cut")
+    val sink = base.resolve("log").toString
+    StagedAppend.run(spark, feedDf, cfg, sink, Some(ts("1996-01-01 00:00:00")))
+    Retention.expire(spark, sink, LocalDate.parse("1995-01-02"))
+    val day = LocalDate.parse("1995-01-02")
+    assert(Repair.dropDayPartition(spark, sink, day))
+    val e = intercept[IllegalArgumentException] {
+      Repair.repairDay(spark, feedDf, cfg, sink, day)
+    }
+    assert(e.getMessage.contains("retention cutoff 1995-01-02"), e.getMessage)
   }
 }

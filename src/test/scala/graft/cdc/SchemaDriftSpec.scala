@@ -137,10 +137,10 @@ class SchemaDriftSpec extends AnyFunSuite with SparkFixture {
       .resolve("orders_changelog").toString
     val far = java.sql.Timestamp.valueOf("1996-01-01 00:00:00")
     // window 1: the six-column era, populated to the sink
-    PopulateChangelog.run(s, ChangeFeed.fromOrdersPreDrop(o), cfg, sink, Some(far))
+    StagedAppend.run(s, ChangeFeed.fromOrdersPreDrop(o), cfg, sink, Some(far))
     // window 2: the populate RESUMES from the sink HWM with the re-read
     // five-column feed — no DDL, no migration, the column just stops
-    PopulateChangelog.run(s, ChangeFeed.fromOrdersPostDrop(o), cfg, sink, Some(far))
+    StagedAppend.run(s, ChangeFeed.fromOrdersPostDrop(o), cfg, sink, Some(far))
     val resumed = SinkLayout.read(s, sink)
       .select("changelog_id", "commit_time", "table_name", "o_orderkey",
         "column_name", "old_value", "new_value")

@@ -74,7 +74,7 @@ class SnapshotDiffSpec extends AnyFunSuite with SparkFixture {
 
   test("retention drops only partitions strictly before the cutoff day") {
     val path = Files.createTempDirectory("graft_ret").resolve("orders_changelog").toString
-    PopulateChangelog.run(spark, multiDayFeed, cfg, path, Some(ts("1995-01-05 00:00:00")))
+    StagedAppend.run(spark, multiDayFeed, cfg, path, Some(ts("1995-01-05 00:00:00")))
     val dropped = Retention.expire(spark, path, java.time.LocalDate.parse("1995-01-03"))
     assert(dropped == Seq(java.time.LocalDate.parse("1995-01-01"),
       java.time.LocalDate.parse("1995-01-02")))
@@ -87,7 +87,7 @@ class SnapshotDiffSpec extends AnyFunSuite with SparkFixture {
 
   test("a reader planned before expire survives one retention grace cycle") {
     val path = Files.createTempDirectory("graft_retg").resolve("orders_changelog").toString
-    PopulateChangelog.run(spark, multiDayFeed, cfg, path, Some(ts("1995-01-05 00:00:00")))
+    StagedAppend.run(spark, multiDayFeed, cfg, path, Some(ts("1995-01-05 00:00:00")))
     // this reader resolves AND lists files now — the pre-retention snapshot
     val planned = SinkLayout.read(spark, path)
     val cutoff = java.time.LocalDate.parse("1995-01-03")
@@ -116,7 +116,7 @@ class SnapshotDiffSpec extends AnyFunSuite with SparkFixture {
 
   test("compaction drops expired days from the repack; grace copy keeps them") {
     val path = Files.createTempDirectory("graft_retc").resolve("orders_changelog").toString
-    PopulateChangelog.run(spark, multiDayFeed, cfg, path, Some(ts("1995-01-05 00:00:00")))
+    StagedAppend.run(spark, multiDayFeed, cfg, path, Some(ts("1995-01-05 00:00:00")))
     Retention.expire(spark, path, java.time.LocalDate.parse("1995-01-03"))
     Compact.compactSink(spark, path)
     val fs = SinkLayout.fs(spark, path)
@@ -129,7 +129,7 @@ class SnapshotDiffSpec extends AnyFunSuite with SparkFixture {
 
   test("retention resolves through the version pointer on a compacted sink") {
     val path = Files.createTempDirectory("graft_retv").resolve("orders_changelog").toString
-    PopulateChangelog.run(spark, multiDayFeed, cfg, path, Some(ts("1995-01-05 00:00:00")))
+    StagedAppend.run(spark, multiDayFeed, cfg, path, Some(ts("1995-01-05 00:00:00")))
     Compact.compactSink(spark, path)
     val dropped = Retention.expire(spark, path, java.time.LocalDate.parse("1995-01-04"))
     assert(dropped.size == 3)

@@ -31,7 +31,7 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
       .sortBy(_._1).toSeq
 
   private def populateBoth(path: String, crashAt: Option[Int]): Unit = {
-    PopulateChangelog.run(spark, feed, cfg, path, Some(ts("1995-01-02 12:00:00")))
+    StagedAppend.run(spark, feed, cfg, path, Some(ts("1995-01-02 12:00:00")))
     crashAt match {
       case None =>
         StagedAppend.run(spark, feed, cfg, path, Some(ts("1995-01-06 00:00:00")))
@@ -72,7 +72,7 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
 
   test("torn partial state is invisible to the HWM after repair, not before") {
     val p = Files.createTempDirectory("graft_sa_hwm").resolve("c").toString
-    PopulateChangelog.run(spark, feed, cfg, p, Some(ts("1995-01-02 12:00:00")))
+    StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-02 12:00:00")))
     val hwmBefore = Checkpoint.sinkState(spark, p).get
     val boom = new RuntimeException("injected")
     intercept[RuntimeException] {
@@ -89,15 +89,15 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
 
   test("no-crash staged populate equals the direct append path") {
     val direct = Files.createTempDirectory("graft_sa_d").resolve("c").toString
-    PopulateChangelog.run(spark, feed, cfg, direct, Some(ts("1995-01-02 12:00:00")))
-    PopulateChangelog.run(spark, feed, cfg, direct, Some(ts("1995-01-06 00:00:00")))
+    StagedAppend.run(spark, feed, cfg, direct, Some(ts("1995-01-02 12:00:00")))
+    StagedAppend.run(spark, feed, cfg, direct, Some(ts("1995-01-06 00:00:00")))
     assert(goldenRows == rows(direct))
   }
 
   test("a compaction in the stage→publish window flips the version and " +
       "the publish follows it into the repacked copy") {
     val p = Files.createTempDirectory("graft_sa_cc").resolve("c").toString
-    PopulateChangelog.run(spark, feed, cfg, p, Some(ts("1995-01-02 12:00:00")))
+    StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-02 12:00:00")))
     StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-06 00:00:00")),
       prePublishHook = () => { Compact.compactSink(spark, p); () })
     assert(SinkLayout.currentVersion(spark, p).contains(1),
@@ -109,7 +109,7 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
   test("a compaction RACING a mid-rename publish blocks on the writer " +
       "lock — no file of the batch is stranded in the retiring version") {
     val p = Files.createTempDirectory("graft_sa_race").resolve("c").toString
-    PopulateChangelog.run(spark, feed, cfg, p, Some(ts("1995-01-02 12:00:00")))
+    StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-02 12:00:00")))
     val started = new java.util.concurrent.CountDownLatch(1)
     @volatile var compactErr: Option[Throwable] = None
     val compactor = new Thread(() => {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
-import graft.cdc.{CdcTableConfig, PopulateChangelog}
+import graft.cdc.{CdcTableConfig, StagedAppend}
 
 /** Streaming-vs-batch parity: two incremental streaming invocations over a
   * growing feed directory must produce byte-identical changelog content to
@@ -55,8 +55,8 @@ class StreamingPopulateSpec extends AnyFunSuite with SparkFixture {
 
     // ---- batch path over the same two windows
     val full = day1.unionByName(day2)
-    PopulateChangelog.run(spark, full, cfg, batchSink, Some(ts("1995-01-01 23:00:00")))
-    PopulateChangelog.run(spark, full, cfg, batchSink, Some(ts("1995-01-02 23:00:00")))
+    StagedAppend.run(spark, full, cfg, batchSink, Some(ts("1995-01-01 23:00:00")))
+    StagedAppend.run(spark, full, cfg, batchSink, Some(ts("1995-01-02 23:00:00")))
 
     val fromStream = spark.read.parquet(streamSink).select(logicalCols.map(col): _*).collect().toSet
     val fromBatch = spark.read.parquet(batchSink).select(logicalCols.map(col): _*).collect().toSet
@@ -132,5 +132,24 @@ class StreamingPopulateSpec extends AnyFunSuite with SparkFixture {
     assert(n == 4)
     val ids = spark.read.parquet(sink).select("changelog_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 2L, 3L, 4L), "ids continue across micro-batches within one invocation")
+  }
+
+  test("a torn streamed batch rolls back rows and marker together; the replay applies it once") {
+    val batch = day1.unionByName(day2) // two commit_date partitions → two staged files
+    val key = "torn_0"
+    Seq(1, 2).foreach { at => // crash after the first file, then after the last
+      val sink = Files.createTempDirectory(s"graft_stream_torn$at").resolve("log").toString
+      val boom = new RuntimeException("injected")
+      val thrown = intercept[RuntimeException] {
+        StagedAppend.stageAndPublish(spark, batch, cfg, sink, 0L,
+          marker = Some(s"_applied_batches/$key"), publishHook = i => if (i == at) throw boom)
+      }
+      assert(thrown eq boom, s"crash injection at $at must fire")
+      assert(StreamingPopulate.appendBatch(batch, cfg, sink, batchKey = Some(key)) == 4L)
+      val ids = graft.cdc.SinkLayout.read(spark, sink).select("changelog_id")
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(ids == Seq(1L, 2L, 3L, 4L), s"rows once, contiguous ids (crash at $at)")
+      assert(new java.io.File(sink, s"_applied_batches/$key").isFile)
+    }
   }
 }
