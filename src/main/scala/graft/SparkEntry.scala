@@ -644,12 +644,10 @@ object SparkEntry {
     * `base` (postings/doclen/stats) — shared by the batch lifecycle row
     * and the per-micro-batch streamed drive. */
   private def bm25ServingFoldAt(s: SparkSession, dir: String,
-      base: java.nio.file.Path, oldDocs: DataFrame, newDocs: DataFrame,
-      repackPostings: Seq[Long] = Nil, repackDocLen: Seq[Long] = Nil): Unit =
+      base: java.nio.file.Path, oldDocs: DataFrame, newDocs: DataFrame): Unit =
     Retrieval.bm25ServingFold(s,
       base.resolve("postings").toString, base.resolve("doclen").toString,
-      base.resolve("stats").toString, oldDocs, newDocs,
-      repackPostings = repackPostings, repackDocLen = repackDocLen)
+      base.resolve("stats").toString, oldDocs, newDocs)
 
   /** The era-2 lifecycle delta folded IN PLACE into the BM25 serving
     * artifacts: removed content (revised + deleted docs) reads its
@@ -1739,16 +1737,16 @@ object SparkEntry {
         .orderBy("query_id", "rnk")
     }),
 
-    // fold → COMPACT → fold, hash-graded: the serving layout deploys
-    // FRAGMENTED (two interleaved half-writes — the multi-writer / AQE-
-    // skew-split shape; the folds themselves never fragment, dynamic
-    // overwrite replaces partitions wholly), era 1 folds in place, the
-    // partition-local repack rewrites every still-crowded cell to one
-    // file through the folds' own primitive, and era 2 folds on top —
-    // the graded search over the compacted-and-folded layout must equal
-    // the never-compacted lifecycle chain exactly (content identity is
-    // the repack's whole contract; IvfRecallSpec pins the 1-file/cell
-    // count, untouched bytes, and no-op replay)
+    // fold → fold over a FRAGMENTED layout, hash-graded: the serving
+    // layout deploys fragmented (two interleaved half-writes — the
+    // multi-writer / AQE-skew-split shape; the folds themselves never
+    // fragment, dynamic overwrite replaces partitions wholly), era 1
+    // folds in place and its rewrite repacks every crowded cell to one
+    // file, and era 2 folds on top — the graded search over the
+    // compacted-and-folded layout must equal the never-compacted
+    // lifecycle chain exactly (content identity is the repack's whole
+    // contract; IvfRecallSpec pins the 1-file/cell count, untouched
+    // bytes, and no-op replay)
     "ext_ann_serving_compact" -> ((s, dir) => {
       val e = embeddings(s, dir)
       val state = ivfServingState(s, dir)
@@ -1759,16 +1757,14 @@ object SparkEntry {
       deployFragmented(cells0, cellsPath, Similarity.ivfCells)
       val cents = s.read.parquet(state.resolve("centroids").toString)
         .localCheckpoint(true)
-      // era 1: revisions fold in place (affected cells rewrite to 1 file);
-      // the crowded cells ride the same rewrite (the merged fold+compact
-      // form — content-identical)
+      // era 1: revisions fold in place; the fold's rewrite also repacks
+      // every crowded cell to 1 file (content-identical)
       val d1 = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
         .localCheckpoint(true)
       val old1 = e.join(d1, e("vec_id") === d1("doc_id"))
         .select(e("vec_id"), e("embedding"))
       Similarity.ivfServingFold(s, cellsPath, old1,
-        old1.select(col("vec_id"), reverse(col("embedding")).as("embedding")), cents,
-        repack = graft.ext.ServingLayout.crowdedValues(s, cellsPath, Similarity.ivfCells))
+        old1.select(col("vec_id"), reverse(col("embedding")).as("embedding")), cents)
       // era 2: the full lifecycle folds onto the compacted layout (d1 is
       // already materialized — no second changelog build)
       annServingLifecycleFoldAt(s, dir, cellsPath, cents,
@@ -2049,12 +2045,10 @@ object SparkEntry {
     // frequently folded layout in the lifecycle rows): postings and the
     // doc registry deploy FRAGMENTED (two interleaved half-writes — the
     // multi-writer shape; stats is a 1-row artifact the fold rewrites
-    // wholesale, nothing to repack), and era 1 folds in place with the
-    // crowded buckets handed to the fold's repack parameter — the repack
-    // rides the fold's OWN rewrite (one job chain per artifact instead
-    // of a fold chain plus a compact chain — the r16 verdict's merged
-    // form; this row was the bench's #1 cost at 8+ serial job chains),
-    // then the era-2 lifecycle folds onto the compacted artifacts —
+    // wholesale, nothing to repack), and era 1 folds in place — its
+    // rewrites repack the crowded buckets (one job chain per artifact,
+    // no separate compact chain), then the era-2 lifecycle folds onto
+    // the compacted artifacts —
     // graded ≡ the never-compacted lifecycle chain verbatim (content
     // identity is the repack's whole contract; RetrievalSpec pins
     // 1 file/bucket and untouched bytes on the primitives)
@@ -2073,15 +2067,10 @@ object SparkEntry {
           s.read.parquet(state.resolve("doclen").toString).localCheckpoint(true),
           doclenPath, Retrieval.bm25DocLen),
         () => TempDirs.copyInto(state.resolve("stats"), base.resolve("stats")))
-      // era 1 folds in place; the crowded buckets ride the same rewrite
+      // era 1 folds in place and repacks the crowded buckets
       val delta1 = docsChangelogDelta(s, dir)
       bm25ServingFoldAt(s, dir, base,
-        c.join(delta1.select("doc_id"), Seq("doc_id"), "left_semi"), delta1,
-        repackPostings =
-          graft.ext.ServingLayout.crowdedValues(s, postingsPath,
-            Retrieval.bm25PostingsLayout),
-        repackDocLen =
-          graft.ext.ServingLayout.crowdedValues(s, doclenPath, Retrieval.bm25DocLen))
+        c.join(delta1.select("doc_id"), Seq("doc_id"), "left_semi"), delta1)
       // era 2: the lifecycle folds onto the compacted layout (delta1 is
       // already materialized — one changelog build per row)
       val (upserts, ins, del) = lifecycleDeltaSets(s, dir)
@@ -2904,13 +2893,11 @@ object SparkEntry {
         .orderBy("phase", "id_a", "id_b")
     }),
 
-    // partition-local small-file REPACK on the dedup layout — the
-    // compaction primitive is layout-generic (ServingLayout.compact ran
-    // first on the IVF cells): a fragmented deploy (two parallel
-    // range-sliced appends → 2 files per bucket) takes the era-1 fold,
-    // the repack rewrites the still-crowded buckets through the fold's
-    // own primitive (content-identical), and the era-2 lifecycle folds
-    // onto the compacted layout — graded ≡ the never-compacted lifecycle
+    // partition-local small-file REPACK on the dedup layout: a
+    // fragmented deploy (two parallel range-sliced appends → 2 files per
+    // bucket) takes the era-1 fold, whose rewrites repack the crowded
+    // buckets (content-identical), and the era-2 lifecycle folds onto
+    // the compacted layout — graded ≡ the never-compacted lifecycle
     // oracle verbatim
     "ext_minhash_serving_compact" -> ((s, dir) => {
       val c = corpus(s, dir)
@@ -2926,15 +2913,10 @@ object SparkEntry {
         () => deployFragmented(
           s.read.parquet(state.resolve("fps").toString).localCheckpoint(true),
           fpsPath, Dedup.minhashFps))
-      // era 1 folds in place; the crowded buckets ride the same rewrite
-      // (the merged fold+compact form — content-identical)
+      // era 1 folds in place and repacks the crowded buckets
       val delta1 = docsChangelogDelta(s, dir)
       Dedup.minhashServingFold(s, bandsPath, fpsPath,
-        c.join(delta1.select("doc_id"), Seq("doc_id"), "left_semi"), delta1,
-        repackBands =
-          graft.ext.ServingLayout.crowdedValues(s, bandsPath, Dedup.minhashBands),
-        repackFps =
-          graft.ext.ServingLayout.crowdedValues(s, fpsPath, Dedup.minhashFps))
+        c.join(delta1.select("doc_id"), Seq("doc_id"), "left_semi"), delta1)
       // era 2: the lifecycle folds onto the compacted layout (delta1 is
       // already materialized — one changelog build per row)
       val sets = lifecycleDeltaSets(s, dir)
@@ -2946,11 +2928,10 @@ object SparkEntry {
         .orderBy("id_a", "id_b")
     }),
 
-    // COMPACT → fold on the value-granularity layout: both artifacts
-    // deploy FRAGMENTED (two interleaved half-writes each), the
-    // partition-local repack rewrites every crowded sband/vbucket to one
-    // file (content-identical), and the era-1 fold then composes on the
-    // compacted artifacts — graded ≡ the never-compacted post-delta
+    // fold over a FRAGMENTED value-granularity layout: both artifacts
+    // deploy fragmented (two interleaved half-writes each), and the
+    // era-1 fold's rewrites repack every crowded sband/vbucket to one
+    // file (content-identical) — graded ≡ the never-compacted post-delta
     // chain verbatim
     "ext_simhash_serving_compact" -> ((s, dir) => {
       val c = corpus(s, dir)
@@ -2966,15 +2947,9 @@ object SparkEntry {
         () => deployFragmented(
           s.read.parquet(state.resolve("docs").toString).localCheckpoint(true),
           docsPath, Dedup.simhashDocs))
-      // the crowded buckets ride the era-1 fold's own rewrite (the merged
-      // fold+compact form — content-identical to compact → fold)
       val delta = docsChangelogDelta(s, dir)
       val oldDocs = c.join(delta.select("doc_id"), Seq("doc_id"), "left_semi")
-      Dedup.simhashServingFold(s, vrowsPath, docsPath, oldDocs, delta,
-        repackVrows =
-          graft.ext.ServingLayout.crowdedValues(s, vrowsPath, Dedup.simhashVrows),
-        repackDocs =
-          graft.ext.ServingLayout.crowdedValues(s, docsPath, Dedup.simhashDocs))
+      Dedup.simhashServingFold(s, vrowsPath, docsPath, oldDocs, delta)
       Dedup.simhashPairsFrom(Dedup.simhashVrows.read(s, vrowsPath),
         Dedup.simhashDocs.read(s, docsPath))
         .orderBy("id_a", "id_b")
@@ -3673,9 +3648,9 @@ object SparkEntry {
         .orderBy("query_id", "rnk")
     }),
 
-    // fold → COMPACT → fold on the COMPRESSED code layout: the
-    // fragmented codes take the era-1 fold at the frozen model, the
-    // repack rewrites the still-crowded coarse cells (declared
+    // fold → fold over a FRAGMENTED compressed code layout: the
+    // fragmented codes take the era-1 fold at the frozen model, whose
+    // rewrite repacks the crowded coarse cells (declared
     // Similarity.pqCodes schema — the repack must never depend on any
     // copy's footers), and the era-2 lifecycle folds onto the
     // compacted layout — graded ≡ the never-compacted lifecycle oracle
@@ -3690,18 +3665,15 @@ object SparkEntry {
       val cents = s.read.parquet(st.resolve("cents").toString)
         .localCheckpoint(true)
       val cb = s.read.parquet(st.resolve("cb").toString).localCheckpoint(true)
-      // era 1 folds in place (affected ccells rewrite to 1 file)
+      // era 1 folds in place and repacks the crowded ccells to 1 file
       val d1 = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
         .localCheckpoint(true)
       val old1 = e.join(d1, e("vec_id") === d1("doc_id"))
         .select(e("vec_id"), e("embedding"))
       Similarity.ivfPqServingFold(s, codesPath, old1,
         old1.select(col("vec_id"), reverse(col("embedding")).as("embedding")),
-        cents, cb,
-        repack = graft.ext.ServingLayout.crowdedValues(s, codesPath, Similarity.pqCodes))
-      // era 2: the lifecycle folds onto the compacted layout (d1 reused;
-      // the crowded ccells rode the era-1 fold's own rewrite — the
-      // merged fold+compact form, content-identical)
+        cents, cb)
+      // era 2: the lifecycle folds onto the compacted layout (d1 reused)
       pqServingLifecycleFoldAt(s, dir, codesPath, cents, cb,
         lifecycleDeltaSets(s, dir), d1)
       Similarity.ivfPqSearch(s.read.parquet(codesPath),
@@ -4000,11 +3972,11 @@ object SparkEntry {
       pinned.orderBy("id_a", "id_b")
     }),
 
-    // fold → COMPACT on the multi-table layout — the eighth layout
+    // fold over a FRAGMENTED multi-table layout — the eighth layout
     // family joins the compaction matrix: both artifacts deploy
-    // fragmented, the era-1 fold composes, the partition-local repack
-    // rewrites the still-crowded buckets — graded ≡ the never-compacted
-    // fold oracle verbatim (the ContractSpec *_serving_compact pin)
+    // fragmented and the era-1 fold's rewrites repack the crowded
+    // buckets — graded ≡ the never-compacted fold oracle verbatim (the
+    // ContractSpec *_serving_compact pin)
     "ext_embdup_multiband_serving_compact" -> ((s, dir) => {
       val e = embeddings(s, dir)
       val st = embMultiServingState(s, dir)
@@ -4022,14 +3994,8 @@ object SparkEntry {
       val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
       val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
-      // the crowded buckets ride the fold's own rewrite (the merged
-      // fold+compact form — content-identical)
       Dedup.embMultiServingFold(s, trowsPath, vecsPath, oldVecs,
-        embDupReembed(e, deltaIds),
-        repackTrows =
-          graft.ext.ServingLayout.crowdedValues(s, trowsPath, Dedup.embMultiTRows),
-        repackVecs =
-          graft.ext.ServingLayout.crowdedValues(s, vecsPath, Dedup.embMultiVecs))
+        embDupReembed(e, deltaIds))
       Dedup.embMultiPairsFrom(Dedup.embMultiTRows.read(s, trowsPath),
         Dedup.embMultiVecs.read(s, vecsPath))
         .orderBy("id_a", "id_b")
@@ -4217,11 +4183,11 @@ object SparkEntry {
         .orderBy("phase", "id_a", "id_b")
     }),
 
-    // fold → COMPACT → fold on the vector layout — the embdup member of
-    // the compaction matrix: a fragmented deploy takes the era-1 fold,
-    // the repack rewrites the still-crowded buckets (content-identical),
-    // and the era-2 lifecycle folds onto the compacted layout — graded
-    // ≡ the never-compacted lifecycle oracle verbatim
+    // fold → fold over a FRAGMENTED vector layout — the embdup member
+    // of the compaction matrix: a fragmented deploy takes the era-1 fold,
+    // whose rewrite repacks the crowded buckets (content-identical), and
+    // the era-2 lifecycle folds onto the compacted layout — graded ≡ the
+    // never-compacted lifecycle oracle verbatim
     "ext_embdup_serving_compact" -> ((s, dir) => {
       val e = embeddings(s, dir)
       val base = TempDirs.create("graft_edsrvcmp")
@@ -4230,13 +4196,11 @@ object SparkEntry {
         .parquet(embDupServingState(s, dir).resolve("vecs").toString)
         .localCheckpoint(true)
       deployFragmented(v0, vecsPath, Dedup.embDupVecs)
-      // era 1 folds in place; the crowded buckets ride the same rewrite
-      // (the merged fold+compact form — content-identical)
+      // era 1 folds in place and repacks the crowded buckets
       val d1 = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
       val old1 = e.join(d1, e("vec_id") === d1("doc_id"))
         .select(e("vec_id"), e("embedding"))
-      Dedup.embDupServingFold(s, vecsPath, old1, embDupReembed(e, d1),
-        repack = graft.ext.ServingLayout.crowdedValues(s, vecsPath, Dedup.embDupVecs))
+      Dedup.embDupServingFold(s, vecsPath, old1, embDupReembed(e, d1))
       // era 2: the lifecycle folds onto the compacted layout (d1 is
       // already materialized — one changelog build per row)
       val (o2, n2) = embDupLifecycleVecSets(s, dir, lifecycleDeltaSets(s, dir), d1)
@@ -4601,12 +4565,12 @@ object SparkEntry {
         .orderBy("phase", "event_id")
     }),
 
-    // COMPACT → fold on the serving episode store — the last member of
+    // fold over a FRAGMENTED serving episode store — the last member of
     // the compaction matrix (every partitioned layout family now runs
-    // through the shared repack in a graded row): the fragmented store
-    // repacks (declared ServingBridge.episodeStore), then the window-2
-    // fold composes on the compacted buckets — graded ≡ the one-shot
-    // fold's serving join verbatim
+    // through the shared repack in a graded row): the window-2 fold's
+    // rewrite repacks the crowded buckets (declared
+    // ServingBridge.episodeStore) and folds onto them — graded ≡ the
+    // one-shot fold's serving join verbatim
     "ext_cdc_serving_compact" -> ((s, dir) => {
       val state = servingEpisodesMidLayout(s, dir)
       val base = TempDirs.create("graft_srvepscmp")
@@ -4614,8 +4578,6 @@ object SparkEntry {
       val e0 = s.read.parquet(state.resolve("episodes").toString)
         .localCheckpoint(true)
       deployFragmented(e0, epsPath, graft.cdc.ServingBridge.episodeStore)
-      graft.ext.ServingLayout.compact(s, epsPath,
-        graft.cdc.ServingBridge.episodeStore)
       graft.cdc.ServingBridge.episodesServingFold(s, epsPath,
         servingWindow2Episodes(s, dir))
       val eps = s.read.parquet(epsPath).drop("bucket")

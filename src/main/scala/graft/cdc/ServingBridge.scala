@@ -114,9 +114,14 @@ object ServingBridge {
       .select(col("event_id"), col("serve_key"), col("serve_s"),
         col("status_asof"), col("ep_id"))
 
+  /** Partition-value cardinality of the persisted episode store: the
+    * fold and the pruned read must agree on it, so every default points
+    * here. */
+  val ServingBuckets = 16
+
   /** Key→bucket assignment for the PERSISTED serving store's partition
     * layout — layout-internal (never graded content). */
-  def keyBucket(serveKey: Column, buckets: Int = 16): Column =
+  def keyBucket(serveKey: Column, buckets: Int = ServingBuckets): Column =
     pmod(serveKey, lit(buckets.toLong))
 
   /** The DEFAULT point-in-time enrichment over a GENERATIONED episode
@@ -169,7 +174,7 @@ object ServingBridge {
     * runtime-pruned (PlanShapeSpec asserts the executed scan's pruning
     * metrics, not just the plan string). */
   def enrichAsOfPruned(requests: DataFrame, episodes: DataFrame,
-      buckets: Int = 16): DataFrame = {
+      buckets: Int = ServingBuckets): DataFrame = {
     val eps = episodes.withColumnRenamed("serve_key", "__ek")
     val req = requests.withColumn("__b",
       keyBucket(col("serve_key"), buckets).cast(eps.schema("bucket").dataType))
@@ -273,7 +278,7 @@ object ServingBridge {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       newEpisodes: DataFrame,
-      buckets: Int = 16): Unit = {
+      buckets: Int = ServingBuckets): Unit = {
     val newE = newEpisodes
       .select(col("serve_key"), col("status_asof"), col("ep_id"),
         col("valid_from_s"))

@@ -583,17 +583,16 @@ object Dedup {
   private val SimhashValueRowBytes = 32L
 
   /** The gated dim side: broadcast while `rows × rowBytes` stays under
-    * the byte limit (keeping the un-checkpointed plan visible for
-    * runtime pruning), merge-hinted shuffled join above it. `rows` is a
+    * the byte limit, merge-hinted shuffled join above it. `rows` is a
     * control-plane count over an already-materialized batch/candidate
     * frame (cheap, bounded by the frame it gates). */
-  private def gatedDim(dim: DataFrame, shuffledDim: DataFrame, rows: Long,
+  private def gatedDim(dim: DataFrame, rows: Long,
       rowBytes: Long, limitBytes: Long): DataFrame =
     // division, not rows*rowBytes: the gate exists to bound PATHOLOGICAL
     // fan-out, exactly where a Long product could wrap negative and
     // wrongly broadcast an over-limit dim
     if (rowBytes > 0 && rows <= limitBytes / rowBytes) broadcast(dim)
-    else shuffledDim.hint("merge")
+    else dim.hint("merge")
 
   /** The two persisted MinHash artifacts: band rows by band bucket and
     * the fingerprint registry by fp bucket. */
@@ -696,13 +695,13 @@ object Dedup {
     // literals (≤ `buckets` each, a layout constant — the affectedValues
     // control-plane scalar), so pruning no longer depends on the dim
     // side's lineage and survives the gated fallback arm too. The
-    // broadcast is GATED on the batch's band-row count (the checkpointed
-    // twin makes the count a cheap control-plane action); above the gate
-    // the probe shuffles with the merge hint instead — driver bounded
+    // broadcast is GATED on the batch's band-row count (`bb` is
+    // checkpointed, so the count is a cheap control-plane action); above
+    // the gate the probe shuffles with the merge hint instead — driver
+    // bounded
     val stored = minhashBands.readIn(spark, bandsPath,
       ServingLayout.affectedValues(bb.select("pbucket")))
-    val bandDim0 = bb.select("pbucket", "band", "sig").distinct()
-    val bandDim = gatedDim(bandDim0, bandDim0,
+    val bandDim = gatedDim(bb.select("pbucket", "band", "sig").distinct(),
       bb.count(), MinhashBandRowBytes, broadcastBytes)
     val probedStored = stored
       .join(bandDim, Seq("pbucket", "band", "sig"))
@@ -721,7 +720,6 @@ object Dedup {
     val storedFps = minhashFps.readIn(spark, fpsPath,
       ServingLayout.affectedValues(bf.select("fbucket")))
     val fpDim = gatedDim(
-      bf.select(col("fbucket"), col("sigfp"), col("id").as("__bid")),
       bf.select(col("fbucket"), col("sigfp"), col("id").as("__bid")),
       bf.count(), MinhashFpRowBytes, broadcastBytes)
     val fpHits = storedFps
@@ -761,7 +759,7 @@ object Dedup {
     * deterministic in content, so the re-derived rows equal the stored
     * ones exactly) — never by scanning the index for ids. No artifact
     * carries a scalar and no statistic is denormalized into the rows, so
-    * each artifact folds by [[ServingLayout.Artifact.replaceIds]] alone. */
+    * each artifact folds by [[ServingLayout.Artifact.fold]] alone. */
   def minhashServingFold(
       spark: org.apache.spark.sql.SparkSession,
       bandsPath: String,
@@ -770,9 +768,7 @@ object Dedup {
       newDocs: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id",
-      buckets: Int = ServingBuckets,
-      repackBands: Seq[Long] = Nil,
-      repackFps: Seq[Long] = Nil): Unit = {
+      buckets: Int = ServingBuckets): Unit = {
     // one materialized signing pass PER SIDE; band/fp rows derive from
     // the signature blocks (the old shape re-shingled + re-hashed each
     // side once per checkpointed artifact)
@@ -784,20 +780,11 @@ object Dedup {
     val (newBands, newFps) = minhashServingRowsFromSigs(newSigs, buckets)
     val deltaIds = ServingLayout.deltaIds(oldDocs, newDocs, idCol)
       .localCheckpoint(true)
-    // each artifact rewrites the buckets its old and new rows live in;
-    // `repack*` widens the set with crowded partitions so a compaction
-    // rides this one rewrite (an included unaffected bucket passes the
-    // anti-join untouched and lands as one file). Disjoint paths over
-    // materialized inputs: independent job chains, overlapped (§2.6)
+    // disjoint paths over materialized inputs: independent job chains,
+    // overlapped (§2.6)
     ServingLayout.inParallel(
-      () => ServingLayout.rewrite(spark, bandsPath, minhashBands,
-        ServingLayout.affectedValues(
-          oldBands.select("pbucket").union(newBands.select("pbucket")))
-          ++ repackBands)(minhashBands.replaceIds(deltaIds, newBands)),
-      () => ServingLayout.rewrite(spark, fpsPath, minhashFps,
-        ServingLayout.affectedValues(
-          oldFps.select("fbucket").union(newFps.select("fbucket")))
-          ++ repackFps)(minhashFps.replaceIds(deltaIds, newFps)))
+      () => minhashBands.fold(spark, bandsPath, deltaIds, oldBands, newBands),
+      () => minhashFps.fold(spark, fpsPath, deltaIds, oldFps, newFps))
   }
 
   /** The DEFAULT pair-listing entry point over a GENERATIONED layout
@@ -1418,9 +1405,8 @@ object Dedup {
       .localCheckpoint(true) // distinct-value-sized, 4 consumers below
     val storedV = simhashVrows.readIn(spark, vrowsPath,
       ServingLayout.affectedValues(vb.select("sband")))
-    val dim = vb.select("sband", "band", "bv").distinct()
-    val vbandDim = gatedDim(dim, dim, vb.count(), SimhashBandRowBytes,
-      broadcastBytes)
+    val vbandDim = gatedDim(vb.select("sband", "band", "bv").distinct(),
+      vb.count(), SimhashBandRowBytes, broadcastBytes)
     val probedV = storedV
       .join(vbandDim, Seq("sband", "band", "bv"))
       .select("band", "bv", "simhash")
@@ -1475,9 +1461,8 @@ object Dedup {
     // candVals is PAIR-derived (it grows with the batch's pair fan-out,
     // not the batch) — the one dim side here that genuinely needs the
     // gate; candVals is already checkpointed, so the count is cheap
-    val candDim0 = candVals.select("vbucket", "simhash")
-    val candDim = gatedDim(candDim0, candDim0, candVals.count(),
-      SimhashValueRowBytes, broadcastBytes)
+    val candDim = gatedDim(candVals.select("vbucket", "simhash"),
+      candVals.count(), SimhashValueRowBytes, broadcastBytes)
     val members = storedM
       .join(candDim, Seq("vbucket", "simhash"))
       .select(col("simhash"), col("id"))
@@ -1538,26 +1523,21 @@ object Dedup {
       newDocs: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id",
-      buckets: Int = ServingBuckets,
-      repackVrows: Seq[Long] = Nil,
-      repackDocs: Seq[Long] = Nil): Unit = {
+      buckets: Int = ServingBuckets): Unit = {
     val oldFps = simhash(oldDocs, textCol, idCol).localCheckpoint(true)
     val newFps = simhash(newDocs, textCol, idCol).localCheckpoint(true)
     val deltaIds = ServingLayout.deltaIds(oldFps, newFps, "doc_id")
       .localCheckpoint(true)
     val candVals = oldFps.select("simhash").union(newFps.select("simhash"))
       .distinct().localCheckpoint(true)
-    // membership registry fold (per-doc pure). `repack*` widens each
-    // artifact's rewrite with crowded partitions (merged fold+compact —
-    // included unaffected buckets pass the anti-joins untouched); the
-    // two artifacts stay SEQUENTIAL here: value liveness derives from
-    // the post-fold registry replacement
-    val replacementM = ServingLayout.rewrite(spark, docsPath, simhashDocs,
-      ServingLayout.affectedValues(
-        candVals.select(simhashValueBucket(col("simhash"), buckets)))
-        ++ repackDocs)(simhashDocs.replaceIds(deltaIds, newFps.select(
-          simhashValueBucket(col("simhash"), buckets).as("vbucket"),
-          col("simhash"), col("doc_id").as("id"))))
+    def registryRows(fps: DataFrame): DataFrame = fps.select(
+      simhashValueBucket(col("simhash"), buckets).as("vbucket"),
+      col("simhash"), col("doc_id").as("id"))
+    // membership registry fold (per-doc pure); the two artifacts stay
+    // SEQUENTIAL here: value liveness derives from the post-fold
+    // registry replacement
+    val replacementM = simhashDocs.fold(spark, docsPath, deltaIds,
+      registryRows(oldFps), registryRows(newFps))
     // value-table fold: liveness from the POST-fold registry — derived
     // from the in-memory materialized replacement (what the write above
     // landed for exactly the affected buckets), not a read-back of
@@ -1573,8 +1553,7 @@ object Dedup {
     ServingLayout.rewrite(spark, vrowsPath, simhashVrows,
       ServingLayout.affectedValues(
         simhashVbandsOf(candVals)
-          .select(simhashBandBucket(col("band"), col("bv"), buckets)))
-        ++ repackVrows) {
+          .select(simhashBandBucket(col("band"), col("bv"), buckets)))) {
       _.join(candVals.select(col("simhash").as("__cv")),
           col("simhash") === col("__cv"), "left_anti")
         .select("sband", "band", "bv", "simhash")
@@ -1743,7 +1722,7 @@ object Dedup {
   }
 
   /** IN-PLACE partial maintenance — per-vector pure rows, so
-    * [[ServingLayout.Artifact.replaceIds]] over the affected buckets is
+    * [[ServingLayout.Artifact.fold]] over the affected buckets is
     * the whole fold (old buckets from re-bucketing the pre-delta vectors
     * at the frozen planes — never an index scan). */
   def embDupServingFold(
@@ -1752,18 +1731,10 @@ object Dedup {
       oldVecs: DataFrame,
       newVecs: DataFrame,
       idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      repack: Seq[Long] = Nil): Unit = {
-    val newRows = embDupServingRows(newVecs, idCol, vecCol).localCheckpoint(true)
-    // `repack` widens the rewrite with crowded partitions so a compaction
-    // rides this one fold pass (the merged fold+compact form)
-    ServingLayout.rewrite(spark, path, embDupVecs,
-      ServingLayout.affectedValues(
-        embDupServingRows(oldVecs, idCol, vecCol).select("bucket")
-          .union(newRows.select("bucket"))) ++ repack)(
-      embDupVecs.replaceIds(
-        ServingLayout.deltaIds(oldVecs, newVecs, idCol), newRows))
-  }
+      vecCol: String = "embedding"): Unit =
+    embDupVecs.fold(spark, path, ServingLayout.deltaIds(oldVecs, newVecs, idCol),
+      embDupServingRows(oldVecs, idCol, vecCol),
+      embDupServingRows(newVecs, idCol, vecCol).localCheckpoint(true))
 
   /** The DEFAULT pair-listing entry point over a GENERATIONED layout
     * root (each generation directory IS the vecs artifact): resolves the
@@ -1942,8 +1913,7 @@ object Dedup {
     val candBuckets = ServingLayout.affectedValues(candIds.select("vbucket"))
     val storedV = embMultiVecs.readIn(spark, vecsPath, candBuckets)
     // candIds is PAIR-derived — gated like the simhash candidate values
-    val idDim0 = candIds.select("vbucket", "id")
-    val idDim = gatedDim(idDim0, idDim0, candIds.count(),
+    val idDim = gatedDim(candIds.select("vbucket", "id"), candIds.count(),
       EmbIdRowBytes, broadcastBytes)
     val vsrc = storedV.join(idDim, Seq("vbucket", "id"))
       .select("id", "v", "nrm")
@@ -1992,7 +1962,7 @@ object Dedup {
   }
 
   /** IN-PLACE partial maintenance of BOTH multi-table artifacts —
-    * per-vector-pure rows in each, so [[ServingLayout.Artifact.replaceIds]]
+    * per-vector-pure rows in each, so [[ServingLayout.Artifact.fold]]
     * over the affected partitions is the whole fold (old band rows from
     * re-bucketing the pre-delta vectors at the frozen planes — never an
     * index scan; registry buckets are id-derived). */
@@ -2003,27 +1973,18 @@ object Dedup {
       oldVecs: DataFrame,
       newVecs: DataFrame,
       idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      repackTrows: Seq[Long] = Nil,
-      repackVecs: Seq[Long] = Nil): Unit = {
+      vecCol: String = "embedding"): Unit = {
     val (newT0, newV0) = embMultiServingRows(newVecs, idCol, vecCol)
     val newT = newT0.localCheckpoint(true)
     val newV = newV0.localCheckpoint(true)
     val (oldT, oldV) = embMultiServingRows(oldVecs, idCol, vecCol)
     val deltaIds = ServingLayout.deltaIds(oldVecs, newVecs, idCol)
       .localCheckpoint(true)
-    // `repack*` widens each artifact's rewrite with crowded partitions
-    // (merged fold+compact); the two chains touch disjoint paths over
-    // materialized inputs — independent job chains, overlapped (§2.6)
+    // the two chains touch disjoint paths over materialized inputs —
+    // independent job chains, overlapped (§2.6)
     ServingLayout.inParallel(
-      () => ServingLayout.rewrite(spark, trowsPath, embMultiTRows,
-        ServingLayout.affectedValues(
-          oldT.select("tbucket").union(newT.select("tbucket"))) ++ repackTrows)(
-        embMultiTRows.replaceIds(deltaIds, newT)),
-      () => ServingLayout.rewrite(spark, vecsPath, embMultiVecs,
-        ServingLayout.affectedValues(
-          oldV.select("vbucket").union(newV.select("vbucket"))) ++ repackVecs)(
-        embMultiVecs.replaceIds(deltaIds, newV)))
+      () => embMultiTRows.fold(spark, trowsPath, deltaIds, oldT, newT),
+      () => embMultiVecs.fold(spark, vecsPath, deltaIds, oldV, newV))
   }
 
   /** [[embMultiPairsServing]] over already-RESOLVED artifact frames —

@@ -130,15 +130,20 @@ object Retrieval {
       .select("query_id", "rnk", "doc_id", "score_micro")
   }
 
+  /** Partition-value cardinality of the postings and the doc registry:
+    * a fold and the probe reading its layout must agree on it, so every
+    * default points here. */
+  val ServingBuckets = 16
+
   /** Deterministic term→bucket assignment for the serving layout's
     * partitioning (md5 prefix mod `buckets`) — a layout-internal choice,
     * never graded content, so it needs no cross-engine twin. */
-  def termBucket(term: Column, buckets: Int = 16): Column =
+  def termBucket(term: Column, buckets: Int = ServingBuckets): Column =
     conv(substring(md5(term), 1, 4), 16, 10).cast("long") % buckets
 
   /** Doc-id→bucket assignment for the REGISTRY's partition layout —
     * layout-internal like [[termBucket]], never graded content. */
-  def docBucket(docId: Column, buckets: Int = 16): Column =
+  def docBucket(docId: Column, buckets: Int = ServingBuckets): Column =
     pmod(docId, lit(buckets.toLong))
 
   /** The persisted doc registry (the length table) by [[docBucket]]. */
@@ -158,7 +163,7 @@ object Retrieval {
     * the 1-row corpus stats (n, avgdl). All three re-derive from
     * [[bm25Postings]] at index-build time (the same derivations
     * [[bm25TopKFromPostings]] runs per query — hoisted to build time). */
-  def bm25ServingArtifacts(corpus: DataFrame, buckets: Int = 16)
+  def bm25ServingArtifacts(corpus: DataFrame, buckets: Int = ServingBuckets)
       : (DataFrame, DataFrame, DataFrame) = {
     val postings = bm25Postings(corpus).localCheckpoint(true)
     val withDf = postings
@@ -204,7 +209,7 @@ object Retrieval {
     * with the equi-join). */
   def bm25TopKServing(
       postings: DataFrame, docLen: DataFrame, stats: DataFrame,
-      queries: DataFrame, k: Int = 5, buckets: Int = 16): DataFrame = {
+      queries: DataFrame, k: Int = 5, buckets: Int = ServingBuckets): DataFrame = {
     val qb = queries.select(col("query_id"), col("term"))
       .withColumn("bucket",
         termBucket(col("term"), buckets).cast(postings.schema("bucket").dataType))
@@ -246,7 +251,7 @@ object Retrieval {
       spark: org.apache.spark.sql.SparkSession,
       layoutRoot: String,
       queries: DataFrame,
-      k: Int = 5, buckets: Int = 16): DataFrame = {
+      k: Int = 5, buckets: Int = ServingBuckets): DataFrame = {
     val gen = graft.streaming.StateStream.statePath(spark, layoutRoot)
     bm25TopKServing(
       bm25PostingsLayout.read(spark, s"$gen/postings"),
@@ -285,9 +290,7 @@ object Retrieval {
       statsPath: String,
       oldDocs: DataFrame,
       newDocs: DataFrame,
-      buckets: Int = 16,
-      repackPostings: Seq[Long] = Nil,
-      repackDocLen: Seq[Long] = Nil): Unit = {
+      buckets: Int = ServingBuckets): Unit = {
     val newPost = bm25Postings(newDocs)
       .withColumn("bucket", termBucket(col("term"), buckets))
       .localCheckpoint(true)
@@ -295,16 +298,12 @@ object Retrieval {
     // concurrently)
     val deltaIds = ServingLayout.deltaIds(oldDocs, newDocs, "doc_id")
       .localCheckpoint(true)
-    // `repack*` widens each rewrite with [[ServingLayout.crowdedValues]]'
-    // crowded partitions so a compaction rides this one rewrite (an
-    // included unaffected bucket passes the anti-join untouched and lands
-    // as one file, which is compact's whole contract)
     def foldPostings(): Unit = ServingLayout.rewrite(
       spark, postingsPath, bm25PostingsLayout,
       ServingLayout.affectedValues(
         bm25Postings(oldDocs)
           .select(termBucket(col("term"), buckets).as("bucket"))
-          .union(newPost.select("bucket"))) ++ repackPostings) { stored =>
+          .union(newPost.select("bucket")))) { stored =>
       // df RE-DERIVED within the affected buckets (bucket-local by the
       // term→bucket purity above); the new rows' df is a placeholder
       bm25PostingsLayout.replaceIds(deltaIds,
@@ -322,10 +321,8 @@ object Retrieval {
         .join(newPost.groupBy("doc_id").agg(sum("tf").as("__dl")), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("__dl"), lit(0L)).as("dl"),
           docBucket(col("doc_id"), buckets).as("dbucket"))
-      ServingLayout.rewrite(spark, docLenPath, bm25DocLen,
-        ServingLayout.affectedValues(deltaIds.toDF("doc_id")
-          .select(docBucket(col("doc_id"), buckets).as("dbucket")))
-          ++ repackDocLen)(bm25DocLen.replaceIds(deltaIds, newDl))
+      bm25DocLen.fold(spark, docLenPath, deltaIds,
+        oldDocs.select(docBucket(col("doc_id"), buckets).as("dbucket")), newDl)
       // reads docLenPath (final), writes statsPath — disjoint, no barrier
       statsFromDocLen(bm25DocLen.read(spark, docLenPath))
         .write.mode("overwrite").parquet(statsPath)

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
@@ -16,9 +16,21 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   * column and its row id. The artifact owns the build write, the
   * declared-schema read and the pruned read, so no call site restates a
   * shape. A fold derives the partition values its delta touches and
-  * hands them to [[rewrite]] with the replacement rule — for per-row-pure
-  * layouts [[Artifact.replaceIds]] — and [[rewrite]] owns everything
-  * else:
+  * hands them to [[rewrite]] with the replacement rule — a per-row-pure
+  * layout calls [[Artifact.fold]], which does both with the id-keyed
+  * rule — and [[rewrite]] owns everything else:
+  *
+  *   - '''Crowded partitions ride along.''' Every partition of the
+  *     layout holding more than one data file joins the value set. The
+  *     folds never fragment a partition themselves (see the overwrite
+  *     below); a multi-task partition write does — an AQE skew split of
+  *     a hot cell, parallel range-sliced builders appending into one
+  *     layout, any external append-mode writer. Every replace rule
+  *     passes the rows of a partition its delta does not touch through
+  *     unchanged, so the crowded partition is rewritten with identical
+  *     content as one file, and no partition holds more than one data
+  *     file after any rewrite. The check is a driver-side listing
+  *     bounded by the layout's partition-value cardinality, no job.
   *
   *   - '''Literal pruned read.''' The affected values reach the scan as a
   *     STATIC partition filter ([[Artifact.readIn]]) through the layout's
@@ -96,6 +108,17 @@ object ServingLayout {
       stored.join(deltaIds, col(idCol) === col("__did"), "left_anti")
         .select(schema.fieldNames.map(col): _*)
         .unionByName(fresh)
+
+    /** The whole fold of a per-row-pure layout: [[rewrite]] over the
+      * partitions the delta's `old` rows (re-derived from the pre-delta
+      * input, never an index scan; only `partCol` is read) and `fresh`
+      * rows live in, replaced by [[replaceIds]]. Returns the
+      * materialized replacement. */
+    private[graft] def fold(spark: SparkSession, path: String,
+        deltaIds: DataFrame, old: DataFrame, fresh: DataFrame): DataFrame =
+      rewrite(spark, path, this, affectedValues(
+        old.select(partCol).union(fresh.select(partCol))))(
+        replaceIds(deltaIds, fresh))
   }
 
   /** A delta's removal set for [[Artifact.replaceIds]]: the ids `idCol`
@@ -105,18 +128,23 @@ object ServingLayout {
     old.select(col(idCol).as("__did"))
       .union(fresh.select(col(idCol).as("__did"))).distinct()
 
-  /** Rewrite the partitions `values` of `artifact` at `path` in place:
-    * read them, replace their content with `replace` applied to that
-    * stored slice, and write the result back under the protocol above.
-    * Values the replacement leaves empty are swept; a value absent from
-    * `values` is never read or touched. Returns the materialized
-    * replacement, so a caller can derive further state from exactly what
-    * landed without reading the path back. */
+  /** Rewrite the partitions `values` of `artifact` at `path` in place,
+    * together with every crowded partition (object doc): read them,
+    * replace their content with `replace` applied to that stored slice,
+    * and write the result back under the protocol above. `replace` must
+    * yield rows of those partitions only. Values the replacement leaves
+    * empty are swept; a partition neither in `values` nor crowded is
+    * never read or touched. When the set is empty nothing runs and the
+    * replacement is empty. Returns the materialized replacement, so a
+    * caller can derive further state from exactly what landed without
+    * reading the path back. */
   private[graft] def rewrite(spark: SparkSession, path: String,
       artifact: Artifact, values: Seq[Long])(
       replace: DataFrame => DataFrame): DataFrame = {
     val partCol = artifact.partCol
-    val vs = values.distinct.sorted
+    val vs = (values ++ crowdedValues(spark, path, artifact)).distinct.sorted
+    if (vs.isEmpty)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](), artifact.schema)
     val landed = new Observation()
     val replacement = replace(artifact.readIn(spark, path, vs))
       .observe(landed, collect_set(col(partCol)).as("values"))
@@ -138,31 +166,17 @@ object ServingLayout {
     replacement
   }
 
-  /** Partition-local small-file repack. The folds themselves never
-    * fragment a partition (see the object doc); what does is a multi-task
-    * partition write — an AQE skew split of a hot cell, parallel
-    * range-sliced builders appending into one layout, any external
-    * append-mode writer. Every CROWDED partition (more than `maxFiles`
-    * data files) is rewritten unchanged through [[rewrite]], so content
-    * is bit-identical, uncrowded partitions keep their bytes, and a
-    * re-run that finds nothing crowded is a no-op. */
-  def compact(spark: SparkSession, path: String, artifact: Artifact,
-      maxFiles: Int = 1): Unit = {
-    val crowded = crowdedValues(spark, path, artifact, maxFiles)
-    if (crowded.nonEmpty) rewrite(spark, path, artifact, crowded)(identity)
-  }
+  /** Partition-local small-file repack: a [[rewrite]] with no values of
+    * its own, so only the crowded partitions are rewritten, unchanged —
+    * content is bit-identical, uncrowded partitions keep their bytes,
+    * and a re-run that finds nothing crowded runs no job. A fold needs
+    * no compact before or after it: its own rewrite repacks. */
+  def compact(spark: SparkSession, path: String, artifact: Artifact): Unit =
+    rewrite(spark, path, artifact, Nil)(identity)
 
-  /** The compact trigger set: partition values of `path` holding more
-    * than `maxFiles` data files. Exposed beside [[compact]] so a caller
-    * that is ABOUT to fold a layout can hand the crowded set to the
-    * fold's `repack` parameter instead — the crowded partitions then
-    * ride the fold's own read+rewrite (one job chain per artifact
-    * instead of a fold chain plus a compact chain; content-identical
-    * either way, because a fold's dynamic overwrite rewrites each
-    * included partition to one file). Control-plane: the listing is
-    * bounded by the layout's partition-value cardinality. */
-  def crowdedValues(spark: SparkSession, path: String, artifact: Artifact,
-      maxFiles: Int = 1): Seq[Long] = {
+  /** The partition values of `path` holding more than one data file. */
+  private def crowdedValues(spark: SparkSession, path: String,
+      artifact: Artifact): Seq[Long] = {
     val partCol = artifact.partCol
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -173,10 +187,9 @@ object ServingLayout {
         fs.listStatus(st.getPath).count { f =>
           val n = f.getPath.getName
           f.isFile && !n.startsWith("_") && !n.startsWith(".")
-        } > maxFiles
+        } > 1
       }
       .map(_.getPath.getName.stripPrefix(s"$partCol=").toLong)
-      .sorted
   }
 
   /** Run independent driver-side job chains CONCURRENTLY (guide §2.6:

@@ -403,8 +403,9 @@ object Similarity {
     * deterministic, so this equals what the index stores — no
     * neighbor_id scan of the index is ever needed); affected = old cells
     * ∪ new cells, and the replacement content for those cells is
-    * [[ServingLayout.Artifact.replaceIds]] over the new assignments. The
-    * emptied set is MODEL-bounded (≤ numCentroids cells). The write,
+    * [[ServingLayout.Artifact.fold]]'s id-keyed rule over the new
+    * assignments. The emptied set is MODEL-bounded (≤ numCentroids
+    * cells). The write,
     * sweep, replay and reader-isolation contract is
     * [[ServingLayout.rewrite]]'s (replay pinned by IvfRecallSpec). */
   def ivfServingFold(
@@ -414,20 +415,10 @@ object Similarity {
       newVecs: DataFrame,
       cents: DataFrame,
       idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      repack: Seq[Long] = Nil): Unit = {
-    val newAssign = ivfIndex(newVecs, cents, idCol, vecCol).localCheckpoint(true)
-    // `repack` widens the set with [[ServingLayout.crowdedValues]]'
-    // crowded cells so a compaction rides this one rewrite (merged
-    // fold+compact — an included unaffected cell passes the anti-join
-    // untouched and lands as one file)
-    ServingLayout.rewrite(spark, cellsPath, ivfCells,
-      ServingLayout.affectedValues(
-        ivfIndex(oldVecs, cents, idCol, vecCol).select("cell")
-          .union(newAssign.select("cell"))) ++ repack)(
-      ivfCells.replaceIds(
-        ServingLayout.deltaIds(oldVecs, newVecs, idCol), newAssign))
-  }
+      vecCol: String = "embedding"): Unit =
+    ivfCells.fold(spark, cellsPath, ServingLayout.deltaIds(oldVecs, newVecs, idCol),
+      ivfIndex(oldVecs, cents, idCol, vecCol),
+      ivfIndex(newVecs, cents, idCol, vecCol).localCheckpoint(true))
 
   /** Probe-side IVF search over a built index: queries assign to their
     * `probes` nearest centroids, candidates are the index rows in probed
@@ -788,7 +779,7 @@ object Similarity {
     * index — [[ivfServingFold]]'s mechanics on the COMPRESSED artifact:
     * encoding is per-vector at the frozen (cents, cb) model, so a delta
     * rewrites only the coarse cells its old/new vectors assign to, and
-    * [[ServingLayout.Artifact.replaceIds]] covers revise/delete/insert. */
+    * [[ServingLayout.Artifact.fold]] covers revise/delete/insert. */
   def ivfPqServingFold(
       spark: SparkSession,
       codesPath: String,
@@ -798,20 +789,10 @@ object Similarity {
       cb: DataFrame,
       subspaces: Int = 4,
       idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      repack: Seq[Long] = Nil): Unit = {
-    val newEnc = ivfPqEncode(newVecs, cents, cb, subspaces, idCol, vecCol)
-      .localCheckpoint(true)
-    // `repack` widens the set with crowded cells so a compaction rides
-    // this one rewrite (merged fold+compact)
-    ServingLayout.rewrite(spark, codesPath, pqCodes,
-      ServingLayout.affectedValues(
-        ivfPqEncode(oldVecs, cents, cb, subspaces, idCol, vecCol)
-          .select("ccell")
-          .union(newEnc.select("ccell"))) ++ repack)(
-      pqCodes.replaceIds(
-        ServingLayout.deltaIds(oldVecs, newVecs, idCol), newEnc))
-  }
+      vecCol: String = "embedding"): Unit =
+    pqCodes.fold(spark, codesPath, ServingLayout.deltaIds(oldVecs, newVecs, idCol),
+      ivfPqEncode(oldVecs, cents, cb, subspaces, idCol, vecCol),
+      ivfPqEncode(newVecs, cents, cb, subspaces, idCol, vecCol).localCheckpoint(true))
 
   /** ADC search over a prebuilt code index at the frozen model. */
   def ivfPqSearch(

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Static guards on the one-write-protocol rules. Serving layouts: a
   * dynamic partition overwrite outside [[graft.ext.ServingLayout]] would be
   * a new copy of the read → replace → barrier → overwrite → sweep skeleton,
-  * free to drift from it (a footer-inferred read, a missing sweep), and a
-  * hand-built removal set a new copy of the id-keyed replace rule.
+  * free to drift from it (a footer-inferred read, a missing sweep), a
+  * hand-built removal set a new copy of the id-keyed replace rule, and a
+  * caller-side crowded check a compaction that some folds skip.
   * Changelog sinks: rows are appended only through the StagedAppend
   * journal, and full rewrites only through SinkLayout's version swap. */
 class WriteProtocolSpec extends AnyFunSuite {
@@ -38,6 +39,22 @@ class WriteProtocolSpec extends AnyFunSuite {
     val users = mainSourcesWith("__did")
     assert(users == Seq("graft/ext/ServingLayout.scala"),
       s"the id-keyed replace rule must go through ServingLayout: $users")
+  }
+
+  test("only ServingLayout decides which partitions are crowded") {
+    // a fold handed a crowded set by its caller would make compaction an
+    // opt-in again instead of a property of every rewrite
+    val users = mainSourcesWith("crowdedValues")
+    assert(users == Seq("graft/ext/ServingLayout.scala"),
+      s"the crowded-partition check must stay inside ServingLayout.rewrite: $users")
+  }
+
+  test("id-keyed folds go through Artifact.fold") {
+    // BM25 postings is the one caller outside ServingLayout: its df
+    // window runs over the replaceIds result
+    val users = mainSourcesWith(".replaceIds(")
+    assert(users.forall(Set("graft/ext/ServingLayout.scala", "graft/ext/Retrieval.scala")),
+      s"an id-keyed fold must call Artifact.fold, not restate it: $users")
   }
 
   test("only the journal stages changelog rows") {

@@ -123,13 +123,18 @@ class MinhashServingSpec extends AnyFunSuite with graft.SparkFixture {
     val touched = bucketsOf(pre.where($"doc_id" === 3L)) ++ bucketsOf(newDocs)
     val untouched = bucketsOf(pre.where($"doc_id" =!= 3L)) -- touched
     assert(untouched.nonEmpty, "construction must leave an untouched bucket")
-    // plant a corrupt parquet file in an untouched bucket: the explicit-
-    // schema read never opens footers at planning time, so ONLY a scan
-    // task that actually reads this bucket would crash — the statically
-    // pruned fold must succeed (the semi-join form scanned every bucket
-    // and would throw here)
-    Files.write(
-      Paths.get(bandsPath, s"pbucket=${untouched.head}", "part-corrupt.parquet"),
+    // replace an untouched bucket's data file (and its checksum) with a
+    // corrupt one: the explicit-schema read never opens footers at
+    // planning time, so ONLY a scan task that actually reads this bucket
+    // would crash — the statically pruned fold must succeed (the
+    // semi-join form scanned every bucket and would throw here). The
+    // bucket keeps exactly one data file, so the rewrite's crowded-
+    // partition repack leaves it alone too
+    val plantDir = Paths.get(bandsPath, s"pbucket=${untouched.head}")
+    Files.list(plantDir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.matches("""\.?part-.*"""))
+      .foreach(Files.delete(_))
+    Files.write(plantDir.resolve("part-corrupt.parquet"),
       "not a parquet file".getBytes)
     Dedup.minhashServingFold(s, bandsPath, fpsPath,
       pre.where($"doc_id" === 3L), newDocs, buckets = B)
@@ -194,6 +199,63 @@ class MinhashServingSpec extends AnyFunSuite with graft.SparkFixture {
       .map(_.asInstanceOf[java.nio.file.Path])
       .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
     assert(mtimes2 == mtimes, "a re-run that finds nothing crowded is a no-op")
+  }
+
+  test("a fold onto a fragmented layout repacks every crowded bucket and " +
+      "lands equal to scratch") {
+    val s = spark
+    import s.implicits._
+    import java.nio.file.{Files, Paths}
+    val docs = (1L to 12L).map(i =>
+      (i, s"w$i x$i y$i z$i q${i % 3} r${i % 3} s${i % 3} t${i % 3}"))
+      .toDF("doc_id", "text")
+    val revised = Seq((3L, "w1 x1 y1 z1 q1 r1 s1 t1 u3")).toDF("doc_id", "text")
+    val base = graft.TempDirs.create("graft_mhfragfold_t")
+    val bandsPath = base.resolve("bands").toString
+    val fpsPath = base.resolve("fps").toString
+    // two parallel range-sliced appends fragment every bucket they share
+    val (bands0, fps0) = Dedup.minhashServingRows(docs)
+    Seq((bands0, "pbucket", bandsPath), (fps0, "fbucket", fpsPath)).foreach {
+      case (rows, partCol, path) =>
+        val r = rows.localCheckpoint(true)
+        r.where($"id" <= 6L).repartition(col(partCol))
+          .write.partitionBy(partCol).mode("append").parquet(path)
+        r.where($"id" > 6L).repartition(col(partCol))
+          .write.partitionBy(partCol).mode("append").parquet(path)
+    }
+    def fileCounts(root: String): Map[Long, Int] =
+      Files.list(Paths.get(root)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(Files.isDirectory(_))
+        .map { p =>
+          p.getFileName.toString.split("=")(1).toLong ->
+            Files.list(p).toArray.map(_.asInstanceOf[java.nio.file.Path])
+              .count { f =>
+                val n = f.getFileName.toString
+                Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
+              }
+        }.toMap
+    val touched = Seq(docs.where($"doc_id" === 3L), revised)
+      .flatMap(d => Dedup.minhashServingRows(d)._1.select($"pbucket")
+        .collect().map(_.getLong(0))).toSet
+    assert(fileCounts(bandsPath).exists { case (b, n) => n > 1 && !touched(b) },
+      "construction must fragment a bucket the delta does not touch")
+    Dedup.minhashServingFold(s, bandsPath, fpsPath,
+      docs.where($"doc_id" === 3L), revised)
+    assert(fileCounts(bandsPath).values.forall(_ == 1) &&
+      fileCounts(fpsPath).values.forall(_ == 1),
+      s"every bucket must hold one data file after the fold: " +
+        s"${fileCounts(bandsPath)} ${fileCounts(fpsPath)}")
+    val post = docs.where($"doc_id" =!= 3L).unionByName(revised)
+    val scratch = graft.TempDirs.create("graft_mhfragfold_s")
+    Dedup.writeServingLayout(post, scratch.resolve("bands").toString,
+      scratch.resolve("fps").toString)
+    def pairs(bands: String, fps: String): Set[Seq[Any]] =
+      Dedup.minhashPairsFrom(Dedup.minhashBands.read(s, bands),
+        Dedup.minhashFps.read(s, fps), post).collect().map(_.toSeq).toSet
+    val want = pairs(scratch.resolve("bands").toString, scratch.resolve("fps").toString)
+    assert(want.nonEmpty, "construction must yield near-duplicate pairs")
+    assert(pairs(bandsPath, fpsPath) == want,
+      "the folded fragmented layout must answer the scratch build's pairs")
   }
 
   test("probe broadcast gate: a tripped gate falls back to merge-hinted " +

@@ -21,6 +21,34 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
       case _ => Nil
     }
 
+  /** The SQL execution ids of the jobs `body` runs (null for a job
+    * outside any execution), seen under a job group of their own. */
+  private def executionsOf(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"executions-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val jl = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.sql.execution.root.id")))
+    }
+    sc.addSparkListener(jl)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job is seen,
+      // every job of `body` has been seen too
+      sc.setJobGroup(marker, marker)
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.asScala.exists(_._1 == marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      jobs.asScala.toSeq.filter(_._1 == group).map(_._2)
+    } finally sc.removeSparkListener(jl)
+  }
+
   test("affectedValues collects a sorted distinct literal set") {
     val s = spark
     import s.implicits._
@@ -215,6 +243,51 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
     // set, and leaves every partition as it was
     val before = (0 to 3).map(files)
     ServingLayout.rewrite(s, path, layout, Nil)(identity)
+    assert((0 to 3).map(files) == before && content() == expected)
+  }
+
+  test("rewrite repacks a crowded partition outside its value set, and a " +
+      "rewrite of nothing over a clean layout runs no job") {
+    val s = spark
+    import s.implicits._
+    import java.nio.file.{Files, Paths}
+    val path = graft.TempDirs.create("graft_slayout_crowd").resolve("t").toString
+    (0L until 40L).map(i => (i, i % 4)).toDF("id", "b")
+      .repartition(col("b")).write.partitionBy("b").parquet(path)
+    // a second writer appends into partition 2, which is outside `values`
+    Seq(42L, 46L).map(i => (i, i % 4)).toDF("id", "b")
+      .repartition(col("b")).write.partitionBy("b").mode("append").parquet(path)
+    val schema = s.read.parquet(path).schema
+    val layout = ServingLayout.Artifact(schema, "b", "id")
+    def files(b: Int): Map[String, Long] =
+      Files.list(Paths.get(path, s"b=$b")).toArray
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter { p =>
+          val n = p.getFileName.toString
+          !n.startsWith("_") && !n.startsWith(".")
+        }
+        .map(p => p.getFileName.toString -> Files.getLastModifiedTime(p).toMillis)
+        .toMap
+    def content(): Set[(Long, Long)] =
+      s.read.schema(schema).parquet(path)
+        .select($"id", $"b".cast("long")).as[(Long, Long)].collect().toSet
+    assert(files(2).size == 2, "construction: partition 2 must be crowded")
+    val untouched = Seq(0, 3).map(b => b -> files(b)).toMap
+    val expected = content().filter(_._1 != 1L)
+
+    val executions = executionsOf(
+      ServingLayout.rewrite(s, path, layout, Seq(1L))(_.where(col("id") =!= 1L)))
+    assert(files(2).size == 1, "the crowded partition must be repacked to one file")
+    assert(content() == expected, "the repack must leave the content unchanged")
+    assert(untouched.forall { case (b, fs) => files(b) == fs },
+      "uncrowded partitions outside the value set must keep their file names and mtimes")
+    assert(executions.nonEmpty && executions.forall(_ != null) &&
+      executions.distinct.length == 2,
+      s"the repack rides the rewrite's two executions: $executions")
+
+    val before = (0 to 3).map(files)
+    val none = executionsOf(ServingLayout.rewrite(s, path, layout, Nil)(identity))
+    assert(none.isEmpty, s"a rewrite of nothing over a clean layout runs no job: $none")
     assert((0 to 3).map(files) == before && content() == expected)
   }
 
