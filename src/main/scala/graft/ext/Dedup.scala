@@ -242,10 +242,14 @@ object Dedup {
   /** LSH banding: signature → (id, band, sig) rows, one per band. */
   def bands(sigs: DataFrame): DataFrame =
     sigs.select(col("id"), explode(array((0 until NumBands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("|", (0 until BandSize).map(o => col(s"mh_${b * BandSize + o}")): _*).as("sig"))
+      struct(lit(b).as("band"), bandSig(b).as("sig"))
     }: _*)).as("bs"))
       .select(col("id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+
+  /** Band `b`'s signature over a [[minhashSignatures]] row: its
+    * `BandSize` hash slots, '|'-joined. */
+  private def bandSig(b: Int): Column =
+    concat_ws("|", (0 until BandSize).map(o => col(s"mh_${b * BandSize + o}")): _*)
 
   /** Candidate pairs: docs sharing at least one full band signature.
     * Generated at DISTINCT-SIGNATURE granularity then expanded to member
@@ -552,12 +556,8 @@ object Dedup {
     * [[minhashIngest]]/[[pairsFromIndex]] pivot out of raw index rows, so
     * the persisted registry and the on-the-fly exact routes agree
     * bit-for-bit. */
-  private def sigFingerprint: Column = {
-    val bandSigs = (0 until NumBands).map { b =>
-      concat_ws("|", (0 until BandSize).map(o => col(s"mh_${b * BandSize + o}")): _*)
-    }
-    md5(concat_ws("#", bandSigs: _*).cast("binary"))
-  }
+  private def sigFingerprint: Column =
+    md5(concat_ws("#", (0 until NumBands).map(bandSig): _*).cast("binary"))
 
   /** BYTE ceiling for CANDIDATE-derived broadcast dim sides in the
     * serving probes. The batch's own band/fingerprint rows are
@@ -577,15 +577,15 @@ object Dedup {
     * included) — declared once so every gate prices the dim it bounds:
     * minhash band rows carry a ~32-char signature STRING, fp rows a
     * 32-hex md5 string; the simhash dims are fixed-width long tuples. */
-  private val MinhashBandRowBytes = 96L
+  private[graft] val MinhashBandRowBytes = 96L
   private val MinhashFpRowBytes = 96L
   private val SimhashBandRowBytes = 40L
   private val SimhashValueRowBytes = 32L
 
   /** The gated dim side: broadcast while `rows × rowBytes` stays under
-    * the byte limit, merge-hinted shuffled join above it. `rows` is a
-    * control-plane count over an already-materialized batch/candidate
-    * frame (cheap, bounded by the frame it gates). */
+    * the byte limit, merge-hinted shuffled join above it. `rows` is the
+    * dim's row count as its stage's [[ServingLayout.materialize]]
+    * observed it — no job of its own. */
   private def gatedDim(dim: DataFrame, rows: Long,
       rowBytes: Long, limitBytes: Long): DataFrame =
     // division, not rows*rowBytes: the gate exists to bound PATHOLOGICAL
@@ -680,29 +680,26 @@ object Dedup {
       buckets: Int = ServingBuckets,
       broadcastBytes: Long = ProbeBroadcastBytes): DataFrame = {
     // ONE materialized signing pass (shingles + minhash) feeds both
-    // artifact sides — the old shape re-signed the batch once per
-    // checkpointed side and once more per un-checkpointed DPP dim
-    val sigs = minhashSignatures(rawShingles(batch, textCol, idCol))
-      .localCheckpoint(true)
-    val (bb0, bf0) = minhashServingRowsFromSigs(sigs, buckets)
-    val bb = bb0.localCheckpoint(true)
-    val bf = bf0.localCheckpoint(true)
+    // artifact sides; its job observes the batch's band and fp buckets
+    // and its signature count (the probe control plane), and the band/fp
+    // rows are lazy projections of it
+    val (sigs, nSigs, Seq(pbuckets, fbuckets)) = ServingLayout.materialize(
+      minhashSignatures(rawShingles(batch, textCol, idCol)),
+      array((0 until NumBands).map(b => bandBucket(lit(b), bandSig(b), buckets)): _*),
+      fpBucket(sigFingerprint, buckets))
+    val (bb, bf) = minhashServingRowsFromSigs(sigs, buckets)
     // banded route: probed groups' stored members (pruned scan; the
     // broadcast side is distinct on the join keys, so the inner join is
     // the semi-join it reads as) ∪ the batch's own rows, then the ingest
     // probe's cap + pair logic verbatim. The scans are STATICALLY
-    // partition-pruned: the batch's pbucket/fbucket sets collect to
-    // literals (≤ `buckets` each, a layout constant — the affectedValues
-    // control-plane scalar), so pruning no longer depends on the dim
-    // side's lineage and survives the gated fallback arm too. The
-    // broadcast is GATED on the batch's band-row count (`bb` is
-    // checkpointed, so the count is a cheap control-plane action); above
-    // the gate the probe shuffles with the merge hint instead — driver
-    // bounded
-    val stored = minhashBands.readIn(spark, bandsPath,
-      ServingLayout.affectedValues(bb.select("pbucket")))
+    // partition-pruned by the batch's bucket literals, so pruning does
+    // not depend on the dim side's lineage and survives the gated
+    // fallback arm too. The broadcast is GATED on the batch's band-row
+    // count (`bands` emits NumBands rows per signature); above the gate
+    // the probe shuffles with the merge hint instead — driver bounded
+    val stored = minhashBands.readIn(spark, bandsPath, pbuckets)
     val bandDim = gatedDim(bb.select("pbucket", "band", "sig").distinct(),
-      bb.count(), MinhashBandRowBytes, broadcastBytes)
+      nSigs * NumBands, MinhashBandRowBytes, broadcastBytes)
     val probedStored = stored
       .join(bandDim, Seq("pbucket", "band", "sig"))
       .select("band", "sig", "id")
@@ -717,11 +714,10 @@ object Dedup {
     // exact route: identical FULL signatures pair regardless of bucket
     // heat — batch fingerprints probe the partitioned registry (pruned)
     // and self-join for within-batch exact pairs
-    val storedFps = minhashFps.readIn(spark, fpsPath,
-      ServingLayout.affectedValues(bf.select("fbucket")))
+    val storedFps = minhashFps.readIn(spark, fpsPath, fbuckets)
     val fpDim = gatedDim(
       bf.select(col("fbucket"), col("sigfp"), col("id").as("__bid")),
-      bf.count(), MinhashFpRowBytes, broadcastBytes)
+      nSigs, MinhashFpRowBytes, broadcastBytes)
     val fpHits = storedFps
       .join(fpDim, Seq("fbucket", "sigfp"))
       .select(col("__bid"), col("id").as("__oid"))
@@ -1387,11 +1383,9 @@ object Dedup {
     * materialized `simhash()` pass feeds every stage — the r16 verdict's
     * one-signing-pass ask; the old shape re-signed the batch per dim
     * subtree because DPP needed un-checkpointed batch lineage). The
-    * stored read is STATICALLY partition-pruned instead: the batch's
-    * sband set collects to a literal (≤ `buckets`, a layout constant —
-    * the affectedValues control-plane scalar), so runtime pruning no
-    * longer depends on the dim side's lineage at all and the gated
-    * fallback arm keeps the pruning too. */
+    * stored read is STATICALLY partition-pruned instead by the batch's
+    * sband literals, so pruning does not depend on the dim side's
+    * lineage at all and the gated fallback arm keeps the pruning too. */
   private def simhashValuePairsFromFps(
       spark: org.apache.spark.sql.SparkSession,
       vrowsPath: String,
@@ -1399,14 +1393,15 @@ object Dedup {
       maxBucket: Long,
       buckets: Int,
       broadcastBytes: Long): DataFrame = {
-    val vb = simhashVbandsOf(fps.select("simhash").distinct())
-      .select(col("band"), col("bv"), col("simhash"),
-        simhashBandBucket(col("band"), col("bv"), buckets).as("sband"))
-      .localCheckpoint(true) // distinct-value-sized, 4 consumers below
-    val storedV = simhashVrows.readIn(spark, vrowsPath,
-      ServingLayout.affectedValues(vb.select("sband")))
+    // distinct-value-sized, 4 consumers below
+    val (vb, nVb, Seq(sbands)) = ServingLayout.materialize(
+      simhashVbandsOf(fps.select("simhash").distinct())
+        .select(col("band"), col("bv"), col("simhash"),
+          simhashBandBucket(col("band"), col("bv"), buckets).as("sband")),
+      col("sband"))
+    val storedV = simhashVrows.readIn(spark, vrowsPath, sbands)
     val vbandDim = gatedDim(vb.select("sband", "band", "bv").distinct(),
-      vb.count(), SimhashBandRowBytes, broadcastBytes)
+      nVb, SimhashBandRowBytes, broadcastBytes)
     val probedV = storedV
       .join(vbandDim, Seq("sband", "band", "bv"))
       .select("band", "bv", "simhash")
@@ -1444,25 +1439,23 @@ object Dedup {
       spark, vrowsPath, fps, maxBucket, buckets, broadcastBytes)
       .localCheckpoint(true) // candidate-pair-sized; four consumers below
     // membership of every value a pair (or the equal-value route) can
-    // touch — pointed reads of the candidate values' buckets. The bucket
-    // set collects to a literal (≤ ServingBuckets — the affectedValues
-    // control-plane scalar), so the scan is STATICALLY partition-pruned;
-    // DPP is unavailable here (the dim side is materialized candidate
-    // data, not a filtered source). Left lazy so the final plan carries
-    // the pruned scan for the metric lock — it is a small pruned read
-    val candVals = vpairs.select(col("__va").as("simhash"))
-      .unionByName(vpairs.select(col("__vb").as("simhash")))
-      .unionByName(bfps.select("simhash"))
-      .distinct()
-      .withColumn("vbucket", simhashValueBucket(col("simhash"), buckets))
-      .localCheckpoint(true)
-    val candBuckets = ServingLayout.affectedValues(candVals.select("vbucket"))
+    // touch — pointed reads of the candidate values' buckets, STATICALLY
+    // partition-pruned by their literals; DPP is unavailable here (the
+    // dim side is materialized candidate data, not a filtered source).
+    // The membership read stays lazy, so the final plan carries the
+    // pruned scan for the metric lock — it is a small pruned read
+    val (candVals, nCandVals, Seq(candBuckets)) = ServingLayout.materialize(
+      vpairs.select(col("__va").as("simhash"))
+        .unionByName(vpairs.select(col("__vb").as("simhash")))
+        .unionByName(bfps.select("simhash"))
+        .distinct()
+        .withColumn("vbucket", simhashValueBucket(col("simhash"), buckets)),
+      col("vbucket"))
     val storedM = simhashDocs.readIn(spark, docsPath, candBuckets)
     // candVals is PAIR-derived (it grows with the batch's pair fan-out,
-    // not the batch) — the one dim side here that genuinely needs the
-    // gate; candVals is already checkpointed, so the count is cheap
+    // not the batch) — the one dim side here that genuinely needs the gate
     val candDim = gatedDim(candVals.select("vbucket", "simhash"),
-      candVals.count(), SimhashValueRowBytes, broadcastBytes)
+      nCandVals, SimhashValueRowBytes, broadcastBytes)
     val members = storedM
       .join(candDim, Seq("vbucket", "simhash"))
       .select(col("simhash"), col("id"))
@@ -1680,10 +1673,9 @@ object Dedup {
     embDupVecs.write(embDupServingRows(emb, idCol, vecCol), path)
 
   /** The PRUNED ingest probe: the arriving batch's own bucket
-    * assignments broadcast against the bucket-partitioned layout
-    * (runtime partition filter — only the batch's buckets are read),
-    * candidates verify by exact cosine against the STORED (v, nrm) —
-    * no source fetch. Pairs involving a batch vector, within the batch
+    * assignments prune the bucket-partitioned layout statically (only
+    * the batch's buckets are read), candidates verify by exact cosine
+    * against the STORED (v, nrm) — no source fetch. Pairs involving a batch vector, within the batch
     * included. Left lazy: verification is the candidate join itself, so
     * there is no fan-out to materialize, and the plan lock reads the
     * scan's runtime pruning metrics straight off the returned frame. */
@@ -1695,14 +1687,11 @@ object Dedup {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     // ONE materialized bucketing pass; the stored scan is STATICALLY
-    // partition-pruned by the batch's bucket literal set (≤ 2^NumPlanes,
-    // a model constant — the affectedValues control-plane scalar), so
-    // pruning no longer needs un-checkpointed batch lineage for DPP
-    val b = embDupServingRows(batch, idCol, vecCol).localCheckpoint(true)
-    val stored = embDupVecs.readIn(spark, path,
-      ServingLayout.affectedValues(b.select("bucket")))
-    val probed = stored
-      .join(broadcast(b.select("bucket").distinct()), Seq("bucket"))
+    // partition-pruned to exactly the batch's buckets, so pruning needs
+    // no un-checkpointed batch lineage for DPP
+    val (b, _, Seq(bucketVals)) = ServingLayout.materialize(
+      embDupServingRows(batch, idCol, vecCol), col("bucket"))
+    val probed = embDupVecs.readIn(spark, path, bucketVals)
       // a batch that REVISES an already-stored id must verify against the
       // batch's vector, never the stale stored one: the batch row wins
       // (broadcast anti-join on the batch-bounded id dim) — no disjoint-id
@@ -1862,14 +1851,28 @@ object Dedup {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): (DataFrame, DataFrame) = {
     val trows = emb.select(col(idCol).as("id"),
-      explode(array((0 until EmbTables).map(t =>
-        lit(t.toLong * (1L << EmbPlanesPerTable)) +
-          Similarity.tableBucket(col(vecCol), t, EmbPlanesPerTable)): _*))
-        .as("tbucket"))
+      explode(embMultiTBuckets(col(vecCol))).as("tbucket"))
     val vecs = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
       Similarity.l2Norm(col(vecCol)).as("nrm"),
       pmod(col(idCol), lit(EmbRegistryBuckets.toLong)).as("vbucket"))
     (trows, vecs)
+  }
+
+  /** A vector's band-row keys, one `tbucket` per table. */
+  private def embMultiTBuckets(v: Column): Column =
+    array((0 until EmbTables).map(t =>
+      lit(t.toLong * (1L << EmbPlanesPerTable)) +
+        Similarity.tableBucket(v, t, EmbPlanesPerTable)): _*)
+
+  /** A probe batch's registry rows with their `tbuckets` array,
+    * materialized ONCE for both probe stages, and the batch's tbucket
+    * literals. */
+  private def embMultiBatch(batch: DataFrame, idCol: String, vecCol: String)
+      : (DataFrame, Seq[Long]) = {
+    val (_, vecs) = embMultiServingRows(batch, idCol, vecCol)
+    val (rows, _, Seq(tbuckets)) = ServingLayout.materialize(
+      vecs.withColumn("tbuckets", embMultiTBuckets(col("v"))), col("tbuckets"))
+    (rows, tbuckets)
   }
 
   /** Write a vector set's MULTI-TABLE near-dup index in its serving
@@ -1886,11 +1889,11 @@ object Dedup {
   }
 
   /** The PRUNED multi-table ingest probe: the batch's own (table, bucket)
-    * rows broadcast against the tbucket-partitioned band index (runtime
-    * partition filter — only the batch's buckets of any table are read),
-    * the distinct candidate pairs fetch (v, nrm) from the registry's
-    * candidate buckets (statically pruned; the candidate-derived id dim
-    * is [[gatedDim]]-bounded — it grows with the pair fan-out, not the
+    * keys prune the tbucket-partitioned band index statically (only the
+    * batch's buckets of any table are read), the distinct candidate
+    * pairs fetch (v, nrm) from the registry's candidate buckets
+    * (statically pruned; the candidate-derived id dim is
+    * [[gatedDim]]-bounded — it grows with the pair fan-out, not the
     * batch), and exact cosine verifies. Pairs involving a batch vector,
     * within the batch included. */
   def embMultiServingProbe(
@@ -1902,18 +1905,18 @@ object Dedup {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       broadcastBytes: Long = ProbeBroadcastBytes): DataFrame = {
-    val (_, bv0) = embMultiServingRows(batch, idCol, vecCol)
-    val bv = bv0.localCheckpoint(true)
-    val cand = embMultiServingCandidates(spark, trowsPath, batch, idCol, vecCol)
+    val (rows, tbuckets) = embMultiBatch(batch, idCol, vecCol)
+    val bv = rows.select("id", "v", "nrm")
+    val cand = embMultiCandidatesOf(spark, trowsPath, rows, tbuckets)
       .localCheckpoint(true) // pair-sized; consumed by the id dim AND the verify join
-    val candIds = cand.select(col("id_a").as("id"))
-      .unionByName(cand.select(col("id_b").as("id"))).distinct()
-      .withColumn("vbucket", pmod(col("id"), lit(EmbRegistryBuckets.toLong)))
-      .localCheckpoint(true)
-    val candBuckets = ServingLayout.affectedValues(candIds.select("vbucket"))
+    val (candIds, nCandIds, Seq(candBuckets)) = ServingLayout.materialize(
+      cand.select(col("id_a").as("id"))
+        .unionByName(cand.select(col("id_b").as("id"))).distinct()
+        .withColumn("vbucket", pmod(col("id"), lit(EmbRegistryBuckets.toLong))),
+      col("vbucket"))
     val storedV = embMultiVecs.readIn(spark, vecsPath, candBuckets)
     // candIds is PAIR-derived — gated like the simhash candidate values
-    val idDim = gatedDim(candIds.select("vbucket", "id"), candIds.count(),
+    val idDim = gatedDim(candIds.select("vbucket", "id"), nCandIds,
       EmbIdRowBytes, broadcastBytes)
     val vsrc = storedV.join(idDim, Seq("vbucket", "id"))
       .select("id", "v", "nrm")
@@ -1942,16 +1945,21 @@ object Dedup {
       batch: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val (bt0, _) = embMultiServingRows(batch, idCol, vecCol)
-    val bt = bt0.localCheckpoint(true)
-    // STATIC partition pruning from the checkpointed batch's tbucket
-    // literal set (≤ EmbTables·2^EmbPlanesPerTable, a model constant) —
-    // one bucketing pass feeds the dim and the scan filter
-    val storedT = embMultiTRows.readIn(spark, trowsPath,
-      ServingLayout.affectedValues(bt.select("tbucket")))
-    val probedT = storedT
-      .join(broadcast(bt.select("tbucket").distinct()), Seq("tbucket"))
-    val others = probedT.select(col("tbucket"), col("id").as("id_b"))
+    val (rows, tbuckets) = embMultiBatch(batch, idCol, vecCol)
+    embMultiCandidatesOf(spark, trowsPath, rows, tbuckets)
+  }
+
+  /** The candidate stage over [[embMultiBatch]]'s materialized rows: the
+    * band-index scan is STATICALLY pruned to exactly the batch's
+    * `tbuckets`, so the band rows pair by one join on `tbucket`. */
+  private def embMultiCandidatesOf(
+      spark: org.apache.spark.sql.SparkSession,
+      trowsPath: String,
+      rows: DataFrame,
+      tbuckets: Seq[Long]): DataFrame = {
+    val bt = rows.select(col("id"), explode(col("tbuckets")).as("tbucket"))
+    val others = embMultiTRows.readIn(spark, trowsPath, tbuckets)
+      .select(col("tbucket"), col("id").as("id_b"))
       .unionByName(bt.select(col("tbucket"), col("id").as("id_b")))
     bt.select(col("tbucket"), col("id").as("id_a"))
       .join(others, Seq("tbucket"))

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructType}
 
 /** The in-place partitioned serving layouts and their one write protocol.
   *
@@ -48,11 +48,10 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   *     keep their bytes on disk.
   *   - '''Observed sweep.''' Dynamic overwrite cannot delete a partition:
   *     a value the replacement empties writes zero files and its stale
-  *     directory would survive. The barrier job observes the replacement's
-  *     partition values, and the affected values it lacks are deleted as
-  *     directories — no extra job, and the set is bounded by the layout's
-  *     partition-value cardinality (the cdc_query_dpp control-plane-scalar
-  *     justification).
+  *     directory would survive. The barrier is a [[materialize]], so its
+  *     job observes the replacement's partition values, and the affected
+  *     values it lacks are deleted as directories — no extra job (the
+  *     probe control plane below).
   *   - '''Replay determinism.''' A crash mid-write can leave a subset of
   *     partitions replaced, but the rewrite is a pure function of (stored
   *     partitions, delta): re-running it rewrites the same partitions with
@@ -67,7 +66,18 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   *     and takes folds through
   *     [[graft.streaming.StateStream.foldIsolatedGen]]'s graced flip,
   *     paying a layout copy per fold for snapshot isolation (the
-  *     `*PairsServing` and `*Pinned` entries resolve the generation). */
+  *     `*PairsServing` and `*Pinned` entries resolve the generation).
+  *
+  * '''Probe control plane.''' A serving probe prunes its stored scans by
+  * the LITERAL partition values its batch (or candidate set) touches,
+  * and gates its broadcast dims on that frame's row count. Both come from
+  * [[materialize]]: the eager `localCheckpoint` the probe needs anyway
+  * observes the count and every key's distinct values on the same job, so
+  * no stage pays a driver round trip per scalar. The value sets are
+  * bounded by the layout's partition-value cardinality — buckets and
+  * cells are model or layout CONSTANTS, never data-sized — which is what
+  * makes collecting them to the driver a control-plane cost (the
+  * cdc_query_dpp literal-threshold justification). */
 object ServingLayout {
 
   /** One stored partitioned serving layout: `schema` is its declared
@@ -145,18 +155,14 @@ object ServingLayout {
     val vs = (values ++ crowdedValues(spark, path, artifact)).distinct.sorted
     if (vs.isEmpty)
       return spark.createDataFrame(java.util.Collections.emptyList[Row](), artifact.schema)
-    val landed = new Observation()
-    val replacement = replace(artifact.readIn(spark, path, vs))
-      .observe(landed, collect_set(col(partCol)).as("values"))
-      .localCheckpoint(true)
+    val (replacement, _, Seq(landed)) =
+      materialize(replace(artifact.readIn(spark, path, vs)), col(partCol))
     replacement.repartition(col(partCol))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol)
       .parquet(path)
-    val present = landed.get("values").asInstanceOf[Seq[Any]]
-      .map(integral(_, "rewrite")).toSet
-    val emptied = vs.filterNot(present)
+    val emptied = vs.filterNot(landed.toSet)
     if (emptied.nonEmpty) {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -213,11 +219,34 @@ object ServingLayout {
     }
   }
 
+  /** Materialize `rows` with an eager `localCheckpoint` and observe, on
+    * that same job, its row count and the distinct values of each key —
+    * the probe control plane (object doc). An array-typed key contributes
+    * its elements. Returns the materialized rows, the count, and per key
+    * the sorted values, NULL and non-integral values rejected as in
+    * [[affectedValues]]. */
+  private[graft] def materialize(rows: DataFrame, keys: Column*)
+      : (DataFrame, Long, Seq[Seq[Long]]) = {
+    val seen = new Observation()
+    // a scalar key is wrapped in a one-element array: collect_set drops a
+    // NULL row but keeps an array holding NULL, so NULL reaches the check
+    val sets = keys.zipWithIndex.map { case (k, i) =>
+      val elems = rows.select(k).schema.head.dataType match {
+        case _: ArrayType => k
+        case _ => array(k)
+      }
+      array_distinct(flatten(collect_set(elems))).as(s"k$i")
+    }
+    val out = rows.observe(seen, count(lit(1)).as("n"), sets: _*)
+      .localCheckpoint(true)
+    val m = seen.get
+    (out, m("n").asInstanceOf[Long], keys.indices.map(i =>
+      m(s"k$i").asInstanceOf[Seq[Any]].map(integral(_, "materialize")).sorted))
+  }
+
   /** Collect a fold's affected-partition frame to the LITERAL value set
-    * [[rewrite]] prunes its read by and sweeps against. Bounded by the
-    * layout's partition-value cardinality (cells / buckets — model or
-    * layout CONSTANTS, never data-sized): the cdc_query_dpp
-    * literal-threshold justification. */
+    * [[rewrite]] prunes its read by and sweeps against — bounded like
+    * [[materialize]]'s value sets (object doc). */
   private[graft] def affectedValues(affected: DataFrame): Seq[Long] =
     affected.distinct().collect().map(r => integral(r.get(0), "affectedValues"))
       .toSeq.sorted

@@ -19,6 +19,34 @@ trait SparkFixture {
     rows.map { case (lsn, seq, op, mask, t, k, v) => (lsn, seq, op, mask, ts(t), k, v) }
       .toDF("start_lsn", "seqval", "operation", "update_mask", "commit_time", "k", "v")
   }
+
+  /** The SQL execution ids of the jobs `body` runs (null for a job
+    * outside any execution), seen under a job group of their own. */
+  def executionsOf(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"executions-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val jl = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.sql.execution.root.id")))
+    }
+    sc.addSparkListener(jl)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job is seen,
+      // every job of `body` has been seen too
+      sc.setJobGroup(marker, marker)
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.asScala.exists(_._1 == marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      jobs.asScala.toSeq.filter(_._1 == group).map(_._2)
+    } finally sc.removeSparkListener(jl)
+  }
 }
 
 object SparkFixture {

@@ -92,4 +92,37 @@ class EmbMultiServingSpec extends AnyFunSuite with graft.SparkFixture {
       s"multi-table recall must be ≥ 0.8 on the planted set " +
         s"(found ${multi.size} of $planted)")
   }
+
+  /** SQL executions of one probe over a 3-vector layout, batch = a
+    * scaled copy of vector 1 (same direction, so it pairs in every table);
+    * the caller's action is included. */
+  private def probeExecutions(probe: (String, DataFrame) => DataFrame): Int = {
+    val pre = Seq((1L, vec(1)), (2L, vec(2)), (3L, vec(3)))
+    val base = graft.TempDirs.create("graft_edexec_t")
+    Dedup.embDupWriteServingLayout(toDF(pre), base.resolve("vecs").toString)
+    Dedup.embMultiWriteServingLayout(toDF(pre),
+      base.resolve("trows").toString, base.resolve("mvecs").toString)
+    var pairs = 0
+    val executions = executionsOf {
+      pairs = probe(base.toString, toDF(Seq((9L, vec(1).map(_ * 2f))))).collect().length
+    }
+    assert(pairs > 0, "the planted copy must pair with its base")
+    assert(executions.forall(_ != null))
+    executions.distinct.length
+  }
+
+  test("embDupServingProbe runs 2 SQL executions, the caller's action included") {
+    // bucketing (observes the buckets) and the caller's action
+    val n = probeExecutions((base, batch) =>
+      Dedup.embDupServingProbe(spark, s"$base/vecs", batch))
+    assert(n == 2, s"probe SQL executions: $n")
+  }
+
+  test("embMultiServingProbe runs 4 SQL executions, the caller's action included") {
+    // batch rows (observe the tbuckets), candidates, candidate ids
+    // (observe the registry buckets and count) and the caller's action
+    val n = probeExecutions((base, batch) =>
+      Dedup.embMultiServingProbe(spark, s"$base/trows", s"$base/mvecs", batch))
+    assert(n == 4, s"probe SQL executions: $n")
+  }
 }

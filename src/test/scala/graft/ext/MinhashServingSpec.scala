@@ -291,6 +291,82 @@ class MinhashServingSpec extends AnyFunSuite with graft.SparkFixture {
     assert(pairs(0L) == gated, "both arms must produce identical pairs")
   }
 
+  test("probe broadcast gate boundary: the band gate counts band rows, " +
+      "NumBands per document") {
+    val s = spark
+    import s.implicits._
+    val B = 64
+    val hist = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six seven")).toDF("doc_id", "text")
+    // 13 repeats 12, so the batch's DISTINCT band rows are fewer than its
+    // k·NumBands band rows and a gate counting either docs or distinct
+    // rows would not trip one byte below the limit
+    val batch = Seq(
+      (10L, "alpha beta gamma delta epsilon zeta"),
+      (11L, "one two three four five six seven eight"),
+      (12L, "red green blue cyan magenta yellow"),
+      (13L, "red green blue cyan magenta yellow")).toDF("doc_id", "text")
+    val k = 4L
+    val base = graft.TempDirs.create("graft_mhgate_b")
+    val bandsPath = base.resolve("bands").toString
+    val fpsPath = base.resolve("fps").toString
+    Dedup.writeServingLayout(hist, bandsPath, fpsPath, buckets = B)
+    // the key columns of every shuffled join in the executed plan
+    def smjKeys(p: org.apache.spark.sql.execution.SparkPlan): Set[Seq[String]] =
+      p.flatMap {
+        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec =>
+          Seq(j.leftKeys.flatMap(_.references.map(_.name)))
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          smjKeys(q.plan).toSeq
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          smjKeys(a.executedPlan).toSeq
+        case _ => Nil
+      }.toSet
+    def run(limit: Long): (Set[Seq[String]], Set[Seq[String]]) = {
+      val cand = Dedup.minhashServingCandidates(s, bandsPath, fpsPath, batch,
+        buckets = B, broadcastBytes = limit)
+      val pairs = cand.collect().map(_.toSeq.map(String.valueOf)).toSet
+      (pairs, smjKeys(cand.queryExecution.executedPlan))
+    }
+    val limit = k * Dedup.NumBands * Dedup.MinhashBandRowBytes
+    val (atLimit, smjAt) = run(limit)
+    val (below, smjBelow) = run(limit - 1)
+    assert(atLimit.nonEmpty, "the planted exact dup must pair")
+    assert(smjAt.isEmpty,
+      s"k·NumBands band rows fit a limit of exactly their bytes, shuffled: $smjAt")
+    // the band join is planned once per consumer of the probed groups,
+    // so it may appear more than once — but it is the only shuffled join
+    assert(smjBelow == Set(Seq("pbucket", "band", "sig")),
+      s"one byte less must trip the band gate alone, shuffled: $smjBelow")
+    assert(below == atLimit, "both arms must produce identical pairs")
+  }
+
+  test("minhashServingProbe runs 4 SQL executions, the caller's action included") {
+    val s = spark
+    import s.implicits._
+    val B = 64
+    val hist = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six seven")).toDF("doc_id", "text")
+    val batch = Seq((10L, "alpha beta gamma delta epsilon zeta"),
+      (11L, "one two three four five six seven eight")).toDF("doc_id", "text")
+    val base = graft.TempDirs.create("graft_mhexec_t")
+    val bandsPath = base.resolve("bands").toString
+    val fpsPath = base.resolve("fps").toString
+    Dedup.writeServingLayout(hist, bandsPath, fpsPath, buckets = B)
+    var pairs = 0
+    val executions = executionsOf {
+      pairs = Dedup.minhashServingProbe(s, bandsPath, fpsPath, batch,
+        hist.unionByName(batch), buckets = B).collect().length
+    }
+    assert(pairs > 0, "the planted exact dup must pair")
+    // signing (observes buckets and count), candidates, verify shingles,
+    // and the caller's action
+    assert(executions.forall(_ != null) && executions.distinct.length == 4,
+      s"probe SQL executions: ${executions.distinct}")
+  }
+
   test("a fold that empties EVERY partition leaves a readable empty layout " +
       "(explicit schemas — the footer-less directory lesson)") {
     val s = spark

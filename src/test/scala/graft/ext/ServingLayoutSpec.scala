@@ -21,34 +21,6 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
       case _ => Nil
     }
 
-  /** The SQL execution ids of the jobs `body` runs (null for a job
-    * outside any execution), seen under a job group of their own. */
-  private def executionsOf(body: => Unit): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val group = s"executions-${System.nanoTime()}"
-    val marker = s"$group-marker"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val jl = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add((e.properties.getProperty("spark.jobGroup.id"),
-          e.properties.getProperty("spark.sql.execution.root.id")))
-    }
-    sc.addSparkListener(jl)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      // listener events arrive in order: once the marker job is seen,
-      // every job of `body` has been seen too
-      sc.setJobGroup(marker, marker)
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!jobs.asScala.exists(_._1 == marker) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      jobs.asScala.toSeq.filter(_._1 == group).map(_._2)
-    } finally sc.removeSparkListener(jl)
-  }
-
   test("affectedValues collects a sorted distinct literal set") {
     val s = spark
     import s.implicits._
@@ -66,6 +38,61 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
     }
     assert(e.getMessage.contains("non-integral"),
       s"a boxed Double must hit the integral-contract rejection, got: $e")
+  }
+
+  test("materialize observes the count and every key's distinct values on " +
+      "its one checkpoint execution; an array key is flattened") {
+    val s = spark
+    import s.implicits._
+    val rows = Seq((1L, Seq(3L, 1L)), (2L, Seq(1L, 5L)), (3L, Seq(5L, 5L)),
+      (3L, Seq.empty[Long])).toDF("b", "arr")
+    var got: (org.apache.spark.sql.DataFrame, Long, Seq[Seq[Long]]) = null
+    val executions = executionsOf { got = ServingLayout.materialize(rows, $"b", $"arr") }
+    val (out, n, values) = got
+    assert(executions.nonEmpty && executions.forall(_ != null) &&
+      executions.distinct.length == 1,
+      s"the count and values must ride the checkpoint's one execution: $executions")
+    assert(n == 4L)
+    assert(values == Seq(Seq(1L, 2L, 3L), Seq(1L, 3L, 5L)),
+      "values are sorted and distinct; the array key contributes its elements")
+    assert(out.as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1).map(_._1) ==
+      Seq(1L, 2L, 3L, 3L), "the returned rows are the input rows")
+  }
+
+  test("materialize of an empty frame observes count 0 and no values, and " +
+      "readIn over them reads no partition") {
+    val s = spark
+    import s.implicits._
+    val path = graft.TempDirs.create("graft_slayout_mat0").resolve("t").toString
+    (0L until 40L).map(i => (i, i % 4)).toDF("id", "b")
+      .repartition(col("b")).write.partitionBy("b").parquet(path)
+    val layout = ServingLayout.Artifact(s.read.parquet(path).schema, "b", "id")
+    val (out, n, Seq(values)) =
+      ServingLayout.materialize(layout.read(s, path).where($"id" < 0L), $"b")
+    assert(n == 0L && values.isEmpty && out.collect().isEmpty)
+    val none = layout.readIn(s, path, values)
+    assert(none.collect().isEmpty)
+    val read = scansOf(none.queryExecution.executedPlan)
+      .flatMap(_.metrics.get("numPartitions").map(_.value))
+    assert(read.forall(_ == 0L), s"an empty value set must read no partition, read $read")
+  }
+
+  test("materialize rejects a NULL and a non-integral key with the same " +
+      "error as affectedValues") {
+    val s = spark
+    import s.implicits._
+    def same(df: org.apache.spark.sql.DataFrame): Unit = {
+      val m = intercept[IllegalArgumentException] {
+        ServingLayout.materialize(df, $"b")
+      }
+      val a = intercept[IllegalArgumentException] {
+        ServingLayout.affectedValues(df.select($"b"))
+      }
+      assert(m.getMessage.replace("materialize:", "affectedValues:") == a.getMessage,
+        s"materialize: ${m.getMessage} / affectedValues: ${a.getMessage}")
+    }
+    same(Seq[java.lang.Long](1L, null).toDF("b"))
+    same(Seq(1.5d).toDF("b"))
   }
 
   test("partitionIn prunes an INFERRED-IntegerType partition column statically") {

@@ -143,4 +143,24 @@ class SimhashServingSpec extends AnyFunSuite with graft.SparkFixture {
       s"tripped gate must plan a shuffled candidate join, got:\n$plan")
     assert(pairsOf(0L) == gated, "both arms must produce identical pairs")
   }
+
+  test("simhashServingProbe runs 6 SQL executions, the caller's action included") {
+    val s = spark
+    val shared = "alpha beta gamma delta epsilon"
+    val base = graft.TempDirs.create("graft_shexec_t")
+    val vrowsPath = base.resolve("vrows").toString
+    val docsPath = base.resolve("docs").toString
+    Dedup.simhashWriteServingLayout(
+      Seq((1L, shared), (2L, "one two three four five")).toDF2(s), vrowsPath, docsPath)
+    var pairs = 0
+    val executions = executionsOf {
+      pairs = Dedup.simhashServingProbe(s, vrowsPath, docsPath,
+        Seq((10L, shared)).toDF2(s)).collect().length
+    }
+    assert(pairs > 0, "the planted equal-fingerprint doc must pair")
+    // signing, value bands, value pairs, candidate values, the probe's
+    // checkpoint and the caller's action
+    assert(executions.forall(_ != null) && executions.distinct.length == 6,
+      s"probe SQL executions: ${executions.distinct}")
+  }
 }
