@@ -1,13 +1,39 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
+
 /** Physical-plan audit over the graded queries: per query, the counts that
-  * matter at 100 TB — parquet scans (scan reuse), Window operators
+  * matter at 100 TB — file scans (scan reuse), Window operators
   * (single-partition funnels show up here), and shuffles. Run with an
   * optional query-name filter; add `-v` to dump the formatted plan.
   *
   * {{{ sbt "runMain graft.PlanAudit [-v] [query ...]" }}}
   */
-object PlanAudit {
+object PlanAudit extends AdaptiveSparkPlanHelper {
+
+  /** Operator counts of one executed plan; `cached` counts reads of a
+    * cached relation. */
+  private[graft] final case class Shape(scans: Int, windows: Int, shuffles: Int, cached: Int)
+
+  /** Walk the plan tree, subqueries included, through AQE's
+    * `AdaptiveSparkPlanExec` and its query stages. Counted once where it
+    * runs: a `ReusedExchangeExec` is a leaf (neither a shuffle nor its
+    * lineage re-executes), and so is a cached relation's
+    * `InMemoryTableScanExec` (the lineage that built the cache ran once,
+    * not per read). */
+  private[graft] def shape(plan: SparkPlan): Shape = {
+    val nodes = collectWithSubqueries(plan) { case p => p }
+    Shape(
+      scans = nodes.count(_.isInstanceOf[FileSourceScanExec]),
+      windows = nodes.count(_.isInstanceOf[WindowExec]),
+      shuffles = nodes.count(_.isInstanceOf[ShuffleExchangeExec]),
+      cached = nodes.count(_.isInstanceOf[InMemoryTableScanExec]))
+  }
+
   def main(args: Array[String]): Unit = {
     val verbose = args.contains("-v")
     val only = args.filterNot(_ == "-v").toSet
@@ -19,16 +45,10 @@ object PlanAudit {
       val sideEffecting = name.startsWith("cdc_populate")
       if ((only.isEmpty && !sideEffecting) || only.contains(name)) {
         val qe = fn(spark, dir).queryExecution
-        val plan = qe.executedPlan.toString
-        val scans = "Scan parquet".r.findAllIn(plan).length
-        val windows = plan.linesIterator.count(_.matches(".*\\bWindow\\b.*"))
-        val exchanges = plan.linesIterator.count(_.contains("Exchange"))
-        // cached results print their WHOLE build lineage under the
-        // InMemoryTableScan — those "Scan parquet" lines describe how the
-        // cache was built once, not what re-executes
-        val imts = plan.linesIterator.count(_.contains("InMemoryTableScan"))
-        val cacheNote = if (imts > 0) s" (cached: $imts InMemoryTableScan — lineage counts above are build-once)" else ""
-        println(f"$name%-28s scans=$scans%-3d windows=$windows%-3d exchanges=$exchanges$cacheNote")
+        val s = shape(qe.executedPlan)
+        val cacheNote = if (s.cached > 0) s" (reads ${s.cached} cached relations)" else ""
+        println(f"$name%-28s scans=${s.scans}%-3d windows=${s.windows}%-3d " +
+          f"shuffles=${s.shuffles}$cacheNote")
         if (verbose) println(qe.explainString(org.apache.spark.sql.execution.FormattedMode))
       }
     }

@@ -691,7 +691,7 @@ object Dedup {
     // banded route: probed groups' stored members (pruned scan; the
     // broadcast side is distinct on the join keys, so the inner join is
     // the semi-join it reads as) ∪ the batch's own rows, then the ingest
-    // probe's cap + pair logic verbatim. The scans are STATICALLY
+    // probe's cap + pair semantics. The scans are STATICALLY
     // partition-pruned by the batch's bucket literals, so pruning does
     // not depend on the dim side's lineage and survives the gated
     // fallback arm too. The broadcast is GATED on the batch's band-row
@@ -702,15 +702,21 @@ object Dedup {
       nSigs * NumBands, MinhashBandRowBytes, broadcastBytes)
     val probedStored = stored
       .join(bandDim, Seq("pbucket", "band", "sig"))
-      .select("band", "sig", "id")
-    val all = probedStored.unionByName(bb.select("band", "sig", "id"))
-    val keep = all.groupBy("band", "sig").agg(count(lit(1)).as("__nb"))
-      .where(col("__nb") <= maxBucket).select("band", "sig")
-    val kept = all.join(keep, Seq("band", "sig"))
-    val probed = bb.select(col("band"), col("sig"), col("id").as("__bid"))
-      .join(keep, Seq("band", "sig"))
-      .join(kept.select(col("band"), col("sig"), col("id").as("__oid")),
-        Seq("band", "sig"))
+      .select(col("band"), col("sig"), col("id"), lit(false).as("__batch"))
+    // ONE pass over stored ∪ batch members, so the pruned scan and its
+    // band join run once: a count window applies the cap (spill-safe for
+    // hot groups), and each kept group — already clustered on (band, sig),
+    // so no second shuffle — pairs its batch members with all of its
+    // members, at most maxBucket ids per list
+    val probed = probedStored
+      .unionByName(bb.select(col("band"), col("sig"), col("id"), lit(true).as("__batch")))
+      .withColumn("__nb", count(lit(1)).over(Window.partitionBy("band", "sig")))
+      .where(col("__nb") <= maxBucket)
+      .groupBy("band", "sig")
+      .agg(collect_list(when(col("__batch"), col("id"))).as("__bids"),
+        collect_list(col("id")).as("__oids"))
+      .select(explode(col("__bids")).as("__bid"), col("__oids"))
+      .select(col("__bid"), explode(col("__oids")).as("__oid"))
     // exact route: identical FULL signatures pair regardless of bucket
     // heat — batch fingerprints probe the partitioned registry (pruned)
     // and self-join for within-batch exact pairs

@@ -2,9 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.TempDirs
 
 /** Event-stream operators (SURVEY §2.11 beyond the populate path): the
   * standard Structured-Streaming shapes a training-data pipeline needs over
@@ -78,7 +80,8 @@ object EventStream {
     * the final watermark past every real row's event-time horizon, so the
     * AvailableNow drain's closing no-data batch finalizes all real
     * windows/sessions — the offline-grading analog of "the next day's data
-    * closes yesterday's windows" in a live stream. Returns the input dir.
+    * closes yesterday's windows" in a live stream. Returns the file stream
+    * over the staged dir.
     *
     * The staged dir is READ-ONLY to the stream (each drive runs a fresh
     * checkpoint), and when `rows` derives from exactly one fixture
@@ -93,25 +96,25 @@ object EventStream {
     * misses the memo instead of reading stale rows), but a same-schema
     * FILTERED subset under a reused tag is indistinguishable — give it
     * its own tag. */
-  private def stageWithSentinel(
-      rows: DataFrame, sentinel: DataFrame, tag: String = ""): String = {
-    val memoKey = if (tag.isEmpty) None else sourceKeyOf(rows)
-    memoKey match {
+  private def streamWithSentinel(
+      rows: DataFrame, sentinel: DataFrame, tag: String): DataFrame = {
+    val inDir = sourceKeyOf(rows) match {
       case Some(k) =>
         val schemaKey = java.security.MessageDigest.getInstance("MD5")
           .digest(rows.schema.catalogString.getBytes("UTF-8"))
           .map("%02x".format(_)).mkString.take(8)
-        graft.TempDirs.memoized(s"graft_si_${tag}_$schemaKey", k) { tmp =>
+        TempDirs.memoized(s"graft_si_${tag}_$schemaKey", k) { tmp =>
           val d = tmp.resolve("in").toString
           rows.write.mode("append").parquet(d)
           sentinel.write.mode("append").parquet(d)
         }.resolve("in").toString
       case None =>
-        val dir = tempDir("graft_stream_in").toString
+        val dir = TempDirs.create("graft_stream_in").toString
         rows.write.mode("append").parquet(dir)
         sentinel.write.mode("append").parquet(dir)
         dir
     }
+    rows.sparkSession.readStream.schema(rows.schema).parquet(inDir)
   }
 
   /** The single local parquet source backing `df`'s plan, if there is
@@ -133,10 +136,10 @@ object EventStream {
     }
   }
 
-  // streamed-to-files drives copy the dataset into temp input/output dirs
-  // per invocation (3× per query under median-of-3 Bench) — all reclaimed
-  // at JVM exit via the shared registry
-  private def tempDir(prefix: String): java.nio.file.Path = graft.TempDirs.create(prefix)
+  /** The flush sentinel's event time: `days` past the fixture's last
+    * event, beyond every real window's, session's or join's horizon. */
+  private def flushTime(maxT: Timestamp, days: Long = 2L) =
+    timestamp_millis(lit(maxT.getTime + days * 24 * 3600 * 1000))
 
   /** [[eventWindowCounts]] under the real streaming engine in its
     * PRODUCTION shape: file source → watermarked window aggregate →
@@ -155,24 +158,12 @@ object EventStream {
     // (equally empty) result instead of NPEing on the null max
     if (maxT == null) return eventWindowCounts(typed).limit(0)
     val sentinel = typed.sparkSession.range(1).select(
-      timestamp_millis(lit(maxT.getTime + 2L * 24 * 3600 * 1000)).as("event_time"),
+      flushTime(maxT).as("event_time"),
       lit("__flush").as("event_type"),
       lit(null).cast("string").as("props"))
-    val inDir = stageWithSentinel(typed, sentinel, tag = "wincount")
-    val outDir = tempDir("graft_stream_out")
-    val agged = eventWindowCounts(
-      spark.readStream.schema(typed.schema).parquet(inDir))
-    val query = agged
-      .writeStream.format("parquet")
-      .option("path", outDir.resolve("result").toString)
-      .option("checkpointLocation", outDir.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    // explicit schema: zero finalized windows leave an inference-breaking
-    // empty sink (see intervalJoinStreamedToFiles)
-    spark.read.schema(agged.schema).parquet(outDir.resolve("result").toString)
+    StateStream.drain(
+      eventWindowCounts(streamWithSentinel(typed, sentinel, tag = "wincount")),
+      TempDirs.create("graft_stream_out"))
       .where(col("event_type") =!= "__flush")
   }
 
@@ -196,34 +187,20 @@ object EventStream {
     val maxT = bounds.getTimestamp(0)
     if (maxT == null) return eventWindowCounts(typed).limit(0)
     val minT = bounds.getTimestamp(1)
-    def oneRow(t: Long, tpe: String) = typed.sparkSession.range(1).select(
-      timestamp_millis(lit(t)).as("event_time"),
-      lit(tpe).as("event_type"),
-      lit(null).cast("string").as("props"))
-    val dir = tempDir("graft_stream_in").toString
-    val outDir = tempDir("graft_stream_out")
-    def drain(): Unit = {
-      val agged = eventWindowCounts(
-        spark.readStream.schema(typed.schema).parquet(dir))
-      val query = agged
-        .writeStream.format("parquet")
-        .option("path", outDir.resolve("result").toString)
-        .option("checkpointLocation", outDir.resolve("ckpt").toString)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
+    def oneRow(t: Column, tpe: String) = typed.sparkSession.range(1).select(
+      t.as("event_time"), lit(tpe).as("event_type"), lit(null).cast("string").as("props"))
+    val dir = TempDirs.create("graft_stream_in").toString
+    val outDir = TempDirs.create("graft_stream_out")
+    def drain() = StateStream.drain(
+      eventWindowCounts(spark.readStream.schema(typed.schema).parquet(dir)), outDir)
     typed.write.mode("append").parquet(dir)
     drain() // persists watermark = maxT - delay in the checkpoint
-    oneRow(minT.getTime, "__late").write.mode("append").parquet(dir)
-    oneRow(maxT.getTime + 2L * 24 * 3600 * 1000, "__flush").write.mode("append").parquet(dir)
-    drain() // recovered watermark rejects __late; __flush finalizes all
-    // only the flush sentinel is filtered — __late must be ABSENT because
-    // the watermark dropped it, not because we hid it
-    val schema = eventWindowCounts(typed).schema
-    spark.read.schema(schema).parquet(outDir.resolve("result").toString)
-      .where(col("event_type") =!= "__flush")
+    oneRow(lit(minT), "__late").write.mode("append").parquet(dir)
+    oneRow(flushTime(maxT), "__flush").write.mode("append").parquet(dir)
+    // the recovered watermark rejects __late; __flush finalizes all. Only
+    // the flush sentinel is filtered — __late must be ABSENT because the
+    // watermark dropped it, not because we hid it
+    drain().where(col("event_type") =!= "__flush")
   }
 
   /** Per-window TOP event type — the windowed-leaderboard shape, built as
@@ -254,21 +231,11 @@ object EventStream {
     val maxT = typed.agg(max("event_time")).head().getTimestamp(0)
     if (maxT == null) return eventWindowTopType(typed).limit(0)
     val sentinel = typed.sparkSession.range(1).select(
-      timestamp_millis(lit(maxT.getTime + 2L * 24 * 3600 * 1000)).as("event_time"),
+      flushTime(maxT).as("event_time"),
       lit("__flush").as("event_type"))
-    val inDir = stageWithSentinel(typed, sentinel, tag = "wintop")
-    val outDir = tempDir("graft_topk_out")
-    val top = eventWindowTopType(
-      spark.readStream.schema(typed.schema).parquet(inDir))
-    val query = top
-      .writeStream.format("parquet")
-      .option("path", outDir.resolve("result").toString)
-      .option("checkpointLocation", outDir.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read.schema(top.schema).parquet(outDir.resolve("result").toString)
+    StateStream.drain(
+      eventWindowTopType(streamWithSentinel(typed, sentinel, tag = "wintop")),
+      TempDirs.create("graft_topk_out"))
       .where(col("top_type") =!= "__flush")
   }
 
@@ -301,26 +268,14 @@ object EventStream {
         .limit(0)
     val sentinel = typed.sparkSession.range(1).select(
       lit(-1L).as("user_id"),
-      timestamp_millis(lit(maxT.getTime + 2L * 24 * 3600 * 1000)).as("event_time"),
+      flushTime(maxT).as("event_time"),
       lit("__flush").as("event_type"))
-    val inDir = stageWithSentinel(typed, sentinel, tag = "sess")
-    val outDir = tempDir("graft_sess_out")
     val sessions = sessionize(
-      spark.readStream.schema(typed.schema).parquet(inDir).as[UserEvent],
+      streamWithSentinel(typed, sentinel, tag = "sess").as[UserEvent],
       gapMs = gapS * 1000L)
-    val query = sessions
-      .writeStream.format("parquet")
-      .option("path", outDir.resolve("result").toString)
-      .option("checkpointLocation", outDir.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("session_start_s")
-    // explicit schema: zero closed sessions leave an inference-breaking
-    // empty sink (see intervalJoinStreamedToFiles)
-    spark.read.schema(sessions.schema).parquet(outDir.resolve("result").toString)
+    StateStream.drain(sessions, TempDirs.create("graft_sess_out"))
       .where(col("user_id") >= 0)
       .select(
         col("user_id"),
@@ -382,9 +337,9 @@ object EventStream {
       return spark.range(0).select(
         col("id").as("view_id"), col("id").as("purchase_id"),
         col("id").as("user_id"), col("id").as("gap_s"))
-    val inDir =
+    val src =
       if (!leftOuter) {
-        stageWithSentinel(typed, typed.limit(0), tag = "ij_inner")
+        streamWithSentinel(typed, typed.limit(0), tag = "ij_inner")
       } else {
         // flush sentinels. A "__flush" type the side filters reject would
         // NEVER advance the watermark: Catalyst pushes the event_type
@@ -400,17 +355,14 @@ object EventStream {
         // watermark delay. The purchase sentinel sits 2 days further so
         // the purchase-side watermark (the global min) clears too.
         val maxT = typed.agg(max("event_time")).head().getTimestamp(0)
-        def sentinel(userId: Long, tpe: String, daysAhead: Int) =
+        def sentinel(userId: Long, tpe: String, daysAhead: Long) =
           spark.range(1).select(
             lit(-1L).as("event_id"), lit(userId).as("user_id"),
-            timestamp_millis(lit(maxT.getTime + daysAhead.toLong * 24 * 3600 * 1000))
-              .as("event_time"),
-            lit(tpe).as("event_type"))
-        stageWithSentinel(typed,
+            flushTime(maxT, daysAhead).as("event_time"), lit(tpe).as("event_type"))
+        streamWithSentinel(typed,
           sentinel(-1L, "view", 2).unionByName(sentinel(-2L, "purchase", 4)),
           tag = s"ij_$joinType")
       }
-    val src = spark.readStream.schema(typed.schema).parquet(inDir)
     val views = src.withColumnRenamed("event_time", "v_t")
       .withWatermark("v_t", "10 minutes")
       .where(col("event_type") === "view")
@@ -419,21 +371,9 @@ object EventStream {
       .withWatermark("p_t", "10 minutes")
       .where(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_id"), col("p_t"))
-    val outDir = tempDir("graft_ssj_out")
     val joined = graft.ops.IntervalJoin.withinAfter(
       views, purchases, Seq("user_id"), "v_t", "p_t", maxGapS, joinType = joinType)
-    val query = joined
-      .writeStream.format("parquet")
-      .option("path", outDir.resolve("result").toString)
-      .option("checkpointLocation", outDir.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    // explicit schema: a zero-match run leaves only _spark_metadata in the
-    // sink, and schema INFERENCE would throw instead of returning the
-    // empty frame the batch query produces
-    spark.read.schema(joined.schema).parquet(outDir.resolve("result").toString)
+    StateStream.drain(joined, TempDirs.create("graft_ssj_out"))
       .where(col("user_id") >= 0) // drop flush sentinels (left-outer drive)
       .select(col("view_id"), col("purchase_id"), col("user_id"),
         (col("p_t").cast("long") - col("v_t").cast("long")).as("gap_s"))
@@ -463,10 +403,8 @@ object EventStream {
     if (maxT == null) return empty
     val sentinel = spark.range(1).select(
       lit(-1L).as("user_id"),
-      timestamp_millis(lit(maxT.getTime + 2L * 24 * 3600 * 1000)).as("event_time"))
-    val inDir = stageWithSentinel(typed, sentinel, tag = "enrich")
-    val src = spark.readStream.schema(typed.schema).parquet(inDir)
-    val enriched = src
+      flushTime(maxT).as("event_time"))
+    val enriched = streamWithSentinel(typed, sentinel, tag = "enrich")
       .withWatermark("event_time", "10 minutes")
       .join(graft.ops.BroadcastGate.broadcastIfSmall(dim.select(
           (col("c_custkey") - 1).cast("long").as("__ck"),
@@ -478,16 +416,7 @@ object EventStream {
       .select(col("nation"),
         col("window.start").cast("long").as("window_start_s"),
         col("n_events"))
-    val outDir = tempDir("graft_enrich_out")
-    val query = agged
-      .writeStream.format("parquet")
-      .option("path", outDir.resolve("result").toString)
-      .option("checkpointLocation", outDir.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read.schema(agged.schema).parquet(outDir.resolve("result").toString)
+    StateStream.drain(agged, TempDirs.create("graft_enrich_out"))
   }
 
   /** The CDC→serving bridge under the REAL streaming engine
@@ -504,7 +433,7 @@ object EventStream {
     val req0 = events.where(col("event_type") === "purchase")
       .select(col("event_id").cast("long").as("event_id"),
         expr("ts div 1000000000").as("__es"))
-    val inDir = tempDir("graft_serving_in").toString
+    val inDir = TempDirs.create("graft_serving_in").toString
     req0.write.mode("append").parquet(inDir)
     val src = spark.readStream.schema(req0.schema).parquet(inDir)
     val reqs = graft.cdc.ServingBridge
@@ -514,17 +443,8 @@ object EventStream {
     // join so out-of-contract requests never touch the purged store
     val inContract = minServeS
       .map(h => reqs.where(col("serve_s") >= h)).getOrElse(reqs)
-    val enriched = graft.cdc.ServingBridge.enrichAsOf(inContract, episodes)
-    val outDir = tempDir("graft_serving_out")
-    val query = enriched
-      .writeStream.format("parquet")
-      .option("path", outDir.resolve("result").toString)
-      .option("checkpointLocation", outDir.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read.schema(enriched.schema).parquet(outDir.resolve("result").toString)
+    StateStream.drain(graft.cdc.ServingBridge.enrichAsOf(inContract, episodes),
+      TempDirs.create("graft_serving_out"))
   }
 
   /** The MULTI-feature twin of [[servingAsOfStreamedToFiles]]: the
@@ -540,22 +460,13 @@ object EventStream {
     val req0 = events.where(col("event_type") === "purchase")
       .select(col("event_id").cast("long").as("event_id"),
         expr("ts div 1000000000").as("__es"))
-    val inDir = tempDir("graft_servmulti_in").toString
+    val inDir = TempDirs.create("graft_servmulti_in").toString
     req0.write.mode("append").parquet(inDir)
     val src = spark.readStream.schema(req0.schema).parquet(inDir)
     val enriched = graft.cdc.ServingBridge.enrichAsOfMany(
       graft.cdc.ServingBridge.requestColumns(src.withColumn("__n", lit(nOrders))),
       features)
-    val outDir = tempDir("graft_servmulti_out")
-    val query = enriched
-      .writeStream.format("parquet")
-      .option("path", outDir.resolve("result").toString)
-      .option("checkpointLocation", outDir.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read.schema(enriched.schema).parquet(outDir.resolve("result").toString)
+    StateStream.drain(enriched, TempDirs.create("graft_servmulti_out"))
   }
 
   /** Streaming exact dedup (E1's streaming shape): drop events whose key
@@ -589,20 +500,11 @@ object EventStream {
     // the originals, whose watermark (10 min delay vs a multi-day fixture)
     // would then drop non-duplicate originals as late rows — union first,
     // so no AvailableNow batch split can order duplicates before originals
-    val inDir = tempDir("graft_dd_in").toString
+    val inDir = TempDirs.create("graft_dd_in").toString
     typed.unionByName(typed.where(col("event_id") % 10 === 0))
       .write.mode("append").parquet(inDir)
-    val outDir = tempDir("graft_dd_out")
-    val deduped = dedupStream(spark.readStream.schema(typed.schema).parquet(inDir))
-    val query = deduped
-      .writeStream.format("parquet")
-      .option("path", outDir.resolve("result").toString)
-      .option("checkpointLocation", outDir.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read.schema(deduped.schema).parquet(outDir.resolve("result").toString)
+    StateStream.drain(dedupStream(spark.readStream.schema(typed.schema).parquet(inDir)),
+      TempDirs.create("graft_dd_out"))
       .select(col("event_id"), col("user_id"),
         col("event_time").cast("long").as("t_s"), col("event_type"))
   }
@@ -855,23 +757,12 @@ object EventStream {
         col("id").cast("string").as("to_type"), col("id").as("n"), col("id").as("share_bp"))
     val sentinel = typed.sparkSession.range(1).select(
       lit(-1L).as("user_id"),
-      timestamp_millis(lit(maxT.getTime + 2L * 24 * 3600 * 1000)).as("event_time"),
+      flushTime(maxT).as("event_time"),
       lit(-1L).as("event_id"),
       lit("__flush").as("event_type"))
-    val inDir = stageWithSentinel(typed, sentinel, tag = "trans")
-    val outDir = tempDir("graft_trans_out")
     val pairs = eventTransitions(
-      spark.readStream.schema(typed.schema).parquet(inDir).as[PathEvent])
-    val query = pairs
-      .writeStream.format("parquet")
-      .option("path", outDir.resolve("result").toString)
-      .option("checkpointLocation", outDir.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    val counts = spark.read.schema(pairs.schema)
-      .parquet(outDir.resolve("result").toString)
+      streamWithSentinel(typed, sentinel, tag = "trans").as[PathEvent])
+    val counts = StateStream.drain(pairs, TempDirs.create("graft_trans_out"))
       .where(col("user_id") >= 0)
       .groupBy("from_type", "to_type")
       .agg(count(lit(1)).as("n"))
@@ -971,23 +862,13 @@ object EventStream {
         col("id").as("t_purchase"), col("id").as("stage"))
     val sentinel = typed.sparkSession.range(1).select(
       lit(-1L).as("user_id"),
-      timestamp_millis(lit(maxT.getTime + 16L * 24 * 3600 * 1000)).as("event_time"),
+      flushTime(maxT, 16L).as("event_time"),
       lit(-1L).as("event_id"),
       lit("__flush").as("event_type"))
-    val inDir = stageWithSentinel(typed, sentinel, tag = "funnel")
-    val outDir = tempDir("graft_funnel_out")
     val rows = funnelStages(
-      spark.readStream.schema(typed.schema).parquet(inDir).as[PathEvent],
+      streamWithSentinel(typed, sentinel, tag = "funnel").as[PathEvent],
       flushGapMs = 15L * 24 * 3600 * 1000)
-    val query = rows
-      .writeStream.format("parquet")
-      .option("path", outDir.resolve("result").toString)
-      .option("checkpointLocation", outDir.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read.schema(rows.schema).parquet(outDir.resolve("result").toString)
+    StateStream.drain(rows, TempDirs.create("graft_funnel_out"))
       .where(col("user_id") >= 0)
       .select(col("user_id"), col("t_view"), col("t_click"),
         col("t_purchase"), col("stage"))
@@ -1013,23 +894,13 @@ object EventStream {
         col("id").as("n_sessions"))
     val sentinel = typed.sparkSession.range(1).select(
       lit(-1L).as("user_id"),
-      timestamp_millis(lit(maxT.getTime + 2L * 24 * 3600 * 1000)).as("event_time"),
+      flushTime(maxT).as("event_time"),
       lit(-1L).as("event_id"),
       lit("__flush").as("event_type"))
-    val inDir = stageWithSentinel(typed, sentinel, tag = "paths")
-    val outDir = tempDir("graft_paths_out")
     val paths = sessionPaths(
-      spark.readStream.schema(typed.schema).parquet(inDir).as[PathEvent],
+      streamWithSentinel(typed, sentinel, tag = "paths").as[PathEvent],
       gapMs = gapS * 1000L, maxLen = maxLen)
-    val query = paths
-      .writeStream.format("parquet")
-      .option("path", outDir.resolve("result").toString)
-      .option("checkpointLocation", outDir.resolve("ckpt").toString)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read.schema(paths.schema).parquet(outDir.resolve("result").toString)
+    StateStream.drain(paths, TempDirs.create("graft_paths_out"))
       .where(col("user_id") >= 0)
       .groupBy("path")
       .agg(count(lit(1)).as("n_sessions"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.cdc.{CdcTableConfig, Checkpoint, StagedAppend}
@@ -27,18 +26,19 @@ import graft.cdc.{CdcTableConfig, Checkpoint, StagedAppend}
 object StreamingPopulate {
 
   /** Drain all currently-available feed files into the changelog, then
-    * return. Re-invoke after new files land (≙ re-running the procedure);
+    * return — one bounded foreachBatch drive ([[StateStream.foldFiles]]).
+    * Re-invoke after new files land (≙ re-running the procedure);
     * `checkpointLocation` guarantees each file is consumed exactly once.
     *
     * @param maxFilesPerTrigger bounds micro-batch size (id-sort memory);
     *                           None = one batch for all available files
-    * @return total rows appended across this invocation's micro-batches
-    */
-  /** @param postSnapshotHook test-only race injection, invoked per
+    * @param postSnapshotHook test-only race injection, invoked per
     *        micro-batch AFTER the sink-state snapshot (HWM + id offset)
     *        and BEFORE the append — the window where concurrent sink
     *        maintenance (compaction's version flip) actually interleaves
-    *        with a running stream. Mirrors StagedAppend's hooks. */
+    *        with a running stream. Mirrors StagedAppend's hooks.
+    * @return total rows appended across this invocation's micro-batches
+    */
   def runAvailableNow(
       spark: SparkSession,
       feedPath: String,
@@ -48,32 +48,19 @@ object StreamingPopulate {
       checkpointLocation: String,
       maxFilesPerTrigger: Option[Int] = None,
       postSnapshotHook: Long => Unit = _ => ()): Long = {
-
-    val appended = new java.util.concurrent.atomic.AtomicLong(0L)
-
-    val reader = spark.readStream.schema(feedSchema)
-    val withOpts = maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-    val feed = withOpts.parquet(feedPath)
-
     // Marker keys are scoped to the CHECKPOINT identity, not the bare
     // batchId: a different checkpoint writing into the same sink restarts
     // batchIds at 0, and a bare-id marker from an earlier run would make
     // its batches silently no-op (data loss).
     val ckptKey = java.security.MessageDigest.getInstance("MD5")
       .digest(checkpointLocation.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-    val query = feed.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appended.addAndGet(
-          appendBatch(batch, cfg, changelogPath, Some(s"${ckptKey}_$batchId"),
-            () => postSnapshotHook(batchId)))
-        ()
-      }
-      .option("checkpointLocation", checkpointLocation)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    appended.get()
+    @volatile var appended = 0L
+    StateStream.foldFiles(spark, feedPath, feedSchema, checkpointLocation,
+        maxFilesPerTrigger) { (batch, batchId) =>
+      appended += appendBatch(batch, cfg, changelogPath, Some(s"${ckptKey}_$batchId"),
+        () => postSnapshotHook(batchId))
+    }
+    appended
   }
 
   /** Clone a QUIESCED AvailableNow checkpoint for replay against a

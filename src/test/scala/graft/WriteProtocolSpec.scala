@@ -13,19 +13,31 @@ import org.scalatest.funsuite.AnyFunSuite
   * hand-built removal set a new copy of the id-keyed replace rule, and a
   * caller-side crowded check a compaction that some folds skip.
   * Changelog sinks: rows are appended only through the StagedAppend
-  * journal, and full rewrites only through SinkLayout's version swap. */
+  * journal, and full rewrites only through SinkLayout's version swap.
+  * Streams: only StateStream decides how a stream is driven to
+  * completion, so a per-query hook (a job tag, a progress listener) has
+  * one place to attach. */
 class WriteProtocolSpec extends AnyFunSuite {
 
-  /** Main sources (relative to src/main/scala) whose text holds `token`. */
-  private def mainSourcesWith(token: String): Seq[String] = {
+  /** Main sources (relative to src/main/scala) whose text holds `token`,
+    * with its number of occurrences in each. */
+  private def occurrencesIn(token: String): Map[String, Int] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: $root")
     Files.walk(root).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(token))
-      .map(p => root.relativize(p).toString.replace('\\', '/'))
-      .toSeq.sorted
+      .map { p =>
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        root.relativize(p).toString.replace('\\', '/') ->
+          scala.util.matching.Regex.quote(token).r.findAllIn(text).size
+      }
+      .filter(_._2 > 0)
+      .toMap
   }
+
+  /** Main sources (relative to src/main/scala) whose text holds `token`. */
+  private def mainSourcesWith(token: String): Seq[String] =
+    occurrencesIn(token).keys.toSeq.sorted
 
   test("only ServingLayout sets partitionOverwriteMode in src/main/scala") {
     val users = mainSourcesWith("partitionOverwriteMode")
@@ -69,5 +81,16 @@ class WriteProtocolSpec extends AnyFunSuite {
     val users = mainSourcesWith("recordFlatMigration(")
     assert(users == Seq("graft/cdc/SinkLayout.scala"),
       s"full-sink rewrites must go through SinkLayout.swapVersion: $users")
+  }
+
+  test("bounded streams drain in one place") {
+    // StateStream's foreachBatch drive and file-sink drain, plus the one
+    // complete-mode memory-sink grading drive in EventStream
+    val expected = Map(
+      "graft/streaming/StateStream.scala" -> 2, "graft/streaming/EventStream.scala" -> 1)
+    assert(occurrencesIn("AvailableNow()") == expected,
+      "a bounded stream must be driven by StateStream.foldFiles or StateStream.drain")
+    assert(occurrencesIn(".writeStream") == expected,
+      "a stream sink outside StateStream restates its drive")
   }
 }

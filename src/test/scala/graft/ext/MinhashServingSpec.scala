@@ -312,33 +312,38 @@ class MinhashServingSpec extends AnyFunSuite with graft.SparkFixture {
     val bandsPath = base.resolve("bands").toString
     val fpsPath = base.resolve("fps").toString
     Dedup.writeServingLayout(hist, bandsPath, fpsPath, buckets = B)
-    // the key columns of every shuffled join in the executed plan
-    def smjKeys(p: org.apache.spark.sql.execution.SparkPlan): Set[Seq[String]] =
+    // every join in the executed plan, as (node name, key columns); AQE's
+    // stages are entered and a reused exchange is a leaf, so a join that
+    // feeds a reused stage counts once
+    def joins(p: org.apache.spark.sql.execution.SparkPlan): Seq[(String, Seq[String])] =
       p.flatMap {
-        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec =>
-          Seq(j.leftKeys.flatMap(_.references.map(_.name)))
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+          Seq(j.nodeName -> j.leftKeys.flatMap(_.references.map(_.name)))
         case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          smjKeys(q.plan).toSeq
+          joins(q.plan)
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          smjKeys(a.executedPlan).toSeq
+          joins(a.executedPlan)
         case _ => Nil
-      }.toSet
-    def run(limit: Long): (Set[Seq[String]], Set[Seq[String]]) = {
+      }
+    def run(limit: Long): (Set[Seq[String]], Seq[(String, Seq[String])]) = {
       val cand = Dedup.minhashServingCandidates(s, bandsPath, fpsPath, batch,
         buckets = B, broadcastBytes = limit)
       val pairs = cand.collect().map(_.toSeq.map(String.valueOf)).toSet
-      (pairs, smjKeys(cand.queryExecution.executedPlan))
+      (pairs, joins(cand.queryExecution.executedPlan))
     }
+    val bandJoin = Seq("pbucket", "band", "sig")
+    def shuffled(js: Seq[(String, Seq[String])]) = js.filter(_._1 == "SortMergeJoin").map(_._2)
     val limit = k * Dedup.NumBands * Dedup.MinhashBandRowBytes
-    val (atLimit, smjAt) = run(limit)
-    val (below, smjBelow) = run(limit - 1)
+    val (atLimit, joinsAt) = run(limit)
+    val (below, joinsBelow) = run(limit - 1)
     assert(atLimit.nonEmpty, "the planted exact dup must pair")
-    assert(smjAt.isEmpty,
-      s"k·NumBands band rows fit a limit of exactly their bytes, shuffled: $smjAt")
-    // the band join is planned once per consumer of the probed groups,
-    // so it may appear more than once — but it is the only shuffled join
-    assert(smjBelow == Set(Seq("pbucket", "band", "sig")),
-      s"one byte less must trip the band gate alone, shuffled: $smjBelow")
+    assert(shuffled(joinsAt).isEmpty,
+      s"k·NumBands band rows fit a limit of exactly their bytes, shuffled: $joinsAt")
+    // the cap and the pairs read one pass over the probed groups, so the
+    // pruned band scan and its dim join run once in either arm
+    assert(joinsAt.count(_._2 == bandJoin) == 1, s"band join planned once: $joinsAt")
+    assert(shuffled(joinsBelow) == Seq(bandJoin),
+      s"one byte less must trip the band gate alone, shuffled once: $joinsBelow")
     assert(below == atLimit, "both arms must produce identical pairs")
   }
 

@@ -10,7 +10,7 @@ log, outdir, suffix = sys.argv[1], sys.argv[2], sys.argv[3]
 lines = open(log).read().splitlines()
 # strip the sbt [info] prefix where present
 body = [re.sub(r"^\[info\] ?", "", l) for l in lines]
-summary = re.compile(r"^(\w+)\s+scans=\d+\s+windows=\d+\s+exchanges=\d+")
+summary = re.compile(r"^(\w+)\s+scans=\d+\s+windows=\d+\s+(?:exchanges|shuffles)=\d+")
 cur, buf = None, []
 
 
