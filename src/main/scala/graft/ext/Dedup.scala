@@ -103,13 +103,14 @@ object Dedup {
   //     from the verified representative pairs, so the quadratic work is
   //     sized by distinct content and the expansion by TRUE output.
   //  2. CAPS — keys whose post-collapse breadth still exceeds the cap
-  //     (df > maxDf routes a shingle to the rep path; > maxHotReps /
-  //     maxBucket skips it) are dropped from candidate generation and
-  //     REPORTED by the companion audit ([[hotShingleAudit]],
-  //     [[minhashBucketAudit]], [[simhashBucketAudit]]) — the repo's
-  //     "no silent caps" rule. Identical-content pairs are still emitted
-  //     for skipped keys (the exact route), so exact duplicates are never
-  //     lost no matter how hot their keys are.
+  //     (df > maxDf routes a shingle to the rep path; > maxHotReps or,
+  //     through [[cappedPairs]], > maxBucket skips it) are dropped from
+  //     candidate generation and REPORTED by the companion audit
+  //     ([[hotShingleAudit]], [[minhashBucketAudit]],
+  //     [[simhashBucketAudit]]) — the repo's "no silent caps" rule.
+  //     Identical-content pairs are still emitted for skipped keys (the
+  //     exact route), so exact duplicates are never lost no matter how
+  //     hot their keys are.
   // Defaults are inert at fixture scale and deployment-tunable; the
   // GUARD STRUCTURE (collapse → cap → audit) is the scale contract.
   // -------------------------------------------------------------------
@@ -122,10 +123,31 @@ object Dedup {
     * more DISTINCT shingle-sets than this are skipped (audited). */
   val DefaultMaxHotReps = 100000L
 
-  /** Cap on DISTINCT signatures/values per LSH band bucket
-    * ([[candidatePairs]], [[simhashNearDupPairs]]); larger buckets are
-    * skipped (audited), identical-content pairs still emitted. */
+  /** The default band-group cap of [[cappedPairs]]. */
   val DefaultMaxBucket = 100000L
+
+  /** THE BANDED CAP — the one place a MinHash or SimHash route applies
+    * `maxBucket`. `members` holds one row per (group `keys`…, `id`, probe
+    * flag). A group of more than `maxBucket` rows is skipped: its pairs
+    * come only from the caller's exact (equal-signature or equal-value)
+    * route, and the family's bucket audit reports it. Every other group
+    * pairs each probe row with each of its rows, itself and repeats
+    * included, as (`__a` probe id, `__b` member id); callers drop self
+    * pairs and duplicates. A self-pairing route marks every row as a
+    * probe, an ingest or probe route its batch rows. One pass: a count
+    * window applies the cap (spill-safe, so a skipped group never becomes
+    * a list), and each kept group — already clustered on its keys, so no
+    * second shuffle — explodes its probe ids against its member ids, at
+    * most `maxBucket` of each. */
+  private[ext] def cappedPairs(members: DataFrame, keys: Seq[String], id: String,
+      probe: Column, maxBucket: Long): DataFrame =
+    members
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .where(col("__n") <= maxBucket)
+      .groupBy(keys.map(col): _*)
+      .agg(collect_list(when(probe, col(id))).as("__as"), collect_list(col(id)).as("__bs"))
+      .select(explode(col("__as")).as("__a"), col("__bs"))
+      .select(col("__a"), explode(col("__bs")).as("__b"))
 
   /** One row per document carrying the md5 fingerprint of its DISTINCT
     * shingle SET (`sort_array` makes it order-canonical), the set-group
@@ -274,23 +296,18 @@ object Dedup {
   private def bandedCandidates(sh: DataFrame, maxBucket: Long = DefaultMaxBucket): DataFrame = {
     val lanes = (0 until NumHashes).map(h => col(s"mh_$h"))
     val withFp = signatureGroups(sh).localCheckpoint(true)
-    // value-level band rows: one per (distinct signature, band)
+    // value-level band rows: the signature fingerprint stands in for the id
     val vb = bands(withFp.select(col("__sigfp").as("id") +: lanes: _*))
-      .select(col("id").as("fp"), col("band"), col("sig"))
-    val keep = vb.groupBy("band", "sig").agg(count(lit(1)).as("__nv"))
-      .where(col("__nv") <= maxBucket).select("band", "sig")
-    val kept = vb.join(keep, Seq("band", "sig"))
-    val vpairs = kept.select(col("band"), col("sig"), col("fp").as("__fpa"))
-      .join(kept.select(col("band"), col("sig"), col("fp").as("__fpb")), Seq("band", "sig"))
-      .where(col("__fpa") < col("__fpb")).select("__fpa", "__fpb").distinct()
+    val vpairs = cappedPairs(vb, Seq("band", "sig"), "id", lit(true), maxBucket)
+      .where(col("__a") < col("__b"))
+      .select(col("__a").as("__fpa"), col("__b").as("__fpb")).distinct()
     val mem = withFp.select(col("__sigfp"), col("id"))
     val cross = vpairs
       .join(mem.select(col("__sigfp").as("__fpa"), col("id").as("__ia")), Seq("__fpa"))
       .join(mem.select(col("__sigfp").as("__fpb"), col("id").as("__ib")), Seq("__fpb"))
       .select(least(col("__ia"), col("__ib")).as("id_a"),
         greatest(col("__ia"), col("__ib")).as("id_b"))
-    // exact route: identical-signature docs are candidates no matter how
-    // hot (or skipped) their buckets are
+    // exact route: identical-signature docs
     val within = mem.select(col("__sigfp"), col("id").as("id_a"))
       .join(mem.select(col("__sigfp"), col("id").as("id_b")), Seq("__sigfp"))
       .where(col("id_a") < col("id_b"))
@@ -393,11 +410,9 @@ object Dedup {
     * dedup affordable at corpus scale (contrast recomputing
     * [[nearDuplicatePairs]] over history ∪ batch every arrival).
     *
-    * Skew guard: the (band, sig) probe is capped at `maxBucket` members on
-    * the union side (hot buckets skipped — see [[minhashBucketAudit]] for
-    * the audit contract), while IDENTICAL-signature pairs ride an exact
-    * full-signature route regardless, so exact duplicates are never lost
-    * to a cap. Semantics at fixture scale (caps inert) equal the batch
+    * The cap is [[cappedPairs]] over index ∪ batch rows, batch rows
+    * probing; IDENTICAL full signatures pair through the exact route
+    * regardless. Semantics at fixture scale (caps inert) equal the batch
     * recompute restricted to batch-involving pairs — which is exactly what
     * the oracle grades.
     *
@@ -412,39 +427,45 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id",
       num: Int = 3, den: Int = 5,
-      maxBucket: Long = DefaultMaxBucket): DataFrame = {
+      maxBucket: Long = DefaultMaxBucket): DataFrame =
+    verifyByPointedLookup(
+      minhashIngestCandidates(index, batch, textCol, idCol, maxBucket).localCheckpoint(true),
+      store, textCol, idCol, num, den)
+
+  /** [[minhashIngest]]'s CANDIDATE stage, un-materialized so a plan lock
+    * can execute it: one banded pass and one fingerprint pivot over
+    * index ∪ batch rows. */
+  private[graft] def minhashIngestCandidates(
+      index: DataFrame,
+      batch: DataFrame,
+      textCol: String,
+      idCol: String,
+      maxBucket: Long): DataFrame = {
     val batchBands = bands(minhashSignatures(rawShingles(batch, textCol, idCol)))
       .localCheckpoint(true)
-    val all = index.unionByName(batchBands)
-    // banded probe: batch signatures vs every signature, hot buckets capped
-    val keep = all.groupBy("band", "sig").agg(count(lit(1)).as("__nb"))
-      .where(col("__nb") <= maxBucket).select("band", "sig")
-    val kept = all.join(keep, Seq("band", "sig"))
-    val probed = batchBands.join(keep, Seq("band", "sig"))
-      .select(col("band"), col("sig"), col("id").as("__bid"))
-      .join(kept.select(col("band"), col("sig"), col("id").as("__oid")), Seq("band", "sig"))
-    // exact route: identical FULL signatures (all bands agree) pair no
-    // matter how hot their buckets are — reconstruct the signature
-    // fingerprint from the index rows themselves (NumBands-way pivot)
-    val fpCols = (0 until NumBands).map(b =>
-      max(when(col("band") === b, col("sig"))).as(s"__b$b"))
-    val withFp = all.groupBy("id")
-      .agg(fpCols.head, fpCols.tail: _*)
-      .withColumn("__sigfp",
-        md5(concat_ws("#", (0 until NumBands).map(b => col(s"__b$b")): _*).cast("binary")))
-      .select("id", "__sigfp")
-    val batchIdsDf = batchBands.select("id").distinct()
-    val exact = withFp.join(batchIdsDf, Seq("id"), "left_semi")
-      .select(col("__sigfp"), col("id").as("__bid"))
-      .join(withFp.select(col("__sigfp"), col("id").as("__oid")), Seq("__sigfp"))
-      .select("__bid", "__oid")
-    val cand = probed.select("__bid", "__oid").unionByName(exact)
-      .where(col("__bid") =!= col("__oid"))
-      .select(least(col("__bid"), col("__oid")).as("id_a"),
-        greatest(col("__bid"), col("__oid")).as("id_b"))
+    val banded = cappedPairs(
+      index.withColumn("__batch", lit(false))
+        .unionByName(batchBands.withColumn("__batch", lit(true))),
+      Seq("band", "sig"), "id", col("__batch"), maxBucket)
+    val exact = indexFingerprints(batchBands).select(col("sigfp"), col("id").as("__a"))
+      .join(indexFingerprints(index.unionByName(batchBands))
+        .select(col("sigfp"), col("id").as("__b")), Seq("sigfp"))
+    banded.unionByName(exact.select("__a", "__b"))
+      .where(col("__a") =!= col("__b"))
+      .select(least(col("__a"), col("__b")).as("id_a"),
+        greatest(col("__a"), col("__b")).as("id_b"))
       .distinct()
-      .localCheckpoint(true)
-    verifyByPointedLookup(cand, store, textCol, idCol, num, den)
+  }
+
+  /** The full-signature fingerprint of each document pivoted out of its
+    * raw (id, band, sig) index rows — [[sigFingerprint]]'s value, for the
+    * exact route of the paths that hold no fp registry: (id, sigfp). */
+  private def indexFingerprints(index: DataFrame): DataFrame = {
+    val bandSigs = (0 until NumBands).map(b =>
+      max(when(col("band") === b, col("sig"))).as(s"__b$b"))
+    index.groupBy("id").agg(bandSigs.head, bandSigs.tail: _*)
+      .select(col("id"), md5(concat_ws("#",
+        (0 until NumBands).map(b => col(s"__b$b")): _*).cast("binary")).as("sigfp"))
   }
 
   /** The pointed-fetch Jaccard verify every index-driven pair path ends
@@ -470,10 +491,9 @@ object Dedup {
   }
 
   /** E1b''''' — verified near-dup pairs among the documents PRESENT in a
-    * stored signature index: banded candidates from the index rows alone
-    * (hot buckets capped, identical full signatures via the exact route),
-    * then the pointed-text Jaccard verify. This is the READ side of index
-    * maintenance — and in particular of SUBJECT DELETION: because
+    * stored signature index: [[minhashPairsFrom]] with the exact route's
+    * fingerprints pivoted out of the index rows. This is the READ side of
+    * index maintenance — and in particular of SUBJECT DELETION: because
     * signatures are per-document pure, forgetting a subject is a row
     * FILTER on the stored index, and the surviving pair set must equal a
     * from-scratch recompute over the surviving corpus (the graded
@@ -486,29 +506,9 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id",
       num: Int = 3, den: Int = 5,
-      maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    val keep = index.groupBy("band", "sig").agg(count(lit(1)).as("__nb"))
-      .where(col("__nb") <= maxBucket).select("band", "sig")
-    val kept = index.join(keep, Seq("band", "sig"))
-    val banded = kept.select(col("band"), col("sig"), col("id").as("id_a"))
-      .join(kept.select(col("band"), col("sig"), col("id").as("id_b")), Seq("band", "sig"))
-    // exact route: identical FULL signatures pair regardless of bucket
-    // heat (same reconstruction as the ingest probe)
-    val fpCols = (0 until NumBands).map(b =>
-      max(when(col("band") === b, col("sig"))).as(s"__b$b"))
-    val withFp = index.groupBy("id")
-      .agg(fpCols.head, fpCols.tail: _*)
-      .withColumn("__sigfp",
-        md5(concat_ws("#", (0 until NumBands).map(b => col(s"__b$b")): _*).cast("binary")))
-      .select("id", "__sigfp")
-    val exact = withFp.select(col("__sigfp"), col("id").as("id_a"))
-      .join(withFp.select(col("__sigfp"), col("id").as("id_b")), Seq("__sigfp"))
-    val cand = banded.select("id_a", "id_b").unionByName(exact.select("id_a", "id_b"))
-      .where(col("id_a") < col("id_b"))
-      .distinct()
-      .localCheckpoint(true)
-    verifyByPointedLookup(cand, store, textCol, idCol, num, den)
-  }
+      maxBucket: Long = DefaultMaxBucket): DataFrame =
+    minhashPairsFrom(index, indexFingerprints(index), store, textCol, idCol, num, den,
+      maxBucket)
 
   // -------------------------------------------------------------------
   // The LSH SERVING LAYOUT — the dedup index joins the partitioned-layout
@@ -690,51 +690,37 @@ object Dedup {
     val (bb, bf) = minhashServingRowsFromSigs(sigs, buckets)
     // banded route: probed groups' stored members (pruned scan; the
     // broadcast side is distinct on the join keys, so the inner join is
-    // the semi-join it reads as) ∪ the batch's own rows, then the ingest
-    // probe's cap + pair semantics. The scans are STATICALLY
-    // partition-pruned by the batch's bucket literals, so pruning does
-    // not depend on the dim side's lineage and survives the gated
-    // fallback arm too. The broadcast is GATED on the batch's band-row
-    // count (`bands` emits NumBands rows per signature); above the gate
-    // the probe shuffles with the merge hint instead — driver bounded
+    // the semi-join it reads as) ∪ the batch's own rows, the batch rows
+    // probing. The scans are STATICALLY partition-pruned by the batch's
+    // bucket literals, so pruning does not depend on the dim side's
+    // lineage and survives the gated fallback arm too. The broadcast is
+    // GATED on the batch's band-row count (`bands` emits NumBands rows per
+    // signature); above the gate the probe shuffles with the merge hint
+    // instead — driver bounded
     val stored = minhashBands.readIn(spark, bandsPath, pbuckets)
     val bandDim = gatedDim(bb.select("pbucket", "band", "sig").distinct(),
       nSigs * NumBands, MinhashBandRowBytes, broadcastBytes)
-    val probedStored = stored
-      .join(bandDim, Seq("pbucket", "band", "sig"))
-      .select(col("band"), col("sig"), col("id"), lit(false).as("__batch"))
-    // ONE pass over stored ∪ batch members, so the pruned scan and its
-    // band join run once: a count window applies the cap (spill-safe for
-    // hot groups), and each kept group — already clustered on (band, sig),
-    // so no second shuffle — pairs its batch members with all of its
-    // members, at most maxBucket ids per list
-    val probed = probedStored
-      .unionByName(bb.select(col("band"), col("sig"), col("id"), lit(true).as("__batch")))
-      .withColumn("__nb", count(lit(1)).over(Window.partitionBy("band", "sig")))
-      .where(col("__nb") <= maxBucket)
-      .groupBy("band", "sig")
-      .agg(collect_list(when(col("__batch"), col("id"))).as("__bids"),
-        collect_list(col("id")).as("__oids"))
-      .select(explode(col("__bids")).as("__bid"), col("__oids"))
-      .select(col("__bid"), explode(col("__oids")).as("__oid"))
-    // exact route: identical FULL signatures pair regardless of bucket
-    // heat — batch fingerprints probe the partitioned registry (pruned)
-    // and self-join for within-batch exact pairs
+    val probed = cappedPairs(
+      stored.join(bandDim, Seq("pbucket", "band", "sig"))
+        .select(col("band"), col("sig"), col("id"), lit(false).as("__batch"))
+        .unionByName(bb.select(col("band"), col("sig"), col("id"), lit(true).as("__batch"))),
+      Seq("band", "sig"), "id", col("__batch"), maxBucket)
+    // exact route: batch fingerprints probe the partitioned registry
+    // (pruned) and self-join for within-batch exact pairs
     val storedFps = minhashFps.readIn(spark, fpsPath, fbuckets)
     val fpDim = gatedDim(
-      bf.select(col("fbucket"), col("sigfp"), col("id").as("__bid")),
+      bf.select(col("fbucket"), col("sigfp"), col("id").as("__a")),
       nSigs, MinhashFpRowBytes, broadcastBytes)
     val fpHits = storedFps
       .join(fpDim, Seq("fbucket", "sigfp"))
-      .select(col("__bid"), col("id").as("__oid"))
-    val fpBatch = bf.select(col("sigfp"), col("id").as("__bid"))
-      .join(bf.select(col("sigfp"), col("id").as("__oid")), Seq("sigfp"))
-      .select("__bid", "__oid")
-    probed.select("__bid", "__oid")
-      .unionByName(fpHits).unionByName(fpBatch)
-      .where(col("__bid") =!= col("__oid"))
-      .select(least(col("__bid"), col("__oid")).as("id_a"),
-        greatest(col("__bid"), col("__oid")).as("id_b"))
+      .select(col("__a"), col("id").as("__b"))
+    val fpBatch = bf.select(col("sigfp"), col("id").as("__a"))
+      .join(bf.select(col("sigfp"), col("id").as("__b")), Seq("sigfp"))
+      .select("__a", "__b")
+    probed.unionByName(fpHits).unionByName(fpBatch)
+      .where(col("__a") =!= col("__b"))
+      .select(least(col("__a"), col("__b")).as("id_a"),
+        greatest(col("__a"), col("__b")).as("id_b"))
       .distinct()
   }
 
@@ -829,16 +815,12 @@ object Dedup {
       idCol: String = "doc_id",
       num: Int = 3, den: Int = 5,
       maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    val keep = index.groupBy("band", "sig").agg(count(lit(1)).as("__nb"))
-      .where(col("__nb") <= maxBucket).select("band", "sig")
-    val kept = index.join(keep, Seq("band", "sig"))
-    val banded = kept.select(col("band"), col("sig"), col("id").as("id_a"))
-      .join(kept.select(col("band"), col("sig"), col("id").as("id_b")),
-        Seq("band", "sig"))
-    val exact = fps.select(col("sigfp"), col("id").as("id_a"))
-      .join(fps.select(col("sigfp"), col("id").as("id_b")), Seq("sigfp"))
-    val cand = banded.select("id_a", "id_b").unionByName(exact.select("id_a", "id_b"))
-      .where(col("id_a") < col("id_b"))
+    val banded = cappedPairs(index, Seq("band", "sig"), "id", lit(true), maxBucket)
+    val exact = fps.select(col("sigfp"), col("id").as("__a"))
+      .join(fps.select(col("sigfp"), col("id").as("__b")), Seq("sigfp"))
+    val cand = banded.unionByName(exact.select("__a", "__b"))
+      .where(col("__a") < col("__b"))
+      .select(col("__a").as("id_a"), col("__b").as("id_b"))
       .distinct()
       .localCheckpoint(true)
     verifyByPointedLookup(cand, store, textCol, idCol, num, den)
@@ -1201,34 +1183,11 @@ object Dedup {
       idCol: String = "doc_id",
       maxBucket: Long = DefaultMaxBucket): DataFrame = {
     // rep-collapse at its purest: the 32-bit value IS the content key, so
-    // candidates are generated between DISTINCT fingerprint values (the
-    // band self-join is sized by distinct values per bucket, capped at
-    // maxBucket — [[simhashBucketAudit]] reports skips) and expanded to
-    // doc pairs through the value→doc membership joins; equal-value doc
-    // pairs (hamming 0) ride the exact route regardless of bucket heat
+    // candidates are generated between DISTINCT fingerprint values and
+    // expanded to doc pairs through the value→doc membership
     val fps = simhash(corpus, textCol, idCol).localCheckpoint(true)
-    val vbands = fps.select("simhash").distinct()
-      .select(col("simhash"), posexplode(array((0 until SimHashBands).map(b =>
-        shiftright(col("simhash"), b * 8).bitwiseAND(lit(255L))): _*)).as(Seq("band", "bv")))
-    val keep = vbands.groupBy("band", "bv").agg(count(lit(1)).as("__nv"))
-      .where(col("__nv") <= maxBucket).select("band", "bv")
-    val kept = vbands.join(keep, Seq("band", "bv"))
-    val vpairs = kept.select(col("band"), col("bv"), col("simhash").as("__va"))
-      .join(kept.select(col("band"), col("bv"), col("simhash").as("__vb")), Seq("band", "bv"))
-      .where(col("__va") < col("__vb")).select("__va", "__vb").distinct()
-      .where(hammingDistance(col("__va"), col("__vb")) <= SimHashMaxHamming)
-    val cross = vpairs
-      .join(fps.select(col("simhash").as("__va"), col("doc_id").as("__ia")), Seq("__va"))
-      .join(fps.select(col("simhash").as("__vb"), col("doc_id").as("__ib")), Seq("__vb"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"),
-        hammingDistance(col("__va"), col("__vb")).cast("long").as("hamming"))
-    val within = fps.select(col("simhash"), col("doc_id").as("id_a"))
-      .join(fps.select(col("simhash"), col("doc_id").as("id_b")), Seq("simhash"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0L).as("hamming"))
-    // disjoint by construction: cross pairs differ in value (hamming ≥ 1)
-    cross.unionByName(within)
+    simhashPairsFrom(simhashVbandsOf(fps.select("simhash").distinct()),
+      fps.select(col("simhash"), col("doc_id").as("id")), maxBucket)
   }
 
   /** E1c'' — INCREMENTAL SimHash ingest: the near-dup pairs a NEW batch
@@ -1238,12 +1197,9 @@ object Dedup {
     * (hamming ≤ [[SimHashMaxHamming]]) is pure fingerprint arithmetic, so
     * per batch the work is O(batch fingerprints + candidates) with history
     * entering as bytes-per-doc index rows. Candidates are generated
-    * between DISTINCT fingerprint VALUES (probe side = the batch's
-    * values), capped per bucket and expanded through the value→doc
-    * membership joins; equal-value pairs ride the exact route. The final
-    * semi-join restricts output to pairs involving a batch DOCUMENT (a
-    * history doc sharing a batch value may appear mid-expansion but is
-    * filtered unless its partner is in the batch). */
+    * between DISTINCT fingerprint VALUES (the batch's values probing),
+    * expanded through the value→doc membership, and restricted to pairs
+    * involving a batch DOCUMENT. */
   def simhashIngest(
       index: DataFrame,
       batch: DataFrame,
@@ -1251,39 +1207,55 @@ object Dedup {
       idCol: String = "doc_id",
       maxBucket: Long = DefaultMaxBucket): DataFrame = {
     val bfps = simhash(batch, textCol, idCol).localCheckpoint(true)
-    val fps = index.unionByName(bfps)
-    def vbandsOf(values: DataFrame): DataFrame = values
-      .select(col("simhash"), posexplode(array((0 until SimHashBands).map(b =>
-        shiftright(col("simhash"), b * 8).bitwiseAND(lit(255L))): _*)).as(Seq("band", "bv")))
-    val vAll = vbandsOf(fps.select("simhash").distinct())
-    val keep = vAll.groupBy("band", "bv").agg(count(lit(1)).as("__nv"))
-      .where(col("__nv") <= maxBucket).select("band", "bv")
-    val keptAll = vAll.join(keep, Seq("band", "bv"))
-    val probe = vbandsOf(bfps.select("simhash").distinct()).join(keep, Seq("band", "bv"))
-    val vpairs = probe.select(col("band"), col("bv"), col("simhash").as("__va"))
-      .join(keptAll.select(col("band"), col("bv"), col("simhash").as("__vb")), Seq("band", "bv"))
-      .where(col("__va") =!= col("__vb")).select("__va", "__vb").distinct()
+    // one row per distinct value, flagged when the batch holds it
+    val values = index.select(col("simhash"), lit(false).as("__batch"))
+      .unionByName(bfps.select(col("simhash"), lit(true).as("__batch")))
+      .groupBy("simhash").agg(max(col("__batch")).as("__batch"))
+    val vpairs = simhashValuePairs(simhashVbandsOf(values), col("__batch"), maxBucket)
+    // output-sized; both semi-join branches consume it — materialize once
+    val pairs = simhashMemberPairs(vpairs,
+      index.unionByName(bfps).select(col("simhash"), col("doc_id").as("id")))
+      .localCheckpoint(true)
+    pairsTouching(pairs, bfps.select(col("doc_id").as("id")))
+  }
+
+  /** The capped value pairs of value band rows (band, bv, simhash and a
+    * probe flag): distinct (`__va` < `__vb`) pairs sharing a kept band
+    * group, within [[SimHashMaxHamming]]. */
+  private def simhashValuePairs(vbands: DataFrame, probe: Column,
+      maxBucket: Long): DataFrame =
+    cappedPairs(vbands, Seq("band", "bv"), "simhash", probe, maxBucket)
+      .where(col("__a") =!= col("__b"))
+      .select(least(col("__a"), col("__b")).as("__va"),
+        greatest(col("__a"), col("__b")).as("__vb"))
+      .distinct()
       .where(hammingDistance(col("__va"), col("__vb")) <= SimHashMaxHamming)
+
+  /** Value pairs → document pairs (id_a < id_b, hamming) through the
+    * value→doc `members` (simhash, id), plus the equal-value route:
+    * documents sharing a value pair at hamming 0, however hot their band
+    * groups. The two are disjoint (cross pairs differ in value). */
+  private def simhashMemberPairs(vpairs: DataFrame, members: DataFrame): DataFrame = {
     val cross = vpairs
-      .join(fps.select(col("simhash").as("__va"), col("doc_id").as("__ia")), Seq("__va"))
-      .join(fps.select(col("simhash").as("__vb"), col("doc_id").as("__ib")), Seq("__vb"))
+      .join(members.select(col("simhash").as("__va"), col("id").as("__ia")), Seq("__va"))
+      .join(members.select(col("simhash").as("__vb"), col("id").as("__ib")), Seq("__vb"))
       .select(least(col("__ia"), col("__ib")).as("id_a"),
         greatest(col("__ia"), col("__ib")).as("id_b"),
         hammingDistance(col("__va"), col("__vb")).cast("long").as("hamming"))
-      .distinct() // both orders of a value pair expand to the same doc pair
-    val within = fps.select(col("simhash"), col("doc_id").as("id_a"))
-      .join(fps.select(col("simhash"), col("doc_id").as("id_b")), Seq("simhash"))
+    val within = members.select(col("simhash"), col("id").as("id_a"))
+      .join(members.select(col("simhash"), col("id").as("id_b")), Seq("simhash"))
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), lit(0L).as("hamming"))
-    // output-sized; BOTH semi-join branches consume it — materialize once
-    val pairs = cross.unionByName(within).localCheckpoint(true)
-    val batchIds = bfps.select(col("doc_id"))
-    pairs.join(broadcast(batchIds.select(col("doc_id").as("id_a"))), Seq("id_a"), "left_semi")
-      .unionByName(
-        pairs.join(broadcast(batchIds.select(col("doc_id").as("id_b"))), Seq("id_b"), "left_semi")
-          .select("id_a", "id_b", "hamming"))
-      .distinct()
+    cross.unionByName(within)
   }
+
+  /** The distinct pairs with at least one side among `ids` (an `id`
+    * column) — the batch-document restriction of the ingest routes. */
+  private def pairsTouching(pairs: DataFrame, ids: DataFrame): DataFrame =
+    pairs.join(broadcast(ids.select(col("id").as("id_a"))), Seq("id_a"), "left_semi")
+      .unionByName(
+        pairs.join(broadcast(ids.select(col("id").as("id_b"))), Seq("id_b"), "left_semi"))
+      .distinct()
 
   // -------------------------------------------------------------------
   // The SimHash SERVING LAYOUT — the dedup family's second serving
@@ -1314,9 +1286,10 @@ object Dedup {
   def simhashValueBucket(v: Column, buckets: Int = ServingBuckets): Column =
     pmod(v, lit(buckets.toLong))
 
-  /** The 4×8-bit band rows of a distinct-value frame (`simhash` column). */
+  /** The 4×8-bit band rows of a frame's `simhash` column, its other
+    * columns kept. */
   private def simhashVbandsOf(values: DataFrame): DataFrame = values
-    .select(col("simhash"), posexplode(array((0 until SimHashBands).map(b =>
+    .select(col("*"), posexplode(array((0 until SimHashBands).map(b =>
       shiftright(col("simhash"), b * 8).bitwiseAND(lit(255L))): _*)).as(Seq("band", "bv")))
 
   /** The two persisted SimHash artifacts: value band rows by band bucket
@@ -1358,13 +1331,6 @@ object Dedup {
     simhashDocs.write(members, docsPath)
   }
 
-  /** The pruned ingest probe's CANDIDATE stage over the persisted
-    * layout (un-materialized — the plan lock executes it and reads the
-    * scans' runtime pruning metrics): the batch's own value band rows
-    * broadcast against the sband-partitioned value table, value pairs
-    * verify by hamming arithmetic, and the expansion reads ONLY the
-    * candidate values' membership buckets. Semantics ≡ [[simhashIngest]]
-    * (value-granularity candidates, caps, equal-value route). */
   /** The probe's VALUE-PAIR stage alone, un-materialized — the banded
     * join against the sband-partitioned value table (runtime partition
     * filter from the broadcast batch side) plus the hamming cut. Exposed
@@ -1399,7 +1365,7 @@ object Dedup {
       maxBucket: Long,
       buckets: Int,
       broadcastBytes: Long): DataFrame = {
-    // distinct-value-sized, 4 consumers below
+    // distinct-value-sized, 3 consumers below
     val (vb, nVb, Seq(sbands)) = ServingLayout.materialize(
       simhashVbandsOf(fps.select("simhash").distinct())
         .select(col("band"), col("bv"), col("simhash"),
@@ -1408,24 +1374,26 @@ object Dedup {
     val storedV = simhashVrows.readIn(spark, vrowsPath, sbands)
     val vbandDim = gatedDim(vb.select("sband", "band", "bv").distinct(),
       nVb, SimhashBandRowBytes, broadcastBytes)
-    val probedV = storedV
-      .join(vbandDim, Seq("sband", "band", "bv"))
-      .select("band", "bv", "simhash")
     // probed groups' full value membership: stored values (bucket-pure,
-    // so complete within the pruned slice) ∪ the batch's own values
-    val vAll = probedV.unionByName(vb.select("band", "bv", "simhash")).distinct()
-    val keep = vAll.groupBy("band", "bv").agg(count(lit(1)).as("__nv"))
-      .where(col("__nv") <= maxBucket).select("band", "bv")
-    val keptAll = vAll.join(keep, Seq("band", "bv"))
-    val probe = vb.select("band", "bv", "simhash").distinct()
-      .join(keep, Seq("band", "bv"))
-    probe.select(col("band"), col("bv"), col("simhash").as("__va"))
-      .join(keptAll.select(col("band"), col("bv"), col("simhash").as("__vb")),
-        Seq("band", "bv"))
-      .where(col("__va") =!= col("__vb")).select("__va", "__vb").distinct()
-      .where(hammingDistance(col("__va"), col("__vb")) <= SimHashMaxHamming)
+    // so complete within the pruned slice) ∪ the batch's own, a value
+    // both stored and in the batch once, as a batch value
+    val batchV = vb.select(col("band"), col("bv"), col("simhash"), lit(true).as("__batch"))
+    val members = storedV
+      .join(vbandDim, Seq("sband", "band", "bv"))
+      .select(col("band"), col("bv"), col("simhash"), lit(false).as("__batch"))
+      .join(gatedDim(vb.select("band", "bv", "simhash"), nVb, SimhashBandRowBytes,
+        broadcastBytes), Seq("band", "bv", "simhash"), "left_anti")
+      .unionByName(batchV)
+    simhashValuePairs(members, col("__batch"), maxBucket)
   }
 
+  /** The pruned ingest probe's CANDIDATE stage over the persisted
+    * layout (un-materialized — the plan lock executes it and reads the
+    * scans' runtime pruning metrics): the batch's own value band rows
+    * broadcast against the sband-partitioned value table, value pairs
+    * verify by hamming arithmetic, and the expansion reads ONLY the
+    * candidate values' membership buckets. Semantics ≡ [[simhashIngest]]
+    * (value-granularity candidates, caps, equal-value route). */
   def simhashServingCandidates(
       spark: org.apache.spark.sql.SparkSession,
       vrowsPath: String,
@@ -1443,7 +1411,7 @@ object Dedup {
     val bfps = fps.select(col("simhash"), col("doc_id").as("id"))
     val vpairs = simhashValuePairsFromFps(
       spark, vrowsPath, fps, maxBucket, buckets, broadcastBytes)
-      .localCheckpoint(true) // candidate-pair-sized; four consumers below
+      .localCheckpoint(true) // candidate-pair-sized; three consumers below
     // membership of every value a pair (or the equal-value route) can
     // touch — pointed reads of the candidate values' buckets, STATICALLY
     // partition-pruned by their literals; DPP is unavailable here (the
@@ -1465,25 +1433,8 @@ object Dedup {
     val members = storedM
       .join(candDim, Seq("vbucket", "simhash"))
       .select(col("simhash"), col("id"))
-      .unionByName(bfps.select(col("simhash"), col("id")))
-    val cross = vpairs
-      .join(members.select(col("simhash").as("__va"), col("id").as("__ia")), Seq("__va"))
-      .join(members.select(col("simhash").as("__vb"), col("id").as("__ib")), Seq("__vb"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"),
-        hammingDistance(col("__va"), col("__vb")).cast("long").as("hamming"))
-      .distinct()
-    val within = members.select(col("simhash"), col("id").as("id_a"))
-      .join(members.select(col("simhash"), col("id").as("id_b")), Seq("simhash"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0L).as("hamming"))
-    val pairs = cross.unionByName(within)
-    val batchIds = bfps.select(col("id"))
-    pairs.join(broadcast(batchIds.select(col("id").as("id_a"))), Seq("id_a"), "left_semi")
-      .unionByName(
-        pairs.join(broadcast(batchIds.select(col("id").as("id_b"))), Seq("id_b"), "left_semi")
-          .select("id_a", "id_b", "hamming"))
-      .distinct()
+      .unionByName(bfps)
+    pairsTouching(simhashMemberPairs(vpairs, members), bfps.select("id"))
   }
 
   /** The pruned ingest probe (the graded read): candidates materialized
@@ -1592,39 +1543,8 @@ object Dedup {
   def simhashPairsFrom(
       vrows: DataFrame,
       members: DataFrame,
-      maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    // ONE bucket-size pass routes the banded join (the embDupPairsFrom
-    // single-pass form): the HOT (band, bv) groups collect to a literal —
-    // bounded by SimHashBands · 256 byte values, a layout constant (the
-    // affectedValues control-plane justification) — encoded band·256+bv
-    // so the kept side is a plain filter; an EMPTY hot set (the common
-    // case) keeps the whole value table with no join at all. The
-    // equal-value route below never depended on the cap.
-    val hot = ServingLayout.affectedValues(
-      vrows.groupBy("band", "bv").agg(count(lit(1)).as("__nv"))
-        .where(col("__nv") > maxBucket)
-        .select((col("band").cast("long") * 256L + col("bv")).as("g")))
-    val isHot =
-      if (hot.isEmpty) lit(false)
-      else (col("band").cast("long") * 256L + col("bv")).isin(hot: _*)
-    val kept = vrows.where(!isHot)
-    val vpairs = kept.select(col("band"), col("bv"), col("simhash").as("__va"))
-      .join(kept.select(col("band"), col("bv"), col("simhash").as("__vb")),
-        Seq("band", "bv"))
-      .where(col("__va") < col("__vb")).select("__va", "__vb").distinct()
-      .where(hammingDistance(col("__va"), col("__vb")) <= SimHashMaxHamming)
-    val cross = vpairs
-      .join(members.select(col("simhash").as("__va"), col("id").as("__ia")), Seq("__va"))
-      .join(members.select(col("simhash").as("__vb"), col("id").as("__ib")), Seq("__vb"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"),
-        hammingDistance(col("__va"), col("__vb")).cast("long").as("hamming"))
-    val within = members.select(col("simhash"), col("id").as("id_a"))
-      .join(members.select(col("simhash"), col("id").as("id_b")), Seq("simhash"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0L).as("hamming"))
-    cross.unionByName(within)
-  }
+      maxBucket: Long = DefaultMaxBucket): DataFrame =
+    simhashMemberPairs(simhashValuePairs(vrows, lit(true), maxBucket), members)
 
   /** Audit of SimHash band buckets — one row per (band, byte-value)
     * bucket holding ≥ 2 documents: member count, distinct-value count
@@ -1634,10 +1554,7 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id",
       maxBucket: Long = DefaultMaxBucket): DataFrame =
-    simhash(corpus, textCol, idCol)
-      .select(col("doc_id"), col("simhash"),
-        posexplode(array((0 until SimHashBands).map(b =>
-          shiftright(col("simhash"), b * 8).bitwiseAND(lit(255L))): _*)).as(Seq("band", "bv")))
+    simhashVbandsOf(simhash(corpus, textCol, idCol))
       .groupBy("band", "bv")
       .agg(count(lit(1)).as("n_docs"), countDistinct(col("simhash")).as("n_values"))
       .where(col("n_docs") >= 2)

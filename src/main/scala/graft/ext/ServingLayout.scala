@@ -202,14 +202,26 @@ object ServingLayout {
     * actions are sequential only because the driver calls them
     * sequentially — a serving fold's two artifacts are independent job
     * chains whose stage tails otherwise leave every core idle). Used by
-    * the multi-artifact folds and the fragmented-deploy fixtures. Every
-    * chain runs to its end and every failure is reported: the first is
-    * thrown with the others attached as suppressed, so a half-parallel
-    * fold never half-reports success and never hides a second cause. */
+    * the multi-artifact folds and the fragmented-deploy fixtures. Each
+    * chain runs its jobs under a job tag of its own, and a failure
+    * cancels the other chains' running jobs, so a failed fold
+    * stops its siblings' writes instead of waiting them out (a sibling
+    * between two jobs still starts its next one; folds repair by replay).
+    * Every failure is reported: the first is thrown with the others — a
+    * cancellation among them — attached as suppressed, so a
+    * half-parallel fold never half-reports success and never hides a
+    * second cause. */
   private[graft] def inParallel(fs: (() => Unit)*): Unit = {
+    val sc = SparkSession.active.sparkContext
+    val tags = fs.indices.map(i => s"graft-chain-${java.util.UUID.randomUUID()}-$i")
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val ts = fs.map(f => new Thread(() =>
-      try f() catch { case t: Throwable => errs.add(t) }))
+    val ts = fs.zip(tags).map { case (f, tag) => new Thread(() =>
+      try { sc.addJobTag(tag); f() } catch {
+        case t: Throwable =>
+          errs.add(t)
+          tags.filter(_ != tag).foreach(sc.cancelJobsWithTag)
+      })
+    }
     ts.foreach(_.start())
     ts.foreach(_.join())
     if (!errs.isEmpty) {

@@ -16,24 +16,37 @@ import org.scalatest.funsuite.AnyFunSuite
   * journal, and full rewrites only through SinkLayout's version swap.
   * Streams: only StateStream decides how a stream is driven to
   * completion, so a per-query hook (a job tag, a progress listener) has
-  * one place to attach. */
+  * one place to attach. Dedup: every MinHash and SimHash route caps its
+  * band groups through one kernel, so the cap contract cannot drift
+  * between routes. */
 class WriteProtocolSpec extends AnyFunSuite {
 
-  /** Main sources (relative to src/main/scala) whose text holds `token`,
-    * with its number of occurrences in each. */
-  private def occurrencesIn(token: String): Map[String, Int] = {
+  /** Every main source's text, by path relative to src/main/scala. */
+  private lazy val mainSources: Map[String, String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: $root")
     Files.walk(root).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-      .map { p =>
-        val text = new String(Files.readAllBytes(p), "UTF-8")
-        root.relativize(p).toString.replace('\\', '/') ->
-          scala.util.matching.Regex.quote(token).r.findAllIn(text).size
-      }
-      .filter(_._2 > 0)
+      .map(p => root.relativize(p).toString.replace('\\', '/') ->
+        new String(Files.readAllBytes(p), "UTF-8"))
       .toMap
   }
+
+  /** Main sources (relative to src/main/scala) whose text holds `token`,
+    * with its number of occurrences in each. */
+  private def occurrencesIn(token: String): Map[String, Int] =
+    mainSources
+      .map { case (f, text) => f -> scala.util.matching.Regex.quote(token).r.findAllIn(text).size }
+      .filter(_._2 > 0)
+
+  /** (source, enclosing def) of every match of `pattern` in the main
+    * sources — the def is the last one declared before the match. */
+  private def defsMatching(pattern: scala.util.matching.Regex): Seq[(String, String)] =
+    for {
+      (file, text) <- mainSources.toSeq.sortBy(_._1)
+      m <- pattern.findAllMatchIn(text).toSeq
+    } yield file -> """def (\w+)""".r.findAllMatchIn(text.substring(0, m.start))
+      .toSeq.lastOption.fold("?")(_.group(1))
 
   /** Main sources (relative to src/main/scala) whose text holds `token`. */
   private def mainSourcesWith(token: String): Seq[String] =
@@ -92,5 +105,20 @@ class WriteProtocolSpec extends AnyFunSuite {
       "a bounded stream must be driven by StateStream.foldFiles or StateStream.drain")
     assert(occurrencesIn(".writeStream") == expected,
       "a stream sink outside StateStream restates its drive")
+  }
+
+  test("the banded cap lives in one place") {
+    // a filter of a group count against maxBucket applies the cap; the
+    // audits' when(... <= maxBucket, "joined") columns only report it.
+    // The two embedding listings keep their hot-bucket literal, which
+    // also confines their exact route
+    val caps = defsMatching("""(where|filter)\(col\("[^"]+"\) *[<>]=? *maxBucket\b""".r)
+    assert(caps == Seq("graft/ext/Dedup.scala" -> "cappedPairs",
+      "graft/ext/Dedup.scala" -> "embDupPairsFrom", "graft/ext/Dedup.scala" -> "embMultiPairsFrom"),
+      s"a MinHash or SimHash route must apply its cap through Dedup.cappedPairs: $caps")
+    val callers = defsMatching("""(?<!def )cappedPairs\(""".r).map(_._2).toSet
+    assert(callers == Set("bandedCandidates", "minhashIngestCandidates",
+      "minhashServingCandidates", "minhashPairsFrom", "simhashValuePairs"),
+      s"the banded routes reach the kernel through these defs: $callers")
   }
 }

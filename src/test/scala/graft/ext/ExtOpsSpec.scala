@@ -179,6 +179,24 @@ class ExtOpsSpec extends AnyFunSuite with SparkFixture {
       s"identical signatures must pair through the exact route, got ${got.toSeq}")
   }
 
+  test("minhashIngest's candidate stage reads the index in two scans: one " +
+      "banded pass and one fingerprint pivot") {
+    val s = spark
+    import s.implicits._
+    val history = (1L to 40L).map(i =>
+      (i, s"w$i x$i y${i % 5} z${i % 5} q${i % 3} r${i % 3} s t")).toDF("doc_id", "text")
+    val batch = Seq((100L, "w1 x1 y1 z1 q1 r1 s t"), (101L, "w7 x7 y2 z2 q1 r1 s t u"))
+      .toDF("doc_id", "text")
+    val idxDir = graft.TempDirs.create("graft_mhingest_scans").resolve("index").toString
+    Dedup.minhashIndex(history).write.parquet(idxDir)
+    val cand = Dedup.minhashIngestCandidates(
+      s.read.parquet(idxDir), batch, "text", "doc_id", Dedup.DefaultMaxBucket)
+    assert(cand.collect().map(r => (r.getLong(0), r.getLong(1))).contains((1L, 100L)),
+      "the planted exact dup must pair")
+    val shape = graft.PlanAudit.shape(cand.queryExecution.executedPlan)
+    assert(shape.scans <= 2, s"index file scans: $shape\n${cand.queryExecution.executedPlan}")
+  }
+
   test("lmFluency: hand-computed bigram conditional probabilities") {
     val s = spark
     import s.implicits._

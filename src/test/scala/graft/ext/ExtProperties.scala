@@ -617,4 +617,41 @@ object ExtProperties extends Properties("ext") with SparkFixture {
           n1 == java.text.Normalizer.normalize(t, java.text.Normalizer.Form.NFC)
       }
     }
+
+  // banded-cap members (k1, k2, id, probe): small keys and ids, so groups
+  // repeat whole rows and one id sits on both the probe and member sides
+  private val genMembers: Gen[List[(Int, Int, Long, Boolean)]] = for {
+    n <- Gen.choose(0, 16)
+    rows <- Gen.listOfN(n, for {
+      k1 <- Gen.choose(0, 2)
+      k2 <- Gen.choose(0, 1)
+      id <- Gen.choose(0L, 5L)
+      probe <- Gen.oneOf(true, false)
+    } yield (k1, k2, id, probe))
+  } yield rows
+
+  property("cappedPairs equals keep → kept → probe × member join, self and probe mode") =
+    Prop.forAll(genMembers, Gen.choose(1, 4)) { (random, cap) =>
+      val s = spark
+      import s.implicits._
+      // both boundaries every time: a group of exactly `cap` rows (kept)
+      // and one of cap + 1 rows (skipped)
+      val rows = random ++ (0 until cap).map(i => (9, 0, i.toLong, i % 2 == 0)) ++
+        (0 to cap).map(i => (9, 1, i.toLong, true))
+      val members = rows.toDF("k1", "k2", "id", "probe")
+      val keys = Seq("k1", "k2")
+      def naive(probe: org.apache.spark.sql.Column) = {
+        val keep = members.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
+          .where(col("n") <= cap).drop("n")
+        val kept = members.join(keep, keys)
+        kept.where(probe).select(col("k1"), col("k2"), col("id").as("__a"))
+          .join(kept.select(col("k1"), col("k2"), col("id").as("__b")), keys)
+          .select("__a", "__b")
+      }
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.select("__a", "__b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      Seq(lit(true), col("probe")).forall { probe =>
+        pairs(Dedup.cappedPairs(members, keys, "id", probe, cap.toLong)) == pairs(naive(probe))
+      }
+    }
 }

@@ -221,6 +221,14 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
     }
     s.listenerManager.register(qel)
     s.sparkContext.addSparkListener(jl)
+    // the listener bus is asynchronous: the full read in content() above
+    // can still reach qel. Events arrive in order, so once a marker
+    // query's plan is seen, every earlier plan has been too — forget them
+    s.range(1).toDF("rw_marker").collect()
+    val markerDeadline = System.nanoTime() + 30L * 1000000000L
+    while (!plans.asScala.exists(_.output.exists(_.name == "rw_marker")) &&
+        System.nanoTime() < markerDeadline) Thread.sleep(20)
+    plans.clear()
     def rewriteOnce(group: String): Unit = {
       s.sparkContext.setJobGroup(group, group)
       // a data-column predicate (one on `b` would prune the scan itself):
@@ -330,5 +338,38 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
     assert(e.getSuppressed.length == 1, s"one cause thrown, one suppressed: $e")
     assert((e.getMessage +: e.getSuppressed.map(_.getMessage)).toSet ==
       Set("chain a", "chain b"))
+  }
+
+  test("inParallel: a failing chain cancels its sibling's running job and " +
+      "reports the cancellation") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val sc = spark.sparkContext
+    val started = new CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskStart(e: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+        started.countDown()
+    }
+    // one row that sleeps for 60 s unless its task is killed first
+    val sleepy = udf { (x: Long) =>
+      val task = org.apache.spark.TaskContext.get()
+      val until = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+      while (System.nanoTime() < until && !task.isInterrupted()) Thread.sleep(20)
+      x
+    }
+    sc.addSparkListener(listener)
+    val t0 = System.nanoTime()
+    val e = try intercept[IllegalStateException] {
+      ServingLayout.inParallel(
+        () => { spark.range(1).select(sleepy(col("id"))).collect(); () },
+        () => {
+          assert(started.await(30, TimeUnit.SECONDS), "the sibling's task never started")
+          throw new IllegalStateException("chain a")
+        })
+    } finally sc.removeSparkListener(listener)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 30, s"the failure must cut the sibling's 60 s job short: $secs s")
+    assert(e.getMessage == "chain a", s"the first failure is thrown: $e")
+    assert(e.getSuppressed.exists(s => String.valueOf(s.getMessage).toLowerCase.contains("cancel")),
+      s"the sibling's cancellation must be reported: ${e.getSuppressed.toSeq}")
   }
 }

@@ -163,4 +163,24 @@ class SimhashServingSpec extends AnyFunSuite with graft.SparkFixture {
     assert(executions.forall(_ != null) && executions.distinct.length == 6,
       s"probe SQL executions: ${executions.distinct}")
   }
+
+  test("simhashPairsFrom runs 1 SQL execution, the caller's action") {
+    val s = spark
+    val shared = "alpha beta gamma delta epsilon"
+    val base = graft.TempDirs.create("graft_shpairs_t")
+    val vrowsPath = base.resolve("vrows").toString
+    val docsPath = base.resolve("docs").toString
+    Dedup.simhashWriteServingLayout(
+      Seq((1L, shared), (2L, "one two three four five"), (3L, shared)).toDF2(s),
+      vrowsPath, docsPath)
+    var pairs = 0
+    val executions = executionsOf {
+      pairs = Dedup.simhashPairsFrom(Dedup.simhashVrows.read(s, vrowsPath),
+        Dedup.simhashDocs.read(s, docsPath)).collect().length
+    }
+    assert(pairs > 0, "the planted equal-fingerprint docs must pair")
+    // the cap is a window inside the listing's own plan, not a collect
+    assert(executions.forall(_ != null) && executions.distinct.length == 1,
+      s"listing SQL executions: ${executions.distinct}")
+  }
 }
