@@ -602,14 +602,14 @@ object SparkEntry {
     * streamed bridge rows): delta ids re-embedded (deterministic reversal
     * stub) via pointed lookups, assigned at the deployed frozen
     * centroids, swapped into the persisted cell index. */
-  private def annDeltaFold(s: SparkSession, dir: String, deltaIds: DataFrame): DataFrame = {
+  private def annDeltaFold(s: SparkSession, dir: String, revisedIds: DataFrame): DataFrame = {
     val e = embeddings(s, dir)
     val state = ivfDeployState(s, dir)
     val cents = s.read.parquet(state.resolve("centroids").toString)
-    val reEmbedded = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
+    val reEmbedded = e.join(revisedIds, e("vec_id") === revisedIds("doc_id"))
       .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
     val folded = s.read.parquet(state.resolve("cells").toString)
-      .join(deltaIds, col("neighbor_id") === deltaIds("doc_id"), "left_anti")
+      .join(revisedIds, col("neighbor_id") === revisedIds("doc_id"), "left_anti")
       .unionByName(Similarity.ivfIndex(reEmbedded, cents))
     Similarity.ivfSearch(folded, e.where(col("vec_id") % 100 === 0), cents, k = 3)
       .orderBy("query_id", "rnk")
@@ -2178,8 +2178,8 @@ object SparkEntry {
       val base = TempDirs.create("graft_srvfold")
       TempDirs.copyInto(state.resolve("cells"), base.resolve("cells"))
       val cents = s.read.parquet(state.resolve("centroids").toString)
-      val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id"))
-      val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
+      val revisedIds = docsChangelogDelta(s, dir).select(col("doc_id"))
+      val oldVecs = e.join(revisedIds, e("vec_id") === revisedIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
       val newVecs = oldVecs.select(col("vec_id"),
         reverse(col("embedding")).as("embedding"))
@@ -3556,8 +3556,8 @@ object SparkEntry {
       TempDirs.copyInto(st.resolve("codes"), base.resolve("codes"))
       val cents = s.read.parquet(st.resolve("cents").toString).localCheckpoint(true)
       val cb = s.read.parquet(st.resolve("cb").toString).localCheckpoint(true)
-      val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id"))
-      val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
+      val revisedIds = docsChangelogDelta(s, dir).select(col("doc_id"))
+      val oldVecs = e.join(revisedIds, e("vec_id") === revisedIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
       val newVecs = oldVecs.select(col("vec_id"),
         reverse(col("embedding")).as("embedding"))
@@ -3798,11 +3798,11 @@ object SparkEntry {
       val st = embMultiServingState(s, dir)
       val base = TempDirs.create("graft_edmsrvf")
       copyState(st, base, "trows", "vecs")
-      val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
-      val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
+      val revisedIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
+      val oldVecs = e.join(revisedIds, e("vec_id") === revisedIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
       Dedup.embMultiServingFold(s, base.resolve("trows").toString,
-        base.resolve("vecs").toString, oldVecs, embDupReembed(e, deltaIds))
+        base.resolve("vecs").toString, oldVecs, embDupReembed(e, revisedIds))
       Dedup.embMultiPairsFrom(Dedup.embMultiTRows.read(s, s"$base/trows"),
         Dedup.embMultiVecs.read(s, s"$base/vecs"))
         .orderBy("id_a", "id_b")
@@ -3848,12 +3848,12 @@ object SparkEntry {
       }
       // the probe resolves generation 1 HERE (before the fold flips)
       val gen1 = graft.streaming.StateStream.statePath(s, layout)
-      val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
-      val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
+      val revisedIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
+      val oldVecs = e.join(revisedIds, e("vec_id") === revisedIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
       graft.streaming.StateStream.foldIsolatedGen(s, layout) { gen =>
         Dedup.embMultiServingFold(s, s"$gen/trows", s"$gen/vecs",
-          oldVecs, embDupReembed(e, deltaIds))
+          oldVecs, embDupReembed(e, revisedIds))
       }
       val batch = EmbFeed.withNearDups(e)
         .where(col("vec_id") >= EmbFeed.NearDupOffset)
@@ -3962,12 +3962,12 @@ object SparkEntry {
       // the long-running reader resolves generation 1 through the
       // DEFAULT entry point HERE
       val pinned = Dedup.embMultiPairsServing(s, layout)
-      val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
-      val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
+      val revisedIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
+      val oldVecs = e.join(revisedIds, e("vec_id") === revisedIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
       graft.streaming.StateStream.foldIsolatedGen(s, layout) { gen =>
         Dedup.embMultiServingFold(s, s"$gen/trows", s"$gen/vecs",
-          oldVecs, embDupReembed(e, deltaIds))
+          oldVecs, embDupReembed(e, revisedIds))
       }
       pinned.orderBy("id_a", "id_b")
     }),
@@ -3991,11 +3991,11 @@ object SparkEntry {
         () => deployFragmented(
           Dedup.embMultiVecs.read(s, s"$st/vecs").localCheckpoint(true),
           vecsPath, Dedup.embMultiVecs))
-      val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
-      val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
+      val revisedIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
+      val oldVecs = e.join(revisedIds, e("vec_id") === revisedIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
       Dedup.embMultiServingFold(s, trowsPath, vecsPath, oldVecs,
-        embDupReembed(e, deltaIds))
+        embDupReembed(e, revisedIds))
       Dedup.embMultiPairsFrom(Dedup.embMultiTRows.read(s, trowsPath),
         Dedup.embMultiVecs.read(s, vecsPath))
         .orderBy("id_a", "id_b")
@@ -4016,11 +4016,11 @@ object SparkEntry {
       val base = TempDirs.create("graft_edsrvf")
       TempDirs.copyInto(embDupServingState(s, dir).resolve("vecs"),
         base.resolve("vecs"))
-      val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
-      val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
+      val revisedIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
+      val oldVecs = e.join(revisedIds, e("vec_id") === revisedIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
       Dedup.embDupServingFold(s, base.resolve("vecs").toString, oldVecs,
-        embDupReembed(e, deltaIds))
+        embDupReembed(e, revisedIds))
       Dedup.embDupPairsFrom(Dedup.embDupVecs.read(s, s"$base/vecs"))
         .orderBy("id_a", "id_b")
     }),
@@ -4162,11 +4162,11 @@ object SparkEntry {
       }
       // the probe resolves generation 1 HERE (before the fold flips)
       val gen1 = graft.streaming.StateStream.statePath(s, layout)
-      val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
-      val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
+      val revisedIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
+      val oldVecs = e.join(revisedIds, e("vec_id") === revisedIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
       graft.streaming.StateStream.foldIsolatedGen(s, layout) { gen =>
-        Dedup.embDupServingFold(s, gen, oldVecs, embDupReembed(e, deltaIds))
+        Dedup.embDupServingFold(s, gen, oldVecs, embDupReembed(e, revisedIds))
       }
       val batch = EmbFeed.withDups(e).where(col("vec_id") >= EmbFeed.DupOffset)
       // EXECUTED AFTER THE FLIP: graced gen-1 bytes vs the folded gen;
@@ -4221,11 +4221,11 @@ object SparkEntry {
       val base = TempDirs.create("graft_edsrvpb")
       TempDirs.copyInto(embDupServingHistState(s, dir).resolve("vecs"),
         base.resolve("vecs"))
-      val deltaIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
-      val oldVecs = e.join(deltaIds, e("vec_id") === deltaIds("doc_id"))
+      val revisedIds = docsChangelogDelta(s, dir).select(col("doc_id")).distinct()
+      val oldVecs = e.join(revisedIds, e("vec_id") === revisedIds("doc_id"))
         .select(e("vec_id"), e("embedding"))
       Dedup.embDupServingFold(s, base.resolve("vecs").toString, oldVecs,
-        embDupReembed(e, deltaIds))
+        embDupReembed(e, revisedIds))
       val batch = EmbFeed.withDups(e).where(col("vec_id") >= EmbFeed.DupOffset)
       Dedup.embDupServingProbe(s, base.resolve("vecs").toString, batch)
         .orderBy("id_a", "id_b")

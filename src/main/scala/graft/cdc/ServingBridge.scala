@@ -279,14 +279,12 @@ object ServingBridge {
       path: String,
       newEpisodes: DataFrame,
       buckets: Int = ServingBuckets): Unit = {
-    val newE = newEpisodes
-      .select(col("serve_key"), col("status_asof"), col("ep_id"),
-        col("valid_from_s"))
-      .localCheckpoint(true)
+    val (newE, _, Seq(touched)) = graft.ext.ServingLayout.materialize(
+      newEpisodes.select(col("serve_key"), col("status_asof"), col("ep_id"),
+        col("valid_from_s")),
+      keyBucket(col("serve_key"), buckets))
     val keys = newE.select(col("serve_key")).distinct()
-    graft.ext.ServingLayout.rewrite(spark, path, episodeStore,
-      graft.ext.ServingLayout.affectedValues(
-        keys.select(keyBucket(col("serve_key"), buckets).as("bucket")))) {
+    graft.ext.ServingLayout.rewrite(spark, path, episodeStore, touched) {
       inBuckets =>
         val untouched = inBuckets.join(keys, Seq("serve_key"), "left_anti")
           .select("serve_key", "status_asof", "ep_id", "valid_from_s", "valid_to_s")

@@ -138,7 +138,10 @@ object Dedup {
     * window applies the cap (spill-safe, so a skipped group never becomes
     * a list), and each kept group — already clustered on its keys, so no
     * second shuffle — explodes its probe ids against its member ids, at
-    * most `maxBucket` of each. */
+    * most `maxBucket` of each. The cap counts the rows it is handed:
+    * [[candidatePairs]] hands one row per distinct signature, so it caps
+    * on distinct signatures as [[minhashBucketAudit]] reports; the index
+    * and serving routes hold no signature key and count document rows. */
   private[ext] def cappedPairs(members: DataFrame, keys: Seq[String], id: String,
       probe: Column, maxBucket: Long): DataFrame =
     members
@@ -296,8 +299,13 @@ object Dedup {
   private def bandedCandidates(sh: DataFrame, maxBucket: Long = DefaultMaxBucket): DataFrame = {
     val lanes = (0 until NumHashes).map(h => col(s"mh_$h"))
     val withFp = signatureGroups(sh).localCheckpoint(true)
-    // value-level band rows: the signature fingerprint stands in for the id
+    // value-level band rows, one per DISTINCT (band, sig, signature): the
+    // signature fingerprint stands in for the id, so the cap counts
+    // distinct signatures as the audit does. The distinct runs on the
+    // (band, sig) exchange the kernel's window needs anyway — no shuffle
+    // of its own
     val vb = bands(withFp.select(col("__sigfp").as("id") +: lanes: _*))
+      .repartition(col("band"), col("sig")).distinct()
     val vpairs = cappedPairs(vb, Seq("band", "sig"), "id", lit(true), maxBucket)
       .where(col("__a") < col("__b"))
       .select(col("__a").as("__fpa"), col("__b").as("__fpb")).distinct()
@@ -766,13 +774,11 @@ object Dedup {
       .localCheckpoint(true)
     val (oldBands, oldFps) = minhashServingRowsFromSigs(oldSigs, buckets)
     val (newBands, newFps) = minhashServingRowsFromSigs(newSigs, buckets)
-    val deltaIds = ServingLayout.deltaIds(oldDocs, newDocs, idCol)
-      .localCheckpoint(true)
     // disjoint paths over materialized inputs: independent job chains,
     // overlapped (§2.6)
     ServingLayout.inParallel(
-      () => minhashBands.fold(spark, bandsPath, deltaIds, oldBands, newBands),
-      () => minhashFps.fold(spark, fpsPath, deltaIds, oldFps, newFps))
+      () => minhashBands.fold(spark, bandsPath, oldBands, newBands),
+      () => minhashFps.fold(spark, fpsPath, oldFps, newFps))
   }
 
   /** The DEFAULT pair-listing entry point over a GENERATIONED layout
@@ -1310,13 +1316,19 @@ object Dedup {
       idCol: String = "doc_id",
       buckets: Int = ServingBuckets): (DataFrame, DataFrame) = {
     val fps = simhash(docs, textCol, idCol)
-    val vrows = simhashVbandsOf(fps.select("simhash").distinct())
-      .select(col("band"), col("bv"), col("simhash"),
-        simhashBandBucket(col("band"), col("bv"), buckets).as("sband"))
-    val members = fps.select(col("simhash"), col("doc_id").as("id"))
-      .withColumn("vbucket", simhashValueBucket(col("simhash"), buckets))
-    (vrows, members)
+    (simhashValueRows(fps.select("simhash").distinct(), buckets),
+      simhashMemberRows(fps, buckets))
   }
+
+  /** [[simhashVrows]] rows of a frame of distinct `simhash` values. */
+  private def simhashValueRows(values: DataFrame, buckets: Int): DataFrame =
+    simhashVbandsOf(values).select(col("band"), col("bv"), col("simhash"),
+      simhashBandBucket(col("band"), col("bv"), buckets).as("sband"))
+
+  /** [[simhashDocs]] rows of a fingerprint frame (`doc_id`, `simhash`). */
+  private def simhashMemberRows(fps: DataFrame, buckets: Int): DataFrame =
+    fps.select(col("simhash"), col("doc_id").as("id"),
+      simhashValueBucket(col("simhash"), buckets).as("vbucket"))
 
   /** Write a document set's SimHash index in its serving layout. */
   def simhashWriteServingLayout(
@@ -1367,10 +1379,7 @@ object Dedup {
       broadcastBytes: Long): DataFrame = {
     // distinct-value-sized, 3 consumers below
     val (vb, nVb, Seq(sbands)) = ServingLayout.materialize(
-      simhashVbandsOf(fps.select("simhash").distinct())
-        .select(col("band"), col("bv"), col("simhash"),
-          simhashBandBucket(col("band"), col("bv"), buckets).as("sband")),
-      col("sband"))
+      simhashValueRows(fps.select("simhash").distinct(), buckets), col("sband"))
     val storedV = simhashVrows.readIn(spark, vrowsPath, sbands)
     val vbandDim = gatedDim(vb.select("sband", "band", "bv").distinct(),
       nVb, SimhashBandRowBytes, broadcastBytes)
@@ -1476,18 +1485,13 @@ object Dedup {
       buckets: Int = ServingBuckets): Unit = {
     val oldFps = simhash(oldDocs, textCol, idCol).localCheckpoint(true)
     val newFps = simhash(newDocs, textCol, idCol).localCheckpoint(true)
-    val deltaIds = ServingLayout.deltaIds(oldFps, newFps, "doc_id")
-      .localCheckpoint(true)
     val candVals = oldFps.select("simhash").union(newFps.select("simhash"))
       .distinct().localCheckpoint(true)
-    def registryRows(fps: DataFrame): DataFrame = fps.select(
-      simhashValueBucket(col("simhash"), buckets).as("vbucket"),
-      col("simhash"), col("doc_id").as("id"))
     // membership registry fold (per-doc pure); the two artifacts stay
     // SEQUENTIAL here: value liveness derives from the post-fold
     // registry replacement
-    val replacementM = simhashDocs.fold(spark, docsPath, deltaIds,
-      registryRows(oldFps), registryRows(newFps))
+    val replacementM = simhashDocs.fold(spark, docsPath,
+      simhashMemberRows(oldFps, buckets), simhashMemberRows(newFps, buckets))
     // value-table fold: liveness from the POST-fold registry — derived
     // from the in-memory materialized replacement (what the write above
     // landed for exactly the affected buckets), not a read-back of
@@ -1496,19 +1500,11 @@ object Dedup {
     // pre-fold bytes to a read-after-write and resurrect dead values
     val alive = replacementM
       .join(broadcast(candVals), Seq("simhash"), "left_semi")
-      .select("simhash").distinct().localCheckpoint(true)
-    val newVrows = simhashVbandsOf(alive)
-      .select(col("band"), col("bv"), col("simhash"),
-        simhashBandBucket(col("band"), col("bv"), buckets).as("sband"))
-    ServingLayout.rewrite(spark, vrowsPath, simhashVrows,
-      ServingLayout.affectedValues(
-        simhashVbandsOf(candVals)
-          .select(simhashBandBucket(col("band"), col("bv"), buckets)))) {
-      _.join(candVals.select(col("simhash").as("__cv")),
-          col("simhash") === col("__cv"), "left_anti")
-        .select("sband", "band", "bv", "simhash")
-        .unionByName(newVrows.select("sband", "band", "bv", "simhash"))
-    }
+      .select("simhash").distinct()
+    // the value table is id-keyed by value: every candidate value's rows
+    // are removed, the live ones re-added
+    simhashVrows.fold(spark, vrowsPath, simhashValueRows(candVals, buckets),
+      simhashValueRows(alive, buckets))
   }
 
   /** The DEFAULT pair-listing entry point over a GENERATIONED layout
@@ -1644,9 +1640,8 @@ object Dedup {
       newVecs: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit =
-    embDupVecs.fold(spark, path, ServingLayout.deltaIds(oldVecs, newVecs, idCol),
-      embDupServingRows(oldVecs, idCol, vecCol),
-      embDupServingRows(newVecs, idCol, vecCol).localCheckpoint(true))
+    embDupVecs.fold(spark, path, embDupServingRows(oldVecs, idCol, vecCol),
+      embDupServingRows(newVecs, idCol, vecCol))
 
   /** The DEFAULT pair-listing entry point over a GENERATIONED layout
     * root (each generation directory IS the vecs artifact): resolves the
@@ -1681,17 +1676,17 @@ object Dedup {
       maxBucket: Long = DefaultMaxBucket): DataFrame = {
     // ONE bucket-size pass routes the whole listing (r16's keep-aggregate
     // + kept-join ×2 + anti-join form scanned the stored frame 8× — the
-    // r16 verdict's single-pass ask): the HOT bucket set collects to a
-    // literal — bounded by the bucket cardinality 2^NumPlanes, a model
-    // constant, the affectedValues control-plane-scalar justification —
+    // r16 verdict's single-pass ask): the HOT bucket set is a literal
+    // observed by materialize — bounded by the bucket cardinality
+    // 2^NumPlanes, a model constant (the ServingLayout control plane) —
     // so the kept side is a plain filter on the scan and the exact route
     // is STATICALLY confined to the hot buckets (empty hot set — the
     // common case — collapses it to an empty relation at plan time).
+    val (_, _, Seq(hot)) = ServingLayout.materialize(
+      stored.groupBy("bucket").agg(count(lit(1)).as("__nv"))
+        .where(col("__nv") > maxBucket), col("bucket"))
     val isHot = ServingLayout.partitionIn(
-      col("bucket"), stored.schema("bucket").dataType,
-      ServingLayout.affectedValues(
-        stored.groupBy("bucket").agg(count(lit(1)).as("__nv"))
-          .where(col("__nv") > maxBucket).select("bucket")))
+      col("bucket"), stored.schema("bucket").dataType, hot)
     val kept = stored.where(!isHot)
     val l = kept.select(col("bucket"), col("id").as("id_a"),
       col("v").as("va"), col("nrm").as("na"))
@@ -1905,17 +1900,13 @@ object Dedup {
       newVecs: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
-    val (newT0, newV0) = embMultiServingRows(newVecs, idCol, vecCol)
-    val newT = newT0.localCheckpoint(true)
-    val newV = newV0.localCheckpoint(true)
+    val (newT, newV) = embMultiServingRows(newVecs, idCol, vecCol)
     val (oldT, oldV) = embMultiServingRows(oldVecs, idCol, vecCol)
-    val deltaIds = ServingLayout.deltaIds(oldVecs, newVecs, idCol)
-      .localCheckpoint(true)
-    // the two chains touch disjoint paths over materialized inputs —
-    // independent job chains, overlapped (§2.6)
+    // the two chains touch disjoint paths — independent job chains,
+    // overlapped (§2.6)
     ServingLayout.inParallel(
-      () => embMultiTRows.fold(spark, trowsPath, deltaIds, oldT, newT),
-      () => embMultiVecs.fold(spark, vecsPath, deltaIds, oldV, newV))
+      () => embMultiTRows.fold(spark, trowsPath, oldT, newT),
+      () => embMultiVecs.fold(spark, vecsPath, oldV, newV))
   }
 
   /** [[embMultiPairsServing]] over already-RESOLVED artifact frames —
@@ -1942,11 +1933,11 @@ object Dedup {
     // one tbucket-size pass routes the listing (the [[embDupPairsFrom]]
     // single-pass form): the hot set is a control-plane literal bounded
     // by EmbTables·2^EmbPlanesPerTable — a model constant
+    val (_, _, Seq(hot)) = ServingLayout.materialize(
+      trows.groupBy("tbucket").agg(count(lit(1)).as("__nv"))
+        .where(col("__nv") > maxBucket), col("tbucket"))
     val isHot = ServingLayout.partitionIn(
-      col("tbucket"), trows.schema("tbucket").dataType,
-      ServingLayout.affectedValues(
-        trows.groupBy("tbucket").agg(count(lit(1)).as("__nv"))
-          .where(col("__nv") > maxBucket).select("tbucket")))
+      col("tbucket"), trows.schema("tbucket").dataType, hot)
     val kept = trows.where(!isHot)
     val cand = kept.select(col("tbucket"), col("id").as("id_a"))
       .join(kept.select(col("tbucket"), col("id").as("id_b")), Seq("tbucket"))

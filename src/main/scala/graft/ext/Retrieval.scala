@@ -291,26 +291,14 @@ object Retrieval {
       oldDocs: DataFrame,
       newDocs: DataFrame,
       buckets: Int = ServingBuckets): Unit = {
-    val newPost = bm25Postings(newDocs)
+    def postings(docs: DataFrame): DataFrame = bm25Postings(docs)
       .withColumn("bucket", termBucket(col("term"), buckets))
-      .localCheckpoint(true)
-    // materialized once: both artifact chains below consume it (and run
-    // concurrently)
-    val deltaIds = ServingLayout.deltaIds(oldDocs, newDocs, "doc_id")
-      .localCheckpoint(true)
-    def foldPostings(): Unit = ServingLayout.rewrite(
-      spark, postingsPath, bm25PostingsLayout,
-      ServingLayout.affectedValues(
-        bm25Postings(oldDocs)
-          .select(termBucket(col("term"), buckets).as("bucket"))
-          .union(newPost.select("bucket")))) { stored =>
-      // df RE-DERIVED within the affected buckets (bucket-local by the
-      // term→bucket purity above); the new rows' df is a placeholder
-      bm25PostingsLayout.replaceIds(deltaIds,
-        newPost.withColumn("df", lit(null).cast("long")))(stored)
-        .withColumn("df", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("term")))
-    }
+    // df RE-DERIVED within the affected buckets (bucket-local by the
+    // term→bucket purity above); the new rows' df is a placeholder
+    def foldPostings(): Unit = bm25PostingsLayout.fold(spark, postingsPath,
+      postings(oldDocs), postings(newDocs).withColumn("df", lit(null).cast("long")),
+      _.withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("term"))))
     // the REGISTRY fold: the length table (one row per live doc, dl = 0
     // when no posting reaches it) is a dbucket-partitioned layout and the
     // delta ids' buckets are the only ones rewritten — deletes drop the
@@ -318,18 +306,20 @@ object Retrieval {
     // read back post-fold, a pure function of on-disk state.
     def foldDocLen(): Unit = {
       val newDl = newDocs.select(col("doc_id"))
-        .join(newPost.groupBy("doc_id").agg(sum("tf").as("__dl")), Seq("doc_id"), "left")
+        .join(bm25Postings(newDocs).groupBy("doc_id").agg(sum("tf").as("__dl")),
+          Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("__dl"), lit(0L)).as("dl"),
           docBucket(col("doc_id"), buckets).as("dbucket"))
-      bm25DocLen.fold(spark, docLenPath, deltaIds,
-        oldDocs.select(docBucket(col("doc_id"), buckets).as("dbucket")), newDl)
+      bm25DocLen.fold(spark, docLenPath,
+        oldDocs.select(col("doc_id"), docBucket(col("doc_id"), buckets).as("dbucket")),
+        newDl)
       // reads docLenPath (final), writes statsPath — disjoint, no barrier
       statsFromDocLen(bm25DocLen.read(spark, docLenPath))
         .write.mode("overwrite").parquet(statsPath)
     }
-    // the two artifacts touch disjoint paths and share only materialized
-    // inputs — independent job chains, overlapped (guide §2.6); stats
-    // stays ordered AFTER the registry write inside its chain
+    // the two artifacts touch disjoint paths — independent job chains,
+    // overlapped (guide §2.6); stats stays ordered AFTER the registry
+    // write inside its chain
     ServingLayout.inParallel(() => foldPostings(), () => foldDocLen())
   }
 

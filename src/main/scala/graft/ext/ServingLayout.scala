@@ -15,10 +15,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * an [[Artifact]]: its schema (partition column last), its partition
   * column and its row id. The artifact owns the build write, the
   * declared-schema read and the pruned read, so no call site restates a
-  * shape. A fold derives the partition values its delta touches and
-  * hands them to [[rewrite]] with the replacement rule — a per-row-pure
-  * layout calls [[Artifact.fold]], which does both with the id-keyed
-  * rule — and [[rewrite]] owns everything else:
+  * shape. A fold learns the partition values its delta touches from the
+  * materialization of its delta rows (the control plane below) and hands
+  * them to [[rewrite]] with the replacement rule — a per-row-pure layout
+  * calls [[Artifact.fold]], which does both with the id-keyed rule — and
+  * [[rewrite]] owns everything else:
   *
   *   - '''Crowded partitions ride along.''' Every partition of the
   *     layout holding more than one data file joins the value set. The
@@ -51,7 +52,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   *     directory would survive. The barrier is a [[materialize]], so its
   *     job observes the replacement's partition values, and the affected
   *     values it lacks are deleted as directories — no extra job (the
-  *     probe control plane below).
+  *     control plane below).
   *   - '''Replay determinism.''' A crash mid-write can leave a subset of
   *     partitions replaced, but the rewrite is a pure function of (stored
   *     partitions, delta): re-running it rewrites the same partitions with
@@ -68,16 +69,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   *     paying a layout copy per fold for snapshot isolation (the
   *     `*PairsServing` and `*Pinned` entries resolve the generation).
   *
-  * '''Probe control plane.''' A serving probe prunes its stored scans by
-  * the LITERAL partition values its batch (or candidate set) touches,
-  * and gates its broadcast dims on that frame's row count. Both come from
-  * [[materialize]]: the eager `localCheckpoint` the probe needs anyway
-  * observes the count and every key's distinct values on the same job, so
-  * no stage pays a driver round trip per scalar. The value sets are
-  * bounded by the layout's partition-value cardinality — buckets and
-  * cells are model or layout CONSTANTS, never data-sized — which is what
-  * makes collecting them to the driver a control-plane cost (the
-  * cdc_query_dpp literal-threshold justification). */
+  * '''Control plane.''' A serving probe prunes its stored scans by the
+  * LITERAL partition values its batch (or candidate set) touches, and
+  * gates its broadcast dims on that frame's row count; a fold prunes its
+  * read, and sweeps, by the literal partitions its delta rows live in.
+  * All of them come from [[materialize]]: the eager `localCheckpoint`
+  * the probe or fold needs anyway observes the count and every key's
+  * distinct values on the same job, so no stage pays a round trip per
+  * scalar, and it is the only way a serving path learns its partitions.
+  * The value sets are bounded by the layout's partition-value
+  * cardinality — buckets and cells are model or layout CONSTANTS, never
+  * data-sized — which is what makes observing them a control-plane cost
+  * (the cdc_query_dpp literal-threshold justification). */
 object ServingLayout {
 
   /** One stored partitioned serving layout: `schema` is its declared
@@ -107,36 +110,41 @@ object ServingLayout {
       rows.repartition(col(partCol))
         .write.partitionBy(partCol).mode("overwrite").parquet(path)
 
-    /** The id-keyed replace rule of a per-row-pure layout, for
-      * [[rewrite]]: the stored slice minus every row whose id is in
-      * `deltaIds` ([[ServingLayout.deltaIds]]), plus the `fresh` rows.
-      * The removal set is old ∪ new ids, so one rule covers a revision
-      * (both sides), a delete or forget (old only) and an insert (new
-      * only), and a replayed delta removes and re-adds the same rows. */
-    private[graft] def replaceIds(deltaIds: DataFrame, fresh: DataFrame)(
+    /** The id-keyed replace rule of a per-row-pure layout: the stored
+      * slice minus every row whose id is in `removed` (column `__did`),
+      * plus the `fresh` rows. The removal set is old ∪ new ids, so one
+      * rule covers a revision (both sides), a delete or forget (old only)
+      * and an insert (new only), and a replayed delta removes and re-adds
+      * the same rows. */
+    private def replaceIds(removed: DataFrame, fresh: DataFrame)(
         stored: DataFrame): DataFrame =
-      stored.join(deltaIds, col(idCol) === col("__did"), "left_anti")
+      stored.join(removed, col(idCol) === col("__did"), "left_anti")
         .select(schema.fieldNames.map(col): _*)
         .unionByName(fresh)
 
-    /** The whole fold of a per-row-pure layout: [[rewrite]] over the
-      * partitions the delta's `old` rows (re-derived from the pre-delta
-      * input, never an index scan; only `partCol` is read) and `fresh`
-      * rows live in, replaced by [[replaceIds]]. Returns the
-      * materialized replacement. */
+    /** The whole fold of a per-row-pure layout on ONE materialization:
+      * the delta's `fresh` rows and its `old` rows (re-derived from the
+      * pre-delta input, never an index scan; only `idCol` and `partCol`
+      * are read) are checkpointed together, flagged by side, and that job
+      * observes the partitions either side lives in (the control plane,
+      * object doc). [[rewrite]] replaces those partitions by
+      * [[replaceIds]] with the checkpoint's ids as the removal set and its
+      * fresh slice as the new rows; `post` then runs over the whole
+      * replaced slice (BM25's df window). Returns the materialized
+      * replacement. */
     private[graft] def fold(spark: SparkSession, path: String,
-        deltaIds: DataFrame, old: DataFrame, fresh: DataFrame): DataFrame =
-      rewrite(spark, path, this, affectedValues(
-        old.select(partCol).union(fresh.select(partCol))))(
-        replaceIds(deltaIds, fresh))
+        old: DataFrame, fresh: DataFrame,
+        post: DataFrame => DataFrame = identity): DataFrame = {
+      val (delta, _, Seq(values)) = materialize(
+        fresh.select(schema.fieldNames.map(col) :+ lit(true).as("__fresh"): _*)
+          .unionByName(old.select(col(idCol), col(partCol), lit(false).as("__fresh")),
+            allowMissingColumns = true),
+        col(partCol))
+      rewrite(spark, path, this, values)(stored => post(replaceIds(
+        delta.select(col(idCol).as("__did")),
+        delta.where(col("__fresh")).drop("__fresh"))(stored)))
+    }
   }
-
-  /** A delta's removal set for [[Artifact.replaceIds]]: the ids `idCol`
-    * of the old and the new rows, distinct. */
-  private[graft] def deltaIds(old: DataFrame, fresh: DataFrame,
-      idCol: String): DataFrame =
-    old.select(col(idCol).as("__did"))
-      .union(fresh.select(col(idCol).as("__did"))).distinct()
 
   /** Rewrite the partitions `values` of `artifact` at `path` in place,
     * together with every crowded partition (object doc): read them,
@@ -233,10 +241,9 @@ object ServingLayout {
 
   /** Materialize `rows` with an eager `localCheckpoint` and observe, on
     * that same job, its row count and the distinct values of each key —
-    * the probe control plane (object doc). An array-typed key contributes
+    * the control plane (object doc). An array-typed key contributes
     * its elements. Returns the materialized rows, the count, and per key
-    * the sorted values, NULL and non-integral values rejected as in
-    * [[affectedValues]]. */
+    * the sorted values; a NULL or non-integral value is rejected. */
   private[graft] def materialize(rows: DataFrame, keys: Column*)
       : (DataFrame, Long, Seq[Seq[Long]]) = {
     val seen = new Observation()
@@ -253,24 +260,16 @@ object ServingLayout {
       .localCheckpoint(true)
     val m = seen.get
     (out, m("n").asInstanceOf[Long], keys.indices.map(i =>
-      m(s"k$i").asInstanceOf[Seq[Any]].map(integral(_, "materialize")).sorted))
+      m(s"k$i").asInstanceOf[Seq[Any]].map(integral).sorted))
   }
-
-  /** Collect a fold's affected-partition frame to the LITERAL value set
-    * [[rewrite]] prunes its read by and sweeps against — bounded like
-    * [[materialize]]'s value sets (object doc). */
-  private[graft] def affectedValues(affected: DataFrame): Seq[Long] =
-    affected.distinct().collect().map(r => integral(r.get(0), "affectedValues"))
-      .toSeq.sorted
 
   /** One partition value as a Long. Serving-layout partition keys are
     * derived, never nullable, and integral by contract; directory-name
     * inference may type them IntegerType, so both boxes normalize here. */
-  private def integral(v: Any, caller: String): Long = {
+  private def integral(v: Any): Long = {
     require(v != null,
-      s"$caller: NULL partition value in a fold's affected set — " +
-        "the layout or the fold input is malformed (partition keys are " +
-        "derived, never nullable)")
+      "materialize: NULL partition value — the layout or its input is " +
+        "malformed (partition keys are derived, never nullable)")
     v match {
       // ONLY the integral boxes: a boxed Double/Float/BigDecimal must
       // hit the rejection below, never silently truncate through a
@@ -280,7 +279,7 @@ object ServingLayout {
       case n: java.lang.Short => n.longValue()
       case n: java.lang.Byte => n.longValue()
       case other => throw new IllegalArgumentException(
-        s"$caller: non-integral partition value '$other' " +
+        s"materialize: non-integral partition value '$other' " +
           s"(${other.getClass.getName}) — serving-layout partition " +
           "columns are integral by contract")
     }

@@ -416,9 +416,8 @@ object Similarity {
       cents: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit =
-    ivfCells.fold(spark, cellsPath, ServingLayout.deltaIds(oldVecs, newVecs, idCol),
-      ivfIndex(oldVecs, cents, idCol, vecCol),
-      ivfIndex(newVecs, cents, idCol, vecCol).localCheckpoint(true))
+    ivfCells.fold(spark, cellsPath, ivfIndex(oldVecs, cents, idCol, vecCol),
+      ivfIndex(newVecs, cents, idCol, vecCol))
 
   /** Probe-side IVF search over a built index: queries assign to their
     * `probes` nearest centroids, candidates are the index rows in probed
@@ -790,9 +789,9 @@ object Similarity {
       subspaces: Int = 4,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit =
-    pqCodes.fold(spark, codesPath, ServingLayout.deltaIds(oldVecs, newVecs, idCol),
+    pqCodes.fold(spark, codesPath,
       ivfPqEncode(oldVecs, cents, cb, subspaces, idCol, vecCol),
-      ivfPqEncode(newVecs, cents, cb, subspaces, idCol, vecCol).localCheckpoint(true))
+      ivfPqEncode(newVecs, cents, cb, subspaces, idCol, vecCol))
 
   /** ADC search over a prebuilt code index at the frozen model. */
   def ivfPqSearch(

@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * dynamic partition overwrite outside [[graft.ext.ServingLayout]] would be
   * a new copy of the read → replace → barrier → overwrite → sweep skeleton,
   * free to drift from it (a footer-inferred read, a missing sweep), a
-  * hand-built removal set a new copy of the id-keyed replace rule, and a
-  * caller-side crowded check a compaction that some folds skip.
+  * hand-built removal set a new copy of the id-keyed replace rule, a
+  * collected affected set a second control plane beside the fold's own
+  * materialization, and a caller-side crowded check a compaction that
+  * some folds skip.
   * Changelog sinks: rows are appended only through the StagedAppend
   * journal, and full rewrites only through SinkLayout's version swap.
   * Streams: only StateStream decides how a stream is driven to
@@ -75,11 +77,24 @@ class WriteProtocolSpec extends AnyFunSuite {
   }
 
   test("id-keyed folds go through Artifact.fold") {
-    // BM25 postings is the one caller outside ServingLayout: its df
-    // window runs over the replaceIds result
     val users = mainSourcesWith(".replaceIds(")
-    assert(users.forall(Set("graft/ext/ServingLayout.scala", "graft/ext/Retrieval.scala")),
+    assert(users.forall(_ == "graft/ext/ServingLayout.scala"),
       s"an id-keyed fold must call Artifact.fold, not restate it: $users")
+    // the episode fold is the one rewrite that is not id-keyed: a touched
+    // key's timeline re-windows over its stored and new episodes
+    val rewrites = defsMatching("""(?<!def )\brewrite\(""".r)
+      .filterNot(_._1 == "graft/ext/ServingLayout.scala")
+    assert(rewrites == Seq("graft/cdc/ServingBridge.scala" -> "episodesServingFold"),
+      s"a fold outside ServingLayout must call Artifact.fold: $rewrites")
+  }
+
+  test("a fold learns its partitions only from ServingLayout.materialize") {
+    // a separate collect of the affected set or a separately built removal
+    // set would be a second control-plane path beside the fold's own
+    // materialization
+    assert(occurrencesIn("affectedValues(").isEmpty && occurrencesIn("deltaIds(").isEmpty,
+      s"affectedValues/deltaIds are gone: ${occurrencesIn("affectedValues(") ++
+        occurrencesIn("deltaIds(")}")
   }
 
   test("only the journal stages changelog rows") {

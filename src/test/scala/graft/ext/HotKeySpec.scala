@@ -91,7 +91,7 @@ class HotKeySpec extends AnyFunSuite with SparkFixture {
 
   test("minhash bucket cap: identical-signature pairs survive a full skip, audit reports") {
     val c = DocFeed.withDups(spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
-      .limit(400)
+      .limit(400).localCheckpoint(true)
     val all = pairSet(Dedup.candidatePairs(c))
     // maxBucket = 1: every bucket holding ≥ 2 DISTINCT signatures is
     // skipped — surviving candidates are exactly the identical-signature
@@ -111,6 +111,19 @@ class HotKeySpec extends AnyFunSuite with SparkFixture {
     val skipped = audit.count(_.getString(4) == "skipped")
     val multiSig = audit.count(_.getLong(3) > 1)
     assert(skipped == multiSig, "every multi-signature bucket must be reported skipped")
+    // the cap and the audit count the same thing (distinct signatures):
+    // at maxBucket = 2, repeated signatures must not push a bucket the
+    // audit reports joined past the cap
+    val capped2 = pairSet(Dedup.candidatePairs(c, maxBucket = 2L))
+    val joined = Dedup.minhashBucketAudit(c, maxBucket = 2L)
+      .where(col("action") === "joined").select("band", "sig")
+    val members = Dedup.bands(sigs).join(joined, Seq("band", "sig"))
+    val inJoined = pairSet(members.select(col("band"), col("sig"), col("id").as("id_a"))
+      .join(members.select(col("band"), col("sig"), col("id").as("id_b")), Seq("band", "sig"))
+      .where(col("id_a") < col("id_b")))
+    assert(inJoined.nonEmpty, "the fixture must have joined buckets of two or more documents")
+    assert((inJoined -- capped2).isEmpty,
+      s"pairs in buckets reported joined but not candidates: ${inJoined -- capped2}")
   }
 
   test("simhash bucket cap: hamming-0 pairs survive, capped output is a reported subset") {

@@ -372,6 +372,27 @@ class MinhashServingSpec extends AnyFunSuite with graft.SparkFixture {
       s"probe SQL executions: ${executions.distinct}")
   }
 
+  test("minhashServingFold runs at most 8 SQL executions") {
+    val s = spark
+    import s.implicits._
+    val corpus = (1L to 40L).map(i =>
+      (i, s"w${i % 7} w${i % 5} w${i % 3} term$i alpha beta gamma")).toDF("doc_id", "text")
+    val oldDocs = corpus.where($"doc_id" <= 5L)
+    val newDocs = oldDocs.select($"doc_id", concat($"text", lit(" delta epsilon")).as("text"))
+    val base = graft.TempDirs.create("graft_mhfoldexec_t")
+    val bandsPath = base.resolve("bands").toString
+    val fpsPath = base.resolve("fps").toString
+    Dedup.writeServingLayout(corpus, bandsPath, fpsPath)
+    val executions = executionsOf {
+      Dedup.minhashServingFold(s, bandsPath, fpsPath, oldDocs, newDocs)
+    }
+    // one signing checkpoint per side, then per artifact the fold's delta
+    // materialization (which observes its partitions) and the rewrite's
+    // barrier and write
+    assert(executions.forall(_ != null) && executions.distinct.length <= 8,
+      s"fold SQL executions: ${executions.distinct}")
+  }
+
   test("a fold that empties EVERY partition leaves a readable empty layout " +
       "(explicit schemas — the footer-less directory lesson)") {
     val s = spark

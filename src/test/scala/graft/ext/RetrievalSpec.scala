@@ -269,6 +269,29 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
       "insert after emptying: (n, avgdl) must equal scratch")
   }
 
+  test("bm25ServingFold runs at most 7 SQL executions") {
+    val s = spark
+    import s.implicits._
+    val corpus = (1L to 40L).map(i =>
+      (i, s"w${i % 7} w${i % 5} w${i % 3} term$i alpha beta gamma")).toDF("doc_id", "text")
+    val oldDocs = corpus.where($"doc_id" <= 5L)
+    val newDocs = oldDocs.select($"doc_id", concat($"text", lit(" delta epsilon")).as("text"))
+    val base = graft.TempDirs.create("graft_bm25foldexec_t")
+    val (p0, dl0, st0) = Retrieval.bm25ServingArtifacts(corpus)
+    Retrieval.bm25PostingsLayout.write(p0, base.resolve("postings").toString)
+    Retrieval.bm25DocLen.write(dl0, base.resolve("doclen").toString)
+    st0.write.parquet(base.resolve("stats").toString)
+    val executions = executionsOf {
+      Retrieval.bm25ServingFold(s, base.resolve("postings").toString,
+        base.resolve("doclen").toString, base.resolve("stats").toString,
+        oldDocs, newDocs)
+    }
+    // per artifact the fold's delta materialization (which observes its
+    // partitions) and the rewrite's barrier and write, then the stats write
+    assert(executions.forall(_ != null) && executions.distinct.length <= 7,
+      s"fold SQL executions: ${executions.distinct}")
+  }
+
   test("the declared postingsSchema pins bm25ServingArtifacts' postings " +
       "(compact/fold reads must never depend on footer inference)") {
     val (postings, _, _) = Retrieval.bm25ServingArtifacts(corpus())

@@ -21,25 +21,6 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
       case _ => Nil
     }
 
-  test("affectedValues collects a sorted distinct literal set") {
-    val s = spark
-    import s.implicits._
-    val vals = ServingLayout.affectedValues(
-      Seq(3L, 1L, 3L, 7L, 1L).toDF("b").select($"b"))
-    assert(vals == Seq(1L, 3L, 7L))
-  }
-
-  test("affectedValues REJECTS non-integral boxed partition values instead " +
-      "of truncating them through Number.longValue") {
-    val s = spark
-    import s.implicits._
-    val e = intercept[IllegalArgumentException] {
-      ServingLayout.affectedValues(Seq(1.5d).toDF("b").select($"b"))
-    }
-    assert(e.getMessage.contains("non-integral"),
-      s"a boxed Double must hit the integral-contract rejection, got: $e")
-  }
-
   test("materialize observes the count and every key's distinct values on " +
       "its one checkpoint execution; an array key is flattened") {
     val s = spark
@@ -77,22 +58,18 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
     assert(read.forall(_ == 0L), s"an empty value set must read no partition, read $read")
   }
 
-  test("materialize rejects a NULL and a non-integral key with the same " +
-      "error as affectedValues") {
+  test("materialize rejects a NULL and a non-integral key instead of " +
+      "dropping or truncating it") {
     val s = spark
     import s.implicits._
-    def same(df: org.apache.spark.sql.DataFrame): Unit = {
-      val m = intercept[IllegalArgumentException] {
-        ServingLayout.materialize(df, $"b")
-      }
-      val a = intercept[IllegalArgumentException] {
-        ServingLayout.affectedValues(df.select($"b"))
-      }
-      assert(m.getMessage.replace("materialize:", "affectedValues:") == a.getMessage,
-        s"materialize: ${m.getMessage} / affectedValues: ${a.getMessage}")
-    }
-    same(Seq[java.lang.Long](1L, null).toDF("b"))
-    same(Seq(1.5d).toDF("b"))
+    def rejection(df: org.apache.spark.sql.DataFrame): String =
+      intercept[IllegalArgumentException](ServingLayout.materialize(df, $"b")).getMessage
+    val nul = rejection(Seq[java.lang.Long](1L, null).toDF("b"))
+    assert(nul.startsWith("requirement failed: materialize: NULL partition value"), nul)
+    // a boxed Double must hit the integral-contract rejection, never
+    // truncate through Number.longValue (1.5 → 1L would mis-prune)
+    val frac = rejection(Seq(1.5d).toDF("b"))
+    assert(frac.startsWith("materialize: non-integral partition value '1.5'"), frac)
   }
 
   test("partitionIn prunes an INFERRED-IntegerType partition column statically") {

@@ -164,6 +164,27 @@ class SimhashServingSpec extends AnyFunSuite with graft.SparkFixture {
       s"probe SQL executions: ${executions.distinct}")
   }
 
+  test("simhashServingFold runs at most 9 SQL executions") {
+    val s = spark
+    import s.implicits._
+    val corpus = (1L to 40L).map(i =>
+      (i, s"w${i % 7} w${i % 5} w${i % 3} term$i alpha beta gamma")).toDF("doc_id", "text")
+    val oldDocs = corpus.where($"doc_id" <= 5L)
+    val newDocs = oldDocs.select($"doc_id", concat($"text", lit(" delta epsilon")).as("text"))
+    val base = graft.TempDirs.create("graft_shfoldexec_t")
+    val vrowsPath = base.resolve("vrows").toString
+    val docsPath = base.resolve("docs").toString
+    Dedup.simhashWriteServingLayout(corpus, vrowsPath, docsPath)
+    val executions = executionsOf {
+      Dedup.simhashServingFold(s, vrowsPath, docsPath, oldDocs, newDocs)
+    }
+    // one fingerprint checkpoint per side, the candidate values, then per
+    // artifact the fold's delta materialization (which observes its
+    // partitions) and the rewrite's barrier and write
+    assert(executions.forall(_ != null) && executions.distinct.length <= 9,
+      s"fold SQL executions: ${executions.distinct}")
+  }
+
   test("simhashPairsFrom runs 1 SQL execution, the caller's action") {
     val s = spark
     val shared = "alpha beta gamma delta epsilon"
