@@ -27,6 +27,9 @@ final case class ForgetStats(rowsBefore: Long, rowsDropped: Long)
   * date directory is written by the tasks owning its data (the
   * partitioned-append pattern — never one task per date). The before and
   * kept row counts are observed on that one write — no extra count job.
+  * Removing rows can lower the sink's HWM and max id, so the new version's
+  * commit record is recounted from the rows written (one grouped aggregate
+  * over the staged copy).
   */
 object Forget {
 
@@ -40,13 +43,16 @@ object Forget {
       forgetSet: DataFrame): ForgetStats = {
     val before = Observation()
     val kept = Observation()
-    SinkLayout.swapVersion(spark, path) { (live, _) =>
+    SinkLayout.swapVersion(spark, path, recount = true) { (live, _) =>
       (live.observe(before, count(lit(1)).as("n"))
         .join(broadcast(forgetSet.select(keyCols.map(col): _*).distinct()), keyCols, "left_anti")
         .observe(kept, count(lit(1)).as("n"))
         .repartition(col("commit_date")), ())
     }
-    val n = before.get("n").asInstanceOf[Long]
-    ForgetStats(n, n - kept.get("n").asInstanceOf[Long])
+    // when the cutoff hides every day, the observations come back
+    // without a value
+    def rows(o: Observation): Long = o.get.get("n").fold(0L)(_.asInstanceOf[Long])
+    val n = rows(before)
+    ForgetStats(n, n - rows(kept))
   }
 }

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 final case class PopulateResult(rowsInserted: Long, message: String)
@@ -40,10 +40,11 @@ object PopulateChangelog {
     batch.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(thresholdBytes)
 
   /** Build + id-assign + stamp + write one batch of feed rows into
-    * `stageDir` (a journal stage, never the live sink); returns the written
-    * row count. The row count rides on the write itself via `observe` — no
-    * re-evaluation and, critically, no O(history) rescan of the sink (the
-    * reference re-counts the whole changelog, :397-399). */
+    * `stageDir` (a journal stage, never the live sink); returns the batch's
+    * commit-record entry, None when it wrote no row. The entry's row count
+    * and maxima ride on the write itself via `observe` — no re-evaluation
+    * and, critically, no O(history) rescan of the sink (the reference
+    * re-counts the whole changelog, :397-399). */
   private[cdc] def stampAndAppend(
       spark: SparkSession,
       batch: DataFrame,
@@ -51,7 +52,7 @@ object PopulateChangelog {
       stageDir: String,
       offset: Long,
       clusterByKey: Boolean,
-      clusterPartitions: Option[Int]): Long = {
+      clusterPartitions: Option[Int]): Option[Checkpoint.Entry] = {
     val obs = org.apache.spark.sql.Observation()
     val changelog = ChangelogBuilder.build(batch, cfg)
     val withIds =
@@ -68,7 +69,9 @@ object PopulateChangelog {
       .withColumn("modified_dt", lit(null).cast("timestamp"))
       .withColumn("modified_by", lit(null).cast("string"))
       .withColumn("commit_date", to_date(col("commit_time")))
-      .observe(obs, count(lit(1)).as("n"))
+      .observe(obs, max("commit_date").as("day"), count(lit(1)).as("rows"),
+        max("commit_time").as("hwm"), max("changelog_id").as("id"),
+        max("created_dt").as("created"))
     // clusterByKey: range-shuffle on (partition col, pk) + sort within
     // tasks, so each parquet file inside a commit_date partition covers a
     // DISJOINT pk range — point/range lookups on the key then prune to one
@@ -99,6 +102,7 @@ object PopulateChangelog {
       .mode(SaveMode.Append)
       .partitionBy("commit_date")
       .parquet(stageDir)
-    obs.get("n").asInstanceOf[Long]
+    val m = obs.get
+    Checkpoint.Entry.of(Row(m("day"), m("rows"), m("hwm"), m("id"), m("created")))
   }
 }

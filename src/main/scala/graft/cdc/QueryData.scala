@@ -35,11 +35,10 @@ object QueryData {
     // compaction swapping the data copy under this query
     val log = SinkLayout.read(spark, entry.changelogPath)
 
-    // freshness watermark (:40-46). Reference quirk: lexicographic MAX over
-    // mm/dd/yyyy strings (wrong across year boundaries) — compatMode only.
-    val freshness =
-      if (compatMode) log.agg(max(date_format(col("created_dt"), "MM/dd/yyyy"))).head().getString(0)
-      else Option(log.agg(max(col("created_dt"))).head().getTimestamp(0)).map(_.toString).orNull
+    // freshness watermark (:40-46), folded from the sink's commit record
+    // with no Spark job. Reference quirk: lexicographic MAX over mm/dd/yyyy
+    // strings (wrong across year boundaries) — compatMode only.
+    val freshness = Checkpoint.freshness(spark, entry.changelogPath, compatMode)
     val warning = s"Data in this table was last refreshed on: $freshness. " +
       "If more recent data is needed contact the data engineering team."
 

@@ -32,7 +32,12 @@ import org.apache.spark.sql.functions._
   * predicate pushes to the scan like every windowed populate), takes the
   * surviving prefix's max id with a partition-pruned aggregate, and commits
   * through the populate's journal ([[StagedAppend.stageAndPublish]]) —
-  * never rewrites healthy partitions.
+  * never rewrites healthy partitions. The dropped day took rows of earlier
+  * commits with it, whose commit-record entries may then name a
+  * `created_dt` no row holds any more; the repair therefore rebuilds the
+  * record from the repaired sink ([[Checkpoint.rebuild]], one grouped
+  * aggregate) instead of only adding its own entry. Both scans are off the
+  * populate's hot path.
   */
 object Repair {
 
@@ -96,7 +101,10 @@ object Repair {
     val windowed = feed
       .where(to_date(col("commit_time")) === dayLit && col("commit_time") <= lit(hwm))
       .cache()
-    try StagedAppend.stageAndPublish(spark, windowed, cfg, sinkPath, offset)
-    finally windowed.unpersist()
+    val n =
+      try StagedAppend.stageAndPublish(spark, windowed, cfg, sinkPath, offset)
+      finally windowed.unpersist()
+    Checkpoint.rebuild(spark, sinkPath)
+    n
   }
 }

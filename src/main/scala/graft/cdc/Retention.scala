@@ -38,7 +38,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Resolution goes through [[SinkLayout.dataDir]], so retention works the
   * same on flat and compacted (versioned) sinks. Run it from the sink's
-  * single writer like populate/compaction.
+  * single writer like populate/compaction. The sink's commit record needs
+  * no write here: [[Checkpoint]]'s fold skips the entries before the
+  * cutoff.
   */
 object Retention {
 

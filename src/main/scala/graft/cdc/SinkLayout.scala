@@ -18,9 +18,14 @@ import org.apache.spark.sql.functions.{col, lit}
   * {{{
   *   <sink>/                       (sink root = the table's stable address)
   *     commit_date=.../<parquet>   flat layout: every sink starts this way
+  *     _commits, _commits.<batch>  the flat layout's commit record
   *     data_v2/commit_date=.../    versioned data dirs (compaction output)
+  *     data_v2/_commits            each version's own commit record
   *     _v2.ok                      version markers; current = max N marked
   * }}}
+  *
+  * The commit record ([[Checkpoint]]) lives inside the data dir it
+  * describes, so every version flip swaps rows and record together.
   *
   * Everything that touches the sink resolves [[dataDir]] first: appends land
   * in the current version, reads plan against it. Compaction writes the
@@ -118,11 +123,13 @@ object SinkLayout {
     new Path(root, s"_flat_v$n.manifest")
 
   /** Root-level entries that constitute a FLAT sink's data plane — exactly
-    * what `spark.read.parquet(root)` consumes and the repack migrates. */
+    * what `spark.read.parquet(root)` consumes and the repack migrates — and
+    * its commit record, which the migrated version replaces. */
   private def isFlatData(st: FileStatus): Boolean =
     st.getPath.getName match {
       case FlatDataRe() => true
       case "_SUCCESS" => true
+      case n if n == Checkpoint.RecordName || n.startsWith(Checkpoint.RecordName + ".") => true
       case n => st.isFile && n.endsWith(".parquet")
     }
 
@@ -193,8 +200,16 @@ object SinkLayout {
     * step leaves the current resolve untouched; a re-run stages afresh.
     * `arrange` gets the live frame and its data files (listed after the
     * leftover sweep) and returns the frame to write plus a value handed
-    * back with the new version's dir. */
-  private[cdc] def swapVersion[A](spark: SparkSession, root: String)(
+    * back with the new version's dir.
+    *
+    * The new version's commit record is written into the stage, so it
+    * flips with the rows: by default the live record's visible entries are
+    * carried over in one base file (a rewrite that keeps every visible row —
+    * compaction — keeps every entry exact, and a live sink without a
+    * record stays without one); with `recount`, for a rewrite that drops
+    * rows, the entries are recounted from the staged rows with one grouped
+    * aggregate. */
+  private[cdc] def swapVersion[A](spark: SparkSession, root: String, recount: Boolean = false)(
       arrange: (DataFrame, Seq[FileStatus]) => (DataFrame, A)): (A, Path) =
     writerLock(root).synchronized {
       val hfs = fs(spark, root)
@@ -210,6 +225,11 @@ object SinkLayout {
       val (out, a) = arrange(readDir(spark, root, liveDir),
         parquetFiles(hfs, new Path(liveDir)))
       out.write.partitionBy("commit_date").parquet(stage.toString)
+      val record =
+        if (!recount) Checkpoint.recordAt(hfs, root, liveDir)
+        else if (parquetFiles(hfs, stage).isEmpty) Some(Nil)
+        else Some(Checkpoint.scanEntries(spark.read.parquet(stage.toString)))
+      record.foreach(Checkpoint.writeRecord(hfs, stage, _))
       if (cur.isEmpty) recordFlatMigration(hfs, root, next)
       publish(hfs, root, next)
       retire(hfs, root, next)

@@ -10,9 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The batch populate ≙ usp_cdc_populate_changelog (the whole procedure),
   * and the one way rows reach a changelog sink.
   *
-  * One invocation = one micro-batch: read the checkpoint from the sink,
-  * window the feed, build + id-assign + stamp the batch
-  * ([[PopulateChangelog.stampAndAppend]]) and commit it through a journal.
+  * One invocation = one micro-batch: read the checkpoint from the sink's
+  * commit record ([[Checkpoint.committed]]), window the feed, build +
+  * id-assign + stamp the batch ([[PopulateChangelog.stampAndAppend]]) and
+  * commit it through a journal.
   * The reference commits each populate as one SQL Server transaction
   * (usp_cdc_populate_changelog.sql:246-253), so a batch lands whole or not
   * at all; a 1000-executor Spark job appending hundreds of partition files
@@ -24,13 +25,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  2. a MANIFEST of every destination path is finalized — one atomic
   *     rename — before any file moves,
   *  3. staged files are renamed into their `commit_date=` partitions, then
-  *     the writer's marker file (if it has one) is created,
+  *     the batch's commit-record entry (`_commits.<batch>` in the data dir)
+  *     is written, then the writer's marker file (if it has one) is created,
   *  4. the manifest is deleted (the commit point), then the stage dir.
   *
   * [[repair]] makes any crash point recoverable from the journal alone:
   * a stage WITH a manifest may have published a partial batch — every
   * destination listed in it is deleted (returning the sink byte-identical
-  * to the pre-batch state, marker included) and the stage is dropped; a
+  * to the pre-batch state, record entry and marker included) and the
+  * stage is dropped; a
   * stage WITHOUT a manifest either never published a file or fully
   * committed through step 4's first half — the destinations are correct in
   * both cases and only the leftover dir is swept. Every writer — this
@@ -81,18 +84,24 @@ object StagedAppend {
     val cfg = cfg0.copy(
       tableName = cfg0.tableName.trim,
       keyCols = cfg0.keyCols.map(_.trim))
-    // ONE sink snapshot drives both the window HWM and the id offset — they
-    // can never disagree, and the sink is aggregated once per batch.
-    val sink = Checkpoint.sinkState(spark, changelogPath)
-    val window = Checkpoint.computeWindow(feed, sink, toDate, cfg.compatMode)
+    // ONE snapshot of the commit record drives both the window HWM and the
+    // id offset — they can never disagree, and no Spark job reads either.
+    val sink = Checkpoint.committed(spark, changelogPath)
+    val window = Checkpoint.computeWindow(sink, toDate, cfg.compatMode)
     val offset = sink.map(_._2).getOrElse(0L)
     // The builder references the windowed feed from four sub-trees (before/
     // after/delete/insert); caching evaluates the window scan once
     // (SURVEY §7.5.8) instead of four times.
     val windowed = Checkpoint.applyWindow(feed, window).cache()
+    // the feed-minimum check (:225-229) only matters when nothing was
+    // written: a written row proves to >= min(feed). It runs before the
+    // publish, so its error leaves the sink as it was
     val result = Try(stageAndPublish(spark, windowed, cfg, changelogPath, offset,
       clusterByKey = clusterByKey, clusterPartitions = clusterPartitions,
-      publishHook = publishHook, prePublishHook = prePublishHook))
+      publishHook = publishHook, prePublishHook = n => {
+        if (n == 0L) Checkpoint.checkMinLsn(feed, window.toTime)
+        prePublishHook()
+      }))
     windowed.unpersist()
 
     result match {
@@ -115,9 +124,12 @@ object StagedAppend {
 
   /** Stage a prepared batch (ids continue from `offset`) and publish it
     * through the journal; returns the row count. The caller runs [[repair]]
-    * before taking its offset snapshot. `marker`, a sink-root-relative
-    * path, is the batch's last journal destination: it is rolled back with
-    * the rows, so its presence means the whole batch committed. */
+    * before taking its offset snapshot. The batch's commit-record entry
+    * and then `marker`, a sink-root-relative path, are the journal's last
+    * destinations: both roll back with the rows, so the marker's presence
+    * means the whole batch committed. `prePublishHook` gets the staged row
+    * count; when it throws, the stage is dropped (and a sink root this
+    * call created with it) before the error propagates. */
   private[graft] def stageAndPublish(
       spark: SparkSession,
       batch: DataFrame,
@@ -128,33 +140,53 @@ object StagedAppend {
       clusterByKey: Boolean = false,
       clusterPartitions: Option[Int] = None,
       publishHook: PublishHook = _ => (),
-      prePublishHook: () => Unit = () => ()): Long = {
+      prePublishHook: Long => Unit = _ => ()): Long = {
     val fs = SinkLayout.fs(spark, changelogPath)
+    val root = new Path(changelogPath)
+    val fresh = !fs.exists(root)
     // keyed by the offset: a replay after repair stages under the same name,
     // and the stage is re-created from scratch either way
     val stageRoot = new Path(changelogPath, s"$StagePrefix$offset")
     fs.delete(stageRoot, true)
-    val n = PopulateChangelog.stampAndAppend(spark, batch, cfg, stageRoot.toString,
+    val entry = PopulateChangelog.stampAndAppend(spark, batch, cfg, stageRoot.toString,
       offset, clusterByKey, clusterPartitions)
+    val n = entry.map(_.rows).getOrElse(0L)
 
     // test/graded seam: the window between staging and publication —
     // where a concurrent compaction would swap the version pointer
-    prePublishHook()
+    try prePublishHook(n)
+    catch {
+      case e: Throwable =>
+        fs.delete(if (fresh) root else stageRoot, true)
+        throw e
+    }
     // dataDir resolves INSIDE the writer lock: a compaction that
     // publishes data_v<N+1> before we get here is fine (it repacked
     // exactly the already-published rows — the underscore stage is
     // invisible to it — and the publish targets the NEW current dir);
     // one flipping DURING the rename loop is excluded by the lock
     SinkLayout.writerLock(changelogPath).synchronized {
-      publish(fs, stageRoot, new Path(SinkLayout.dataDir(spark, changelogPath)),
-        marker.map(new Path(changelogPath, _)), publishHook)
+      val dataDir = new Path(SinkLayout.dataDir(spark, changelogPath))
+      // an entry joins a record that exists (a batch file named by the
+      // offset plus a unique suffix: a partition backfill may reuse one),
+      // or starts the record of a sink with no data as its base file; a
+      // sink written before the record existed stays without one until its
+      // next populate migrates it with a scan
+      val dir = dataDir.toString
+      val record = entry.flatMap { e =>
+        if (fs.exists(Checkpoint.recordFile(dir)))
+          Some(Checkpoint.batchFile(dir, s"batch_${offset}_${java.util.UUID.randomUUID()}") -> e)
+        else if (SinkLayout.parquetFiles(fs, dataDir).isEmpty) Some(Checkpoint.recordFile(dir) -> e)
+        else None
+      }
+      publish(fs, stageRoot, dataDir, record, marker.map(new Path(changelogPath, _)), publishHook)
     }
     n
   }
 
-  /** Steps 2–4: manifest, renames + marker, commit. */
+  /** Steps 2–4: manifest, renames + record entry + marker, commit. */
   private def publish(fs: FileSystem, stageRoot0: Path, dataDir: Path,
-      marker: Option[Path], hook: PublishHook): Unit = {
+      record: Option[(Path, Checkpoint.Entry)], marker: Option[Path], hook: PublishHook): Unit = {
     // listStatus returns FS-qualified paths (file:/…, hdfs://…); qualify
     // the roots the same way or the relative-path strip silently fails
     val stageRoot = fs.makeQualified(stageRoot0)
@@ -169,7 +201,7 @@ object StagedAppend {
     // finalize the manifest atomically BEFORE the first rename
     val manifest = new Path(stageRoot, ManifestName)
     val tmp = new Path(stageRoot, ManifestName + ".tmp")
-    SinkLayout.writeLines(fs, tmp, (moves.map(_._2) ++ marker).map(_.toString))
+    SinkLayout.writeLines(fs, tmp, (moves.map(_._2) ++ record.map(_._1) ++ marker).map(_.toString))
     fs.rename(tmp, manifest)
 
     moves.zipWithIndex.foreach { case ((src, dst), i) =>
@@ -177,6 +209,7 @@ object StagedAppend {
       require(fs.rename(src, dst), s"publish rename failed: $src -> $dst")
       hook(i + 1)
     }
+    record.foreach { case (p, e) => SinkLayout.writeLines(fs, p, Seq(e.line)) }
     marker.foreach(m => fs.create(m, true).close())
     fs.delete(manifest, false) // the commit point
     fs.delete(stageRoot, true)

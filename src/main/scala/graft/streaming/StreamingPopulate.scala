@@ -16,7 +16,7 @@ import graft.cdc.{CdcTableConfig, Checkpoint, StagedAppend}
   * invocation), the stream's `checkpointLocation` replaces the LSN-window
   * bookkeeping (exactly-once file discovery), and each micro-batch runs the
   * same build→ids→journaled append as the batch path, with the id offset
-  * continuing from the sink snapshot.
+  * continuing from the sink's commit record.
   *
   * At scale this is the preferred ingestion mode: micro-batches bound the
   * id-assignment sort (SURVEY §7.5.4), file discovery is incremental
@@ -109,8 +109,9 @@ object StreamingPopulate {
       Some(dec.decode(java.nio.ByteBuffer.wrap(bytes)).toString)
     } catch { case _: java.nio.charset.CharacterCodingException => None }
 
-  /** One micro-batch: continue ids from the sink's max, then commit via
-    * the populate's journal ([[StagedAppend.stageAndPublish]]).
+  /** One micro-batch: continue ids from the max the sink's commit record
+    * holds ([[Checkpoint.committed]], no Spark job), then commit via the
+    * populate's journal ([[StagedAppend.stageAndPublish]]).
     * Micro-batches within a query run sequentially, so the
     * one-snapshot-per-batch id contract holds like the batch mode.
     *
@@ -119,7 +120,10 @@ object StreamingPopulate {
     * applied (checkpoint, batch) is checked first and committed as the
     * journal's last destination, so it exists exactly when the whole batch
     * does — a torn batch rolls back rows and marker together (the leading
-    * [[StagedAppend.repair]]) and the replay applies it exactly once.
+    * [[StagedAppend.repair]]) and the replay applies it exactly once. The
+    * marker stays a file at the sink root, apart from the record: it must
+    * outlive every version flip, and subject deletion recounts the record
+    * from rows, which carry no batch keys.
     */
   def appendBatch(
       batch: DataFrame,
@@ -134,7 +138,7 @@ object StreamingPopulate {
     val applied = marker.map(new Path(changelogPath, _))
       .exists(p => p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
     if (applied) return 0L // replayed batch: already applied
-    val offset = Checkpoint.sinkState(spark, changelogPath).map(_._2).getOrElse(0L)
+    val offset = Checkpoint.committed(spark, changelogPath).map(_._2).getOrElse(0L)
     postSnapshotHook() // race injection: maintenance lands between snapshot and append
     val cached = batch.cache()
     // the data dir resolves at publish, after the hook — a compaction that

@@ -47,6 +47,22 @@ trait SparkFixture {
       jobs.asScala.toSeq.filter(_._1 == group).map(_._2)
     } finally sc.removeSparkListener(jl)
   }
+
+  /** The call site (the action's stack, innermost frame first) of each
+    * distinct SQL execution `body` runs. */
+  def executionSitesOf(body: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          sites.put(s.executionId.toString, s.details)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try executionsOf(body).distinct.map(id => Option(id).map(sites.get).getOrElse("<no execution>"))
+    finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkFixture {

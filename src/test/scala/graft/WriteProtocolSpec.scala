@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * materialization, and a caller-side crowded check a compaction that
   * some folds skip.
   * Changelog sinks: rows are appended only through the StagedAppend
-  * journal, and full rewrites only through SinkLayout's version swap.
+  * journal, full rewrites only through SinkLayout's version swap, and the
+  * control plane reads the commit record instead of aggregating the sink.
   * Streams: only StateStream decides how a stream is driven to
   * completion, so a per-query hook (a job tag, a progress listener) has
   * one place to attach. Dedup: every MinHash and SimHash route caps its
@@ -103,6 +104,26 @@ class WriteProtocolSpec extends AnyFunSuite {
     val users = mainSourcesWith("stampAndAppend(")
     assert(users == Seq("graft/cdc/PopulateChangelog.scala", "graft/cdc/StagedAppend.scala"),
       s"changelog rows must reach the sink through StagedAppend: $users")
+  }
+
+  test("no whole-sink aggregate on the populate, streaming or query control plane") {
+    // the HWM, id offset and freshness fold from the sink's commit record;
+    // a sink scan would make every batch and report grow with history
+    for (f <- Seq("graft/cdc/StagedAppend.scala", "graft/streaming/StreamingPopulate.scala"))
+      assert(!mainSources(f).contains("SinkLayout.read("), s"$f must not read the sink")
+    assert(!mainSources("graft/cdc/QueryData.scala").contains(".agg("),
+      "the report's freshness comes from the commit record")
+    // the scan the record replaced is only the tests' reference now
+    assert(occurrencesIn("sinkState(") == Map("graft/cdc/Checkpoint.scala" -> 1),
+      s"sinkState must not be called from the program: ${occurrencesIn("sinkState(")}")
+    // the scans left: the migration of a sink without a record (and the
+    // rebuild after a partition backfill), the reader's fallback for such a
+    // sink, and subject deletion's recount of the version it writes
+    assert(defsMatching("""(?<!def )scanSink\(""".r).map(_._2).toSet == Set("rebuild", "freshness"))
+    assert(defsMatching("""(?<!def )rebuild\(""".r).toSet == Set(
+      "graft/cdc/Checkpoint.scala" -> "committed", "graft/cdc/Repair.scala" -> "repairDay"))
+    assert(defsMatching("""(?<!def )scanEntries\(""".r) == Seq(
+      "graft/cdc/Checkpoint.scala" -> "scanSink", "graft/cdc/SinkLayout.scala" -> "swapVersion"))
   }
 
   test("only SinkLayout runs the versioned swap") {

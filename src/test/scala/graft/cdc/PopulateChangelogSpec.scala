@@ -383,5 +383,10 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     val dirs = new java.io.File(SinkLayout.dataDir(spark, path)).list().toSet
     assert(!dirs.contains("commit_date=1995-01-01"), s"expired day carried forward: $dirs")
     assert(dirs.contains("commit_date=1995-01-02") && dirs.contains("commit_date=1995-01-03"))
+    // a cutoff past every day leaves nothing to count, keep or record
+    Retention.expire(spark, path, java.time.LocalDate.parse("1995-01-04"))
+    val none = graft.cdc.Forget.forgetKeys(spark, path, Seq("k"), Seq("b3").toDF("k"))
+    assert(none == graft.cdc.ForgetStats(0L, 0L))
+    assert(Checkpoint.committed(spark, path).isEmpty)
   }
 }

@@ -2,6 +2,8 @@ package graft.cdc
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -85,6 +87,72 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
     assert(Checkpoint.sinkState(spark, p).get == hwmBefore,
       "repair must restore the exact pre-batch HWM and id offset")
     assert(StagedAppend.repair(spark, p) == 0, "repair is idempotent")
+  }
+
+  /** Every file under `p` (hidden ones included), by relative path. */
+  private def files(p: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(p)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+    finally walk.close()
+  }
+
+  test("a first run with to_date before the feed's min LSN raises (:225-229) " +
+      "and leaves no sink root behind") {
+    val p = Files.createTempDirectory("graft_sa_minlsn").resolve("c").toString
+    val e = intercept[CdcValidationException] {
+      StagedAppend.run(spark, feed, cfg, p, Some(ts("1994-12-31 00:00:00")))
+    }
+    assert(e.getMessage ==
+      "The to date: 1994-12-31 00:00:00.0 is less than the minimum lsn date: 1995-01-01 08:00:00.0 available in the cdc data!")
+    assert(!new java.io.File(p).exists, "the failed first run must not create the sink")
+  }
+
+  test("a resumed sink whose feed was truncated past to_date has an empty window, " +
+      "raises the same message and keeps its files byte-identical") {
+    val p = Files.createTempDirectory("graft_sa_trunc").resolve("c").toString
+    StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-02 12:00:00")))
+    val before = files(p)
+    val truncated = feed.where(org.apache.spark.sql.functions.col("commit_time") > ts("1995-01-03 00:00:00"))
+    val e = intercept[CdcValidationException] {
+      StagedAppend.run(spark, truncated, cfg, p, Some(ts("1995-01-02 20:00:00")))
+    }
+    assert(e.getMessage ==
+      "The to date: 1995-01-02 20:00:00.0 is less than the minimum lsn date: 1995-01-03 08:00:00.0 available in the cdc data!")
+    assert(files(p) == before, "the error path must not touch the sink")
+  }
+
+  test("a batch on a non-empty sink reads its checkpoint with no SQL execution") {
+    val p = Files.createTempDirectory("graft_sa_exec").resolve("c").toString
+    StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-02 12:00:00")))
+    var n = 0L
+    val sites = executionSitesOf {
+      n = StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-06 00:00:00"))).rowsInserted
+    }
+    assert(n > 0, "the window must be non-empty")
+    assert(!sites.exists(_.contains("graft.cdc.Checkpoint$")),
+      s"no execution may come from the checkpoint: $sites")
+    // the sink-scan checkpoint ran a sink aggregate (after the sink read's
+    // schema-inference job) and a feed aggregate before the staged write:
+    // 3 SQL executions and 1 job outside SQL; the staged write alone now
+    assert(sites.size <= 1, s"populate SQL executions: $sites")
+  }
+
+  test("QueryData.run runs no SQL execution before the caller's action") {
+    val p = Files.createTempDirectory("graft_sa_qexec").resolve("c").toString
+    StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-06 00:00:00")))
+    val catalog = new CdcCatalog
+    catalog.register(CdcTableEntry(cfg, feedPath = "unused", changelogPath = p))
+    for (compat <- Seq(false, true)) {
+      val executions = executionsOf {
+        QueryData.run(spark, catalog, "orders", ts("1995-01-01 00:00:00"),
+          Some(ts("1995-01-06 00:00:00")), compatMode = compat)
+      }
+      // (the parquet read's schema inference runs one job outside SQL)
+      assert(!executions.exists(_ != null),
+        s"freshness must come from the commit record: $executions")
+    }
   }
 
   test("no-crash staged populate equals the direct append path") {
