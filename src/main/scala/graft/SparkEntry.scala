@@ -1740,7 +1740,7 @@ object SparkEntry {
     // fold → fold over a FRAGMENTED layout, hash-graded: the serving
     // layout deploys fragmented (two interleaved half-writes — the
     // multi-writer / AQE-skew-split shape; the folds themselves never
-    // fragment, dynamic overwrite replaces partitions wholly), era 1
+    // fragment, the swap replaces partitions wholly), era 1
     // folds in place and its rewrite repacks every crowded cell to one
     // file, and era 2 folds on top — the graded search over the
     // compacted-and-folded layout must equal the never-compacted
@@ -1844,8 +1844,8 @@ object SparkEntry {
     }),
 
     // READER ISOLATION for the partitioned serving layouts — the
-    // production hazard the in-place fold documents (dynamic overwrite
-    // DELETES replaced files at commit, and at 100 TB readers ARE
+    // production hazard the in-place fold documents (the swap DELETES
+    // replaced files at commit, and at 100 TB readers ARE
     // long-running): a reader pins generation 1 of the cell layout
     // (parquet file index resolved), then maintenance folds a subject
     // deletion through StateStream.foldIsolatedGen — generation 2 stages
@@ -2163,7 +2163,7 @@ object SparkEntry {
 
     // the CDC delta folded IN PLACE into the cell-PARTITIONED serving
     // layout: the fold rewrites ONLY the cell directories the delta
-    // touches (dynamic partition overwrite; old cells located by
+    // touches (a staged partition swap; old cells located by
     // re-assigning the PRE-delta vectors at the frozen centroids — never
     // an index scan), then the serving read probes the folded state. The
     // production maintenance shape for a 100 TB index: delta-sized work,

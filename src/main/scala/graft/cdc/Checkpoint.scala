@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import java.time.{LocalDate, ZoneId}
 import java.time.format.DateTimeFormatter
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
@@ -23,11 +23,12 @@ import org.apache.spark.sql.functions._
   * 4's persisted offset; Structured Streaming's commit log): small
   * underscore files inside the current data dir — `_commits`, whose
   * presence means the record exists, plus one `_commits.<batch>` file per
-  * batch committed since — holding one [[Entry]] per line. The writer's
-  * HWM and id offset and the report's freshness fold over it with no Spark
-  * job. Its invariant: the state folded from the record equals the state
-  * a scan of the visible sink derives, after any sequence of writes and
-  * maintenance —
+  * batch committed since a writer last folded them into it (every batch
+  * does, so a reader opens at most two) — holding one [[Entry]] per line.
+  * The writer's HWM and id offset and the report's freshness fold over it
+  * with no Spark job. Its invariant: the state folded from the record
+  * equals the state a scan of the visible sink derives, after any sequence
+  * of writes and maintenance —
   *  - a populate batch commits its entry as a journal destination after
   *    its rows ([[StagedAppend.stageAndPublish]]), so it rolls back with
   *    them;
@@ -181,18 +182,54 @@ object Checkpoint {
       entries
     }
 
+  /** Failure-injection hook of the record fold ([[committed]]): invoked
+    * with 1 once the merged base is written to its tmp file, 2 once it is
+    * renamed into place, then 2 + k after the k-th batch file is deleted.
+    * Tests throw from it to simulate a crash inside the fold. */
+  private[cdc] type FoldHook = Int => Unit
+
+  /** Fold the record's batch files in `dataDir` into its base file: every
+    * line of both goes to a tmp file, which is renamed over the base, then
+    * the batch files are deleted. A crash before the rename leaves the
+    * record as it was; one after it leaves entries listed twice, which
+    * fold by max and are only tested for `rows > 0`, so the state is the
+    * same. The caller holds the writer lock. */
+  private def foldRecord(fs: FileSystem, dataDir: String, hook: FoldHook): Unit = {
+    val batches = batchFiles(fs, dataDir)
+    if (batches.nonEmpty) {
+      val base = recordFile(dataDir)
+      val tmp = new Path(dataDir, "_tmp" + RecordName)
+      SinkLayout.writeLines(fs, tmp,
+        (base +: batches).flatMap(SinkLayout.readLines(fs, _)).distinct)
+      hook(1)
+      FileContext.getFileContext(fs.getUri, fs.getConf)
+        .rename(tmp, base, Options.Rename.OVERWRITE)
+      hook(2)
+      batches.zipWithIndex.foreach { case (b, k) => fs.delete(b, false); hook(3 + k) }
+    }
+  }
+
   /** The writer's ONE sink snapshot — HWM and max assigned id, None for an
-    * empty sink — from the commit record, with no Spark job. A sink with
-    * data but no record is scanned once and migrated here, so its next
-    * batch reads the record. The caller runs [[StagedAppend.repair]] first
-    * and reuses the snapshot for both the window and the id offset, so the
-    * two never disagree. */
-  private[graft] def committed(spark: SparkSession, changelogPath: String): Option[(Timestamp, Long)] =
+    * empty sink — from the commit record, with no Spark job. Under the
+    * writer lock, the record's batch files are first folded into its base
+    * file ([[foldRecord]]), so after any committed batch the record is at
+    * most two files. A sink with data but no record is scanned once and
+    * migrated here, so its next batch reads the record. The caller runs
+    * [[StagedAppend.repair]] first and reuses the snapshot for both the
+    * window and the id offset, so the two never disagree. */
+  private[graft] def committed(spark: SparkSession, changelogPath: String,
+      foldHook: FoldHook = _ => ()): Option[(Timestamp, Long)] = {
+    SinkLayout.writerLock(changelogPath).synchronized {
+      val fs = SinkLayout.fs(spark, changelogPath)
+      val dataDir = SinkLayout.dataDir(spark, changelogPath)
+      if (fs.exists(recordFile(dataDir))) foldRecord(fs, dataDir, foldHook)
+    }
     record(spark, changelogPath) match {
       case Some(entries) => stateOf(entries)
       case None if !hasData(spark, changelogPath) => None
       case None => stateOf(rebuild(spark, changelogPath))
     }
+  }
 
   /** The report's freshness string from the record; a sink without one
     * falls back to a scan and is left as it is (readers never write). */

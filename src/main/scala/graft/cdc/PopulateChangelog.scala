@@ -2,6 +2,8 @@ package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, LongType, StringType, StructField, StructType,
+  TimestampType}
 
 final case class PopulateResult(rowsInserted: Long, message: String)
 
@@ -20,6 +22,22 @@ final case class PopulateResult(rowsInserted: Long, message: String)
 object PopulateChangelog {
 
   val AuditCols: Seq[String] = Seq("created_dt", "created_by")
+
+  /** The changelog sink's columns as a parquet read of the sink yields
+    * them (all nullable, the `commit_date` partition last): the builder's
+    * output with one string column per key, the id and the audit stamp.
+    * [[stampAndAppend]] writes exactly these, so a reader declares them
+    * instead of inferring them from a footer with a Spark job. */
+  private[cdc] def sinkSchema(cfg: CdcTableConfig): StructType = {
+    val cols: Seq[(String, DataType)] =
+      Seq("commit_time" -> TimestampType, "table_name" -> StringType) ++
+        cfg.keyCols.map(_.trim -> StringType) ++
+        ChangelogBuilder.ValueCols.map(_ -> StringType) ++
+        Seq("changelog_id" -> LongType, "created_dt" -> TimestampType,
+          "created_by" -> StringType, "modified_dt" -> TimestampType,
+          "modified_by" -> StringType, "commit_date" -> DateType)
+    StructType(cols.map { case (n, t) => StructField(n, t) })
+  }
 
   /** Above this ESTIMATED batch size the single-window id path
     * ([[ChangelogBuilder.withIds]], one task sorts the whole batch) is
@@ -69,6 +87,7 @@ object PopulateChangelog {
       .withColumn("modified_dt", lit(null).cast("timestamp"))
       .withColumn("modified_by", lit(null).cast("string"))
       .withColumn("commit_date", to_date(col("commit_time")))
+      .select(sinkSchema(cfg).fieldNames.toSeq.map(col): _*)
       .observe(obs, max("commit_date").as("day"), count(lit(1)).as("rows"),
         max("commit_time").as("hwm"), max("changelog_id").as("id"),
         max("created_dt").as("created"))

@@ -32,8 +32,11 @@ object QueryData {
     val entry = catalog.resolve(table) // :33-38, throws unknownTable
 
     // resolve through the version pointer — safe against a concurrent
-    // compaction swapping the data copy under this query
-    val log = SinkLayout.read(spark, entry.changelogPath)
+    // compaction swapping the data copy under this query — under the
+    // sink's declared columns, so no footer-inference job runs before the
+    // caller's action
+    val log = SinkLayout.read(spark, entry.changelogPath,
+      Some(PopulateChangelog.sinkSchema(entry.config)))
 
     // freshness watermark (:40-46), folded from the sink's commit record
     // with no Spark job. Reference quirk: lexicographic MAX over mm/dd/yyyy

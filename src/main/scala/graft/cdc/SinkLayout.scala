@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned sink layout — the reader-safe indirection under compaction.
   *
@@ -175,12 +176,15 @@ object SinkLayout {
     * active `_retention.cutoff` marker becomes a `commit_date >= cutoff`
     * PARTITION filter, so expired days vanish from the logical table the
     * moment the marker advances — their directories (still on disk for one
-    * grace cycle, [[Retention]]) are partition-pruned, never listed into. */
-  def read(spark: SparkSession, root: String): DataFrame =
-    readDir(spark, root, dataDir(spark, root))
+    * grace cycle, [[Retention]]) are partition-pruned, never listed into.
+    * A declared `schema` ([[PopulateChangelog.sinkSchema]]) replaces the
+    * footer inference, which runs a Spark job. */
+  def read(spark: SparkSession, root: String, schema: Option[StructType] = None): DataFrame =
+    readDir(spark, root, dataDir(spark, root), schema)
 
-  private def readDir(spark: SparkSession, root: String, dir: String): DataFrame = {
-    val df = spark.read.parquet(dir)
+  private def readDir(spark: SparkSession, root: String, dir: String,
+      schema: Option[StructType] = None): DataFrame = {
+    val df = schema.fold(spark.read)(spark.read.schema).parquet(dir)
     Retention.activeCutoff(fs(spark, root), root) match {
       case Some(c) if df.columns.contains("commit_date") =>
         df.where(col("commit_date") >= lit(c.toString))
@@ -249,16 +253,17 @@ object SinkLayout {
       else Nil
     }
 
-  /** The sink's small control files (journal and migration manifests, the
-    * retention cutoff): UTF-8 lines, written whole with overwrite. */
-  private[cdc] def writeLines(fs: FileSystem, p: Path, lines: Seq[String]): Unit = {
+  /** The small control files (journal and migration manifests, the
+    * retention cutoff, the commit record, a serving rewrite's manifest):
+    * UTF-8 lines, written whole with overwrite. */
+  private[graft] def writeLines(fs: FileSystem, p: Path, lines: Seq[String]): Unit = {
     val out = fs.create(p, true)
     try out.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
   /** The non-empty lines of a file written by [[writeLines]]. */
-  private[cdc] def readLines(fs: FileSystem, p: Path): Seq[String] = {
+  private[graft] def readLines(fs: FileSystem, p: Path): Seq[String] = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
     finally in.close()

@@ -1489,16 +1489,14 @@ object Dedup {
       .distinct().localCheckpoint(true)
     // membership registry fold (per-doc pure); the two artifacts stay
     // SEQUENTIAL here: value liveness derives from the post-fold
-    // registry replacement
-    val replacementM = simhashDocs.fold(spark, docsPath,
+    // registry
+    val landed = simhashDocs.fold(spark, docsPath,
       simhashMemberRows(oldFps, buckets), simhashMemberRows(newFps, buckets))
-    // value-table fold: liveness from the POST-fold registry — derived
-    // from the in-memory materialized replacement (what the write above
-    // landed for exactly the affected buckets), not a read-back of
-    // docsPath: on a strongly-consistent filesystem the two are
-    // identical, but an eventually-consistent store could serve
-    // pre-fold bytes to a read-after-write and resurrect dead values
-    val alive = replacementM
+    // value-table fold: liveness from the POST-fold registry — exactly the
+    // rows the fold above swapped in (the buckets that landed rows; an
+    // affected bucket it emptied holds no member), read while this fold
+    // is the layout's one writer
+    val alive = simhashDocs.readIn(spark, docsPath, landed)
       .join(broadcast(candVals), Seq("simhash"), "left_semi")
       .select("simhash").distinct()
     // the value table is id-keyed by value: every candidate value's rows

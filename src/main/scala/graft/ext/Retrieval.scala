@@ -291,14 +291,6 @@ object Retrieval {
       oldDocs: DataFrame,
       newDocs: DataFrame,
       buckets: Int = ServingBuckets): Unit = {
-    def postings(docs: DataFrame): DataFrame = bm25Postings(docs)
-      .withColumn("bucket", termBucket(col("term"), buckets))
-    // df RE-DERIVED within the affected buckets (bucket-local by the
-    // term→bucket purity above); the new rows' df is a placeholder
-    def foldPostings(): Unit = bm25PostingsLayout.fold(spark, postingsPath,
-      postings(oldDocs), postings(newDocs).withColumn("df", lit(null).cast("long")),
-      _.withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("term"))))
     // the REGISTRY fold: the length table (one row per live doc, dl = 0
     // when no posting reaches it) is a dbucket-partitioned layout and the
     // delta ids' buckets are the only ones rewritten — deletes drop the
@@ -320,7 +312,32 @@ object Retrieval {
     // the two artifacts touch disjoint paths — independent job chains,
     // overlapped (guide §2.6); stats stays ordered AFTER the registry
     // write inside its chain
-    ServingLayout.inParallel(() => foldPostings(), () => foldDocLen())
+    ServingLayout.inParallel(
+      () => bm25PostingsFold(spark, postingsPath, oldDocs, newDocs, buckets),
+      () => foldDocLen())
+  }
+
+  /** The postings layout's fold: the delta docs' old and new postings by
+    * [[termBucket]], with df RE-DERIVED within the affected buckets
+    * (bucket-local by the term→bucket purity; the new rows' df is a
+    * placeholder). `post` runs over the re-derived slice and `swapHook`
+    * is [[ServingLayout.rewrite]]'s — the crash seams of the fold's
+    * fault-injection property. */
+  private[graft] def bm25PostingsFold(
+      spark: org.apache.spark.sql.SparkSession,
+      postingsPath: String,
+      oldDocs: DataFrame,
+      newDocs: DataFrame,
+      buckets: Int,
+      post: DataFrame => DataFrame = identity,
+      swapHook: ServingLayout.SwapHook = _ => ()): Unit = {
+    def postings(docs: DataFrame): DataFrame = bm25Postings(docs)
+      .withColumn("bucket", termBucket(col("term"), buckets))
+    bm25PostingsLayout.fold(spark, postingsPath,
+      postings(oldDocs), postings(newDocs).withColumn("df", lit(null).cast("long")),
+      slice => post(slice.withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("term")))),
+      swapHook)
   }
 
   /** E2-ret' — n-gram OVERLAP retrieval, the second lexical view for

@@ -1,6 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructType}
 
@@ -23,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   *
   *   - '''Crowded partitions ride along.''' Every partition of the
   *     layout holding more than one data file joins the value set. The
-  *     folds never fragment a partition themselves (see the overwrite
+  *     folds never fragment a partition themselves (see the swap
   *     below); a multi-task partition write does — an AQE skew split of
   *     a hot cell, parallel range-sliced builders appending into one
   *     layout, any external append-mode writer. Every replace rule
@@ -39,29 +40,32 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   *     and never depends on footer inference (a fold that empties every
   *     partition leaves a footer-less directory that the next read must
   *     see as a readable empty layout).
-  *   - '''Barrier.''' The replacement is materialized with an eager
-  *     `localCheckpoint` before the write: its bytes leave the path being
-  *     overwritten, which is also what clears Spark's overwrite-a-read-path
-  *     guard.
-  *   - '''Dynamic overwrite.''' Only partitions present in the replacement
-  *     are replaced; `repartition(partCol)` lands each value in one task,
-  *     so a rewritten partition holds one file and untouched partitions
-  *     keep their bytes on disk.
-  *   - '''Observed sweep.''' Dynamic overwrite cannot delete a partition:
-  *     a value the replacement empties writes zero files and its stale
-  *     directory would survive. The barrier is a [[materialize]], so its
-  *     job observes the replacement's partition values, and the affected
-  *     values it lacks are deleted as directories — no extra job (the
-  *     control plane below).
-  *   - '''Replay determinism.''' A crash mid-write can leave a subset of
-  *     partitions replaced, but the rewrite is a pure function of (stored
-  *     partitions, delta): re-running it rewrites the same partitions with
-  *     the same content, so replay repairs a torn fold.
-  *   - '''Reader isolation.''' Dynamic overwrite deletes the replaced
-  *     files at commit, so a reader whose file index resolved before the
-  *     rewrite can hit missing files mid-scan, and a multi-artifact fold
-  *     writes its artifacts one after another (or concurrently), so a
-  *     reader between them sees a torn set. A raw-path read
+  *   - '''Staged swap.''' The replacement, `repartition(partCol)` so
+  *     each value lands in one task and one file, is written in one job
+  *     into an underscore stage inside the layout (`_stage_<uuid>`,
+  *     which no listing sees, so the write never overwrites a path it
+  *     reads). The stage's `partCol=` dirs say which values landed; a
+  *     manifest of (value, landed) for every value of the set is then
+  *     finalized with one rename, and each value is swapped in: the live
+  *     directory is deleted and the staged one renamed into its place,
+  *     or only deleted when nothing landed — so a value the replacement
+  *     empties is swept by the same loop. Deleting the manifest is the
+  *     commit point; the stage goes after it. Untouched partitions keep
+  *     their bytes on disk.
+  *   - '''Roll-forward repair.''' Every rewrite first finishes what a
+  *     crashed predecessor left under its path: a stage holding a manifest
+  *     is swapped in by the same loop (a value whose staged dir is gone
+  *     was already swapped and is skipped, so the loop is idempotent), and
+  *     a stage without one is deleted — it never touched a live
+  *     partition. So a torn fold is repaired by the layout's next writer
+  *     and lands, after a replay of its delta, on the untorn state; a
+  *     crash before the manifest leaves every live file as it was.
+  *     Readers never repair (one writer per layout, as everywhere).
+  *   - '''Reader isolation.''' The swap deletes the replaced files, so a
+  *     reader whose file index resolved before the rewrite can hit
+  *     missing files mid-scan, and a multi-artifact fold writes its
+  *     artifacts one after another (or concurrently), so a reader
+  *     between them sees a torn set. A raw-path read
   *     ([[Artifact.read]]) is therefore for single-writer, fold-quiesced
   *     loops only; anything concurrent with maintenance pins a generation
   *     and takes folds through
@@ -72,11 +76,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * '''Control plane.''' A serving probe prunes its stored scans by the
   * LITERAL partition values its batch (or candidate set) touches, and
   * gates its broadcast dims on that frame's row count; a fold prunes its
-  * read, and sweeps, by the literal partitions its delta rows live in.
+  * read, and swaps, by the literal partitions its delta rows live in.
   * All of them come from [[materialize]]: the eager `localCheckpoint`
   * the probe or fold needs anyway observes the count and every key's
   * distinct values on the same job, so no stage pays a round trip per
-  * scalar, and it is the only way a serving path learns its partitions.
+  * scalar, and it is the only way a serving path learns which partitions
+  * to read (a rewrite learns what landed from its stage's listing).
   * The value sets are bounded by the layout's partition-value
   * cardinality — buckets and cells are model or layout CONSTANTS, never
   * data-sized — which is what makes observing them a control-plane cost
@@ -130,55 +135,102 @@ object ServingLayout {
       * object doc). [[rewrite]] replaces those partitions by
       * [[replaceIds]] with the checkpoint's ids as the removal set and its
       * fresh slice as the new rows; `post` then runs over the whole
-      * replaced slice (BM25's df window). Returns the materialized
-      * replacement. */
+      * replaced slice (BM25's df window), and `swapHook` is [[rewrite]]'s.
+      * Returns the partition values that landed rows. */
     private[graft] def fold(spark: SparkSession, path: String,
         old: DataFrame, fresh: DataFrame,
-        post: DataFrame => DataFrame = identity): DataFrame = {
+        post: DataFrame => DataFrame = identity,
+        swapHook: SwapHook = _ => ()): Seq[Long] = {
       val (delta, _, Seq(values)) = materialize(
         fresh.select(schema.fieldNames.map(col) :+ lit(true).as("__fresh"): _*)
           .unionByName(old.select(col(idCol), col(partCol), lit(false).as("__fresh")),
             allowMissingColumns = true),
         col(partCol))
-      rewrite(spark, path, this, values)(stored => post(replaceIds(
+      rewrite(spark, path, this, values, swapHook)(stored => post(replaceIds(
         delta.select(col(idCol).as("__did")),
         delta.where(col("__fresh")).drop("__fresh"))(stored)))
     }
   }
 
+  /** Failure-injection hook of [[rewrite]]'s swap: invoked with the
+    * number of partitions swapped so far — 0 once the manifest is final,
+    * then after each swap. Tests throw from it to simulate a crash
+    * mid-swap. */
+  private[graft] type SwapHook = Int => Unit
+
+  private val StagePrefix = "_stage_"
+  private val ManifestName = "_MANIFEST"
+
   /** Rewrite the partitions `values` of `artifact` at `path` in place,
     * together with every crowded partition (object doc): read them,
     * replace their content with `replace` applied to that stored slice,
-    * and write the result back under the protocol above. `replace` must
+    * and swap the result in through a stage under the protocol above,
+    * after repairing any stage a crashed rewrite left. `replace` must
     * yield rows of those partitions only. Values the replacement leaves
-    * empty are swept; a partition neither in `values` nor crowded is
-    * never read or touched. When the set is empty nothing runs and the
-    * replacement is empty. Returns the materialized replacement, so a
-    * caller can derive further state from exactly what landed without
-    * reading the path back. */
+    * empty are deleted; a partition neither in `values` nor crowded is
+    * never read or touched. When the set is empty nothing runs. One SQL
+    * execution, the staged write. Returns the values that landed rows,
+    * so a caller can derive further state from exactly what landed
+    * ([[Artifact.readIn]] of them). */
   private[graft] def rewrite(spark: SparkSession, path: String,
-      artifact: Artifact, values: Seq[Long])(
-      replace: DataFrame => DataFrame): DataFrame = {
+      artifact: Artifact, values: Seq[Long], swapHook: SwapHook = _ => ())(
+      replace: DataFrame => DataFrame): Seq[Long] = {
     val partCol = artifact.partCol
-    val vs = (values ++ crowdedValues(spark, path, artifact)).distinct.sorted
-    if (vs.isEmpty)
-      return spark.createDataFrame(java.util.Collections.emptyList[Row](), artifact.schema)
-    val (replacement, _, Seq(landed)) =
-      materialize(replace(artifact.readIn(spark, path, vs)), col(partCol))
-    replacement.repartition(col(partCol))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol)
-      .parquet(path)
-    val emptied = vs.filterNot(landed.toSet)
-    if (emptied.nonEmpty) {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      emptied.foreach(v =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"$partCol=$v"), true))
-    }
-    replacement
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    repair(fs, root, partCol)
+    val vs = (values ++ crowdedValues(fs, root, partCol)).distinct.sorted
+    if (vs.isEmpty) return Nil
+    val stage = new Path(root, s"$StagePrefix${java.util.UUID.randomUUID()}")
+    replace(artifact.readIn(spark, path, vs)).repartition(col(partCol))
+      .write.partitionBy(partCol).parquet(stage.toString)
+    val landed = partitionDirs(fs, stage, partCol).keySet
+    require(landed.subsetOf(vs.toSet), s"rewrite: the replacement of $path " +
+      s"holds partitions ${(landed -- vs).toSeq.sorted.mkString(", ")} outside " +
+      "the rewritten set — `replace` must yield rows of the read partitions only")
+    val tmp = new Path(stage, ManifestName + ".tmp")
+    graft.cdc.SinkLayout.writeLines(fs, tmp, vs.map(v => s"$v\t${landed(v)}"))
+    require(fs.rename(tmp, new Path(stage, ManifestName)), s"manifest rename $tmp failed")
+    swap(fs, root, stage, partCol, swapHook)
+    vs.filter(landed)
   }
+
+  /** Swap the finalized stage `stage` into the layout at `root` (object
+    * doc), then delete its manifest — the commit point — and the stage.
+    * Idempotent: a landed value whose staged dir is gone was swapped. */
+  private def swap(fs: FileSystem, root: Path, stage: Path, partCol: String,
+      hook: SwapHook): Unit = {
+    val manifest = new Path(stage, ManifestName)
+    val entries = graft.cdc.SinkLayout.readLines(fs, manifest).map { line =>
+      val Array(v, landed) = line.split('\t')
+      (s"$partCol=$v", landed.toBoolean)
+    }
+    hook(0)
+    entries.zipWithIndex.foreach { case ((dir, landed), i) =>
+      val live = new Path(root, dir)
+      val staged = new Path(stage, dir)
+      if (!landed) fs.delete(live, true)
+      else if (fs.exists(staged)) {
+        fs.delete(live, true)
+        require(fs.rename(staged, live), s"swap rename $staged -> $live failed")
+      }
+      hook(i + 1)
+    }
+    fs.delete(manifest, false)
+    fs.delete(stage, true)
+  }
+
+  /** Finish every stage a crashed rewrite left under `root`: one with a
+    * manifest is swapped in, one without is deleted. */
+  private def repair(fs: FileSystem, root: Path, partCol: String): Unit =
+    if (fs.exists(root))
+      fs.listStatus(root).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith(StagePrefix))
+        .foreach { st =>
+          if (fs.exists(new Path(st.getPath, ManifestName)))
+            swap(fs, root, st.getPath, partCol, _ => ())
+          else fs.delete(st.getPath, true)
+        }
 
   /** Partition-local small-file repack: a [[rewrite]] with no values of
     * its own, so only the crowded partitions are rewritten, unchanged —
@@ -188,23 +240,28 @@ object ServingLayout {
   def compact(spark: SparkSession, path: String, artifact: Artifact): Unit =
     rewrite(spark, path, artifact, Nil)(identity)
 
-  /** The partition values of `path` holding more than one data file. */
-  private def crowdedValues(spark: SparkSession, path: String,
-      artifact: Artifact): Seq[Long] = {
-    val partCol = artifact.partCol
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    fs.listStatus(root).toSeq
+  /** The `partCol=` dirs directly under `dir`, by partition value. */
+  private def partitionDirs(fs: FileSystem, dir: Path, partCol: String): Map[Long, Path] =
+    if (!fs.exists(dir)) Map.empty
+    else fs.listStatus(dir).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
-      .filter { st =>
-        fs.listStatus(st.getPath).count { f =>
-          val n = f.getPath.getName
-          f.isFile && !n.startsWith("_") && !n.startsWith(".")
-        } > 1
+      .map { st =>
+        val v = st.getPath.getName.stripPrefix(s"$partCol=")
+        v.toLongOption.getOrElse(throw new IllegalArgumentException(
+          s"rewrite: partition dir ${st.getPath} is not integral — serving-layout " +
+            "partition keys are derived, never nullable, and integral by contract")) ->
+          st.getPath
       }
-      .map(_.getPath.getName.stripPrefix(s"$partCol=").toLong)
-  }
+      .toMap
+
+  /** The partition values under `root` holding more than one data file. */
+  private def crowdedValues(fs: FileSystem, root: Path, partCol: String): Seq[Long] =
+    partitionDirs(fs, root, partCol).toSeq.collect {
+      case (v, dir) if fs.listStatus(dir).count { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      } > 1 => v
+    }
 
   /** Run independent driver-side job chains CONCURRENTLY (guide §2.6:
     * actions are sequential only because the driver calls them

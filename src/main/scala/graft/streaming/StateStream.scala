@@ -215,7 +215,7 @@ object StateStream {
 
   /** SNAPSHOT-ISOLATED fold over a generational serving layout — the
     * deployment regime for LONG-RUNNING concurrent readers, where an
-    * in-place fold's dynamic partition overwrite would delete files
+    * in-place fold's partition swap would delete files
     * under a pinned parquet file index
     * ([[graft.ext.ServingLayout]]'s documented reader-isolation
     * trade): the next generation stages as a byte COPY

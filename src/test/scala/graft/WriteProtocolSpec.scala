@@ -6,11 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Static guards on the one-write-protocol rules. Serving layouts: a
-  * dynamic partition overwrite outside [[graft.ext.ServingLayout]] would be
-  * a new copy of the read → replace → barrier → overwrite → sweep skeleton,
-  * free to drift from it (a footer-inferred read, a missing sweep), a
-  * hand-built removal set a new copy of the id-keyed replace rule, a
+/** Static guards on the one-write-protocol rules. Serving layouts: every
+  * fold commits through [[graft.ext.ServingLayout]]'s staged swap, so a
+  * dynamic partition overwrite anywhere would be a second commit path
+  * without its manifest and roll-forward repair (Spark's overwrite deletes
+  * a live partition before it renames the replacement in), a hand-built
+  * removal set a new copy of the id-keyed replace rule, a
   * collected affected set a second control plane beside the fold's own
   * materialization, and a caller-side crowded check a compaction that
   * some folds skip.
@@ -55,10 +56,10 @@ class WriteProtocolSpec extends AnyFunSuite {
   private def mainSourcesWith(token: String): Seq[String] =
     occurrencesIn(token).keys.toSeq.sorted
 
-  test("only ServingLayout sets partitionOverwriteMode in src/main/scala") {
+  test("no source in src/main/scala sets partitionOverwriteMode") {
     val users = mainSourcesWith("partitionOverwriteMode")
-    assert(users == Seq("graft/ext/ServingLayout.scala"),
-      s"dynamic partition overwrite must go through ServingLayout.rewrite: $users")
+    assert(users.isEmpty,
+      s"a partition rewrite must commit through ServingLayout.rewrite's swap: $users")
   }
 
   test("only ServingLayout builds the old ∪ new id removal set") {

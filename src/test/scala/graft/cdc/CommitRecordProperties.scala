@@ -47,6 +47,8 @@ object CommitRecordProperties extends Properties("commitrecord") with SparkFixtu
     * the deletion that lowers the scanned HWM. */
   final case class ForgetStep(key: Option[String]) extends Step
   final case class Expire(day: LocalDate) extends Step
+  /** A writer's record fold crashing at its `at`-th point ([[Checkpoint.FoldHook]]). */
+  final case class FoldCrash(at: Int) extends Step
 
   private val genTo: Gen[Timestamp] = Gen.oneOf(
     Seq(Timestamp.valueOf("1994-12-31 00:00:00")) ++ (1 to 4).flatMap { d =>
@@ -60,7 +62,8 @@ object CommitRecordProperties extends Properties("commitrecord") with SparkFixtu
     1 -> Gen.oneOf(days).map(DropRepair),
     1 -> Gen.const(CompactStep),
     2 -> Gen.option(Gen.oneOf((1 to 4).flatMap(d => Seq(s"a$d", s"b$d")))).map(ForgetStep),
-    1 -> Gen.oneOf(days).map(Expire))
+    1 -> Gen.oneOf(days).map(Expire),
+    2 -> Gen.choose(1, 3).map(FoldCrash))
 
   private val genSteps: Gen[List[Step]] = Gen.choose(2, 5).flatMap(Gen.listOfN(_, genStep))
 
@@ -123,6 +126,20 @@ object CommitRecordProperties extends Properties("commitrecord") with SparkFixtu
         Forget.forgetKeys(spark, sink, Seq("k"), key.map(Seq(_)).getOrElse(newest).toDF("k"))
       }
     case Expire(day) => Retention.expire(spark, sink, day)
+    case FoldCrash(at) =>
+      Try(Checkpoint.committed(spark, sink,
+        foldHook = i => if (i == at) throw new RuntimeException("injected")))
+  }
+
+  /** The record files a reader of the sink opens. */
+  private def recordFiles(sink: String): Int = {
+    val fs = SinkLayout.fs(spark, sink)
+    val dir = new Path(SinkLayout.dataDir(spark, sink))
+    if (!fs.exists(dir)) 0
+    else fs.listStatus(dir).count { st =>
+      val n = st.getPath.getName
+      n == Checkpoint.RecordName || n.startsWith(Checkpoint.RecordName + ".")
+    }
   }
 
   /** A sink written before the record existed, whose rows carry
@@ -146,7 +163,13 @@ object CommitRecordProperties extends Properties("commitrecord") with SparkFixtu
       val start = agrees(sink, seeded) :| "seed"
       steps.zipWithIndex.foldLeft(start) { case (ok, (step, i)) =>
         apply(sink, step)
-        ok && (agrees(sink, seeded) :| s"after step $i: $step")
+        val files = recordFiles(sink)
+        val bounded = step match {
+          case _: Populate | _: CrashReplay =>
+            (files <= 2) :| s"a reader opens $files record files after step $i"
+          case _ => Prop.passed
+        }
+        ok && (agrees(sink, seeded) :| s"after step $i: $step") && bounded
       } :| s"steps $steps, seeded $seeded"
     }
 

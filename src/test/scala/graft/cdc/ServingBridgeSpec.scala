@@ -237,5 +237,9 @@ class ServingBridgeSpec extends AnyFunSuite with SparkFixture {
     // so a re-delivered window lands on the identical state
     ServingBridge.episodesServingFold(s, path, w2, buckets = B)
     assert(rows() == expected, "a replayed fold must land on the identical state")
+    val stages = Files.list(Paths.get(path)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filter(_.startsWith("_stage"))
+    assert(stages.isEmpty, s"a successful fold leaves no stage: ${stages.toSeq}")
   }
 }

@@ -149,9 +149,37 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
         QueryData.run(spark, catalog, "orders", ts("1995-01-01 00:00:00"),
           Some(ts("1995-01-06 00:00:00")), compatMode = compat)
       }
-      // (the parquet read's schema inference runs one job outside SQL)
-      assert(!executions.exists(_ != null),
-        s"freshness must come from the commit record: $executions")
+      // the sink is read under its declared columns, so not even a
+      // schema-inference job runs outside SQL
+      assert(executions.isEmpty,
+        s"freshness must come from the commit record and the schema from " +
+          s"the stamp: $executions")
+    }
+  }
+
+  test("the declared sink schema equals a parquet read of default, compat, " +
+      "composite-key and clustered sinks") {
+    val s = spark
+    import s.implicits._
+    // mask ordinals: k1=0, k2=1, v=2
+    val composite = Seq(
+      (1L, 0L, 2, 7L, ts("1995-01-01 08:00:00"), "a", "1", "x"),
+      (2L, 0L, 3, 4L, ts("1995-01-02 08:00:00"), "a", "1", "x"),
+      (2L, 0L, 4, 4L, ts("1995-01-02 08:00:00"), "a", "1", "y"),
+      (3L, 0L, 1, 7L, ts("1995-01-03 08:00:00"), "b", "2", "z"))
+      .toDF("start_lsn", "seqval", "operation", "update_mask", "commit_time", "k1", "k2", "v")
+    val sinks = Seq(
+      ("default", feed, cfg, false),
+      ("compat", feed, cfg.copy(compatMode = true), false),
+      ("composite-key", composite, CdcTableConfig("pairs", Seq("k1", "k2")), false),
+      ("clustered", feed, cfg, true))
+    for ((name, f, c, clustered) <- sinks) {
+      val p = Files.createTempDirectory("graft_sa_schema").resolve("c").toString
+      StagedAppend.run(spark, f, c, p, Some(ts("1995-01-06 00:00:00")),
+        clusterByKey = clustered, clusterPartitions = if (clustered) Some(2) else None)
+      assert(PopulateChangelog.sinkSchema(c) == spark.read.parquet(p).schema,
+        s"$name: declared ${PopulateChangelog.sinkSchema(c)} vs read " +
+          spark.read.parquet(p).schema)
     }
   }
 

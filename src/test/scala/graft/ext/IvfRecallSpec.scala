@@ -187,7 +187,7 @@ class IvfRecallSpec extends AnyFunSuite with SparkFixture {
     // the unaffected cell's files are untouched on disk — same names, same mtimes
     assert(cellFiles(1L) == cell1Before,
       "cell 1 was not in the delta's footprint; its bytes must not be rewritten")
-    // dynamic overwrite can't delete a partition: the fold must SWEEP cell 2
+    // the emptied cell 2 is deleted by the fold's swap, not left stale
     assert(cellFiles(2L).isEmpty, "the emptied cell's stale directory must be swept")
     // replay (a torn fold is repaired by re-running — determinism contract)
     Similarity.ivfServingFold(s, cellsDir, oldV, newV, cents)

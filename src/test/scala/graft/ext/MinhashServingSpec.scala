@@ -372,7 +372,7 @@ class MinhashServingSpec extends AnyFunSuite with graft.SparkFixture {
       s"probe SQL executions: ${executions.distinct}")
   }
 
-  test("minhashServingFold runs at most 8 SQL executions") {
+  test("minhashServingFold runs at most 6 SQL executions") {
     val s = spark
     import s.implicits._
     val corpus = (1L to 40L).map(i =>
@@ -388,8 +388,8 @@ class MinhashServingSpec extends AnyFunSuite with graft.SparkFixture {
     }
     // one signing checkpoint per side, then per artifact the fold's delta
     // materialization (which observes its partitions) and the rewrite's
-    // barrier and write
-    assert(executions.forall(_ != null) && executions.distinct.length <= 8,
+    // staged write
+    assert(executions.forall(_ != null) && executions.distinct.length <= 6,
       s"fold SQL executions: ${executions.distinct}")
   }
 

@@ -269,7 +269,7 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
       "insert after emptying: (n, avgdl) must equal scratch")
   }
 
-  test("bm25ServingFold runs at most 7 SQL executions") {
+  test("bm25ServingFold runs at most 5 SQL executions") {
     val s = spark
     import s.implicits._
     val corpus = (1L to 40L).map(i =>
@@ -287,8 +287,8 @@ class RetrievalSpec extends AnyFunSuite with SparkFixture {
         oldDocs, newDocs)
     }
     // per artifact the fold's delta materialization (which observes its
-    // partitions) and the rewrite's barrier and write, then the stats write
-    assert(executions.forall(_ != null) && executions.distinct.length <= 7,
+    // partitions) and the rewrite's staged write, then the stats write
+    assert(executions.forall(_ != null) && executions.distinct.length <= 5,
       s"fold SQL executions: ${executions.distinct}")
   }
 

@@ -21,6 +21,12 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
       case _ => Nil
     }
 
+  /** The `_stage*` entries directly under the layout at `path`. */
+  private def stages(path: String): Seq[String] =
+    java.nio.file.Files.list(java.nio.file.Paths.get(path)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filter(_.startsWith("_stage"))
+
   test("materialize observes the count and every key's distinct values on " +
       "its one checkpoint execution; an array key is flattened") {
     val s = spark
@@ -180,8 +186,8 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
     val untouched = Seq(0, 2).map(b => b -> files(b)).toMap
     val expected = content().filter(_._2 != 3L)
 
-    // every barrier plan's scans, and every job's SQL execution, while a
-    // rewrite runs under its own job group
+    // every plan's scans, and every job's SQL execution, while a rewrite
+    // runs under its own job group
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[
       org.apache.spark.sql.execution.SparkPlan]()
     val qel = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -227,12 +233,11 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
       val rwJobs = jobs.asScala.toSeq.filter(_._1 == "rw1")
       assert(rwJobs.nonEmpty && rwJobs.forall(_._2 != null),
         s"every job of a rewrite belongs to a SQL execution: $rwJobs")
-      assert(rwJobs.map(_._2).distinct.length == 2,
-        "a rewrite runs exactly two executions — the barrier (which also " +
-          s"observes the sweep set) and the write: $rwJobs")
+      assert(rwJobs.map(_._2).distinct.length == 1,
+        s"a rewrite runs exactly one execution, the staged write: $rwJobs")
       val scans = plans.asScala.toSeq.flatMap(scansOf)
         .filter(_.relation.location.rootPaths.exists(_.toString.endsWith("/t")))
-      assert(scans.nonEmpty, "the barrier's stored-slice scan must be seen")
+      assert(scans.nonEmpty, "the staged write's stored-slice scan must be seen")
       scans.foreach { f =>
         val read = f.metrics.get("numPartitions").map(_.value)
         assert(read.contains(2L),
@@ -242,6 +247,7 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
       s.listenerManager.unregister(qel)
       s.sparkContext.removeSparkListener(jl)
     }
+    assert(stages(path).isEmpty, s"a successful rewrite leaves no stage: ${stages(path)}")
     assert(files(3).isEmpty, "the partition the replacement emptied must be swept")
     assert(files(1).nonEmpty)
     assert(untouched.forall { case (b, fs) => files(b) == fs },
@@ -250,9 +256,9 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
     // replay: the same rewrite over the rewritten layout lands on the same state
     rewriteOnce("rw2")
     assert(content() == expected, "a replayed rewrite must land on identical content")
-    assert(files(3).isEmpty)
-    // an empty value set (a no-op delta) reads nothing, observes an empty
-    // set, and leaves every partition as it was
+    assert(files(3).isEmpty && stages(path).isEmpty)
+    // an empty value set (a no-op delta) reads nothing and leaves every
+    // partition as it was
     val before = (0 to 3).map(files)
     ServingLayout.rewrite(s, path, layout, Nil)(identity)
     assert((0 to 3).map(files) == before && content() == expected)
@@ -294,8 +300,9 @@ class ServingLayoutSpec extends AnyFunSuite with graft.SparkFixture {
     assert(untouched.forall { case (b, fs) => files(b) == fs },
       "uncrowded partitions outside the value set must keep their file names and mtimes")
     assert(executions.nonEmpty && executions.forall(_ != null) &&
-      executions.distinct.length == 2,
-      s"the repack rides the rewrite's two executions: $executions")
+      executions.distinct.length == 1,
+      s"the repack rides the rewrite's one execution: $executions")
+    assert(stages(path).isEmpty, s"a successful repack leaves no stage: ${stages(path)}")
 
     val before = (0 to 3).map(files)
     val none = executionsOf(ServingLayout.rewrite(s, path, layout, Nil)(identity))

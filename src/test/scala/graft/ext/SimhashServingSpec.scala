@@ -164,7 +164,7 @@ class SimhashServingSpec extends AnyFunSuite with graft.SparkFixture {
       s"probe SQL executions: ${executions.distinct}")
   }
 
-  test("simhashServingFold runs at most 9 SQL executions") {
+  test("simhashServingFold runs at most 7 SQL executions") {
     val s = spark
     import s.implicits._
     val corpus = (1L to 40L).map(i =>
@@ -180,8 +180,8 @@ class SimhashServingSpec extends AnyFunSuite with graft.SparkFixture {
     }
     // one fingerprint checkpoint per side, the candidate values, then per
     // artifact the fold's delta materialization (which observes its
-    // partitions) and the rewrite's barrier and write
-    assert(executions.forall(_ != null) && executions.distinct.length <= 9,
+    // partitions) and the rewrite's staged write
+    assert(executions.forall(_ != null) && executions.distinct.length <= 7,
       s"fold SQL executions: ${executions.distinct}")
   }
 
