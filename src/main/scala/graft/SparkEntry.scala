@@ -166,6 +166,14 @@ object SparkEntry {
       ()
     }
 
+  /** The sink's current version (0 for a sink never written) — the race
+    * rows check that their maintenance published exactly one. */
+  private def sinkVersion(s: SparkSession, sink: String): Int = {
+    val root = new org.apache.hadoop.fs.Path(sink)
+    graft.Versions.current(root.getFileSystem(s.sparkContext.hadoopConfiguration), root)
+      .fold(0)(_.n)
+  }
+
   /** The STREAMED twin of [[preRaceMidSink]]: window-1 (≤ ResumeMid) feed
     * files, their quiet streamed changelog, and the quiesced checkpoint —
     * the shared pre-race state of the streaming compaction/retention/
@@ -1265,7 +1273,7 @@ object SparkEntry {
 
     // §2.11 × S6'' — the STREAMING populate racing sink compaction: the
     // first invocation drains window 1 quietly; window 2's micro-batch
-    // snapshots its HWM/offset, then Compact flips data_v0 → data_v1
+    // snapshots its HWM/offset, then Compact publishes the next version
     // INSIDE the snapshot→append window (the postSnapshotHook), and the
     // append must land in the repacked copy with the snapshot still
     // valid — hash-matches the same QUIESCED oracle as the quiet stream
@@ -1290,10 +1298,11 @@ object SparkEntry {
         feedDir)
       val sink = base.resolve("orders_changelog").toString
       f.where(col("commit_time") > lit(mid)).write.mode("append").parquet(feedDir)
+      val v0 = sinkVersion(s, sink)
       graft.streaming.StreamingPopulate.runAvailableNow(
         s, feedDir, f.schema, ordersCfg, sink, base.resolve("ckpt").toString,
         postSnapshotHook = _ => { graft.cdc.Compact.compactSink(s, sink); () })
-      require(graft.cdc.SinkLayout.currentVersion(s, sink).contains(1),
+      require(sinkVersion(s, sink) == v0 + 1,
         "the concurrent compaction must actually have flipped the version")
       graft.cdc.SinkLayout.read(s, sink)
         .select(changelogCols.map(col): _*).orderBy("changelog_id")
@@ -1369,11 +1378,12 @@ object SparkEntry {
       f.where(col("commit_time") > lit(mid)).write.mode("append").parquet(feedDir)
       val keys = orders(s, dir).select(col("o_orderkey"))
         .where(col("o_orderkey") % 97 === 0)
+      val v0 = sinkVersion(s, sink)
       graft.streaming.StreamingPopulate.runAvailableNow(
         s, feedDir, f.schema, ordersCfg, sink, base.resolve("ckpt").toString,
         postSnapshotHook = _ =>
           { graft.cdc.Forget.forgetKeys(s, sink, Seq("o_orderkey"), keys); () })
-      require(graft.cdc.SinkLayout.currentVersion(s, sink).exists(_ >= 1),
+      require(sinkVersion(s, sink) > v0,
         "the concurrent forget must actually have flipped the version")
       graft.cdc.SinkLayout.read(s, sink)
         .select(changelogCols.map(col): _*).orderBy("changelog_id")
@@ -1415,8 +1425,8 @@ object SparkEntry {
     }),
 
     // S6' under CONCURRENT maintenance: batch 2 snapshots its HWM and
-    // stages against version v0, then a compaction swaps the sink to
-    // data_v1 in the stage→publish window — the race a production sink
+    // stages against version N, then a compaction swaps the sink to
+    // version N+1 in the stage→publish window — the race a production sink
     // actually faces. The publish must resolve the CURRENT version under
     // the writer lock and land in the repacked copy; the result must
     // hash-match the same QUIESCED oracle as the plain resume (the
@@ -1429,9 +1439,10 @@ object SparkEntry {
       TempDirs.copyInto(preRaceMidSink(s, dir), base)
       val sink = base.resolve("orders_changelog").toString
       val to = Some(java.sql.Timestamp.valueOf("1996-01-01 00:00:00"))
+      val v0 = sinkVersion(s, sink)
       graft.cdc.StagedAppend.run(s, f, ordersCfg, sink, to,
         prePublishHook = () => { graft.cdc.Compact.compactSink(s, sink); () })
-      require(graft.cdc.SinkLayout.currentVersion(s, sink).contains(1),
+      require(sinkVersion(s, sink) == v0 + 1,
         "the concurrent compaction must actually have flipped the version")
       graft.cdc.SinkLayout.read(s, sink)
         .select(changelogCols.map(col): _*).orderBy("changelog_id")
@@ -1485,11 +1496,12 @@ object SparkEntry {
       val sink = base.resolve("orders_changelog").toString
       val keys = orders(s, dir).select(col("o_orderkey"))
         .where(col("o_orderkey") % 97 === 0)
+      val v0 = sinkVersion(s, sink)
       graft.cdc.StagedAppend.run(s, f, ordersCfg, sink,
         Some(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")),
         prePublishHook = () =>
           { graft.cdc.Forget.forgetKeys(s, sink, Seq("o_orderkey"), keys); () })
-      require(graft.cdc.SinkLayout.currentVersion(s, sink).exists(_ >= 1),
+      require(sinkVersion(s, sink) > v0,
         "the concurrent forget must actually have flipped the version")
       graft.cdc.SinkLayout.read(s, sink)
         .select(changelogCols.map(col): _*).orderBy("changelog_id")
@@ -5758,13 +5770,13 @@ object SparkEntry {
 
     // E3j''''' — the READER-GRACE contract of the generational sketch
     // publish (cdc_retention_grace_read's contract applied to DERIVED
-    // state): a consumer that RESOLVED the current generation (parquet
-    // file index pinned to gen_v1) before a maintenance fold flips the
+    // state): a consumer that RESOLVED the current version (parquet
+    // file index pinned to version 1) before a maintenance fold flips the
     // pointer keeps its full pre-fold view when it executes AFTER the
-    // flip — the superseded generation survives exactly one publish
-    // cycle (StateStream.publishGen retires `< cur`, not `<= cur`), so
+    // flip — the superseded version survives exactly one publish
+    // cycle (Versions.publish retires `< cur`, not `<= cur`), so
     // the in-flight scan reads intact bytes while new readers resolve
-    // gen_v2. Oracle = the scratch sketch of the PRE-fold slice: visibly
+    // version 2. Oracle = the scratch sketch of the PRE-fold slice: visibly
     // different from the post-fold state the flipped pointer serves
     "ext_cm_grace_read" -> ((s, dir) => {
       val base = TempDirs.create("graft_cmgrace")
@@ -5772,7 +5784,7 @@ object SparkEntry {
       val stateDir = base.resolve("cm_state").toString
       graft.streaming.StateStream.cmFoldBatch(
         c.where(col("doc_id") % 5 =!= 0), 0L, stateDir, "text")
-      // reader resolves gen_v1 HERE — before the next fold publishes
+      // reader resolves version 1 HERE — before the next fold publishes
       val inFlight = graft.streaming.StateStream.readState(s, stateDir)
       graft.streaming.StateStream.cmFoldBatch(
         c.where(col("doc_id") % 5 === 0), 1L, stateDir, "text")

@@ -37,9 +37,10 @@ import org.apache.spark.sql.functions._
   *    ([[SinkLayout.swapVersion]]), so they flip with the version;
   *  - retention writes only its cutoff, and the fold skips entries whose
   *    day is before it (see [[Entry]] for why that stays exact);
-  *  - a sink written before the record existed is scanned once and
-  *    migrated by its next writer ([[committed]]); readers fall back to
-  *    the scan and never write.
+  *  - a version without a record (a sink written before the record
+  *    existed, or a [[rebuild]] that crashed after deleting the old base
+  *    file) is scanned once and migrated by its next writer
+  *    ([[committed]]); readers fall back to the scan and never write.
   */
 object Checkpoint {
 

@@ -23,11 +23,11 @@ final case class CompactStats(filesBefore: Long, filesAfter: Long, bytesBefore: 
   * time-range reads to single files.
   *
   * The swap is READER-SAFE via [[SinkLayout]]'s version pointer: the
-  * repacked copy lands in a fresh `data_v<N+1>` dir and becomes current by
-  * one atomic marker creation — the live directory is never renamed or
-  * deleted out from under a planned query, and the superseded version is
-  * retained for one further compaction cycle as the in-flight readers'
-  * grace copy. No maintenance window needed.
+  * repacked copy is published as the sink's next version by one atomic
+  * rename of its stage ([[graft.Versions]]) — the live directory is never
+  * renamed or deleted out from under a planned query, and the superseded
+  * version is retained for one further compaction cycle as the in-flight
+  * readers' grace copy. No maintenance window needed.
   */
 object Compact {
 

@@ -11,7 +11,7 @@ final case class ForgetStats(rowsBefore: Long, rowsDropped: Long)
   * published through the same versioned staged swap as compaction —
   * reader-safe (in-flight readers keep the superseded version for one
   * grace cycle), crash-safe (nothing is visible until the single
-  * stage→data rename), and idempotent (a re-run stages afresh).
+  * stage→version rename), and idempotent (a re-run stages afresh).
   *
   * This is the row-level complement of [[Retention]]'s time-based
   * partition sweeps: compliance deletion is keyed on subject IDENTITY and

@@ -36,8 +36,8 @@ import org.apache.spark.sql.SparkSession
   * [[Compact]] drops already-hidden days during the repack — safe because
   * the superseded version IS the grace copy).
   *
-  * Resolution goes through [[SinkLayout.dataDir]], so retention works the
-  * same on flat and compacted (versioned) sinks. Run it from the sink's
+  * Resolution goes through [[SinkLayout.dataDir]], so retention sweeps
+  * the current version whichever one it is. Run it from the sink's
   * single writer like populate/compaction. The sink's commit record needs
   * no write here: [[Checkpoint]]'s fold skips the entries before the
   * cutoff.

@@ -7,6 +7,8 @@ import scala.util.{Failure, Success, Try}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Versions
+
 /** The batch populate ≙ usp_cdc_populate_changelog (the whole procedure),
   * and the one way rows reach a changelog sink.
   *
@@ -20,8 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * has no such transaction, so the append is journaled instead:
   *
   *  1. the batch is written to an UNDERSCORE staging dir inside the sink
-  *     root (`_stage_batch_<offset>` — invisible to Spark listings, like
-  *     compaction's `_stage_v<N>`),
+  *     root (`_stage_batch_<offset>` — invisible to Spark listings),
   *  2. a MANIFEST of every destination path is finalized — one atomic
   *     rename — before any file moves,
   *  3. staged files are renamed into their `commit_date=` partitions, then
@@ -160,23 +161,30 @@ object StagedAppend {
         fs.delete(if (fresh) root else stageRoot, true)
         throw e
     }
-    // dataDir resolves INSIDE the writer lock: a compaction that
-    // publishes data_v<N+1> before we get here is fine (it repacked
+    // the version resolves INSIDE the writer lock: a compaction that
+    // publishes the next version before we get here is fine (it repacked
     // exactly the already-published rows — the underscore stage is
     // invisible to it — and the publish targets the NEW current dir);
     // one flipping DURING the rename loop is excluded by the lock
     SinkLayout.writerLock(changelogPath).synchronized {
-      val dataDir = new Path(SinkLayout.dataDir(spark, changelogPath))
-      // an entry joins a record that exists (a batch file named by the
-      // offset plus a unique suffix: a partition backfill may reuse one),
-      // or starts the record of a sink with no data as its base file; a
-      // sink written before the record existed stays without one until its
-      // next populate migrates it with a scan
+      // a sink is born versioned: its first write publishes an empty
+      // version 1 with an empty commit record before any file moves in
+      val dataDir = Versions.current(fs, root).getOrElse(
+        Versions.publish(fs, root, None)(Checkpoint.writeRecord(fs, _, Nil))._2).dir
+      // the first entry into a version without rows is its record's base
+      // file (replacing the empty one a sink is born with); later entries
+      // join as batch files named by the offset plus a unique suffix (a
+      // partition backfill may reuse one); a version with rows but no
+      // record stays without one until its next populate migrates it with
+      // a scan
       val dir = dataDir.toString
+      val base = Checkpoint.recordFile(dir)
       val record = entry.flatMap { e =>
-        if (fs.exists(Checkpoint.recordFile(dir)))
+        val hasRecord = fs.exists(base)
+        if ((!hasRecord || fs.getFileStatus(base).getLen == 0) &&
+            SinkLayout.parquetFiles(fs, dataDir).isEmpty) Some(base -> e)
+        else if (hasRecord)
           Some(Checkpoint.batchFile(dir, s"batch_${offset}_${java.util.UUID.randomUUID()}") -> e)
-        else if (SinkLayout.parquetFiles(fs, dataDir).isEmpty) Some(Checkpoint.recordFile(dir) -> e)
         else None
       }
       publish(fs, stageRoot, dataDir, record, marker.map(new Path(changelogPath, _)), publishHook)
@@ -202,7 +210,7 @@ object StagedAppend {
     val manifest = new Path(stageRoot, ManifestName)
     val tmp = new Path(stageRoot, ManifestName + ".tmp")
     SinkLayout.writeLines(fs, tmp, (moves.map(_._2) ++ record.map(_._1) ++ marker).map(_.toString))
-    fs.rename(tmp, manifest)
+    require(fs.rename(tmp, manifest), s"journal manifest rename $tmp failed")
 
     moves.zipWithIndex.foreach { case ((src, dst), i) =>
       fs.mkdirs(dst.getParent)
@@ -226,11 +234,9 @@ object StagedAppend {
     stages.foreach { st =>
       val manifest = new Path(st.getPath, ManifestName)
       // a partial publish may have landed any prefix of these — delete
-      // every destination that exists, restoring the pre-batch sink. The
-      // destination is a line's last tab-separated field (older manifests
-      // also name the staged source).
+      // every destination that exists, restoring the pre-batch sink
       if (fs.exists(manifest))
-        SinkLayout.readLines(fs, manifest).map(line => new Path(line.split('\t').last))
+        SinkLayout.readLines(fs, manifest).map(new Path(_))
           .foreach(dst => if (fs.exists(dst)) fs.delete(dst, false))
       // no manifest: either nothing was published or the batch fully
       // committed — the destinations are correct either way

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.Versions
 import graft.cdc.StateMaintain
 
 /** The incremental current-state fold ([[graft.cdc.StateMaintain]]) driven
@@ -47,19 +48,17 @@ import graft.cdc.StateMaintain
   * The one stream outside them is [[EventStream.eventWindowCountsStreamed]],
   * a complete-mode memory sink kept for grading only.
   *
-  * PERSISTED sketch state (HLL registers, count-min cells) publishes
-  * through GENERATIONS: each fold writes `<stateDir>/.stage_v<N+1>`
-  * (dot-prefixed — invisible to listings), stamps a `_PUBLISHED` marker
-  * INSIDE the stage, renames it to `gen_v<N+1>`, and only then retires
-  * generations at least two flips old — the superseded `gen_v<N>` gets
-  * one publish cycle of grace so an in-flight reader that resolved it
-  * before the flip finishes on intact bytes (the sink retention's
-  * reader-grace contract, applied to derived state). A reader resolves
-  * the highest generation carrying `_PUBLISHED`, so a crash at ANY
-  * point — mid-write, mid-rename, or mid-retire — leaves either the old
-  * or the new generation readable; there is no delete-then-rename window
-  * where the state vanishes and a restarted fold would silently rebuild
-  * from one batch.
+  * PERSISTED sketch state (HLL registers, count-min cells) and the
+  * generational serving layouts publish through [[graft.Versions]], the
+  * protocol changelog sinks share: each fold stages the next version,
+  * stamps it, renames it in and only then retires versions two flips old,
+  * so the superseded one gets one publish cycle of grace for in-flight
+  * readers (the sink retention's reader-grace contract, applied to
+  * derived state). A reader resolves the newest stamped version, so a
+  * crash at ANY point — mid-write, mid-rename, or mid-retire — leaves
+  * either the old or the new version readable; there is no
+  * delete-then-rename window where the state vanishes and a restarted
+  * fold would silently rebuild from one batch.
   */
 object StateStream {
 
@@ -135,81 +134,37 @@ object StateStream {
     plan.sparkSession.read.schema(plan.schema).parquet(result)
   }
 
-  // ——— generational publish for persisted sketch state ———
+  // ——— versioned publish for persisted state ———
 
-  /** Published generations under a state root, ascending; a generation
-    * counts only once its `_PUBLISHED` marker (stamped in staging, so it
-    * RIDES the rename) is visible. */
-  private def publishedGens(fs: FileSystem, root: Path): Seq[(Int, Path)] =
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen_v"))
-      .flatMap { st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("gen_v").toInt).toOption
-          .filter(_ => fs.exists(new Path(st.getPath, "_PUBLISHED")))
-          .map(_ -> st.getPath)
-      }
-      .sortBy(_._1)
+  private def fsOf(spark: SparkSession, stateDir: String): FileSystem =
+    new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def latestGen(fs: FileSystem, root: Path): Option[(Int, Path)] =
-    publishedGens(fs, root).lastOption
+  private def published(spark: SparkSession, stateDir: String): Option[Versions.Version] =
+    Versions.current(fsOf(spark, stateDir), new Path(stateDir))
 
-  /** Write-stamp-rename-retire. `write` fills the staging dir (parquet
-    * first, then any `_`-prefixed markers); the `_PUBLISHED` stamp and the
-    * atomic rename make the generation visible in one step. Retirement is
-    * GRACED like the sink's two-phase retention ([[graft.cdc.Retention]]):
-    * the immediately superseded generation (`gen_v<cur>`) survives one
-    * publish cycle, so a reader that resolved it BEFORE this flip (parquet
-    * file index already built) finishes its scan on intact bytes; only
-    * generations two or more flips old are deleted. New readers always
-    * resolve the max published generation, so the graced directory is
-    * invisible to them. */
-  private def publishGen(fs: FileSystem, root: Path, cur: Int)(
-      write: Path => Unit): Path = {
-    val stage = new Path(root, s".stage_v${cur + 1}")
-    fs.delete(stage, true) // a torn prior attempt at this generation
-    write(stage)
-    fs.create(new Path(stage, "_PUBLISHED"), true).close()
-    val gen = new Path(root, s"gen_v${cur + 1}")
-    require(fs.rename(stage, gen), s"state publish rename failed: $stage")
-    publishedGens(fs, root).filter(_._1 < cur).foreach(g => fs.delete(g._2, true))
-    gen
-  }
+  /** Resolve the current published sketch state. */
+  def readState(spark: SparkSession, stateDir: String): DataFrame =
+    spark.read.parquet(statePath(spark, stateDir))
 
-  /** Resolve the current published sketch state (latest generation). */
-  def readState(spark: SparkSession, stateDir: String): DataFrame = {
-    val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, gen) = latestGen(fs, root)
-      .getOrElse(sys.error(s"no published state generation under $stateDir"))
-    spark.read.parquet(gen.toString)
-  }
-
-  /** Directory of the current published generation — the path a
-    * maintenance fold mutates IN PLACE within a generation (the
+  /** Directory of the current published version — the path a
+    * maintenance fold mutates IN PLACE within a version (the
     * partitioned serving layouts), while [[publishState]] replaces the
-    * layout wholesale across generations. */
-  def statePath(spark: SparkSession, stateDir: String): String = {
-    val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestGen(fs, root)
-      .getOrElse(sys.error(s"no published state generation under $stateDir"))
-      ._2.toString
-  }
+    * layout wholesale across versions. */
+  def statePath(spark: SparkSession, stateDir: String): String =
+    published(spark, stateDir)
+      .getOrElse(sys.error(s"no published state version under $stateDir")).dir.toString
 
-  /** Publish the next generation of a persisted layout: `write` fills
+  /** Publish the next version of a persisted layout: `write` fills
     * the staging dir (a flat state table OR a partitioned serving
-    * layout — the reader is a plain parquet load either way), then the
-    * stamp+rename+grace-retire of [[publishGen]] flips visibility. The
+    * layout — the reader is a plain parquet load either way), then
+    * [[graft.Versions.publish]] stamps, flips and grace-retires. The
     * two maintenance regimes compose: DELTAS fold in place within the
-    * current generation ([[statePath]]); a REFRESH/retrain replaces the
+    * current version ([[statePath]]); a REFRESH/retrain replaces the
     * layout wholesale through this flip, with the same crash-safety and
     * one-cycle reader grace the sketch states carry. */
   def publishState(spark: SparkSession, stateDir: String)(
       write: Path => Unit): Unit = {
-    val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    publishGen(fs, root, latestGen(fs, root).map(_._1).getOrElse(0))(write)
+    Versions.publish(fsOf(spark, stateDir), new Path(stateDir), published(spark, stateDir))(write)
     ()
   }
 
@@ -227,20 +182,21 @@ object StateStream {
     * folded generation. The price is a layout copy per fold — the
     * in-place regime within one generation stays the cheap default for
     * single-writer deployments with fold-aware readers. A crash before
-    * the rename leaves only an invisible `.stage` dir; replay re-stages
+    * the rename leaves only an invisible stage dir; replay re-stages
     * from the same (current generation, delta), so the flip is
     * exactly-once-visible. */
   def foldIsolatedGen(spark: SparkSession, stateDir: String)(
       fold: String => Unit): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(stateDir).getFileSystem(conf)
-    val cur = new Path(statePath(spark, stateDir))
-    publishState(spark, stateDir) { stage =>
-      // stage does not exist here (publishGen cleared it), so the copy
-      // lands the current generation's CONTENT at the stage path itself
-      org.apache.hadoop.fs.FileUtil.copy(fs, cur, fs, stage, false, conf)
+    val fs = fsOf(spark, stateDir)
+    val cur = published(spark, stateDir)
+      .getOrElse(sys.error(s"no published state version under $stateDir"))
+    Versions.publish(fs, new Path(stateDir), Some(cur)) { stage =>
+      // stage does not exist here (publish cleared it), so the copy
+      // lands the current version's CONTENT at the stage path itself
+      org.apache.hadoop.fs.FileUtil.copy(fs, cur.dir, fs, stage, false, fs.getConf)
       fold(stage.toString)
     }
+    ()
   }
 
   /** CONTINUOUSLY-MAINTAINED sketch state — [[graft.ext.Similarity
@@ -267,24 +223,22 @@ object StateStream {
       prep: DataFrame => DataFrame): DataFrame = {
     val schema = spark.read.parquet(corpusDir).schema
     val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, stateDir)
     foldFiles(spark, corpusDir, schema, checkpointLocation) { (batch, _) =>
       val obs = prep(batch)
-      val cur = latestGen(fs, root)
+      val cur = Versions.current(fs, root)
       val next = cur match {
-        case Some((_, gen)) => graft.ext.Similarity.hllApplyBatch(
-          batch.sparkSession.read.parquet(gen.toString), obs, keyCol, valueCol)
+        case Some(v) => graft.ext.Similarity.hllApplyBatch(
+          batch.sparkSession.read.parquet(v.dir.toString), obs, keyCol, valueCol)
         case None => graft.ext.Similarity.hllState(obs, keyCol, valueCol)
       }
-      publishGen(fs, root, cur.map(_._1).getOrElse(0)) { stage =>
-        next.write.mode("overwrite").parquet(stage.toString)
-      }
+      Versions.publish(fs, root, cur)(stage => next.write.mode("overwrite").parquet(stage.toString))
     }
-    // an empty corpus dir delivers ZERO micro-batches — no generation was
+    // an empty corpus dir delivers ZERO micro-batches — no version was
     // ever published, and the contract is "state of what streamed past",
     // so return the empty register table (correct schema, zero rows)
     // instead of readState's hard error
-    if (latestGen(fs, root).isEmpty)
+    if (published(spark, stateDir).isEmpty)
       graft.ext.Similarity.hllState(
         prep(spark.read.schema(schema).parquet(corpusDir).limit(0)), keyCol, valueCol)
     else readState(spark, stateDir)
@@ -309,10 +263,8 @@ object StateStream {
     foldFiles(spark, corpusDir, schema, checkpointLocation) { (batch, batchId) =>
       cmFoldBatch(batch, batchId, stateDir, textCol)
     }
-    val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // zero micro-batches → zero generations: empty cell table, not an error
-    if (latestGen(fs, root).isEmpty)
+    // zero micro-batches → zero versions: empty cell table, not an error
+    if (published(spark, stateDir).isEmpty)
       graft.ext.TextOps.cmState(
         spark.read.schema(schema).parquet(corpusDir).limit(0), textCol)
     else readState(spark, stateDir)
@@ -380,13 +332,12 @@ object StateStream {
     * new generation carrying every prior marker plus `marker`. */
   private def cmMutate(spark: SparkSession, stateDir: String, marker: String)(
       next: Option[DataFrame] => DataFrame): Unit = {
-    val root = new Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = latestGen(fs, root)
-    val priorMarkers = cur.map(g => appliedMarkers(fs, g._2)).getOrElse(Nil)
+    val fs = fsOf(spark, stateDir)
+    val cur = published(spark, stateDir)
+    val priorMarkers = cur.map(v => appliedMarkers(fs, v.dir)).getOrElse(Nil)
     if (priorMarkers.contains(marker)) return // replayed: skip whole
-    val out = next(cur.map(g => spark.read.parquet(g._2.toString)))
-    publishGen(fs, root, cur.map(_._1).getOrElse(0)) { stage =>
+    val out = next(cur.map(v => spark.read.parquet(v.dir.toString)))
+    Versions.publish(fs, new Path(stateDir), cur) { stage =>
       out.write.mode("overwrite").parquet(stage.toString)
       val stageApplied = new Path(stage, "_applied")
       fs.mkdirs(stageApplied)

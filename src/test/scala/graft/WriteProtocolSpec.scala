@@ -18,6 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Changelog sinks: rows are appended only through the StagedAppend
   * journal, full rewrites only through SinkLayout's version swap, and the
   * control plane reads the commit record instead of aggregating the sink.
+  * Versions: sinks and persisted streaming state publish through one
+  * module, graft.Versions, which alone names, stamps and stages them.
   * Streams: only StateStream decides how a stream is driven to
   * completion, so a per-query hook (a job tag, a progress listener) has
   * one place to attach. Dedup: every MinHash and SimHash route caps its
@@ -128,9 +130,31 @@ class WriteProtocolSpec extends AnyFunSuite {
   }
 
   test("only SinkLayout runs the versioned swap") {
-    val users = mainSourcesWith("recordFlatMigration(")
-    assert(users == Seq("graft/cdc/SinkLayout.scala"),
-      s"full-sink rewrites must go through SinkLayout.swapVersion: $users")
+    val swaps = defsMatching("""(?<!def )swapVersion\(""".r)
+    assert(swaps == Seq("graft/cdc/Compact.scala" -> "compactSink", "graft/cdc/Forget.scala" -> "forgetKeys"),
+      s"full-sink rewrites must go through SinkLayout.swapVersion: $swaps")
+    // a sink version is published by the swap or by a sink's first write;
+    // persisted streaming state publishes through the same module
+    val publishers = defsMatching("""Versions\.publish\(""".r)
+    assert(publishers == Seq(
+      "graft/cdc/SinkLayout.scala" -> "swapVersion",
+      "graft/cdc/StagedAppend.scala" -> "stageAndPublish",
+      "graft/streaming/StateStream.scala" -> "publishState",
+      "graft/streaming/StateStream.scala" -> "foldIsolatedGen",
+      "graft/streaming/StateStream.scala" -> "sketchMaintainAvailableNow",
+      "graft/streaming/StateStream.scala" -> "cmMutate"),
+      s"a version must be published through Versions.publish: $publishers")
+  }
+
+  test("one module names, stamps and stages versions") {
+    // the version-dir name, the stamp and the stage prefix: a second
+    // place spelling one would be a second version protocol
+    for (token <- Seq("data_v", "_PUBLISHED", "_stage_v"))
+      assert(mainSourcesWith(token) == Seq("graft/Versions.scala"),
+        s"$token must occur only in graft.Versions: ${mainSourcesWith(token)}")
+    // the flat layout and its migration manifest are gone
+    for (token <- Seq("_flat_" + "v", "isFlat" + "Data"))
+      assert(mainSourcesWith(token).isEmpty, s"$token is gone: ${mainSourcesWith(token)}")
   }
 
   test("bounded streams drain in one place") {

@@ -142,17 +142,19 @@ object CommitRecordProperties extends Properties("commitrecord") with SparkFixtu
     }
   }
 
-  /** A sink written before the record existed, whose rows carry
-    * `created_dt`s on both sides of a year boundary: a lexicographic MAX
-    * over `MM/dd/yyyy` picks 12/31 over the later 01/02. */
+  /** A sink whose version holds rows but no record (as one written before
+    * the record existed), whose rows carry `created_dt`s on both sides of
+    * a year boundary: a lexicographic MAX over `MM/dd/yyyy` picks 12/31
+    * over the later 01/02. */
   private def legacySeed(sink: String): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_cr_seed").resolve("log").toString
     StagedAppend.run(spark, feed, cfg, tmp, Some(Timestamp.valueOf("1995-01-02 12:00:00")))
-    SinkLayout.read(spark, tmp)
-      .withColumn("created_dt", when(col("commit_date") === lit("1995-01-01"),
-        lit(Timestamp.valueOf("1995-12-31 10:00:00")))
-        .otherwise(lit(Timestamp.valueOf("1996-01-02 10:00:00"))))
-      .write.partitionBy("commit_date").parquet(sink)
+    graft.Versions.publish(SinkLayout.fs(spark, sink), new Path(sink), None)(stage =>
+      SinkLayout.read(spark, tmp)
+        .withColumn("created_dt", when(col("commit_date") === lit("1995-01-01"),
+          lit(Timestamp.valueOf("1995-12-31 10:00:00")))
+          .otherwise(lit(Timestamp.valueOf("1996-01-02 10:00:00"))))
+        .write.partitionBy("commit_date").parquet(stage.toString))
   }
 
   property("the record's HWM, max id, emptiness and freshness equal a scan's " +

@@ -2,10 +2,11 @@ package graft.cdc
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkFixture
+import graft.{SparkFixture, Versions}
 
 /** End-to-end orchestration: the checkpoint-resume contract
   * (usp_cdc_populate_changelog.sql:200-211) driven for real — initial
@@ -32,14 +33,14 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     val r1 = StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 23:00:00")))
     assert(r1.rowsInserted == 2, "insert sentinel + one update pair")
     assert(r1.message == "2 orders changes were inserted to the orders_changelog.")
-    val after1 = spark.read.parquet(path)
+    val after1 = SinkLayout.read(spark, path)
     assert(after1.count() == 2)
     assert(after1.agg(max("changelog_id")).head().getLong(0) == 2L)
 
     // batch 2: resume — only day-2 changes, ids continue from the sink
     val r2 = StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
     assert(r2.rowsInserted == 2, "delete sentinel + one update pair")
-    val after2 = spark.read.parquet(path)
+    val after2 = SinkLayout.read(spark, path)
     assert(after2.count() == 4)
     assert(after2.select("changelog_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L),
       "contiguous ids across batches, no re-processing of batch 1")
@@ -53,7 +54,8 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     assert(r3.rowsInserted == 0)
 
     // sink is partitioned by commit_date (the QueryData pruning contract)
-    val dirs = new java.io.File(path).listFiles().filter(_.isDirectory).map(_.getName).sorted
+    val dirs = new java.io.File(SinkLayout.dataDir(spark, path)).listFiles()
+      .filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.toSeq == Seq("commit_date=1995-01-01", "commit_date=1995-01-02"))
 
     // audit columns stamped at write time (DDL defaults, :151-152,:172-173)
@@ -211,7 +213,7 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
       .toDF("start_lsn", "seqval", "operation", "update_mask", "commit_time", "k", "v", "v2")
     StagedAppend.run(spark, wide, cfg, path, Some(ts("1995-01-02 23:00:00")))
 
-    val sink = spark.read.parquet(path)
+    val sink = SinkLayout.read(spark, path)
     // sink schema is batch-invariant: same columns after the wide batch
     assert(sink.columns.toSet ==
       Set("changelog_id", "commit_time", "table_name", "k", "column_name",
@@ -248,27 +250,25 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     val path = Files.createTempDirectory("graft_e2e_rs").resolve("orders_changelog").toString
     StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 08:30:00")))
     StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
+    val fs = SinkLayout.fs(spark, path)
+    def versions = Versions.all(fs, new Path(path)).map(_.n)
+    val v = versions.head
     // plan (and partially bind) a read against the CURRENT resolve...
     val planned = SinkLayout.read(spark, path)
     val expected = planned.count()
-    // ...then swap the sink under it — twice: flat→v1, v1→v2. The flat
-    // files (the planned read's target) are within grace after the first
-    // compaction; the planned frame must still execute after each swap.
+    // ...then swap the sink under it — twice. Each compaction publishes
+    // the next version; the planned frame must still execute after each.
     Compact.compactSink(spark, path)
-    assert(planned.count() == expected, "reader planned on flat layout survives swap to v1")
-    val plannedV1 = SinkLayout.read(spark, path)
+    assert(versions == Seq(v + 1, v), "one compaction advances the version by one")
+    assert(planned.count() == expected, s"reader planned on v$v survives the swap to v${v + 1}")
+    val plannedNext = SinkLayout.read(spark, path)
     Compact.compactSink(spark, path)
-    assert(plannedV1.count() == expected, "reader planned on v1 survives swap to v2")
+    assert(plannedNext.count() == expected, s"reader planned on v${v + 1} survives the swap to v${v + 2}")
     // fresh resolves always see the current version with identical rows
     assert(SinkLayout.read(spark, path).count() == expected)
-    // a third compaction retires v1 (two generations old) but keeps v2
+    // a third compaction retires v+1 (two versions old) but keeps v+2
     Compact.compactSink(spark, path)
-    val root = new java.io.File(path)
-    val names = root.listFiles().map(_.getName).toSet
-    assert(!names.contains("data_v1") && names.contains("data_v2") && names.contains("data_v3"),
-      s"retention must keep current + previous only, got $names")
-    assert(!names.exists(_.startsWith("commit_date=")),
-      "migrated flat files retire once the sink is versioned past grace")
+    assert(versions == Seq(v + 3, v + 2), s"retention must keep current + previous only, got $versions")
     assert(SinkLayout.read(spark, path).count() == expected)
   }
 
@@ -282,27 +282,62 @@ class PopulateChangelogSpec extends AnyFunSuite with SparkFixture {
     // streaming populate's exactly-once markers) must survive compactions
     val aux = new java.io.File(root, "_applied_batches/abc_0")
     aux.getParentFile.mkdirs(); aux.createNewFile()
-    // crash leftovers from a failed earlier publish: a fully-staged repack
-    // and a marker WITHOUT its data dir — both must be invisible to reads
-    new java.io.File(root, "_stage_v1/junk").mkdirs()
-    new java.io.File(root, "_v1.ok").createNewFile()
+    // a crash leftover from a failed earlier compaction: its stage
+    val v = Versions.current(SinkLayout.fs(spark, path), new Path(path)).get.n
+    new java.io.File(Versions.stage(new Path(path), v + 1).toString, "junk").mkdirs()
     assert(SinkLayout.read(spark, path).count() == expected,
-      "orphan stage dir + orphan marker must not affect the flat resolve")
-    val s1 = Compact.compactSink(spark, path) // re-stages v1 from scratch
+      "a stale stage must not affect the current resolve")
+    val s1 = Compact.compactSink(spark, path) // re-stages the next version from scratch
     assert(SinkLayout.read(spark, path).count() == expected)
     assert(s1.filesBefore > 0 && s1.bytesBefore > 0)
-    // a foreign non-underscore file parked at the root AFTER migration:
-    // retire() sweeps by the migration manifest (provenance), never by
-    // name pattern, so this survives even though it looks like flat data
+    // a foreign non-underscore file parked at the root: retirement deletes
+    // version dirs only, so it survives every compaction
     val foreign = new java.io.File(root, "foreign.parquet")
     foreign.createNewFile()
-    Compact.compactSink(spark, path) // v2: retires the flat leftovers
-    Compact.compactSink(spark, path) // v3: retires v1
+    Compact.compactSink(spark, path)
+    Compact.compactSink(spark, path) // retires the first compaction's version
     assert(aux.exists, "_applied_batches must survive every compaction")
-    assert(foreign.exists, "a post-migration foreign parquet file must survive retire()")
-    assert(!root.listFiles().map(_.getName).exists(_.startsWith("commit_date=")),
-      "the manifest-listed flat data itself must still retire")
+    assert(foreign.exists, "a foreign parquet file at the root must survive retirement")
     assert(SinkLayout.read(spark, path).count() == expected)
+  }
+
+  test("a compaction publish shrugs off a stale stage, an unstamped version and a crashed retire") {
+    val path = Files.createTempDirectory("graft_e2e_crash").resolve("orders_changelog").toString
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-01 08:30:00")))
+    StagedAppend.run(spark, fullFeed, cfg, path, Some(ts("1995-01-02 23:00:00")))
+    val fs = SinkLayout.fs(spark, path)
+    val root = new Path(path)
+    def versions = Versions.all(fs, root).map(_.n)
+    def current = Versions.current(fs, root).get.n
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val expected = rowsOf(SinkLayout.read(spark, path))
+    val v = current
+    // a stale stage and an unstamped dir of the next version, each holding
+    // a file no parquet reader can open: neither may be resolved, and
+    // neither may leak into the version the next compaction publishes
+    Seq(Versions.stage(root, v + 1), Versions.dir(root, v + 1)).foreach(d =>
+      fs.create(new Path(d, "commit_date=1995-01-01/junk.parquet")).close())
+    assert(current == v && rowsOf(SinkLayout.read(spark, path)) == expected)
+    val planned = SinkLayout.read(spark, path)
+    Compact.compactSink(spark, path)
+    assert(current == v + 1 && rowsOf(SinkLayout.read(spark, path)) == expected)
+    assert(rowsOf(planned) == expected, s"a reader resolved on v$v reads after v${v + 1} publishes")
+    assert(!fs.exists(Versions.stage(root, v + 1)))
+    // a crash after the rename, before the retire: the next compaction
+    // fails deleting the version two flips old
+    val plannedNext = SinkLayout.read(spark, path)
+    intercept[java.io.IOException] {
+      graft.FaultyFs.withFaults(spark, delete = _.getName == Versions.dir(root, v).getName) {
+        Compact.compactSink(spark, graft.FaultyFs.path(path))
+      }
+    }
+    assert(versions == Seq(v + 2, v + 1, v), s"the retire never ran: $versions")
+    assert(current == v + 2 && rowsOf(SinkLayout.read(spark, path)) == expected)
+    assert(rowsOf(plannedNext) == expected, s"a reader resolved on v${v + 1} reads after v${v + 2} publishes")
+    // the next publish retires what the crashed one left
+    Compact.compactSink(spark, path)
+    assert(versions == Seq(v + 3, v + 2), s"current + previous only, got $versions")
+    assert(rowsOf(SinkLayout.read(spark, path)) == expected)
   }
 
   test("populate resumes correctly onto a compacted sink (HWM + ids through the pointer)") {

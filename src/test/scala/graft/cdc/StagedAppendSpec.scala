@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,6 +32,9 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
       .sortBy(_._1).toSeq
+
+  private def version(path: String): Int =
+    graft.Versions.current(SinkLayout.fs(spark, path), new Path(path)).get.n
 
   private def populateBoth(path: String, crashAt: Option[Int]): Unit = {
     StagedAppend.run(spark, feed, cfg, path, Some(ts("1995-01-02 12:00:00")))
@@ -67,7 +71,7 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
     assert(rows(p) == goldenRows)
     // and the journal is gone: no stage dirs, no manifest
     val fs = SinkLayout.fs(spark, p)
-    val leftovers = fs.listStatus(new org.apache.hadoop.fs.Path(p))
+    val leftovers = fs.listStatus(new Path(p))
       .map(_.getPath.getName).filter(_.startsWith("_stage_batch_"))
     assert(leftovers.isEmpty)
   }
@@ -87,6 +91,28 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
     assert(Checkpoint.sinkState(spark, p).get == hwmBefore,
       "repair must restore the exact pre-batch HWM and id offset")
     assert(StagedAppend.repair(spark, p) == 0, "repair is idempotent")
+  }
+
+  test("a failed journal-manifest rename moves no staged file") {
+    val p = Files.createTempDirectory("graft_sa_mf").resolve("c").toString
+    StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-02 12:00:00")))
+    Checkpoint.committed(spark, p) // folds the record, so the next batch renames only its journal
+    val fs = SinkLayout.fs(spark, p)
+    def dataFiles = SinkLayout.parquetFiles(fs, new Path(SinkLayout.dataDir(spark, p)))
+      .map(_.getPath.getName).toSet
+    val before = dataFiles
+    val thrown = intercept[IllegalArgumentException] {
+      graft.FaultyFs.withFaults(spark, rename = (_, dst) => dst.getName == "_MANIFEST") {
+        StagedAppend.run(spark, feed, cfg, graft.FaultyFs.path(p), Some(ts("1995-01-06 00:00:00")))
+      }
+    }
+    assert(thrown.getMessage.contains("manifest rename"), thrown.getMessage)
+    val stages = fs.listStatus(new Path(p)).map(_.getPath).filter(_.getName.startsWith("_stage_batch_"))
+    assert(stages.length == 1 && SinkLayout.parquetFiles(fs, stages.head).size == 3,
+      "all three staged files must still be in the stage")
+    assert(dataFiles == before, "no staged file may reach the sink without a manifest")
+    StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-06 00:00:00")))
+    assert(rows(p) == goldenRows)
   }
 
   /** Every file under `p` (hidden ones included), by relative path. */
@@ -177,9 +203,9 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
       val p = Files.createTempDirectory("graft_sa_schema").resolve("c").toString
       StagedAppend.run(spark, f, c, p, Some(ts("1995-01-06 00:00:00")),
         clusterByKey = clustered, clusterPartitions = if (clustered) Some(2) else None)
-      assert(PopulateChangelog.sinkSchema(c) == spark.read.parquet(p).schema,
-        s"$name: declared ${PopulateChangelog.sinkSchema(c)} vs read " +
-          spark.read.parquet(p).schema)
+      val read = SinkLayout.read(spark, p).schema
+      assert(PopulateChangelog.sinkSchema(c) == read,
+        s"$name: declared ${PopulateChangelog.sinkSchema(c)} vs read $read")
     }
   }
 
@@ -194,9 +220,10 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
       "the publish follows it into the repacked copy") {
     val p = Files.createTempDirectory("graft_sa_cc").resolve("c").toString
     StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-02 12:00:00")))
+    val v0 = version(p)
     StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-06 00:00:00")),
       prePublishHook = () => { Compact.compactSink(spark, p); () })
-    assert(SinkLayout.currentVersion(spark, p).contains(1),
+    assert(version(p) == v0 + 1,
       "compaction must have flipped the pointer before the publish")
     assert(rows(p) == goldenRows,
       "the interleaved result must equal the quiesced two-batch sink")
@@ -206,6 +233,7 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
       "lock — no file of the batch is stranded in the retiring version") {
     val p = Files.createTempDirectory("graft_sa_race").resolve("c").toString
     StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-02 12:00:00")))
+    val v0 = version(p)
     val started = new java.util.concurrent.CountDownLatch(1)
     @volatile var compactErr: Option[Throwable] = None
     val compactor = new Thread(() => {
@@ -217,13 +245,14 @@ class StagedAppendSpec extends AnyFunSuite with SparkFixture {
     // the hook fires INSIDE the publish critical section: wake the
     // compactor after the first rename, give it time to hit the lock,
     // then finish the remaining renames. Without the lock the compactor
-    // could repack + flip mid-loop and strand files 2..n in data_v0.
+    // could repack + flip mid-loop and strand files 2..n in the retiring
+    // version.
     StagedAppend.run(spark, feed, cfg, p, Some(ts("1995-01-06 00:00:00")),
       publishHook = i => if (i == 1) { started.countDown(); Thread.sleep(500) })
     compactor.join(120000)
     assert(!compactor.isAlive, "compactor must finish once the lock frees")
     assert(compactErr.isEmpty, s"compactor failed: $compactErr")
-    assert(SinkLayout.currentVersion(spark, p).contains(1))
+    assert(version(p) == v0 + 1)
     assert(rows(p) == goldenRows,
       "every file of the racing batch must survive into the current version")
   }

@@ -400,13 +400,13 @@ class EventStreamSpec extends AnyFunSuite with SparkFixture {
     import org.apache.hadoop.fs.Path
     val base = graft.TempDirs.create("graft_cmgen")
     val stateDir = base.resolve("state").toString
-    val fs = new Path(stateDir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val root = new Path(stateDir)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     val b1 = Seq((1L, "hot hot cold")).toDF("doc_id", "text")
     val b2 = Seq((2L, "hot warm")).toDF("doc_id", "text")
     StateStream.cmFoldBatch(b1, 0L, stateDir, "text")
     // simulate a torn SECOND fold: a stage dir exists but never published
-    fs.mkdirs(new Path(stateDir, ".stage_v2"))
-    fs.create(new Path(new Path(stateDir, ".stage_v2"), "garbage"), true).close()
+    fs.create(new Path(graft.Versions.stage(root, 2), "garbage"), true).close()
     def cells(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     // the torn stage is invisible: gen 1 still reads
@@ -418,16 +418,15 @@ class EventStreamSpec extends AnyFunSuite with SparkFixture {
     StateStream.cmFoldBatch(b2, 1L, stateDir, "text")
     assert(cells(StateStream.readState(s, stateDir)) ==
       cells(graft.ext.TextOps.cmState(b1.unionByName(b2))))
-    def gens = fs.listStatus(new Path(stateDir)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("gen_v")).sorted
+    def gens = graft.Versions.all(fs, root).map(_.n)
     // retirement is GRACED: the superseded gen 1 survives one publish cycle,
     // so the in-flight reader finishes on intact bytes with its old view
-    assert(gens == Seq("gen_v1", "gen_v2"), s"expected graced gen_v1 + gen_v2, got $gens")
+    assert(gens == Seq(2, 1), s"expected graced gen 1 + gen 2, got $gens")
     assert(cells(inFlight) == cells(graft.ext.TextOps.cmState(b1)),
       "a reader resolved before the flip must keep its full pre-fold view")
     // the NEXT flip retires the graced generation — grace is one cycle, not a leak
     StateStream.cmFoldBatch(Seq((3L, "cool")).toDF("doc_id", "text"), 2L, stateDir, "text")
-    assert(gens == Seq("gen_v2", "gen_v3"), s"expected gen_v1 swept at the next flip, got $gens")
+    assert(gens == Seq(3, 2), s"expected gen 1 swept at the next flip, got $gens")
   }
 
   test("cm subject forget subtracts exactly and replays idempotently") {
@@ -471,8 +470,7 @@ class EventStreamSpec extends AnyFunSuite with SparkFixture {
       asMap(graft.ext.Similarity.hllState(survivors, "k", "v")),
       "the forget fallback must leave exactly the survivor scratch sketch")
     val fs = new Path(stateDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    def gens = fs.listStatus(new Path(stateDir)).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("gen_v")).sorted
+    def gens = graft.Versions.all(fs, new Path(stateDir)).map(_.n)
     val once = gens
     // exactly-once: the replayed deletion request publishes nothing
     StateStream.hllForgetState(s, stateDir, survivors, "req7", "k", "v")

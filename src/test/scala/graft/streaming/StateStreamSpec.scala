@@ -76,4 +76,44 @@ class StateStreamSpec extends AnyFunSuite with SparkFixture {
     StateStream.foldAvailableNow(s, srcDir, base.resolve("ckpt2").toString)(_ => n += 1)
     assert(n == files.size)
   }
+
+  test("a state publish shrugs off a stale stage, an unstamped version and a crashed retire") {
+    val s = spark
+    import s.implicits._
+    import org.apache.hadoop.fs.Path
+    val stateDir = TempDirs.create("graft_state_crash").resolve("state").toString
+    val root = new Path(stateDir)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def publish(dir: String, id: Long): Unit =
+      StateStream.publishState(s, dir)(stage => Seq(id).toDF("id").write.parquet(stage.toString))
+    def ids(df: org.apache.spark.sql.DataFrame) = df.as[Long].collect().toSeq
+    def versions = graft.Versions.all(fs, root).map(_.n)
+    publish(stateDir, 1L)
+    // a stale stage and an unstamped dir of version 2, each holding a file
+    // no parquet reader can open: neither may be resolved, and neither may
+    // leak into the version the next publish writes
+    Seq(graft.Versions.stage(root, 2), graft.Versions.dir(root, 2)).foreach(d =>
+      fs.create(new Path(d, "junk.parquet")).close())
+    assert(ids(StateStream.readState(s, stateDir)) == Seq(1L))
+    val planned = StateStream.readState(s, stateDir)
+    publish(stateDir, 2L)
+    assert(ids(StateStream.readState(s, stateDir)) == Seq(2L))
+    assert(ids(planned) == Seq(1L), "a reader resolved on v1 reads after v2 publishes")
+    assert(!fs.exists(graft.Versions.stage(root, 2)))
+    // a crash after the rename, before the retire: publishing v3 fails
+    // deleting v1
+    val plannedNext = StateStream.readState(s, stateDir)
+    intercept[java.io.IOException] {
+      graft.FaultyFs.withFaults(s, delete = _.getName == graft.Versions.dir(root, 1).getName) {
+        publish(graft.FaultyFs.path(stateDir), 3L)
+      }
+    }
+    assert(versions == Seq(3, 2, 1), s"the retire never ran: $versions")
+    assert(ids(StateStream.readState(s, stateDir)) == Seq(3L))
+    assert(ids(plannedNext) == Seq(2L), "a reader resolved on v2 reads after v3 publishes")
+    // the next publish retires what the crashed one left
+    publish(stateDir, 4L)
+    assert(versions == Seq(4, 3), s"current + previous only, got $versions")
+    assert(ids(StateStream.readState(s, stateDir)) == Seq(4L))
+  }
 }

@@ -2,11 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
-import graft.cdc.{CdcTableConfig, StagedAppend}
+import graft.cdc.{CdcTableConfig, SinkLayout, StagedAppend}
 
 /** Streaming-vs-batch parity: two incremental streaming invocations over a
   * growing feed directory must produce byte-identical changelog content to
@@ -58,15 +59,14 @@ class StreamingPopulateSpec extends AnyFunSuite with SparkFixture {
     StagedAppend.run(spark, full, cfg, batchSink, Some(ts("1995-01-01 23:00:00")))
     StagedAppend.run(spark, full, cfg, batchSink, Some(ts("1995-01-02 23:00:00")))
 
-    val fromStream = spark.read.parquet(streamSink).select(logicalCols.map(col): _*).collect().toSet
-    val fromBatch = spark.read.parquet(batchSink).select(logicalCols.map(col): _*).collect().toSet
+    val fromStream = SinkLayout.read(spark, streamSink).select(logicalCols.map(col): _*).collect().toSet
+    val fromBatch = SinkLayout.read(spark, batchSink).select(logicalCols.map(col): _*).collect().toSet
     assert(fromStream == fromBatch, "streaming and batch modes agree byte-for-byte on content + ids")
     assert(fromStream.map(_.getLong(0)) == Set(1L, 2L, 3L, 4L))
 
-    // sink layout contract holds in streaming mode too (the _applied_batches
-    // marker dir is underscore-prefixed, so parquet readers ignore it)
-    val dirs = new java.io.File(streamSink).listFiles().filter(_.isDirectory).map(_.getName)
-      .filterNot(_.startsWith("_")).sorted
+    // sink layout contract holds in streaming mode too
+    val dirs = new java.io.File(SinkLayout.dataDir(spark, streamSink)).listFiles()
+      .filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.toSeq == Seq("commit_date=1995-01-01", "commit_date=1995-01-02"))
 
     // replaying an already-applied micro-batch (crash between parquet
@@ -77,7 +77,7 @@ class StreamingPopulateSpec extends AnyFunSuite with SparkFixture {
     val replayed = StreamingPopulate.appendBatch(
       day1, cfg, streamSink, batchKey = Some(s"${ckptKey}_0"))
     assert(replayed == 0L)
-    assert(spark.read.parquet(streamSink).count() == 4)
+    assert(SinkLayout.read(spark, streamSink).count() == 4)
 
     // ...but the same batchId under a DIFFERENT checkpoint is real new work
     val otherKey = "deadbeef_0"
@@ -99,13 +99,15 @@ class StreamingPopulateSpec extends AnyFunSuite with SparkFixture {
     // HWM/offset snapshot, before the append — the append must follow the
     // version pointer into the repacked copy
     day2.coalesce(1).write.mode("append").parquet(feedDir)
+    def version = graft.Versions.current(
+      new Path(sink).getFileSystem(spark.sparkContext.hadoopConfiguration), new Path(sink)).get.n
+    val v0 = version
     val n = StreamingPopulate.runAvailableNow(spark, feedDir,
       spark.read.parquet(feedDir).schema, cfg, sink, ckpt,
       postSnapshotHook = _ => { graft.cdc.Compact.compactSink(spark, sink); () })
     assert(n == 2)
-    assert(graft.cdc.SinkLayout.currentVersion(spark, sink).contains(1),
-      "the race must actually have exercised a version flip")
-    val rows = graft.cdc.SinkLayout.read(spark, sink)
+    assert(version == v0 + 1, "the race must actually have exercised a version flip")
+    val rows = SinkLayout.read(spark, sink)
       .select(logicalCols.map(col): _*).collect()
     assert(rows.map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L),
       "ids contiguous across the flip; no row lost to the retired copy")
@@ -130,7 +132,7 @@ class StreamingPopulateSpec extends AnyFunSuite with SparkFixture {
     val n = StreamingPopulate.runAvailableNow(spark, feedDir,
       spark.read.parquet(feedDir).schema, cfg, sink, ckpt, maxFilesPerTrigger = Some(1))
     assert(n == 4)
-    val ids = spark.read.parquet(sink).select("changelog_id").collect().map(_.getLong(0)).toSet
+    val ids = SinkLayout.read(spark, sink).select("changelog_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 2L, 3L, 4L), "ids continue across micro-batches within one invocation")
   }
 
@@ -146,7 +148,7 @@ class StreamingPopulateSpec extends AnyFunSuite with SparkFixture {
       }
       assert(thrown eq boom, s"crash injection at $at must fire")
       assert(StreamingPopulate.appendBatch(batch, cfg, sink, batchKey = Some(key)) == 4L)
-      val ids = graft.cdc.SinkLayout.read(spark, sink).select("changelog_id")
+      val ids = SinkLayout.read(spark, sink).select("changelog_id")
         .collect().map(_.getLong(0)).sorted.toSeq
       assert(ids == Seq(1L, 2L, 3L, 4L), s"rows once, contiguous ids (crash at $at)")
       assert(new java.io.File(sink, s"_applied_batches/$key").isFile)
